@@ -84,6 +84,9 @@ def _setup_env(work: str) -> None:
     os.environ["SPARK_LOCAL_DIRS"] = os.path.join(work, "spark-local")
     os.environ["TMPDIR"] = os.path.join(work, "tmp")
     os.environ["SPARK_DRIVER_MEM"] = "2g"
+    # the launcher JVM that spark-submit starts first takes its own options
+    os.environ["SPARK_LAUNCHER_OPTS"] = (
+        f"-Djava.io.tmpdir={work}/tmp -XX:-UsePerfData")
     os.environ["PYSPARK_SUBMIT_ARGS"] = (
         "--conf spark.ui.showConsoleProgress=false "
         f"--driver-java-options '-Djava.io.tmpdir={work}/tmp "
