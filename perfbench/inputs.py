@@ -1,7 +1,9 @@
 """Seeded workload inputs, written with the engine's own encoder and cached.
 
 Every input is made from ``--seed`` by ``encode.write_pbf`` and cached on
-disk by (workload, size, seed) under ``.perfbench_cache/`` in the checkout.
+disk by (workload, size, seed, code) under ``.perfbench_cache/`` in the
+checkout, where code is a hash of the encoder and of this generator: an
+entry is reused only by the code that wrote it.
 The expected checksums of every input come from the generator's own
 arrays, never from the engine's decode:
 
@@ -13,6 +15,7 @@ arrays, never from the engine's decode:
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import shutil
@@ -20,7 +23,7 @@ import time
 
 import numpy as np
 
-from osmpbf_spark.sources.pbf import encode
+from osmpbf_spark.sources.pbf import encode, wire
 
 # Never used while the benchmark or a change is tuned; kept for confirming
 # a claim on data its author did not see.
@@ -31,12 +34,12 @@ KEEP_PER_WORKLOAD = 3  # cached seeds kept per workload and size
 
 SIZES = {
     # dense_scan: untagged DenseNodes in one file
-    "dense_scan": {"full": {"nodes": 2_000_000}, "tiny": {"nodes": 20_000}},
+    "dense_scan": {"full": {"nodes": 8_000_000}, "tiny": {"nodes": 20_000}},
     # tagged_scan: fixture-shaped units (9720 nodes, 1348 ways, 5 relations)
     "tagged_scan": {"full": {"units": 8}, "tiny": {"units": 1}},
     # lake_stream: a directory of small node files
     "lake_stream": {
-        "full": {"files": 20, "nodes_per_file": 10_000},
+        "full": {"files": 8, "nodes_per_file": 10_000},
         "tiny": {"files": 3, "nodes_per_file": 2_000},
     },
     # write_nodes: tagged nodes to hold in the JVM and write back out
@@ -227,11 +230,22 @@ _GENERATORS = {
 }
 
 
+def code_version() -> str:
+    """Hash of the code that writes the inputs: the engine's encoder and
+    wire format, and this generator."""
+    h = hashlib.sha256()
+    for path in (encode.__file__, wire.__file__, __file__):
+        with open(path, "rb") as fh:
+            h.update(fh.read())
+    return h.hexdigest()[:12]
+
+
 def ensure(cache_root: str, workload: str, size: str, seed: int) -> dict:
     """The manifest of the cached input, generating it on a miss. Paths in
     the returned manifest are absolute."""
     params = SIZES[workload][size]
-    entry = os.path.join(cache_root, f"{workload}-{size}-{seed}")
+    entry = os.path.join(cache_root,
+                         f"{workload}-{size}-{seed}-{code_version()}")
     manifest = os.path.join(entry, "manifest.json")
     if os.path.exists(manifest):
         os.utime(manifest)

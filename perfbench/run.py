@@ -29,7 +29,6 @@ E2E_UNITS = {
     "pass_s_tail": "s",
     "setup_s": "s",
     "peak_rss_mb": "MB",
-    "out_bytes_per_row": "bytes",
 }
 
 LAYER_UNITS = {
@@ -46,14 +45,13 @@ LAYER_UNITS = {
     "stream.planning_ms": "ms", "stream.add_batch_ms": "ms",
     "stream.commit_ms": "ms",
     "sink.write_s": "s", "sink.commit_s": "s", "encode.s": "s",
-    "encode.bytes_out": "bytes",
+    "encode.bytes_out": "bytes", "out_bytes_per_row": "bytes",
     "trace.pass_s": "s", "trace.overhead_s": "s",
 }
 
-# Session set-ups per run; setup_s is their median. Each set-up is followed
-# by its share of the timed window, so the window samples two stretches of
-# host time rather than one.
-SETUPS = 2
+# Layers only tagged_scan exercises. BENCHMARK.json does not list that
+# workload, so they go on the ``layers:`` line and not in the result line.
+UNLISTED_LAYERS = ("decode.way.s", "decode.relation.s")
 
 
 def log(msg: str) -> None:
@@ -130,9 +128,9 @@ def _stop_spark(spark) -> None:
         time.sleep(0.2)
 
 
-def _jobs_and_tasks(sc, group: str) -> tuple[int, int]:
+def _jobs_and_tasks(sc, groups: list[str]) -> tuple[int, int]:
     st = sc.statusTracker()
-    jobs = st.getJobIdsForGroup(group)
+    jobs = [j for g in groups for j in st.getJobIdsForGroup(g)]
     tasks = 0
     for j in jobs:
         info = st.getJobInfo(j)
@@ -263,10 +261,11 @@ def _run(args, work, host, inputs, workload_cls) -> int:
             log(f"pass {seq} wrong result: {'; '.join(bad)}")
             failed += 1
             return None
-        rec = {"wall": wall, "rows": p.rows, "out_bytes": p.out_bytes,
-               "cotenant": cotenant, "peak": peak, "t0": t0_ns,
-               "t1": t1_ns,
-               "group": p.jobs_group or group, "progress": p.progress}
+        rec = {"wall": wall, "rows": p.rows, "written": p.written,
+               "out_bytes": p.out_bytes, "cotenant": cotenant, "peak": peak,
+               "t0": t0_ns, "t1": t1_ns, "progress": p.progress,
+               # a stream's micro-batches run under its own job group
+               "groups": [group] + ([p.jobs_group] if p.jobs_group else [])}
         if timed is not None:
             timed.append(rec)
         return rec
@@ -285,31 +284,29 @@ def _run(args, work, host, inputs, workload_cls) -> int:
         return recs
 
     spark = None
-    setups = []
-    plain: list[dict] = []
     traced: list[dict] = []
-    share = args.seconds / SETUPS
+    # a traced run splits its window: untraced passes, then traced ones
+    share = args.seconds / 2 if args.trace else args.seconds
     rss = host.RssSampler()
     try:
-        for _ in range(SETUPS):
-            t0 = time.perf_counter()
-            if spark is not None:
-                spark.stop()
-            spark = get_spark("perfbench", cpus=nproc)
-            spark.sparkContext.setLogLevel("ERROR")
-            wl.prepare(spark)
-            one_pass(spark, None)  # warm-up
-            setups.append(time.perf_counter() - t0)
-            session = window(spark, share)
-            plain += session
+        t0 = time.perf_counter()
+        spark = get_spark("perfbench", cpus=nproc)
+        spark.sparkContext.setLogLevel("ERROR")
+        t1 = time.perf_counter()
+        wl.prepare(spark)
+        t2 = time.perf_counter()
+        one_pass(spark, None)  # warm-up
+        setup_s = time.perf_counter() - t0
+        log(f"set-up {setup_s:.2f}s: session {t1 - t0:.2f}s, prepare "
+            f"{t2 - t1:.2f}s, warm-up pass {t0 + setup_s - t2:.2f}s")
+        plain = window(spark, share)
         if args.trace:
             from perfbench.trace import TracedOsmPbfDataSource
 
             spark.dataSource.register(TracedOsmPbfDataSource)
             one_pass(spark, None)  # warm the traced classes in workers
             traced = window(spark, share)
-        metrics = _metrics(args, spark, plain, session, traced, setups,
-                           in_bytes, work)
+        metrics, layers = _metrics(args, spark, plain, traced, setup_s, work)
     finally:
         _stop_spark(spark)
 
@@ -320,14 +317,20 @@ def _run(args, work, host, inputs, workload_cls) -> int:
     )
     walls = [r["wall"] for r in plain]
     tail, pct, n = pass_tail(walls) if walls else (0.0, 100, 0)
+    written = [r for r in plain if r["written"]]
     print("regime: " + json.dumps(regime), flush=True)
     print("summary: " + json.dumps({
         "passes": len(plain), "traced_passes": len(traced),
         "pass_s": [round(w, 4) for w in walls],
         "pass_s_tail": {"percentile": pct, "samples": n, "value": tail},
-        "setup_s": [round(s, 3) for s in setups],
+        "setup_s": round(setup_s, 3),
         "failed_ops_frac": failed / attempted if attempted else 1.0,
+        "out_bytes_per_row": written[-1]["out_bytes"]
+        / written[-1]["written"]
+        if written else None,
     }), flush=True)
+    if layers:
+        print("layers: " + json.dumps(layers), flush=True)
     print(json.dumps({
         "correct": failed == 0 and attempted > 0,
         "attempted": attempted,
@@ -337,26 +340,23 @@ def _run(args, work, host, inputs, workload_cls) -> int:
     return 0
 
 
-def _metrics(args, spark, plain, session, traced, setups, in_bytes, work):
-    """``session``: the untraced passes of the last session, the ones the
-    traced passes follow in the same (warmest) JVM state."""
+def _metrics(args, spark, plain, traced, setup_s, work):
+    """(result-line metrics, every layer metric or None). The traced passes
+    follow the untraced ones ``plain`` in the same session."""
     def med(xs):
         return statistics.median(xs) if xs else 0.0
 
     if not args.trace:
         walls = [r["wall"] for r in plain]
-        last = plain[-1] if plain else {"rows": 0, "out_bytes": 0}
-        out_bytes = last["out_bytes"] or in_bytes
         vals = {
             "rows_per_s": med([r["rows"] / r["wall"] for r in plain]),
             "pass_s_p50": med(walls),
             "pass_s_tail": pass_tail(walls)[0] if walls else 0.0,
-            "setup_s": med(setups),
+            "setup_s": setup_s,
             "peak_rss_mb": med([r["peak"] for r in plain]) / (1 << 20),
-            "out_bytes_per_row": out_bytes / last["rows"] if last["rows"]
-            else 0.0,
         }
-        return {k: {"value": v, "unit": E2E_UNITS[k]} for k, v in vals.items()}
+        return {k: {"value": v, "unit": E2E_UNITS[k]}
+                for k, v in vals.items()}, None
 
     from perfbench.trace import load_spans
 
@@ -366,9 +366,11 @@ def _metrics(args, spark, plain, session, traced, setups, in_bytes, work):
         m = {k: 0.0 for k in LAYER_UNITS}
         m.update(_layers(spans, r["t0"], r["t1"]))
         m["spark.jobs"], m["spark.tasks"] = _jobs_and_tasks(
-            spark.sparkContext, r["group"])
+            spark.sparkContext, r["groups"])
         m.update(_stream_layers(r["progress"]))
         m["trace.pass_s"] = r["wall"]
+        if r["written"]:
+            m["out_bytes_per_row"] = r["out_bytes"] / r["written"]
         per_pass.append(m)
         account = sum(v for k, v in m.items() if k.endswith(".s") or k in (
             "sink.write_s", "sink.commit_s", "spark.self_s"))
@@ -376,8 +378,10 @@ def _metrics(args, spark, plain, session, traced, setups, in_bytes, work):
             f"= {account:.3f}s")
     vals = {k: med([m[k] for m in per_pass]) for k in LAYER_UNITS}
     vals["trace.overhead_s"] = vals["trace.pass_s"] - med(
-        [r["wall"] for r in session])
-    return {k: {"value": v, "unit": LAYER_UNITS[k]} for k, v in vals.items()}
+        [r["wall"] for r in plain])
+    layers = {k: {"value": v, "unit": LAYER_UNITS[k]} for k, v in vals.items()}
+    listed = {k: v for k, v in layers.items() if k not in UNLISTED_LAYERS}
+    return listed, layers
 
 
 if __name__ == "__main__":

@@ -3,7 +3,7 @@
     python3 -m pytest perfbench/tests -q
 
 The first tests need no Spark. The rest run every workload at its tiny
-size for one timed pass (about half a minute each, mostly JVM start) and
+size for one timed pass (about a minute each, mostly JVM start) and
 check that each run prints every metric BENCHMARK.json names, with its
 unit, and that a wrong expected checksum surfaces as a failed pass.
 """
@@ -83,6 +83,8 @@ def test_inputs_are_seeded_and_cached(scratch, workload):
     b = inputs.ensure(scratch, workload, "tiny", 5)
     c = inputs.ensure(scratch, workload, "tiny", 6)
     assert not a["cached"] and b["cached"]
+    # the entry belongs to the encoder and generator that wrote it
+    assert a["dir"].endswith(f"-5-{inputs.code_version()}")
     assert a["expected"] == b["expected"] != c["expected"]
     assert all(os.path.getsize(f["path"]) == f["bytes"] for f in a["files"])
 
@@ -106,33 +108,40 @@ def test_refuses_without_the_engine(scratch):
 
 
 def _one_pass(workload, trace, seed=3):
-    """One timed pass after each of the run's set-ups (``--seconds 0``)."""
+    """One timed pass after the run's set-up (``--seconds 0``): the result
+    line and, when traced, every layer metric from the ``layers:`` line."""
     r = _run(ROOT, "--workload", workload, "--seed", str(seed),
              "--seconds", "0", "--trace", str(trace), "--size", "tiny")
     assert r.returncode == 0, r.stderr[-3000:]
-    return json.loads(r.stdout.strip().splitlines()[-1])
+    lines = r.stdout.strip().splitlines()
+    layers = [json.loads(x.split(": ", 1)[1]) for x in lines
+              if x.startswith("layers: ")]
+    return json.loads(lines[-1]), layers[0] if layers else None
 
 
 # the layer each workload exists to exercise must show up in its trace
 EXERCISED = {
     "dense_scan": ("inflate.s", "decode.node.s", "arrow.s"),
     "tagged_scan": ("decode.way.s", "decode.relation.s", "arrow.s"),
-    "lake_stream": ("plan.s", "stream.batches", "stream.add_batch_ms"),
-    "write_nodes": ("sink.write_s", "encode.s", "encode.bytes_out"),
+    "lake_stream": ("plan.s", "stream.batches", "stream.add_batch_ms",
+                    "sink.write_s", "encode.s", "out_bytes_per_row"),
+    "write_nodes": ("sink.write_s", "encode.s", "encode.bytes_out",
+                    "out_bytes_per_row"),
 }
 
 
 @pytest.mark.parametrize("trace", [0, 1])
 @pytest.mark.parametrize("workload", sorted(WORKLOADS))
 def test_one_pass_prints_every_metric(workload, trace):
-    out = _one_pass(workload, trace)
+    out, layers = _one_pass(workload, trace)
     assert out["correct"] and out["failed"] == 0 and out["attempted"] >= 2
     spec = SPEC["per_layer" if trace else "end_to_end"]
     assert {m["name"]: m["unit"] for m in spec} == {
         k: v["unit"] for k, v in out["metrics"].items()}
     if trace:
+        assert set(out["metrics"]) <= set(layers)
         for name in EXERCISED[workload]:
-            assert out["metrics"][name]["value"] > 0, name
+            assert layers[name]["value"] > 0, name
     else:
         for name, m in out["metrics"].items():
             assert m["value"] > 0, name
@@ -148,7 +157,7 @@ def test_wrong_expected_checksum_is_a_failed_op():
         raw["expected"]["node"]["id_sum"] += 1
         with open(manifest, "w") as fh:
             json.dump(raw, fh)
-        out = _one_pass("dense_scan", 0, seed=99)
+        out, _ = _one_pass("dense_scan", 0, seed=99)
     finally:
         shutil.rmtree(doc["dir"], ignore_errors=True)
     assert not out["correct"]

@@ -20,9 +20,10 @@ from pyspark.sql import functions as F
 
 @dataclass
 class Pass:
-    rows: int = 0
+    rows: int = 0  # rows delivered plus rows written
     observed: dict = field(default_factory=dict)  # primitive -> checksums
-    out_bytes: int = 0
+    written: int = 0  # rows the osmpbf sink wrote
+    out_bytes: int = 0  # bytes of the part files it wrote
     jobs_group: str | None = None  # Spark job group the pass ran under
     sink: str | None = None  # memory-sink table of a stream pass
     progress: list = field(default_factory=list)
@@ -80,6 +81,24 @@ def compare(expected: dict, observed: dict) -> list[str]:
     return bad
 
 
+def _written(out: str) -> tuple[int, int]:
+    """(rows, bytes) of an osmpbf sink's output directory: the row count
+    its commit wrote to ``_SUCCESS`` and the size of its part files."""
+    with open(os.path.join(out, "_SUCCESS")) as fh:
+        rows = int(fh.read().strip())
+    size = sum(os.path.getsize(os.path.join(out, f))
+               for f in os.listdir(out) if f.endswith(".osm.pbf"))
+    return rows, size
+
+
+def _check_written(spark, out: str, expected: dict, rows: int) -> list[str]:
+    """Read a sink's output back and compare it with the node checksums."""
+    bad = [] if rows == expected["rows"] else [
+        f"_SUCCESS rows {rows} != {expected['rows']}"]
+    return bad + compare({"node": expected},
+                         {"node": _observed_scan(spark, out, "node")})
+
+
 def _observed_scan(spark, path: str, primitive: str, **opts) -> dict:
     obs = Observation(f"chk_{primitive}")
     df = _reader(spark, path, primitive, **opts)
@@ -131,14 +150,29 @@ class TaggedScan(Workload):
 
 
 class LakeStream(Workload):
+    """A feed of small files, ingested twice per pass: a stream into the
+    grid aggregation, then a batch compaction of the directory into
+    ``nproc`` part files through the osmpbf sink."""
+
     name = "lake_stream"
 
+    def prepare(self, spark) -> None:
+        self.lake = os.path.dirname(self.manifest["files"][0]["path"])
+        self.out = os.path.join(self.work_dir, "compacted")
+
     def run(self, spark, i: int) -> Pass:
-        lake = os.path.dirname(self.manifest["files"][0]["path"])
+        p = self._stream(spark, i)
+        (_reader(spark, self.lake, "node").coalesce(self.nproc).write
+         .format("osmpbf").option("path", self.out).mode("overwrite").save())
+        p.written, p.out_bytes = _written(self.out)
+        p.rows += p.written
+        return p
+
+    def _stream(self, spark, i: int) -> Pass:
         ckpt = os.path.join(self.work_dir, f"ckpt-{i}")
         shutil.rmtree(ckpt, ignore_errors=True)
         stream = (
-            spark.readStream.format("osmpbf").option("path", lake)
+            spark.readStream.format("osmpbf").option("path", self.lake)
             .option("primitive", "node").load()
             .observe("chk", *checksum_exprs("node"))
         )
@@ -174,7 +208,8 @@ class LakeStream(Workload):
         spark.catalog.dropTempView(p.sink)
         if total != self.expected["node"]["rows"]:
             bad.append(f"grid total {total} != {self.expected['node']['rows']}")
-        return bad
+        return bad + _check_written(spark, self.out, self.expected["node"],
+                                    p.written)
 
 
 class WriteNodes(Workload):
@@ -188,17 +223,12 @@ class WriteNodes(Workload):
     def run(self, spark, i: int) -> Pass:
         (self.df.write.format("osmpbf").option("path", self.out)
          .mode("overwrite").save())
-        with open(os.path.join(self.out, "_SUCCESS")) as fh:
-            rows = int(fh.read().strip())
-        size = sum(
-            os.path.getsize(os.path.join(self.out, f))
-            for f in os.listdir(self.out) if f.endswith(".osm.pbf")
-        )
-        return Pass(rows=rows, out_bytes=size)
+        rows, size = _written(self.out)
+        return Pass(rows=rows, written=rows, out_bytes=size)
 
     def check(self, spark, p: Pass) -> list[str]:
-        p.observed["node"] = _observed_scan(spark, self.out, "node")
-        return compare(self.expected, p.observed)
+        return _check_written(spark, self.out, self.expected["node"],
+                              p.written)
 
 
 WORKLOADS = {w.name: w for w in (DenseScan, TaggedScan, LakeStream,
