@@ -12,6 +12,10 @@ PySpark Python Data Source API (pyspark.sql.datasource, PySpark 4.x):
 - ``read()`` decodes each block columnar (numpy cumsum delta decode — see
   decode.py) and yields one Arrow RecordBatch per block, so rows never
   materialize as Python objects; Spark receives vectorized batches.
+- ``df.write.format("osmpbf")`` (OsmPbfWriter) is the same in reverse: it
+  takes Spark's Arrow batches, cuts them into blocks of ``block_rows`` rows
+  and encodes one part file per task, buffering the file's blocks until
+  ``encode.write_pbf``.
 - Type projection (the ``primitive`` option) mirrors parseType
   (OsmPbfRecordReader.java:31-37, README.md:38-41): each read has one fixed
   schema, like the Pig loader's per-type schemas (OSMPbfPigLoader.java:47-73).
@@ -73,13 +77,14 @@ from dataclasses import dataclass
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql.datasource import (
     DataSource,
+    DataSourceArrowWriter,
     DataSourceReader,
+    DataSourceStreamArrowWriter,
     DataSourceStreamReader,
-    DataSourceStreamWriter,
-    DataSourceWriter,
     EqualTo,
     GreaterThan,
     GreaterThanOrEqual,
@@ -442,7 +447,17 @@ class OsmPbfReader(DataSourceReader):
     def _plan_files(self, paths: list[str]) -> list[OsmPbfPartition]:
         """Block-aligned split planning for an explicit file list; shared
         by the batch planner below and the streaming reader's per-batch
-        planner (which feeds it only the files new since the last offset)."""
+        planner (which feeds it only the files new since the last offset).
+
+        Negative result, recorded so it is not retried: partitions sized to
+        whole waves of cores (``min(target, max(4 MiB, total / cores))``,
+        4 x 19.5 MB instead of 33.6 + 33.6 + 10.9 MB on the 8M-node
+        dense_scan file) did not win. On a 4-core host, 10 s runs in
+        alternating order, rows_per_s had a median of 3.00M against 3.39M,
+        3 of 6 pairs won, and peak RSS rose 8%. A pass there is ~9 CPU-s
+        for 2.1-2.8 s of wall (JVM 3.4-4.6 s, Python workers 4.0-4.8 s):
+        the time is in Spark's row conversion, not in how the blocks are
+        split."""
         parts: list[OsmPbfPartition] = []
         for path, index in zip(paths, self._index_files(paths)):
             ranges: list[tuple[int, int]] = []
@@ -737,24 +752,109 @@ class _PbfCommit(WriterCommitMessage):
     rows: int
 
 
-class OsmPbfWriter(DataSourceWriter):
+def _nonnull(arr: pa.Array, name: str) -> pa.Array:
+    # the format has no null for these fields, and numpy would turn a
+    # null slot into an arbitrary number
+    if arr.null_count:
+        raise ValueError(f"osmpbf write: column {name!r} has "
+                         f"{arr.null_count} null value(s)")
+    return arr
+
+
+def _numpy(arr: pa.Array, name: str) -> np.ndarray:
+    return _nonnull(arr, name).to_numpy(zero_copy_only=False)
+
+
+def _nano(arr: pa.Array, name: str) -> np.ndarray:
+    """Degrees -> nanodegrees on the format's 1e-7 degree grid."""
+    deg = np.asarray(_numpy(arr, name), dtype=np.float64)
+    if not (np.abs(deg) < 9e9).all():  # NaN, inf, or past int64 nano
+        raise ValueError(f"osmpbf write: column {name!r} has a "
+                         "non-finite or out-of-range coordinate")
+    return np.rint(deg * 1e7).astype(np.int64) * 100  # half-even, as round()
+
+
+def _lists(arr: pa.Array, name: str) -> tuple[list[int], pa.Array]:
+    # (row offsets from 0, flattened values); ``values`` ignores a slice
+    off = _nonnull(arr, name).offsets.to_numpy()
+    return (off - off[0]).tolist(), arr.values.slice(off[0], off[-1] - off[0])
+
+
+def _tag_dicts(col: pa.MapArray) -> list[dict | None]:
+    """One ``dict`` per row; ``None`` for an empty or null map."""
+    off = col.offsets.to_numpy()
+    lo, n = off[0], off[-1] - off[0]
+    if n == 0:  # untagged rows: the encoder's fast path
+        return [None] * len(col)
+    keys = col.keys.slice(lo, n).to_pylist()
+    vals = col.items.slice(lo, n).to_pylist()
+    return [
+        dict(zip(keys[a:z], vals[a:z])) if z > a and ok else None
+        for a, z, ok in zip((off[:-1] - lo).tolist(), (off[1:] - lo).tolist(),
+                            col.is_valid().to_pylist())
+    ]
+
+
+def _block(b: pa.RecordBatch, primitive: str) -> dict:
+    """One ``encode.write_pbf`` block dict from one batch of rows."""
+    ids = _numpy(b.column("id"), "id")
+    tags = _tag_dicts(b.column("tags"))
+    if primitive == "node":
+        nodes = {"id": ids, "lat_nano": _nano(b.column("lat"), "lat"),
+                 "lon_nano": _nano(b.column("lon"), "lon"), "tags": tags}
+        if "meta" in b.schema.names:
+            m = _nonnull(b.column("meta"), "meta")
+            nodes["meta"] = meta = {
+                f: _numpy(m.field(f), f"meta.{f}") for f in
+                ("version", "timestamp", "changeset", "uid", "visible")
+            }
+            # integer us -> ms, floored as the encoder floors ms -> s
+            meta["timestamp_ms"] = meta.pop("timestamp").astype(np.int64) // 1000
+            meta["user"] = m.field("user").to_pylist()  # encoder: None -> ""
+        return {"nodes": nodes}
+    if primitive == "way":
+        off, refs = _lists(b.column("refs"), "refs")
+        key, vals = "refs", _numpy(refs, "refs")
+    else:
+        off, m = _lists(b.column("members"), "members")
+        codes = pc.index_in(_nonnull(m, "members").field("type"),
+                            pa.array(["node", "way", "relation"]))
+        if codes.null_count:
+            raise ValueError("osmpbf write: column 'members.type' must be "
+                             "node, way or relation")
+        key, vals = "members", list(zip(
+            [r or "" for r in m.field("role").to_pylist()],
+            _numpy(m.field("ref"), "members.ref").tolist(),
+            codes.to_numpy().tolist(),
+        ))
+    ids = ids.tolist()
+    return {primitive + "s": [
+        {"id": ids[i], key: vals[off[i]:off[i + 1]], "tags": tags[i]}
+        for i in range(len(ids))
+    ]}
+
+
+class OsmPbfWriter(DataSourceArrowWriter):
     """``df.write.format("osmpbf")`` — a PBF sink (parity-plus: the
     reference has no OutputFormat at all, SURVEY.md §2 'explicitly absent').
 
     Standard distributed-sink shape: each task encodes its partition into
-    one ``part-*.osm.pbf`` file (blocks of ``block_rows`` primitives, per-
-    block string tables, delta coding — encode.py); commit drops a
-    ``_SUCCESS`` marker, abort removes the written part files. At 100 TB
-    this is embarrassingly parallel: no shuffle, one file per task, block
-    boundaries independent of partitioning.
+    one ``part-*.osm.pbf`` file; commit drops a ``_SUCCESS`` marker, abort
+    removes the written part files. At 100 TB this is embarrassingly
+    parallel: no shuffle, one file per task, block boundaries independent
+    of partitioning. A task cuts Spark's Arrow batches into blocks of
+    ``block_rows`` primitives, across batch boundaries, builds each block
+    from the column buffers, and holds the file's blocks until
+    ``encode.write_pbf`` (string tables, delta coding) writes it.
 
     Input schema must match the reader's for the chosen ``primitive``:
     node ``(id, lat, lon, tags)``, way ``(id, refs, tags)``, or relation
     ``(id, members, tags)``. A node frame may additionally carry the
     reader's ``meta`` struct (with_meta shape); it is re-encoded as
-    DenseInfo, so read -> write -> read preserves provenance. Every meta
-    field must be non-null (drop the column to write without provenance —
-    a with_meta read of a file LACKING DenseInfo yields null fields).
+    DenseInfo, so read -> write -> read preserves provenance. A null id,
+    coordinate, ref, member or meta field but ``user`` raises ValueError
+    naming the column (a with_meta read of a file LACKING DenseInfo
+    yields null meta: drop the column to write without provenance).
     """
 
     def __init__(self, options, schema, overwrite: bool):
@@ -771,7 +871,7 @@ class OsmPbfWriter(DataSourceWriter):
                 f"(got {self.primitive!r}; changesets are id-only and "
                 "write-unsupported)"
             )
-        self.block_rows = int(options.get("block_rows", 8000))
+        self.block_rows = max(1, int(options.get("block_rows", 8000)))
         self.overwrite = overwrite
         fields = set(schema.fieldNames())
         need = {
@@ -784,106 +884,20 @@ class OsmPbfWriter(DataSourceWriter):
                 f"osmpbf {self.primitive} write needs columns {sorted(need)}, "
                 f"got {sorted(fields)}"
             )
-        # optional provenance: a ``meta`` struct column (the reader's
-        # with_meta shape) round-trips into DenseInfo on node writes
-        self.with_meta = self.primitive == "node" and "meta" in fields
 
-    def write(self, rows) -> _PbfCommit:
+    def write(self, batches) -> _PbfCommit:
         from osmpbf_spark.sources.pbf import encode
 
         fs.fs_makedirs(self.path)
         out = fs.fs_join(self.path, f"part-{uuid.uuid4().hex}.osm.pbf")
-        blocks = []
-        n = 0
-        if self.primitive == "node":
-            from datetime import timezone
-
-            def _meta_ms(ts) -> int:
-                # session tz is writer-dependent; naive datetimes are
-                # treated as UTC (the osmpbf session factory pins UTC)
-                if ts.tzinfo is None:
-                    ts = ts.replace(tzinfo=timezone.utc)
-                # round, never truncate: timestamp()*1000 lands a hair
-                # below the integer for ~0.6% of ms-precision instants,
-                # and int() would shift them back 1 ms — silently breaking
-                # the read->write->read identity the sink documents
-                return round(ts.timestamp() * 1000)
-
-            def _flush(ids, lat_nano, lon_nano, tags, meta):
-                nodes = {"id": ids, "lat_nano": lat_nano,
-                         "lon_nano": lon_nano, "tags": tags}
-                if meta is not None:
-                    nodes["meta"] = meta
-                blocks.append({"nodes": nodes})
-
-            def _new_meta():
-                return (
-                    {"version": [], "timestamp_ms": [], "changeset": [],
-                     "uid": [], "user": [], "visible": []}
-                    if self.with_meta
-                    else None
-                )
-
-            ids: list[int] = []
-            lat_nano: list[int] = []
-            lon_nano: list[int] = []
-            tags: list[dict | None] = []
-            meta = _new_meta()
-            for r in rows:
-                ids.append(r.id)
-                # quantize to the granularity-100 grid (1e-7 degrees),
-                # same resolution the format stores
-                lat_nano.append(int(round(r.lat * 1e7)) * 100)
-                lon_nano.append(int(round(r.lon * 1e7)) * 100)
-                tags.append(dict(r.tags) if r.tags else None)
-                if meta is not None:
-                    m = r.meta
-                    meta["version"].append(m.version)
-                    meta["timestamp_ms"].append(_meta_ms(m.timestamp))
-                    meta["changeset"].append(m.changeset)
-                    meta["uid"].append(m.uid)
-                    meta["user"].append(m.user)
-                    meta["visible"].append(m.visible)
-                n += 1
-                if len(ids) >= self.block_rows:
-                    _flush(ids, lat_nano, lon_nano, tags, meta)
-                    ids, lat_nano, lon_nano, tags = [], [], [], []
-                    meta = _new_meta()
-            if ids:
-                _flush(ids, lat_nano, lon_nano, tags, meta)
-        elif self.primitive == "way":
-            ways: list[dict] = []
-            for r in rows:
-                ways.append(
-                    {"id": r.id, "refs": list(r.refs),
-                     "tags": dict(r.tags) if r.tags else {}}
-                )
-                n += 1
-                if len(ways) >= self.block_rows:
-                    blocks.append({"ways": ways})
-                    ways = []
-            if ways:
-                blocks.append({"ways": ways})
-        else:
-            type_code = {"node": 0, "way": 1, "relation": 2}
-            rels: list[dict] = []
-            for r in rows:
-                rels.append(
-                    {
-                        "id": r.id,
-                        "members": [
-                            (m.role or "", m.ref, type_code[m.type])
-                            for m in r.members
-                        ],
-                        "tags": dict(r.tags) if r.tags else {},
-                    }
-                )
-                n += 1
-                if len(rels) >= self.block_rows:
-                    blocks.append({"relations": rels})
-                    rels = []
-            if rels:
-                blocks.append({"relations": rels})
+        batches = list(batches)
+        rows = pa.Table.from_batches(batches) if batches else None
+        n = rows.num_rows if batches else 0
+        blocks = [
+            _block(rows.slice(i, self.block_rows).combine_chunks()
+                   .to_batches()[0], self.primitive)
+            for i in range(0, n, self.block_rows)
+        ]
         encode.write_pbf(out, blocks)
         return _PbfCommit(path=out, rows=n)
 
@@ -923,7 +937,7 @@ def osmpbf_header(path: str) -> dict:
     return {"required_features": [], "optional_features": [], "writingprogram": None}
 
 
-class OsmPbfStreamWriter(DataSourceStreamWriter):
+class OsmPbfStreamWriter(DataSourceStreamArrowWriter):
     """Streaming PBF SINK — ``df.writeStream.format("osmpbf")``. Each
     micro-batch's tasks run the SAME per-task encoder as the batch sink
     (OsmPbfWriter.write: delta re-encode, zlib blocks, one uuid-named
@@ -940,8 +954,8 @@ class OsmPbfStreamWriter(DataSourceStreamWriter):
     def __init__(self, options, schema: StructType):
         self._w = OsmPbfWriter(options, schema, overwrite=False)
 
-    def write(self, rows):
-        return self._w.write(rows)
+    def write(self, batches):
+        return self._w.write(batches)
 
     def commit(self, messages, batchId: int) -> None:
         d = fs.fs_join(self._w.path, "_batches")

@@ -45,6 +45,8 @@ BLOB_LZMA = 4
 BLOB_OBSOLETE_BZIP2 = 5  # deprecated in fileformat.proto; rejected explicitly
 BLOB_LZ4 = 6  # LZ4 block format (no frame header -> raw_size is REQUIRED)
 BLOB_ZSTD = 7  # zstd frame
+MAX_BLOB_HEADER = 64 * 1024  # fileformat.proto: BlobHeader < 64 KiB
+MAX_BLOB = 32 * 1024 * 1024  # fileformat.proto: Blob, and its payload, < 32 MiB
 
 # osmformat.proto field numbers
 PB_STRINGTABLE = 1
@@ -153,25 +155,55 @@ def index_blocks(path: str) -> list[BlockMeta]:
     96-129). Cost: one ~20-byte read + one seek per block, so ~2k reads for a
     32 GB planet file with 16 MB blocks — trivial even at 100 TB spread over
     many files (index each file in parallel tasks if the file count is huge).
+
+    Enforces fileformat.proto's limits as it walks: a BlobHeader length
+    outside 1..64 KiB, an unparseable BlobHeader, a Blob over 32 MiB, or
+    a Blob running past the end of the file raises ValueError naming the
+    path and the byte offset of the block, before any payload is read or
+    inflated.
     """
     blocks: list[BlockMeta] = []
     with fs.fs_open(path, "rb") as f:
+        f.seek(0, 2)
+        fsize = f.tell()
+        f.seek(0)
         while True:
+            start = f.tell()
             lenbuf = f.read(4)
             if len(lenbuf) < 4:
+                if lenbuf:
+                    raise ValueError(f"{path}: truncated block length at "
+                                     f"byte {start}")
                 break
             (header_len,) = struct.unpack(">i", lenbuf)
+            if not 0 < header_len <= MAX_BLOB_HEADER:
+                raise ValueError(f"{path}: BlobHeader length {header_len} at "
+                                 f"byte {start} outside 1..{MAX_BLOB_HEADER}")
             header = f.read(header_len)
             btype = ""
             datasize = 0
             stats = None
-            for field, _wt, v in wire.scan_fields(header):
-                if field == BLOBHEADER_TYPE:
-                    btype = v.decode("utf-8")
-                elif field == BLOBHEADER_DATASIZE:
-                    datasize = v
-                elif field == BLOBHEADER_INDEXDATA:
-                    stats = _parse_block_stats(v)
+            try:
+                for field, _wt, v in wire.scan_fields(header):
+                    if field == BLOBHEADER_TYPE:
+                        btype = v.decode("utf-8")
+                    elif field == BLOBHEADER_DATASIZE:
+                        datasize = v
+                    elif field == BLOBHEADER_INDEXDATA:
+                        stats = _parse_block_stats(v)
+                if not isinstance(datasize, int):
+                    raise TypeError("datasize is not a varint")
+            except (IndexError, ValueError, TypeError, AttributeError,
+                    struct.error) as e:
+                raise ValueError(f"{path}: unreadable BlobHeader at byte "
+                                 f"{start}: {e}") from e
+            if datasize > MAX_BLOB:
+                raise ValueError(f"{path}: block at byte {start} declares a "
+                                 f"Blob of {datasize} bytes, over the "
+                                 f"{MAX_BLOB}-byte limit")
+            if len(header) < header_len or f.tell() + datasize > fsize:
+                raise ValueError(f"{path}: block at byte {start} runs past "
+                                 f"the end of the {fsize}-byte file")
             blocks.append(BlockMeta(btype, f.tell(), datasize, stats))
             f.seek(datasize, 1)
     return blocks
@@ -516,13 +548,28 @@ def read_block_payload(f, meta: BlockMeta, zlib_only: bool = False) -> bytes:
         raise ValueError("unsupported compression algorithm in OSM file block")
     if raw is not None:
         return raw
-    out = None
-    if zlib_data is not None:
-        out = zlib.decompress(zlib_data)
-    elif lzma_data is not None:
-        import lzma
+    if raw_size is not None and raw_size > MAX_BLOB:
+        raise ValueError(f"blob at byte {meta.data_offset}: raw_size "
+                         f"{raw_size} over the {MAX_BLOB}-byte limit")
+    if zlib_data is not None or lzma_data is not None:
+        # bounded inflate: never more than raw_size (or the spec's limit)
+        # bytes, whatever the stream would expand to; at least 1 because a
+        # max_length of 0 means no limit at all
+        cap = max(raw_size, 1) if raw_size is not None else MAX_BLOB
+        if zlib_data is not None:
+            d = zlib.decompressobj()
+            out = d.decompress(zlib_data, cap)
+        else:
+            import lzma
 
-        out = lzma.decompress(lzma_data)
+            d = lzma.LZMADecompressor()
+            out = d.decompress(lzma_data, max_length=cap)
+        if not d.eof or d.unused_data:
+            raise ValueError(
+                f"blob at byte {meta.data_offset}: compressed stream "
+                + ("has input left over" if d.eof else
+                   f"does not end within {cap} inflated bytes")
+            )
     elif lz4_data is not None or zstd_data is not None:
         import pyarrow as pa
 
@@ -536,11 +583,11 @@ def read_block_payload(f, meta: BlockMeta, zlib_only: bool = False) -> bytes:
         out = pa.Codec(name).decompress(
             data, decompressed_size=raw_size, asbytes=True
         )
-    if out is not None:
-        if raw_size is not None and len(out) != raw_size:
-            raise ValueError(f"blob raw_size {raw_size} != inflated {len(out)}")
-        return out
-    raise ValueError("empty blob")
+    else:
+        raise ValueError("empty blob")
+    if raw_size is not None and len(out) != raw_size:
+        raise ValueError(f"blob raw_size {raw_size} != inflated {len(out)}")
+    return out
 
 
 def _decode_header_bbox(payload: bytes) -> dict:

@@ -395,6 +395,99 @@ def test_obsolete_bzip2_blob_rejected_by_name(tmp_path):
             decode.read_block_payload(f, meta)
 
 
+def _one_blob_file(path: str, blob: bytes) -> decode.BlockMeta:
+    import struct as _struct
+
+    header = wire.field_len(1, b"OSMData") + wire.field_varint(3, len(blob))
+    with open(path, "wb") as f:
+        f.write(_struct.pack(">i", len(header)) + header + blob)
+    return decode.index_blocks(path)[0]
+
+
+@pytest.mark.parametrize("codec", ["zlib", "lzma"])
+def test_inflate_bounded_by_raw_size(tmp_path, codec):
+    """A blob inflates to at most its declared raw_size: a small blob
+    declaring raw_size=10 that would expand to 16 MiB fails without
+    allocating the expansion, and a stream with input left over, one
+    that ends short of raw_size, or one cut off mid-stream is rejected.
+    A blob with no raw_size still decodes."""
+    import lzma
+    import tracemalloc
+    import zlib
+
+    def blob(payload: bytes, raw_size=None, tail=b"", cut=0) -> bytes:
+        data = (zlib.compress(payload) if codec == "zlib"
+                else lzma.compress(payload)) + tail
+        data = data[: len(data) - cut]
+        fld = decode.BLOB_ZLIB if codec == "zlib" else decode.BLOB_LZMA
+        head = b"" if raw_size is None else wire.field_varint(
+            decode.BLOB_RAW_SIZE, raw_size)
+        return head + wire.field_len(fld, data)
+
+    def payload_of(b: bytes) -> bytes:
+        p = str(tmp_path / "b.pbf")
+        meta = _one_blob_file(p, b)
+        with open(p, "rb") as f:
+            return decode.read_block_payload(f, meta)
+
+    bomb = blob(bytes(16 << 20), raw_size=10)
+    tracemalloc.start()
+    try:
+        with pytest.raises(ValueError, match="does not end within 10"):
+            payload_of(bomb)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert peak < 12 << 20  # lzma's own 8 MiB dictionary, not the 16 MiB
+    good = b"osm payload " * 50
+    assert payload_of(blob(good, raw_size=len(good))) == good
+    assert payload_of(blob(good)) == good
+    with pytest.raises(ValueError, match="left over"):
+        payload_of(blob(good, raw_size=len(good), tail=b"junk"))
+    with pytest.raises(ValueError, match="raw_size"):
+        payload_of(blob(good, raw_size=len(good) + 5))
+    with pytest.raises(ValueError, match="does not end"):
+        payload_of(blob(good, raw_size=len(good), cut=6))
+    with pytest.raises(ValueError, match="limit"):
+        payload_of(blob(good, raw_size=decode.MAX_BLOB + 1))
+
+
+def test_index_enforces_fileformat_limits(fixture_dir, tmp_path):
+    """index_blocks rejects a BlobHeader length outside 1..64 KiB, an
+    unparseable BlobHeader, a Blob over 32 MiB, a file cut inside a block,
+    and a stray partial length prefix, with a ValueError naming the file
+    and the block's byte offset."""
+    import struct as _struct
+
+    src = open(f"{fixture_dir}/fixture.osm.pbf", "rb").read()
+    last = decode.index_blocks(f"{fixture_dir}/fixture.osm.pbf")[-1]
+    big = wire.field_len(1, b"OSMData") + wire.field_varint(
+        3, decode.MAX_BLOB + 1
+    )
+    cases = {
+        "neg": (_struct.pack(">i", -5) + b"x" * 64, "byte 0"),
+        "huge": (_struct.pack(">i", 70_000) + b"x" * 64, "byte 0"),
+        "garbled": (_struct.pack(">i", 8) + b"\xff" * 72, "unreadable"),
+        "tail": (src + b"\x00\x01", f"byte {len(src)}"),
+        "cut": (src[: last.data_offset + 10], "runs past the end"),
+        "big": (
+            _struct.pack(">i", len(big)) + big,
+            "over the 33554432-byte limit",
+        ),
+    }
+    for name, (data, where) in cases.items():
+        p = tmp_path / f"{name}.pbf"
+        p.write_bytes(data)
+        with pytest.raises(ValueError, match=where) as err:
+            decode.index_blocks(str(p))
+        assert str(p) in str(err.value)
+    # resync recovery still finds every intact block of the cut file
+    found = decode.resync_scan(str(tmp_path / "cut.pbf"))
+    intact = [m for m in decode.index_blocks(f"{fixture_dir}/fixture.osm.pbf")
+              if m.block_type == "OSMData"][:-1]
+    assert [m.data_offset for m in found] == [m.data_offset for m in intact]
+
+
 def test_resync_scan_recovers_after_corruption(fixture_dir, tmp_path):
     """Corrupt the first OSMData block's payload bytes mid-file: the exact
     index still lists it (header intact) but decode would fail; resync_scan
@@ -1040,12 +1133,13 @@ def test_memory_fs_source_roundtrip(fixture_dir):
 
 
 def test_memory_fs_sink_write_commit_abort(spark, fixture_dir):
-    """Drive the DataSourceWriter directly against memory://: write ->
-    part file appears; commit -> _SUCCESS with the row count; abort ->
-    part file removed. (The writer itself never touches the JVM, but
-    StructType.fromDDL does — the spark fixture guarantees a context so
-    the test also passes under -k filters that skip earlier tests.)"""
-    from pyspark.sql import Row
+    """Drive the DataSourceArrowWriter directly against memory://: write
+    one Arrow batch -> part file appears; commit -> _SUCCESS with the row
+    count; abort -> part file removed. (The writer itself never touches
+    the JVM, but StructType.fromDDL does — the spark fixture guarantees a
+    context so the test also passes under -k filters that skip earlier
+    tests.)"""
+    import pyarrow as pa
     from pyspark.sql.types import StructType
 
     from osmpbf_spark.sources.pbf import decode, fs
@@ -1056,14 +1150,17 @@ def test_memory_fs_sink_write_commit_abort(spark, fixture_dir):
         "id long, lat double, lon double, tags map<string,string>"
     )
     w = OsmPbfWriter({"path": "memory://out/pbf"}, schema, overwrite=False)
-    msg = w.write(
-        iter(
-            [
-                Row(id=1, lat=10.0, lon=20.0, tags={"k": "v"}),
-                Row(id=2, lat=-5.5, lon=3.25, tags=None),
-            ]
-        )
+    batch = pa.RecordBatch.from_pydict(
+        {
+            "id": [1, 2],
+            "lat": [10.0, -5.5],
+            "lon": [20.0, 3.25],
+            "tags": pa.array(
+                [[("k", "v")], None], pa.map_(pa.string(), pa.string())
+            ),
+        }
     )
+    msg = w.write(iter([batch]))
     assert msg.path.startswith("memory://out/pbf/part-")
     idx = decode.index_blocks(msg.path)
     assert [b.block_type for b in idx] == ["OSMHeader", "OSMData"]
@@ -1076,6 +1173,156 @@ def test_memory_fs_sink_write_commit_abort(spark, fixture_dir):
     w.abort([msg])
     assert not fs.fs_exists(msg.path)
     fs.memory_clear()
+
+
+_SINK_SCHEMA = (
+    "id long, lat double, lon double, tags map<string,string>, "
+    "meta struct<version:int, timestamp:timestamp, changeset:long, "
+    "uid:long, user:string, visible:boolean>"
+)
+
+
+def _sink_table(n: int):
+    """``n`` reader-shaped node rows (every 7th tagged, all with meta)
+    as one Arrow table, plus the same rows as plain Python lists."""
+    import pyarrow as pa
+
+    rng = np.random.default_rng(5)
+    ids = np.sort(rng.choice(10**9, n, replace=False)).tolist()
+    lat = rng.uniform(-90, 90, n).tolist()
+    lon = rng.uniform(-180, 180, n).tolist()
+    tags = [{"k": f"v{i % 3}", "n": str(i)} if i % 7 == 0 else None
+            for i in range(n)]
+    meta = [
+        {"version": i % 5 + 1, "timestamp_us": (1_600_000_000 + i) * 10**6,
+         "changeset": 1000 + i, "uid": i % 11, "user": f"u{i % 4}",
+         "visible": i % 9 != 0}
+        for i in range(n)
+    ]
+    struct = pa.StructArray.from_arrays(
+        [
+            pa.array([m["version"] for m in meta], pa.int32()),
+            pa.array([m["timestamp_us"] for m in meta],
+                     pa.timestamp("us", tz="UTC")),
+            pa.array([m["changeset"] for m in meta], pa.int64()),
+            pa.array([m["uid"] for m in meta], pa.int64()),
+            pa.array([m["user"] for m in meta], pa.string()),
+            pa.array([m["visible"] for m in meta], pa.bool_()),
+        ],
+        names=["version", "timestamp", "changeset", "uid", "user", "visible"],
+    )
+    table = pa.table(
+        {
+            "id": pa.array(ids, pa.int64()),
+            "lat": pa.array(lat, pa.float64()),
+            "lon": pa.array(lon, pa.float64()),
+            "tags": pa.array(
+                [list(t.items()) if t else [] for t in tags],
+                pa.map_(pa.string(), pa.string()),
+            ),
+            "meta": struct,
+        }
+    )
+    return table, ids, lat, lon, tags, meta
+
+
+def test_sink_cuts_blocks_across_arrow_batches(spark, tmp_path):
+    """A partition arriving as several Arrow batches, with a block_rows
+    cut inside a batch (2.5 x block_rows rows in batches of 0.75 x
+    block_rows), writes blocks of exactly block_rows and the same bytes a
+    per-row reference build of the encoder input gives; _SUCCESS counts
+    every row and they all read back."""
+    from pyspark.sql.types import StructType
+
+    from osmpbf_spark.sources.pbf import fs
+    from osmpbf_spark.sources.pbf.datasource import OsmPbfReader, OsmPbfWriter
+
+    block_rows = 400
+    table, ids, lat, lon, tags, meta = _sink_table(block_rows * 5 // 2)
+    batches = table.to_batches(max_chunksize=block_rows * 3 // 4)
+    assert len(batches) == 4
+    out = str(tmp_path / "cuts")
+    w = OsmPbfWriter(
+        {"path": out, "block_rows": str(block_rows)},
+        StructType.fromDDL(_SINK_SCHEMA),
+        overwrite=False,
+    )
+    msg = w.write(iter(batches))
+    w.commit([msg])
+    with fs.fs_open(f"{out}/_SUCCESS", "r") as f:
+        assert f.read() == f"{len(ids)}\n"
+
+    # reference: the encoder input built row by row with Python's round()
+    ref_blocks = []
+    for lo in range(0, len(ids), block_rows):
+        hi = lo + block_rows
+        ref_blocks.append({"nodes": {
+            "id": ids[lo:hi],
+            "lat_nano": [int(round(x * 1e7)) * 100 for x in lat[lo:hi]],
+            "lon_nano": [int(round(x * 1e7)) * 100 for x in lon[lo:hi]],
+            "tags": tags[lo:hi],
+            "meta": {
+                "version": [m["version"] for m in meta[lo:hi]],
+                "timestamp_ms": [m["timestamp_us"] // 1000
+                                 for m in meta[lo:hi]],
+                "changeset": [m["changeset"] for m in meta[lo:hi]],
+                "uid": [m["uid"] for m in meta[lo:hi]],
+                "user": [m["user"] for m in meta[lo:hi]],
+                "visible": [m["visible"] for m in meta[lo:hi]],
+            },
+        }})
+    ref = str(tmp_path / "ref.osm.pbf")
+    encode.write_pbf(ref, ref_blocks)
+    with open(msg.path, "rb") as a, open(ref, "rb") as b:
+        assert a.read() == b.read()
+
+    idx = [m for m in decode.index_blocks(msg.path)
+           if m.block_type == "OSMData"]
+    with open(msg.path, "rb") as f:
+        sizes = [
+            len(decode.BlockDecoder(decode.read_block_payload(f, m))
+                .decode_nodes()["id"])
+            for m in idx
+        ]
+    assert sizes == [block_rows, block_rows, block_rows // 2]
+    reader = OsmPbfReader({"path": out, "primitive": "node"}, None)
+    back = [
+        i for p in reader.partitions() for b in reader.read(p)
+        for i in b.column("id").to_pylist()
+    ]
+    assert back == ids
+
+
+@pytest.mark.parametrize(
+    "column", ["id", "lat", "lon", "meta", "meta.version", "meta.timestamp"]
+)
+def test_sink_rejects_null_by_column(spark, tmp_path, column):
+    """A null in a column the format cannot hold a null for raises a
+    ValueError naming that column, before anything is written."""
+    import pyarrow as pa
+    from pyspark.sql.types import StructType
+
+    from osmpbf_spark.sources.pbf.datasource import OsmPbfWriter
+
+    table, *_ = _sink_table(3)
+    top, _, field = column.partition(".")
+    col = table.column(top).combine_chunks()
+    if field:
+        kids = col.flatten()
+        i = col.type.get_field_index(field)
+        kids[i] = pa.array([None] + kids[i].to_pylist()[1:], kids[i].type)
+        col = pa.StructArray.from_arrays(kids, fields=list(col.type))
+    else:
+        col = pa.array([None] + col.to_pylist()[1:], col.type)
+    table = table.set_column(table.schema.get_field_index(top), top, col)
+    w = OsmPbfWriter(
+        {"path": str(tmp_path / "nulls")},
+        StructType.fromDDL(_SINK_SCHEMA),
+        overwrite=False,
+    )
+    with pytest.raises(ValueError, match=f"column '{column}'"):
+        w.write(iter(table.to_batches()))
+    assert not list((tmp_path / "nulls").glob("part-*"))
 
 
 def test_file_scheme_through_spark(spark, fixture_dir):

@@ -33,3 +33,37 @@ def test_no_row_at_a_time_udfs():
     for p in root.rglob("*.py"):
         src = p.read_text()
         assert "F.udf(" not in src and "functions.udf(" not in src, str(p)
+
+def test_data_source_writers_are_arrow_writers():
+    """Scale guard for the sinks: every Python data source writer under
+    osmpbf_spark/ takes Arrow batches (DataSourceArrowWriter /
+    DataSourceStreamArrowWriter), never an iterator of Rows."""
+    import importlib
+    import pkgutil
+
+    from pyspark.sql.datasource import (
+        DataSourceArrowWriter,
+        DataSourceStreamArrowWriter,
+        DataSourceStreamWriter,
+        DataSourceWriter,
+    )
+
+    import osmpbf_spark
+
+    for mod in pkgutil.walk_packages(
+        osmpbf_spark.__path__, osmpbf_spark.__name__ + "."
+    ):
+        importlib.import_module(mod.name)
+
+    def ours(base):
+        for cls in base.__subclasses__():
+            if cls.__module__.startswith("osmpbf_spark."):
+                yield cls
+            yield from ours(cls)
+
+    writers = set(ours(DataSourceWriter)) | set(ours(DataSourceStreamWriter))
+    assert writers, "no data source writers found under osmpbf_spark/"
+    for cls in writers:
+        assert issubclass(
+            cls, (DataSourceArrowWriter, DataSourceStreamArrowWriter)
+        ), f"{cls.__module__}.{cls.__qualname__} is a row-at-a-time writer"
