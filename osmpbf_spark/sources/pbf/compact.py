@@ -38,7 +38,7 @@ import os
 
 from osmpbf_spark.sources.pbf import fs
 from osmpbf_spark.sources.pbf.decode import (
-    header_block_cached,
+    _file_record,
     index_blocks,
     index_blocks_cached,
 )
@@ -56,23 +56,19 @@ def _index_file(
     the file MAY contain nodes (True unless every data block carries
     indexdata stats proving it node-free — foreign files have no stats
     and stay True, which makes the bbox-union logic conservative for
-    them). With ``index_cache_dir`` set both the block walk AND the
-    decoded header come from the planning sidecar (r15 advice — the
-    header dict rides the same pbfidx doc), so compacting an
-    already-planned lake reads no input bytes at all before the
-    transplant copy. Raises a diagnosable error on a headerless file
-    (corrupt, or a foreign tool's output) instead of a bare
+    them). Block index and header come from one planning record
+    (decode._file_record): the file is walked at most once, and with
+    ``index_cache_dir`` set both come from the planning sidecar, so
+    compacting an already-planned lake reads no input bytes at all
+    before the transplant copy. A headerless file (corrupt, or a foreign
+    tool's output) raises a ValueError naming the path instead of a bare
     StopIteration that PySpark would blur into a generic worker
     RuntimeError."""
+    rec = _file_record(path, index_cache_dir, header=True)
     split = None
     n_data = 0
     nodes_possible = False
-    blocks = (
-        index_blocks_cached(path, index_cache_dir)
-        if index_cache_dir
-        else index_blocks(path)
-    )
-    for m in blocks:
+    for m in rec["blocks"]:
         if m.block_type == "OSMHeader" and split is None:
             split = m.data_offset + m.data_size
         elif m.block_type == "OSMData":
@@ -83,13 +79,7 @@ def _index_file(
                 or m.stats["kinds"] & 1
             ):
                 nodes_possible = True
-    if split is None:
-        raise ValueError(
-            f"{path}: no OSMHeader block — refusing to transplant from "
-            "a file the decoder could not plan"
-        )
-    header = header_block_cached(path, index_cache_dir)
-    return split, n_data, header, nodes_possible
+    return split, n_data, rec["header"], nodes_possible
 
 
 def plan_groups(

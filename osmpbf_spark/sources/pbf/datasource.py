@@ -66,6 +66,11 @@ Options (SURVEY.md §7 Milestone 2):
                   stats our encoder stores in BlobHeader.indexdata (the
                   field the PBF spec reserves for block metadata). OPT-IN:
                   see OsmPbfReader.pushFilters for why the default is off.
+  index_cache_dir directory for the planning sidecars: one
+                  ``pbfidx_*.json`` doc per file holding its block index
+                  (and, once read, its header), keyed by the file's
+                  (size, mtime_ns), so a re-plan from a new driver walks
+                  no unchanged file again. Unset: in-process cache only.
 """
 
 from __future__ import annotations
@@ -267,8 +272,6 @@ def _pig_x2(batches):
     lands on the record actually returned, so a split yields its odd-indexed
     (0-based) records — and when the count is odd, the failed second advance
     at EOF leaves the LAST record current, so it leaks through too."""
-    import pyarrow as pa
-
     idx = 0
     last_batch = None
     for b in batches:
@@ -500,52 +503,15 @@ class OsmPbfReader(DataSourceReader):
     def _batches(self, partition: OsmPbfPartition):
         with fs.fs_open(partition.path, "rb") as f:
             for offset, size in partition.ranges:
-                payload = decode.read_block_payload(
-                    f,
-                    decode.BlockMeta("OSMData", offset, size),
-                    zlib_only="zlib_only" in self.compat,
-                )
-                bd = decode.BlockDecoder(
-                    payload,
-                    compat_stale_tags="stale_tags" in self.compat,
-                )
-                # type projection: skip blocks with no group of our type
-                # (the Spark analog of OsmPbfRecordReader.java:283-290)
-                kinds = set(bd.group_types())
-                if (
-                    decode.GROUP_CHANGESETS in kinds
-                    and self.primitive != "changeset"
-                ):
-                    # count-and-skip: the format declares changesets NOT
-                    # USED and the reference leaves them unparsed; warn so
-                    # the skip is never silent (once per partition reader)
-                    if not self._warned_changesets:
-                        self._warned_changesets = True
-                        import warnings
-
-                        warnings.warn(
-                            f"osmpbf: skipping {bd.count_changesets()} "
-                            "changeset entries (ChangeSet is id-only and "
-                            "'NOT USED' per osmformat.proto:174-189)",
-                            stacklevel=2,
-                        )
-                want = {
-                    "node": {decode.GROUP_NODES, decode.GROUP_DENSE},
-                    "way": {decode.GROUP_WAYS},
-                    "relation": {decode.GROUP_RELATIONS},
-                    "changeset": {decode.GROUP_CHANGESETS},
-                }[self.primitive]
-                if not kinds & want:
-                    continue
-                if self.primitive == "node":
-                    cols = bd.decode_nodes()
-                elif self.primitive == "way":
-                    cols = bd.decode_ways()
-                elif self.primitive == "changeset":
-                    cols = bd.decode_changesets()
-                else:
-                    cols = bd.decode_relations()
-                n = len(cols["id"])
+                # a damaged blob names its file and byte offset, not just
+                # the codec's or the wire decoder's bare complaint
+                try:
+                    cols = self._decode_block(f, offset, size)
+                except decode.BLOB_ERRORS as e:
+                    raise ValueError(
+                        f"{partition.path}: blob at byte {offset}: {e}"
+                    ) from e
+                n = 0 if cols is None else len(cols["id"])
                 if n == 0:
                     continue
                 # _pos parity: the reference keys every record in a block
@@ -567,6 +533,50 @@ class OsmPbfReader(DataSourceReader):
                     yield batch
                     continue
                 yield self._to_batch(cols, n, offset + size)
+
+    def _decode_block(self, f, offset: int, size: int) -> dict | None:
+        """Read, inflate and decode one block into the projected type's
+        columns, or None when the block holds no group of that type."""
+        payload = decode.read_block_payload(
+            f,
+            decode.BlockMeta("OSMData", offset, size),
+            zlib_only="zlib_only" in self.compat,
+        )
+        bd = decode.BlockDecoder(
+            payload, compat_stale_tags="stale_tags" in self.compat
+        )
+        # type projection: skip blocks with no group of our type (the
+        # Spark analog of OsmPbfRecordReader.java:283-290)
+        kinds = set(bd.group_types())
+        if decode.GROUP_CHANGESETS in kinds and self.primitive != "changeset":
+            # count-and-skip: the format declares changesets NOT USED and
+            # the reference leaves them unparsed; warn so the skip is
+            # never silent (once per partition reader)
+            if not self._warned_changesets:
+                self._warned_changesets = True
+                import warnings
+
+                warnings.warn(
+                    f"osmpbf: skipping {bd.count_changesets()} "
+                    "changeset entries (ChangeSet is id-only and "
+                    "'NOT USED' per osmformat.proto:174-189)",
+                    stacklevel=2,
+                )
+        want = {
+            "node": {decode.GROUP_NODES, decode.GROUP_DENSE},
+            "way": {decode.GROUP_WAYS},
+            "relation": {decode.GROUP_RELATIONS},
+            "changeset": {decode.GROUP_CHANGESETS},
+        }[self.primitive]
+        if not kinds & want:
+            return None
+        if self.primitive == "node":
+            return bd.decode_nodes()
+        if self.primitive == "way":
+            return bd.decode_ways()
+        if self.primitive == "changeset":
+            return bd.decode_changesets()
+        return bd.decode_relations()
 
     def _tag_key_mask(self, cols) -> np.ndarray:
         """Per-row bool: does the row's tag set contain ``self.tag_key``
@@ -922,19 +932,11 @@ class OsmPbfWriter(DataSourceArrowWriter):
 
 
 def osmpbf_header(path: str) -> dict:
-    """File-level metadata (HeaderBlock): required/optional features and
-    writingprogram. The reference reads the header only to skip it
-    (OsmPbfRecordReader.java:131-147); we surface it (SURVEY §1.5)."""
-    from osmpbf_spark.sources.pbf import decode, fs
-
-    idx = decode.index_blocks_cached(path)
-    with fs.fs_open(path, "rb") as f:
-        for meta in idx:
-            if meta.block_type == "OSMHeader":
-                return decode.decode_header_block(
-                    decode.read_block_payload(f, meta)
-                )
-    return {"required_features": [], "optional_features": [], "writingprogram": None}
+    """File-level metadata (HeaderBlock): required/optional features,
+    writingprogram and bbox. The reference reads the header only to skip
+    it (OsmPbfRecordReader.java:131-147); we surface it (SURVEY §1.5). A
+    file with no OSMHeader block raises a ValueError naming the path."""
+    return decode.header_block_cached(path)
 
 
 class OsmPbfStreamWriter(DataSourceStreamArrowWriter):

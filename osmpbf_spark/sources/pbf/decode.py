@@ -10,6 +10,12 @@ This is the engine-side replacement for the reference's scan pipeline
   with ~20 bytes read per block) and hand each Spark partition an exact list
   of block ranges. Every block is read exactly once by construction; no
   resync, no read-past-split-end protocol (java:364-384) needed.
+- **One planning record per file.** ``_blob_header`` is the one BlobHeader
+  parser (the index walk and the resync fallback both use it), and
+  ``_file_record`` holds what planning knows about a file — its block
+  index and, once asked for, its decoded OSMHeader — in one in-process
+  cache entry and one ``pbfidx_*.json`` sidecar doc. ``index_blocks_cached``
+  and ``header_block_cached`` are views of that record.
 - **Columnar decode.** DenseNodes already store id/lat/lon as packed delta
   arrays (osmformat.proto "We represent these nodes columnwise"); we keep
   them columnar — numpy cumsum for deltas, one vectorized pass per field —
@@ -24,8 +30,12 @@ This is the engine-side replacement for the reference's scan pipeline
 
 from __future__ import annotations
 
+import hashlib
+import json
+import lzma
 import os
 import struct
+import tempfile
 import threading
 import zlib
 from dataclasses import asdict, dataclass
@@ -45,8 +55,16 @@ BLOB_LZMA = 4
 BLOB_OBSOLETE_BZIP2 = 5  # deprecated in fileformat.proto; rejected explicitly
 BLOB_LZ4 = 6  # LZ4 block format (no frame header -> raw_size is REQUIRED)
 BLOB_ZSTD = 7  # zstd frame
+# Blob fields the decoder reads; raw_size is a varint, the rest are bytes
+_BLOB_FIELDS = (BLOB_RAW, BLOB_RAW_SIZE, BLOB_ZLIB, BLOB_LZMA, BLOB_LZ4,
+                BLOB_ZSTD)
 MAX_BLOB_HEADER = 64 * 1024  # fileformat.proto: BlobHeader < 64 KiB
 MAX_BLOB = 32 * 1024 * 1024  # fileformat.proto: Blob, and its payload, < 32 MiB
+# what a damaged blob raises while it is read, inflated or decoded; each
+# caller that knows the file re-raises these as a ValueError naming the
+# path and the blob's byte offset
+BLOB_ERRORS = (zlib.error, lzma.LZMAError, struct.error, ValueError,
+               IndexError)
 
 # osmformat.proto field numbers
 PB_STRINGTABLE = 1
@@ -147,6 +165,51 @@ def _parse_block_stats(buf: bytes) -> dict | None:
         return None
 
 
+def _blob_header(f, path: str, start: int, fsize: int) -> BlockMeta:
+    """Parse the file block whose 4-byte length prefix is at ``start``.
+
+    Enforces fileformat.proto's limits: a BlobHeader length outside
+    1..64 KiB, an unparseable BlobHeader, a Blob over 32 MiB, or a Blob
+    running past the end of the file raises ValueError naming the path
+    and the byte offset of the block, before any payload is read or
+    inflated."""
+    f.seek(start)
+    lenbuf = f.read(4)
+    if len(lenbuf) < 4:
+        raise ValueError(f"{path}: truncated block length at byte {start}")
+    (header_len,) = struct.unpack(">i", lenbuf)
+    if not 0 < header_len <= MAX_BLOB_HEADER:
+        raise ValueError(f"{path}: BlobHeader length {header_len} at "
+                         f"byte {start} outside 1..{MAX_BLOB_HEADER}")
+    header = f.read(header_len)
+    btype = ""
+    datasize = 0
+    stats = None
+    try:
+        for field, _wt, v in wire.scan_fields(header):
+            if field == BLOBHEADER_TYPE:
+                btype = v.decode("utf-8")
+            elif field == BLOBHEADER_DATASIZE:
+                datasize = v
+            elif field == BLOBHEADER_INDEXDATA:
+                stats = _parse_block_stats(v)
+        if not isinstance(datasize, int):
+            raise TypeError("datasize is not a varint")
+    except (IndexError, ValueError, TypeError, AttributeError,
+            struct.error) as e:
+        raise ValueError(f"{path}: unreadable BlobHeader at byte "
+                         f"{start}: {e}") from e
+    if datasize > MAX_BLOB:
+        raise ValueError(f"{path}: block at byte {start} declares a "
+                         f"Blob of {datasize} bytes, over the "
+                         f"{MAX_BLOB}-byte limit")
+    data_offset = start + 4 + header_len
+    if len(header) < header_len or data_offset + datasize > fsize:
+        raise ValueError(f"{path}: block at byte {start} runs past "
+                         f"the end of the {fsize}-byte file")
+    return BlockMeta(btype, data_offset, datasize, stats)
+
+
 def index_blocks(path: str) -> list[BlockMeta]:
     """Walk the BlobHeader chain and return the exact block index.
 
@@ -155,246 +218,134 @@ def index_blocks(path: str) -> list[BlockMeta]:
     96-129). Cost: one ~20-byte read + one seek per block, so ~2k reads for a
     32 GB planet file with 16 MB blocks — trivial even at 100 TB spread over
     many files (index each file in parallel tasks if the file count is huge).
-
-    Enforces fileformat.proto's limits as it walks: a BlobHeader length
-    outside 1..64 KiB, an unparseable BlobHeader, a Blob over 32 MiB, or
-    a Blob running past the end of the file raises ValueError naming the
-    path and the byte offset of the block, before any payload is read or
-    inflated.
+    Every block passes ``_blob_header``'s fileformat.proto checks; a stray
+    partial length prefix at the end of the file is rejected too.
     """
     blocks: list[BlockMeta] = []
     with fs.fs_open(path, "rb") as f:
         f.seek(0, 2)
         fsize = f.tell()
-        f.seek(0)
-        while True:
-            start = f.tell()
-            lenbuf = f.read(4)
-            if len(lenbuf) < 4:
-                if lenbuf:
-                    raise ValueError(f"{path}: truncated block length at "
-                                     f"byte {start}")
-                break
-            (header_len,) = struct.unpack(">i", lenbuf)
-            if not 0 < header_len <= MAX_BLOB_HEADER:
-                raise ValueError(f"{path}: BlobHeader length {header_len} at "
-                                 f"byte {start} outside 1..{MAX_BLOB_HEADER}")
-            header = f.read(header_len)
-            btype = ""
-            datasize = 0
-            stats = None
-            try:
-                for field, _wt, v in wire.scan_fields(header):
-                    if field == BLOBHEADER_TYPE:
-                        btype = v.decode("utf-8")
-                    elif field == BLOBHEADER_DATASIZE:
-                        datasize = v
-                    elif field == BLOBHEADER_INDEXDATA:
-                        stats = _parse_block_stats(v)
-                if not isinstance(datasize, int):
-                    raise TypeError("datasize is not a varint")
-            except (IndexError, ValueError, TypeError, AttributeError,
-                    struct.error) as e:
-                raise ValueError(f"{path}: unreadable BlobHeader at byte "
-                                 f"{start}: {e}") from e
-            if datasize > MAX_BLOB:
-                raise ValueError(f"{path}: block at byte {start} declares a "
-                                 f"Blob of {datasize} bytes, over the "
-                                 f"{MAX_BLOB}-byte limit")
-            if len(header) < header_len or f.tell() + datasize > fsize:
-                raise ValueError(f"{path}: block at byte {start} runs past "
-                                 f"the end of the {fsize}-byte file")
-            blocks.append(BlockMeta(btype, f.tell(), datasize, stats))
-            f.seek(datasize, 1)
+        pos = 0
+        while pos < fsize:
+            meta = _blob_header(f, path, pos, fsize)
+            blocks.append(meta)
+            pos = meta.data_offset + meta.data_size
     return blocks
 
 
-# in-process block-index cache, keyed by (path, size, mtime_ns). Bounded
-# FIFO: planning re-runs (every Spark action re-plans; streams re-plan per
-# micro-batch) hit this tier, while the sidecar tier below survives
-# processes. 256 files x ~60k BlockMeta ≈ tens of MB worst case — a
-# driver-side planning cache, never shipped to executors. The lock covers
-# eviction+insert: _index_files hits this from 16 pool threads, and two
-# threads racing the FIFO pop on the same first key is a KeyError that
-# would fail the whole plan.
-_INDEX_CACHE: dict[tuple, list[BlockMeta]] = {}
+# One planning record per file, keyed by (path, size, mtime_ns):
+# {"blocks": [BlockMeta], "header": decoded OSMHeader dict (once asked
+# for)}. Bounded FIFO: planning re-runs (every Spark action re-plans;
+# streams re-plan per micro-batch) hit this tier, while the sidecar tier
+# in _file_record survives processes. 256 files x ~60k BlockMeta ≈ tens
+# of MB worst case — a driver-side planning cache, never shipped to
+# executors. The lock covers eviction+insert: _index_files hits this from
+# 16 pool threads, and two threads racing the FIFO pop on the same first
+# key is a KeyError that would fail the whole plan.
+_INDEX_CACHE: dict[tuple, dict] = {}
 _INDEX_CACHE_MAX = 256
 _INDEX_CACHE_LOCK = threading.Lock()
 
 
-def index_blocks_cached(
-    path: str, cache_dir: str | None = None
-) -> list[BlockMeta]:
-    """``index_blocks`` behind two cache tiers keyed by the file's
-    (path, size, mtime_ns) identity: an in-process dict (re-plans within
-    one driver) and an optional JSON sidecar directory (``cache_dir``,
-    the ``index_cache_dir`` reader option — survives driver restarts, so
-    a 100 TB lake pays the header walk once per file EVER, not once per
-    session). Sidecars are named by the PATH digest with the (size,
-    mtime_ns) identity stored inside — a rewritten/compacted file
-    replaces its own sidecar in place instead of orphaning one per
-    identity, so the cache dir is bounded by the live file count. A file
-    whose backend reports no stable identity (memory://, stat failure)
-    is walked every time — the cache can skip work, never change
-    results."""
+def _file_record(path: str, cache_dir: str | None, header: bool) -> dict:
+    """What planning knows about one file — ``{"blocks", "header"?}`` —
+    behind two cache tiers keyed by the file's (path, size, mtime_ns)
+    identity: the in-process ``_INDEX_CACHE`` (re-plans within one
+    driver) and an optional JSON sidecar directory (``cache_dir``, the
+    ``index_cache_dir`` reader option — survives driver restarts, so a
+    100 TB lake pays the header walk once per file EVER, not once per
+    session). The sidecar is one ``pbfidx_*.json`` doc per file, named
+    by the PATH digest with the identity stored inside — a rewritten
+    file replaces its own sidecar in place instead of orphaning one per
+    identity, so the cache dir is bounded by the live file count.
+
+    ``header=True`` also decodes the OSMHeader, once, into the same
+    record and sidecar doc (a record or doc without it is upgraded in
+    place); a file with no OSMHeader block raises a ValueError naming
+    the path. A file whose backend reports no stable identity
+    (memory://, stat failure) is walked every call — the cache can skip
+    work, never change results."""
     ident = fs.fs_stat(path)
-    if ident is None:
-        return index_blocks(path)
-    key = (path, ident[0], ident[1])
-    with _INDEX_CACHE_LOCK:
-        hit = _INDEX_CACHE.get(key)
-    if hit is not None:
-        return hit
-    blocks: list[BlockMeta] | None = None
-    sidecar = None
-    if cache_dir:
-        import hashlib
-        import json
-
-        digest = hashlib.sha256(path.encode()).hexdigest()[:32]
-        sidecar = os.path.join(cache_dir, f"pbfidx_{digest}.json")
-        try:
-            with open(sidecar) as fh:
-                doc = json.load(fh)
-            if doc.get("size") == ident[0] and doc.get("mtime_ns") == ident[1]:
-                blocks = [BlockMeta(**b) for b in doc["blocks"]]
-        except (OSError, ValueError, TypeError, KeyError):
-            blocks = None  # absent/unreadable/stale: rebuild below
-    if blocks is None:
-        blocks = index_blocks(path)
-        if sidecar is not None:
-            import json
-            import tempfile
-
-            tmp = None
-            try:
-                os.makedirs(cache_dir, exist_ok=True)
-                fd, tmp = tempfile.mkstemp(
-                    dir=cache_dir, suffix=".tmp"
-                )
-                with os.fdopen(fd, "w") as fh:
-                    json.dump(
-                        {
-                            "size": ident[0],
-                            "mtime_ns": ident[1],
-                            "blocks": [asdict(b) for b in blocks],
-                        },
-                        fh,
-                    )
-                os.replace(tmp, sidecar)  # atomic: concurrent planners
-                # either see the full sidecar or none
-                tmp = None
-            except OSError:
-                pass  # read-only/full cache dir: planning still succeeded
-            finally:
-                if tmp is not None:  # failed write: no .tmp turds left
-                    try:
-                        os.unlink(tmp)
-                    except OSError:
-                        pass
-    with _INDEX_CACHE_LOCK:
-        while len(_INDEX_CACHE) >= _INDEX_CACHE_MAX:
-            _INDEX_CACHE.pop(next(iter(_INDEX_CACHE)))
-        _INDEX_CACHE[key] = blocks
-    return blocks
-
-
-# decoded-OSMHeader cache, same two tiers and identity key as the block
-# index (r15 advice: with only the block index cached, a sidecar-warm
-# compaction still paid one fs_open + read_block_payload per input just
-# to re-decode the header — the header dict is a few hundred bytes of
-# JSON-serializable metadata, so it rides the SAME sidecar doc).
-_HEADER_CACHE: dict[tuple, dict] = {}
-
-
-def header_block_cached(path: str, cache_dir: str | None = None) -> dict:
-    """Decoded OSMHeader metadata behind the block-index cache tiers:
-    in-process dict, then the ``pbfidx_*.json`` sidecar's ``header`` key
-    (older sidecars lack it — the first miss decodes once and upgrades
-    the doc in place, identity unchanged). A file without a stable
-    identity decodes every call; a headerless file raises the same
-    diagnosable ValueError compaction needs."""
-    ident = fs.fs_stat(path)
-    key = (path, ident[0], ident[1]) if ident else None
+    key = (path, ident[0], ident[1]) if ident is not None else None
+    rec = None
     if key is not None:
         with _INDEX_CACHE_LOCK:
-            hit = _HEADER_CACHE.get(key)
-        if hit is not None:
-            return hit
+            rec = _INDEX_CACHE.get(key)
+    if rec is not None and (not header or "header" in rec):
+        return rec
     sidecar = None
-    doc = None
-    if cache_dir and ident is not None:
-        import hashlib
-        import json
-
+    if cache_dir and key is not None:
         digest = hashlib.sha256(path.encode()).hexdigest()[:32]
         sidecar = os.path.join(cache_dir, f"pbfidx_{digest}.json")
+    if rec is None and sidecar is not None:
         try:
             with open(sidecar) as fh:
                 doc = json.load(fh)
-            if (
-                doc.get("size") == ident[0]
-                and doc.get("mtime_ns") == ident[1]
-                and isinstance(doc.get("header"), dict)
-            ):
-                header = doc["header"]
-                if key is not None:
-                    with _INDEX_CACHE_LOCK:
-                        while len(_HEADER_CACHE) >= _INDEX_CACHE_MAX:
-                            _HEADER_CACHE.pop(next(iter(_HEADER_CACHE)))
-                        _HEADER_CACHE[key] = header
-                return header
-        except (OSError, ValueError, TypeError, KeyError):
-            doc = None
-    blocks = index_blocks_cached(path, cache_dir)
-    meta = next(
-        (m for m in blocks if m.block_type == "OSMHeader"), None
-    )
-    if meta is None:
-        raise ValueError(
-            f"{path}: no OSMHeader block — refusing to plan from a file "
-            "the decoder could not identify"
+            if (doc.get("size"), doc.get("mtime_ns")) == ident:
+                rec = {"blocks": [BlockMeta(**b) for b in doc["blocks"]]}
+                if isinstance(doc.get("header"), dict):
+                    rec["header"] = doc["header"]
+        except (OSError, ValueError, TypeError, KeyError, AttributeError):
+            pass  # absent/unreadable/stale: rebuild below
+    built = rec is None or (header and "header" not in rec)
+    if rec is None:
+        rec = {"blocks": index_blocks(path)}
+    if header and "header" not in rec:
+        meta = next(
+            (m for m in rec["blocks"] if m.block_type == "OSMHeader"), None
         )
-    with fs.fs_open(path, "rb") as f:
-        header = decode_header_block(read_block_payload(f, meta))
-    if sidecar is not None:
-        import json
-        import tempfile
-
+        if meta is None:
+            raise ValueError(
+                f"{path}: no OSMHeader block — refusing to plan from a file "
+                "the decoder could not identify"
+            )
+        with fs.fs_open(path, "rb") as f:
+            try:
+                hdr = decode_header_block(read_block_payload(f, meta))
+            except BLOB_ERRORS as e:
+                raise ValueError(
+                    f"{path}: blob at byte {meta.data_offset}: {e}"
+                ) from e
+        rec = {**rec, "header": hdr}
+    if built and sidecar is not None:
+        doc = {**rec, "size": ident[0], "mtime_ns": ident[1],
+               "blocks": [asdict(b) for b in rec["blocks"]]}
         tmp = None
         try:
-            if doc is None or doc.get("size") != ident[0] or (
-                doc.get("mtime_ns") != ident[1]
-            ):
-                # (re)seed the doc from the cached index so the upgrade
-                # never drops the blocks section a concurrent planner
-                # depends on
-                doc = {
-                    "size": ident[0],
-                    "mtime_ns": ident[1],
-                    "blocks": [asdict(b) for b in blocks],
-                }
-            doc["header"] = header
             os.makedirs(cache_dir, exist_ok=True)
             fd, tmp = tempfile.mkstemp(dir=cache_dir, suffix=".tmp")
             with os.fdopen(fd, "w") as fh:
                 json.dump(doc, fh)
-            os.replace(tmp, sidecar)
+            os.replace(tmp, sidecar)  # atomic: concurrent planners
+            # either see the full sidecar or none
             tmp = None
         except OSError:
-            pass  # read-only/full cache dir: the decode still succeeded
+            pass  # read-only/full cache dir: planning still succeeded
         finally:
-            if tmp is not None:
+            if tmp is not None:  # failed write: no .tmp turds left
                 try:
                     os.unlink(tmp)
                 except OSError:
                     pass
     if key is not None:
         with _INDEX_CACHE_LOCK:
-            while len(_HEADER_CACHE) >= _INDEX_CACHE_MAX:
-                _HEADER_CACHE.pop(next(iter(_HEADER_CACHE)))
-            _HEADER_CACHE[key] = header
-    return header
+            while len(_INDEX_CACHE) >= _INDEX_CACHE_MAX:
+                _INDEX_CACHE.pop(next(iter(_INDEX_CACHE)))
+            _INDEX_CACHE[key] = rec
+    return rec
+
+
+def index_blocks_cached(
+    path: str, cache_dir: str | None = None
+) -> list[BlockMeta]:
+    """``index_blocks`` behind ``_file_record``'s cache tiers."""
+    return _file_record(path, cache_dir, header=False)["blocks"]
+
+
+def header_block_cached(path: str, cache_dir: str | None = None) -> dict:
+    """Decoded OSMHeader metadata behind ``_file_record``'s cache tiers;
+    a headerless file raises a ValueError naming the path."""
+    return _file_record(path, cache_dir, header=True)["header"]
 
 
 def resync_scan(path: str, from_offset: int = 0) -> list[BlockMeta]:
@@ -424,43 +375,18 @@ def resync_scan(path: str, from_offset: int = 0) -> list[BlockMeta]:
         fsize = f.tell()
 
         def try_block(hit: int) -> BlockMeta | None:
-            # BlobHeader starts len(type-field) bytes before the
-            # signature: field tag (1 byte) + length varint (1 byte for
-            # len 7); the 4-byte BE length prefix precedes the header
-            # (java:118's backup rule).
-            hdr_start = hit - 2
-            blk_start = hdr_start - 4
-            if blk_start < 0:
+            # the block starts 6 bytes before the signature: the 4-byte
+            # BE length prefix, then the type field's tag (1 byte) and
+            # length varint (1 byte for len 7) — java:118's backup rule.
+            # The candidate passes index_blocks' own checks or is no block.
+            if hit < 6:
                 return None
             try:
-                f.seek(blk_start)
-                pre = f.read(4)
-                if len(pre) < 4:
-                    return None
-                (header_len,) = struct.unpack(">i", pre)
-                if not 0 < header_len <= (1 << 16):
-                    return None
-                header = f.read(header_len)
-                if len(header) < header_len:
-                    return None
-                btype = ""
-                datasize = 0
-                stats = None
-                for field, _wt, v in wire.scan_fields(header):
-                    if field == BLOBHEADER_TYPE:
-                        btype = v.decode("utf-8")
-                    elif field == BLOBHEADER_DATASIZE:
-                        datasize = v
-                    elif field == BLOBHEADER_INDEXDATA:
-                        stats = _parse_block_stats(v)
-            except Exception:
+                meta = _blob_header(f, path, hit - 6, fsize)
+            except ValueError:
                 return None
-            data_off = hdr_start + header_len
-            # the blob must actually FIT in the remaining file (the old
-            # whole-file check compared against total size, accepting
-            # truncated tails)
-            if btype == "OSMData" and 0 < datasize <= fsize - data_off:
-                return BlockMeta(btype, data_off, datasize, stats)
+            if meta.block_type == "OSMData" and meta.data_size > 0:
+                return meta
             return None
 
         pos = from_offset
@@ -515,7 +441,11 @@ def read_block_payload(f, meta: BlockMeta, zlib_only: bool = False) -> bytes:
     lzma_data = None
     lz4_data = None
     zstd_data = None
-    for field, _wt, v in wire.scan_fields(blob):
+    for field, wt, v in wire.scan_fields(blob):
+        if field in _BLOB_FIELDS and (wt == wire.WT_VARINT) != (
+            field == BLOB_RAW_SIZE
+        ):
+            raise ValueError(f"blob field {field} has wire type {wt}")
         if field == BLOB_RAW:
             raw = v
         elif field == BLOB_RAW_SIZE:
@@ -546,12 +476,12 @@ def read_block_payload(f, meta: BlockMeta, zlib_only: bool = False) -> bytes:
         # compat §1.4.6: the reference accepts only zlib blobs
         # (OsmPbfRecordReader.java:164-182 DataFormatException)
         raise ValueError("unsupported compression algorithm in OSM file block")
-    if raw is not None:
-        return raw
     if raw_size is not None and raw_size > MAX_BLOB:
-        raise ValueError(f"blob at byte {meta.data_offset}: raw_size "
-                         f"{raw_size} over the {MAX_BLOB}-byte limit")
-    if zlib_data is not None or lzma_data is not None:
+        raise ValueError(f"raw_size {raw_size} over the {MAX_BLOB}-byte "
+                         "limit")
+    if raw is not None:
+        out = raw
+    elif zlib_data is not None or lzma_data is not None:
         # bounded inflate: never more than raw_size (or the spec's limit)
         # bytes, whatever the stream would expand to; at least 1 because a
         # max_length of 0 means no limit at all
@@ -560,13 +490,11 @@ def read_block_payload(f, meta: BlockMeta, zlib_only: bool = False) -> bytes:
             d = zlib.decompressobj()
             out = d.decompress(zlib_data, cap)
         else:
-            import lzma
-
             d = lzma.LZMADecompressor()
             out = d.decompress(lzma_data, max_length=cap)
         if not d.eof or d.unused_data:
             raise ValueError(
-                f"blob at byte {meta.data_offset}: compressed stream "
+                "compressed stream "
                 + ("has input left over" if d.eof else
                    f"does not end within {cap} inflated bytes")
             )
@@ -821,7 +749,7 @@ class BlockDecoder:
         meta = (
             self._decode_dense_info(info_buf, n)
             if info_buf is not None
-            else _empty_meta(n, fill=True)
+            else _empty_meta(n)
         )
         return {
             "id": ids.astype(np.int64),
@@ -1131,7 +1059,7 @@ class BlockDecoder:
         }
 
 
-def _empty_meta(n: int, fill: bool = False) -> dict[str, np.ndarray]:
+def _empty_meta(n: int) -> dict[str, np.ndarray]:
     return {
         "meta_version": np.full(n, -1, dtype=np.int32),
         "meta_timestamp_ms": np.full(n, np.iinfo(np.int64).min, dtype=np.int64),

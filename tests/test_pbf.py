@@ -452,6 +452,29 @@ def test_inflate_bounded_by_raw_size(tmp_path, codec):
         payload_of(blob(good, raw_size=decode.MAX_BLOB + 1))
 
 
+def test_blob_fields_checked_against_their_wire_types(tmp_path):
+    """A Blob whose raw_size is not a varint or whose data field is not
+    length-delimited fails with a ValueError, not a TypeError from deep
+    in a codec; a raw blob must match the raw_size it declares."""
+    import zlib
+
+    good = b"osm payload " * 4
+    z = wire.field_len(decode.BLOB_ZLIB, zlib.compress(good))
+    cases = {
+        "wire type 2": wire.field_len(decode.BLOB_RAW_SIZE, b"\x05") + z,
+        "wire type 0": wire.field_varint(decode.BLOB_RAW_SIZE, len(good))
+        + wire.field_varint(decode.BLOB_ZLIB, 7),
+        f"raw_size {len(good) + 1} != inflated {len(good)}":
+            wire.field_varint(decode.BLOB_RAW_SIZE, len(good) + 1)
+            + wire.field_len(decode.BLOB_RAW, good),
+    }
+    for i, (msg, blob) in enumerate(cases.items()):
+        p = str(tmp_path / f"b{i}.pbf")
+        meta = _one_blob_file(p, blob)
+        with open(p, "rb") as f, pytest.raises(ValueError, match=msg):
+            decode.read_block_payload(f, meta)
+
+
 def test_index_enforces_fileformat_limits(fixture_dir, tmp_path):
     """index_blocks rejects a BlobHeader length outside 1..64 KiB, an
     unparseable BlobHeader, a Blob over 32 MiB, a file cut inside a block,
@@ -518,6 +541,45 @@ def test_resync_scan_finds_all_blocks_clean_file(fixture_dir):
     idx = [b for b in decode.index_blocks(f"{fixture_dir}/fixture.osm.pbf")
            if b.block_type == "OSMData"]
     assert [b.data_offset for b in found] == [b.data_offset for b in idx]
+
+
+def test_resync_scan_applies_the_index_checks(tmp_path):
+    """resync_scan's candidates pass index_blocks' own BlobHeader checks:
+    a block declaring a 33 MiB Blob is no block, even inside a sparse
+    file big enough to hold it."""
+    import struct as _struct
+
+    size = 33 << 20
+    header = wire.field_len(1, b"OSMData") + wire.field_varint(3, size)
+    p = str(tmp_path / "sparse.pbf")
+    with open(p, "wb") as f:
+        f.write(_struct.pack(">i", len(header)) + header)
+        f.truncate(4 + len(header) + size)
+    with pytest.raises(ValueError, match="over the 33554432-byte limit"):
+        decode.index_blocks(p)
+    assert decode.resync_scan(p) == []
+
+
+def test_corrupt_blob_error_names_file_and_offset(fixture_dir, tmp_path):
+    """A damaged blob fails the scan with a ValueError naming the file
+    and the blob's byte offset, not a bare zlib.error."""
+    import zlib
+
+    from osmpbf_spark.sources.pbf.datasource import OsmPbfReader
+
+    src = f"{fixture_dir}/fixture.osm.pbf"
+    data = bytearray(open(src, "rb").read())
+    m = [b for b in decode.index_blocks(src) if b.block_type == "OSMData"][0]
+    data[m.data_offset + m.data_size // 2] ^= 0xFF
+    p = str(tmp_path / "flipped.osm.pbf")
+    open(p, "wb").write(bytes(data))
+    rdr = OsmPbfReader({"path": p}, None)
+    with pytest.raises(ValueError, match=f"blob at byte {m.data_offset}: ") \
+            as err:
+        for part in rdr.partitions():
+            list(rdr.read(part))
+    assert str(err.value).startswith(f"{p}: ")
+    assert isinstance(err.value.__cause__, (zlib.error, ValueError))
 
 
 def test_fixture_deterministic(tmp_path):
@@ -812,6 +874,23 @@ def test_header_helper(fixture_dir):
 
     hdr = osmpbf_header(f"{fixture_dir}/fixture.osm.pbf")
     assert hdr["required_features"] == ["OsmSchema-V0.6", "DenseNodes"]
+
+
+def test_header_helper_rejects_headerless_file(fixture_dir, tmp_path):
+    """osmpbf_header on a file with no OSMHeader block raises a ValueError
+    naming the path instead of returning an empty features dict."""
+    from osmpbf_spark.sources.pbf.datasource import osmpbf_header
+
+    src = f"{fixture_dir}/fixture.osm.pbf"
+    head = decode.index_blocks(src)[0]
+    assert head.block_type == "OSMHeader"
+    p = str(tmp_path / "headless.osm.pbf")
+    open(p, "wb").write(
+        open(src, "rb").read()[head.data_offset + head.data_size:]
+    )
+    with pytest.raises(ValueError, match="no OSMHeader block") as err:
+        osmpbf_header(p)
+    assert p in str(err.value)
 
 
 def test_header_bbox_roundtrip(tmp_path):
@@ -2606,13 +2685,37 @@ def test_pbf_compact_sidecar_handoff(tmp_path, spark, monkeypatch):
         or real_read(f, m, *a, **kw),
     )
     decode._INDEX_CACHE.clear()
-    decode._HEADER_CACHE.clear()
     for i in range(6):
         _index_file(str(lake / f"f{i:03d}.osm.pbf"), cache)
     assert walks == [] and reads == [], (
         "sidecar-warm compaction planning must read zero input bytes — "
         f"walked {walks}, read payloads {reads}"
     )
+
+
+def test_compact_index_file_walks_once(fixture_dir, tmp_path, monkeypatch):
+    """compact._index_file without a cache dir walks its input once: the
+    block index and the header come from one planning record."""
+    import shutil
+
+    from osmpbf_spark.sources.pbf import compact
+
+    p = str(tmp_path / "in.osm.pbf")
+    shutil.copy(f"{fixture_dir}/fixture.osm.pbf", p)
+    walks: list[str] = []
+    real = decode.index_blocks
+    for mod in (decode, compact):
+        monkeypatch.setattr(
+            mod, "index_blocks", lambda q: walks.append(q) or real(q)
+        )
+    decode._INDEX_CACHE.clear()
+    split, n_data, header, nodes_possible = compact._index_file(p)
+    assert walks == [p]
+    idx = real(p)
+    assert split == idx[0].data_offset + idx[0].data_size
+    assert n_data == sum(1 for m in idx if m.block_type == "OSMData")
+    assert header["required_features"] == ["OsmSchema-V0.6", "DenseNodes"]
+    assert nodes_possible
 
 
 def test_pbf_compact_header_fidelity_and_foreign_bbox(tmp_path):

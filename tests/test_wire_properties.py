@@ -6,11 +6,15 @@ fixture-driven tests never sample."""
 
 from __future__ import annotations
 
+import functools
+import os
+from collections import Counter
+
 import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from osmpbf_spark.sources.pbf import wire
+from osmpbf_spark.sources.pbf import fixture, wire
 
 I64 = st.integers(min_value=-(2**63), max_value=2**63 - 1)
 U64 = st.integers(min_value=0, max_value=2**64 - 1)
@@ -129,6 +133,68 @@ def test_dense_block_roundtrip_property(nodes):
         lo, hi = out["tag_offsets"][i], out["tag_offsets"][i + 1]
         got = dict(zip(out["tag_keys"][lo:hi], out["tag_vals"][lo:hi]))
         assert got == (tags or {})
+
+
+def _freeze(v):
+    """A to_pylist row as a hashable value (maps, lists and structs)."""
+    if isinstance(v, dict):
+        return tuple(sorted((k, _freeze(x)) for k, x in v.items()))
+    if isinstance(v, (list, tuple)):
+        return tuple(_freeze(x) for x in v)
+    return v
+
+
+_SCANS = (("node", {"with_meta": "true"}), ("way", {}), ("relation", {}))
+
+
+def _scan_rows(path: str) -> dict[str, Counter]:
+    """Every row of every primitive, read through OsmPbfReader directly."""
+    from osmpbf_spark.sources.pbf.datasource import OsmPbfReader
+
+    out = {}
+    for primitive, opts in _SCANS:
+        rdr = OsmPbfReader({"path": path, "primitive": primitive, **opts},
+                           None)
+        out[primitive] = Counter(
+            _freeze(row)
+            for part in rdr.partitions()
+            for batch in rdr.read(part)
+            for row in batch.to_pylist()
+        )
+    return out
+
+
+@functools.lru_cache(maxsize=1)
+def _fixture() -> tuple[bytes, dict[str, Counter]]:
+    path = os.path.join(fixture.ensure_fixture(), "fixture.osm.pbf")
+    return open(path, "rb").read(), _scan_rows(path)
+
+
+@given(st.data())
+@settings(max_examples=50, deadline=None)
+def test_flipped_byte_fails_naming_path_or_reads_a_subset(draw):
+    """One flipped byte anywhere in the fixture either fails the scan
+    with a ValueError naming the file, or reads rows that are a
+    sub-multiset of the undamaged read (a flipped "OSMData" type string
+    makes the reader skip that block, as the spec allows)."""
+    import tempfile
+
+    clean_bytes, clean_rows = _fixture()
+    data = bytearray(clean_bytes)
+    data[draw.draw(st.integers(0, len(data) - 1), label="pos")] ^= (
+        draw.draw(st.integers(1, 255), label="xor")
+    )
+    with tempfile.TemporaryDirectory() as d:
+        path = os.path.join(d, "flipped.osm.pbf")
+        with open(path, "wb") as f:
+            f.write(bytes(data))
+        try:
+            got = _scan_rows(path)
+        except ValueError as e:
+            assert path in str(e)
+            return
+    for primitive, rows in got.items():
+        assert not rows - clean_rows[primitive], primitive
 
 
 def test_sha_prefix_hash_cross_engine(spark, duck):
