@@ -61,10 +61,25 @@ _BLOB_FIELDS = (BLOB_RAW, BLOB_RAW_SIZE, BLOB_ZLIB, BLOB_LZMA, BLOB_LZ4,
 MAX_BLOB_HEADER = 64 * 1024  # fileformat.proto: BlobHeader < 64 KiB
 MAX_BLOB = 32 * 1024 * 1024  # fileformat.proto: Blob, and its payload, < 32 MiB
 # what a damaged blob raises while it is read, inflated or decoded; each
-# caller that knows the file re-raises these as a ValueError naming the
-# path and the blob's byte offset
+# caller that knows the file re-raises these as a CorruptPbfError naming
+# the path and the blob's byte offset
 BLOB_ERRORS = (zlib.error, lzma.LZMAError, struct.error, ValueError,
                IndexError)
+
+
+class CorruptPbfError(ValueError):
+    """The block or blob at byte ``offset`` of ``path`` is damaged, for
+    ``reason``. The message is ``"<path>: blob at byte <offset>:
+    <reason>"``. A ValueError, so callers catching ValueError keep
+    working."""
+
+    def __init__(self, path: str, offset: int, reason: str):
+        super().__init__(f"{path}: blob at byte {offset}: {reason}")
+        self.path, self.offset, self.reason = path, offset, reason
+
+    def __reduce__(self):  # the default would re-call __init__ with args
+        return type(self), (self.path, self.offset, self.reason)
+
 
 # osmformat.proto field numbers
 PB_STRINGTABLE = 1
@@ -170,17 +185,17 @@ def _blob_header(f, path: str, start: int, fsize: int) -> BlockMeta:
 
     Enforces fileformat.proto's limits: a BlobHeader length outside
     1..64 KiB, an unparseable BlobHeader, a Blob over 32 MiB, or a Blob
-    running past the end of the file raises ValueError naming the path
-    and the byte offset of the block, before any payload is read or
+    running past the end of the file raises CorruptPbfError naming the
+    path and the byte offset of the block, before any payload is read or
     inflated."""
     f.seek(start)
     lenbuf = f.read(4)
     if len(lenbuf) < 4:
-        raise ValueError(f"{path}: truncated block length at byte {start}")
+        raise CorruptPbfError(path, start, "truncated block length")
     (header_len,) = struct.unpack(">i", lenbuf)
     if not 0 < header_len <= MAX_BLOB_HEADER:
-        raise ValueError(f"{path}: BlobHeader length {header_len} at "
-                         f"byte {start} outside 1..{MAX_BLOB_HEADER}")
+        raise CorruptPbfError(path, start, f"BlobHeader length {header_len} "
+                              f"outside 1..{MAX_BLOB_HEADER}")
     header = f.read(header_len)
     btype = ""
     datasize = 0
@@ -197,16 +212,15 @@ def _blob_header(f, path: str, start: int, fsize: int) -> BlockMeta:
             raise TypeError("datasize is not a varint")
     except (IndexError, ValueError, TypeError, AttributeError,
             struct.error) as e:
-        raise ValueError(f"{path}: unreadable BlobHeader at byte "
-                         f"{start}: {e}") from e
+        raise CorruptPbfError(path, start,
+                              f"unreadable BlobHeader: {e}") from e
     if datasize > MAX_BLOB:
-        raise ValueError(f"{path}: block at byte {start} declares a "
-                         f"Blob of {datasize} bytes, over the "
-                         f"{MAX_BLOB}-byte limit")
+        raise CorruptPbfError(path, start, f"declares a Blob of {datasize} "
+                              f"bytes, over the {MAX_BLOB}-byte limit")
     data_offset = start + 4 + header_len
     if len(header) < header_len or data_offset + datasize > fsize:
-        raise ValueError(f"{path}: block at byte {start} runs past "
-                         f"the end of the {fsize}-byte file")
+        raise CorruptPbfError(path, start,
+                              f"runs past the end of the {fsize}-byte file")
     return BlockMeta(btype, data_offset, datasize, stats)
 
 
@@ -303,9 +317,7 @@ def _file_record(path: str, cache_dir: str | None, header: bool) -> dict:
             try:
                 hdr = decode_header_block(read_block_payload(f, meta))
             except BLOB_ERRORS as e:
-                raise ValueError(
-                    f"{path}: blob at byte {meta.data_offset}: {e}"
-                ) from e
+                raise CorruptPbfError(path, meta.data_offset, str(e)) from e
         rec = {**rec, "header": hdr}
     if built and sidecar is not None:
         doc = {**rec, "size": ident[0], "mtime_ns": ident[1],
@@ -383,7 +395,7 @@ def resync_scan(path: str, from_offset: int = 0) -> list[BlockMeta]:
                 return None
             try:
                 meta = _blob_header(f, path, hit - 6, fsize)
-            except ValueError:
+            except CorruptPbfError:
                 return None
             if meta.block_type == "OSMData" and meta.data_size > 0:
                 return meta

@@ -141,10 +141,16 @@ def test_lake_replan_zero_header_walks(fixture_dir, tmp_path, monkeypatch):
     ]
 
 
+def _flat(parts) -> list:
+    """A plan as the ``(path, (data_offset, data_size))`` sequence it reads."""
+    return [(path, r) for pt in parts for path, ranges in pt.segments
+            for r in ranges]
+
+
 def test_plan_files_threaded_matches_serial(fixture_dir, tmp_path):
-    """The thread-pooled multi-file planner must produce exactly the
-    partitions of per-file serial planning, in file order — threading is
-    a latency fix, never a plan change."""
+    """The thread-pooled multi-file planner must read exactly the blocks
+    of per-file serial planning, in file order — threading is a latency
+    fix, never a change to which blocks are read or their order."""
     import shutil
 
     from osmpbf_spark.sources.pbf.datasource import OsmPbfReader
@@ -158,9 +164,7 @@ def test_plan_files_threaded_matches_serial(fixture_dir, tmp_path):
     rdr = OsmPbfReader({"path": str(tmp_path)}, None)
     threaded = rdr._plan_files(paths)
     serial = [part for p in paths for part in rdr._plan_files([p])]
-    assert [(pt.path, pt.ranges) for pt in threaded] == [
-        (pt.path, pt.ranges) for pt in serial
-    ]
+    assert _flat(threaded) == _flat(serial)
 
     # the POOL path proper: a non-local scheme is wait-dominated by
     # construction, so multi-file memory:// planning goes through the
@@ -179,11 +183,227 @@ def test_plan_files_threaded_matches_serial(fixture_dir, tmp_path):
         mem_serial = [
             part for p in mem_paths for part in rdr._plan_files([p])
         ]
-        assert [(pt.path, pt.ranges) for pt in pooled] == [
-            (pt.path, pt.ranges) for pt in mem_serial
-        ]
+        assert _flat(pooled) == _flat(mem_serial)
     finally:
         pbf_fs.memory_clear()
+
+
+def _parent_plan(index, path: str, target: int) -> list:
+    """The one-file split rule: consecutive kept blocks, each partition
+    closed once it reaches ``target``, the tail in its own partition."""
+    parts, ranges, acc = [], [], 0
+    for m in index:
+        kinds = (m.stats or {}).get("kinds", 1)
+        if m.block_type != "OSMData" or not kinds & 1:
+            continue  # node read: blocks without nodes are pruned
+        ranges.append((m.data_offset, m.data_size))
+        acc += m.data_size
+        if acc >= target:
+            parts.append((path, ranges))
+            ranges, acc = [], 0
+    if ranges:
+        parts.append((path, ranges))
+    return parts
+
+
+def _small_pbf(path: str, n: int, first_id: int) -> str:
+    encode.write_pbf(path, [{"nodes": {
+        "id": list(range(first_id, first_id + n)),
+        "lat_nano": [100 * i for i in range(n)],
+        "lon_nano": [200 * i for i in range(n)],
+        "tags": [None] * n,
+    }}])
+    return path
+
+
+def test_small_files_pack_into_shared_partitions(fixture_dir, tmp_path):
+    """Files below partition_target_bytes are packed whole, in file order,
+    into shared partitions; a file at or above it is split exactly as a
+    lone file is; a plan with nothing left is one empty sentinel."""
+    import shutil
+
+    from pyspark.sql.datasource import LessThan
+
+    from osmpbf_spark.sources.pbf.datasource import (
+        OsmPbfPushdownReader,
+        OsmPbfReader,
+    )
+
+    src = f"{fixture_dir}/fixture.osm.pbf"
+    lake = tmp_path / "lake"
+    lake.mkdir()
+    paths = []
+    for i in range(8):
+        paths.append(str(lake / f"c{i}.osm.pbf"))
+        shutil.copy(src, paths[-1])
+    rdr = OsmPbfReader({"path": str(lake)}, None)
+    parts = rdr.partitions()
+    # 8 copies (~0.24 MB each) under the 32 MiB default: one partition
+    assert len(parts) == 1
+    assert [path for path, _ in parts[0].segments] == paths
+    # flattened, the plan reads each file's own plan in file order
+    per_file = [OsmPbfReader({"path": p}, None).partitions() for p in paths]
+    assert _flat(parts) == [x for pf in per_file for x in _flat(pf)]
+    # the path/ranges views: first file, every range in order
+    assert parts[0].path == paths[0]
+    assert parts[0].ranges == [r for _, r in _flat(parts)]
+
+    # a run never passes the target: 2.5 files' payload a run
+    one = sum(sz for _, sz in per_file[0][0].ranges)
+    two = OsmPbfReader({"path": str(lake),
+                        "partition_target_bytes": str(one * 5 // 2)},
+                       None).partitions()
+    assert [len(pt.segments) for pt in two] == [2, 2, 2, 2]
+    assert _flat(two) == _flat(parts)
+
+    # a file at or above the target keeps the one-file plan's exact
+    # (path, ranges) list, between the runs of its smaller neighbours
+    mixed = tmp_path / "mixed"
+    mixed.mkdir()
+    a = _small_pbf(str(mixed / "a.osm.pbf"), 5, 1)
+    big = str(mixed / "b.osm.pbf")
+    shutil.copy(src, big)
+    c = _small_pbf(str(mixed / "c.osm.pbf"), 7, 100)
+    d = _small_pbf(str(mixed / "d.osm.pbf"), 3, 200)
+    target = one // 3
+    got = OsmPbfReader({"path": str(mixed),
+                        "partition_target_bytes": str(target)},
+                       None).partitions()
+    alone = {p: _parent_plan(decode.index_blocks(p), p, target)
+             for p in (a, big, c, d)}
+    assert len(alone[big]) == 2  # the fixture's two node blocks, split
+    assert [pt.segments for pt in got] == [
+        alone[a], *([w] for w in alone[big]), alone[c] + alone[d]
+    ]
+
+    # all pruned: still one empty sentinel partition
+    pruned = OsmPbfPushdownReader({"path": str(lake),
+                                   "filter_pushdown": "true"}, None)
+    pruned.pushFilters([LessThan(("lat",), 10.2)])  # below every block
+    sentinel = pruned.partitions()
+    assert len(sentinel) == 1 and sentinel[0].segments == []
+    assert sentinel[0].ranges == [] and list(pruned.read(sentinel[0])) == []
+
+
+def test_packed_runs_fill_every_core(fixture_dir, tmp_path, monkeypatch):
+    """Above MIN_RUN_BYTES, small files are packed into about one run per
+    core, so a lake of mid-size files still reads in parallel."""
+    import shutil
+
+    from osmpbf_spark.sources.pbf import datasource as ds
+
+    for i in range(8):
+        shutil.copy(f"{fixture_dir}/fixture.osm.pbf",
+                    tmp_path / f"c{i}.osm.pbf")
+    monkeypatch.setattr(ds, "MIN_RUN_BYTES", 1)
+    for cores, runs in ((4, [2, 2, 2, 2]), (3, [3, 3, 2]), (1, [8])):
+        monkeypatch.setattr(ds.os, "cpu_count", lambda: cores)
+        parts = ds.OsmPbfReader({"path": str(tmp_path)}, None).partitions()
+        assert [len(pt.segments) for pt in parts] == runs
+
+
+def test_packed_partition_keeps_per_file_semantics(fixture_dir, tmp_path):
+    """A packed partition reads each file as that file's own partition:
+    compat=pig_x2 keeps each file's odd records (and an odd-count file's
+    last one), and a damaged blob in the second file names that file and
+    the blob's offset."""
+    import shutil
+
+    from osmpbf_spark.sources.pbf.datasource import OsmPbfReader
+
+    lake = tmp_path / "lake"
+    lake.mkdir()
+    paths = [
+        _small_pbf(str(lake / "a.osm.pbf"), 5, 1),
+        str(lake / "b.osm.pbf"),
+        _small_pbf(str(lake / "c.osm.pbf"), 3, 100),
+        _small_pbf(str(lake / "d.osm.pbf"), 7, 200),
+    ]
+    shutil.copy(f"{fixture_dir}/fixture.osm.pbf", paths[1])
+
+    def ids(path):
+        rdr = OsmPbfReader({"path": path, "compat": "pig_x2"}, None)
+        return [i for pt in rdr.partitions() for b in rdr.read(pt)
+                for i in b.column("id").to_pylist()]
+
+    rdr = OsmPbfReader({"path": str(lake), "compat": "pig_x2"}, None)
+    assert len(rdr.partitions()) == 1
+    got = ids(str(lake))
+    assert got == [i for p in paths for i in ids(p)]
+    assert got[:3] == [2, 4, 5]  # a.osm.pbf alone: odd ids + EOF leak
+
+    # flip a byte inside file 2's first data blob
+    m = [b for b in decode.index_blocks(paths[1])
+         if b.block_type == "OSMData"][0]
+    data = bytearray(open(paths[1], "rb").read())
+    data[m.data_offset + m.data_size // 2] ^= 0xFF
+    open(paths[1], "wb").write(bytes(data))
+    rdr = OsmPbfReader({"path": str(lake)}, None)
+    (part,) = rdr.partitions()
+    with pytest.raises(decode.CorruptPbfError) as err:
+        list(rdr.read(part))
+    assert str(err.value).startswith(
+        f"{paths[1]}: blob at byte {m.data_offset}: "
+    )
+    assert (err.value.path, err.value.offset) == (paths[1], m.data_offset)
+
+
+def test_stream_batch_packs_new_small_files(fixture_dir, tmp_path):
+    """A micro-batch over several new small files plans one packed
+    partition; a batch with nothing new plans one empty sentinel."""
+    import shutil
+
+    from osmpbf_spark.sources.pbf.datasource import OsmPbfStreamReader
+
+    src = tmp_path / "diffs"
+    src.mkdir()
+    for i in range(3):
+        shutil.copy(f"{fixture_dir}/fixture.osm.pbf", src / f"{i:03d}.osm.pbf")
+    sr = OsmPbfStreamReader({"path": str(src)}, None)
+    end = sr.latestOffset()
+    (part,) = sr.partitions(sr.initialOffset(), end)
+    assert [p for p, _ in part.segments] == [
+        str(src / f"{i:03d}.osm.pbf") for i in range(3)
+    ]
+    assert sum(b.num_rows for b in sr.read(part)) == 3 * 9720
+    (empty,) = sr.partitions(end, end)
+    assert empty.segments == [] and list(sr.read(empty)) == []
+
+
+def test_corrupt_pbf_error_type(fixture_dir, tmp_path):
+    """Index, header and blob damage all raise CorruptPbfError — a
+    ValueError carrying path, offset and reason that survives pickling."""
+    import pickle
+    import struct as _struct
+
+    p = tmp_path / "neg.pbf"
+    p.write_bytes(_struct.pack(">i", -5) + b"x" * 64)
+    with pytest.raises(decode.CorruptPbfError) as err:
+        decode.index_blocks(str(p))
+    e = err.value
+    assert isinstance(e, ValueError)
+    assert (e.path, e.offset) == (str(p), 0)
+    assert str(e) == (
+        f"{p}: blob at byte 0: BlobHeader length -5 outside 1..65536")
+    back = pickle.loads(pickle.dumps(e))
+    assert type(back) is decode.CorruptPbfError
+    assert (str(back), back.path, back.offset, back.reason) == (
+        str(e), e.path, e.offset, e.reason)
+
+    # a damaged OSMHeader blob, found by the header decode
+    src = f"{fixture_dir}/fixture.osm.pbf"
+    hdr = decode.index_blocks(src)[0]
+    data = bytearray(open(src, "rb").read())
+    data[hdr.data_offset + hdr.data_size // 2] ^= 0xFF
+    q = tmp_path / "hdr.osm.pbf"
+    q.write_bytes(bytes(data))
+    decode._INDEX_CACHE.clear()
+    with pytest.raises(decode.CorruptPbfError,
+                       match=f"blob at byte {hdr.data_offset}: ") as err:
+        decode.header_block_cached(str(q))
+    assert err.value.path == str(q)
+    back = pickle.loads(pickle.dumps(err.value))
+    assert str(back) == str(err.value)
 
 
 def test_header_features(fixture_dir):
