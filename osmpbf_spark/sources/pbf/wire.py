@@ -109,6 +109,9 @@ def decode_packed_uint(buf: bytes) -> np.ndarray:
       the uint8->float64 conversion eats the BLAS win; negative result
       recorded so it isn't retried.)
 
+    A field whose last byte continues a varint, or holding a varint
+    longer than 10 bytes, raises ValueError in every tier.
+
     A cheaper dense decode does not pay off end to end either (negative
     result, not to be retried without a new reason): a per-varint gather
     kernel (1.4x on lat/lon), no meta fill for reads without meta and an
@@ -123,6 +126,8 @@ def decode_packed_uint(buf: bytes) -> np.ndarray:
     if not buf:
         return np.empty(0, dtype=np.uint64)
     b = np.frombuffer(buf, dtype=np.uint8)
+    if b[-1] & 0x80:
+        raise ValueError("packed varint field ends inside a varint")
     is_start = np.empty(len(b), dtype=bool)
     is_start[0] = True
     # a byte starts a varint iff the previous byte had no continuation bit
@@ -131,6 +136,8 @@ def decode_packed_uint(buf: bytes) -> np.ndarray:
     if len(starts) == len(b):  # every varint is one byte
         return b.astype(np.uint64)
     counts = np.diff(starts, append=np.int64(len(b)))
+    if counts.max() > 10:
+        raise ValueError("packed varint longer than 10 bytes")
     multi = np.flatnonzero(counts > 1)
     if len(multi) <= 32:
         out = b[starts].astype(np.uint64)

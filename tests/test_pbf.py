@@ -802,6 +802,22 @@ def test_corrupt_blob_error_names_file_and_offset(fixture_dir, tmp_path):
     assert isinstance(err.value.__cause__, (zlib.error, ValueError))
 
 
+def test_cut_packed_varint_names_file_and_offset(tmp_path):
+    """A DenseNodes id field cut inside a varint fails the scan with a
+    CorruptPbfError naming the file and the blob's offset."""
+    from osmpbf_spark.sources.pbf.datasource import OsmPbfReader
+
+    group = wire.field_len(2, wire.field_len(1, b"\x02\x80"))
+    blob = wire.field_len(1, wire.field_len(2, group))  # raw PrimitiveBlock
+    p = str(tmp_path / "cut.osm.pbf")
+    meta = _one_blob_file(p, blob)
+    rdr = OsmPbfReader({"path": p}, None)
+    with pytest.raises(decode.CorruptPbfError,
+                       match=f"blob at byte {meta.data_offset}: packed"):
+        for part in rdr.partitions():
+            list(rdr.read(part))
+
+
 def test_fixture_deterministic(tmp_path):
     """Same seed -> byte-identical fixture (regeneration safety)."""
     p = str(tmp_path / "regen.pbf")
@@ -835,6 +851,121 @@ def test_datasource_invalid_primitive(spark, fixture_dir):
         spark.read.format("osmpbf").option(
             "path", f"{fixture_dir}/fixture.osm.pbf"
         ).option("primitive", "bogus").load().count()
+
+
+def _declared(spark, path: str, ddl, **opts):
+    r = spark.read.format("osmpbf").option("path", path).options(**opts)
+    return r.schema(ddl).load() if ddl else r.load()
+
+
+def _ddl(fields) -> str:
+    return ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in fields)
+
+
+def test_declared_schema_binds_columns_by_name(spark, fixture_dir):
+    """A declared schema that reorders lat and lon reads each by name:
+    the first node keeps its true coordinates instead of swapping them."""
+    df = _declared(spark, f"{fixture_dir}/fixture.osm.pbf",
+                   "id long, lon double, lat double, tags map<string,string>")
+    first = df.orderBy("id").first()
+    assert (first.lat, first.lon) == (10.4769503, -64.1847472)
+
+
+@pytest.mark.parametrize("primitive", ["node", "way", "relation", "changeset"])
+def test_declared_schema_selects_and_reorders(spark, fixture_dir, primitive):
+    """A narrow and a reordered declared schema each equal a ``select`` of
+    the default read, ``meta``, ``_pos`` and ``_rec`` included."""
+    path = f"{fixture_dir}/fixture.osm.pbf"
+    opts = {"primitive": primitive, "with_pos": "record"}
+    if primitive != "changeset":
+        opts["with_meta"] = "true"
+    full = _declared(spark, path, None, **opts)
+    fields = full.schema.fields
+    narrow = [f for f in fields if f.name in ("id", "meta", "_pos")]
+    for chosen in (narrow, fields[::-1]):
+        names = [f.name for f in chosen]
+        got = _declared(spark, path, _ddl(chosen), **opts)
+        assert got.columns == names
+        want = full.select(*names).orderBy("id", "_pos").collect()
+        assert got.orderBy("id", "_pos").collect() == want
+
+
+def test_declared_schema_streams_by_name(spark, fixture_dir, tmp_path):
+    """A streaming read with a declared ``lon double, id long`` returns
+    the same rows as the batch read."""
+    import shutil
+
+    src = tmp_path / "src"
+    src.mkdir()
+    shutil.copy(f"{fixture_dir}/fixture.osm.pbf", src / "part-00000.osm.pbf")
+    q = (
+        spark.readStream.format("osmpbf").option("path", str(src))
+        .schema("lon double, id long").load()
+        .writeStream.format("parquet")
+        .option("path", str(tmp_path / "out"))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True).start()
+    )
+    _await_done(q)
+    got = spark.read.parquet(str(tmp_path / "out"))
+    assert got.columns == ["lon", "id"]
+    want = spark.read.format("osmpbf").option("path", str(src)).load()
+    assert sorted(got.collect()) == sorted(want.select("lon", "id").collect())
+
+
+@pytest.mark.parametrize(
+    "ddl, opts, match",
+    [
+        ("id long, bogus int", {}, "column 'bogus' is not in"),
+        ("id long, meta struct<version:int>", {}, "column 'meta' is not in"),
+        ("id long, _rec long", {"with_pos": "block"}, "column '_rec' is not"),
+        ("id long, tags string", {}, "column 'tags' is declared string"),
+        ("id int", {}, "column 'id' is declared int"),
+        ("refs array<bigint>", {"primitive": "node"}, "column 'refs' is not"),
+    ],
+)
+def test_declared_schema_rejects_what_the_layout_lacks(spark, ddl, opts,
+                                                       match):
+    """A declared column the options do not provide, or of another type,
+    raises a ValueError naming it when the reader is built (``spark``:
+    parsing DDL needs a session)."""
+    from pyspark.sql.types import StructType
+
+    from osmpbf_spark.sources.pbf.datasource import OsmPbfDataSource
+
+    ds = OsmPbfDataSource({"path": "unused.pbf", **opts})
+    with pytest.raises(ValueError, match=match):
+        ds.reader(StructType.fromDDL(ddl))
+    with pytest.raises(ValueError, match=match):
+        ds.streamReader(StructType.fromDDL(ddl))
+
+
+def test_declared_schema_error_precedes_tasks(spark, fixture_dir):
+    """Through Spark, the same error names the column when the reader is
+    initialized at planning, before any task runs."""
+    df = _declared(spark, f"{fixture_dir}/fixture.osm.pbf", "id long, bogus int")
+    with pytest.raises(Exception, match="column 'bogus'") as err:
+        df.collect()
+    assert "initialize Python data source reader" in str(err.value)
+
+
+def test_register_propagates_failure(spark, monkeypatch):
+    from osmpbf_spark.sources.pbf.datasource import register
+
+    def boom(self, cls):
+        raise RuntimeError("registration failed")
+
+    monkeypatch.setattr(type(spark.dataSource), "register", boom)
+    with pytest.raises(RuntimeError, match="registration failed"):
+        register(spark)
+
+
+def test_register_twice_still_reads(spark, fixture_dir):
+    from osmpbf_spark.sources.pbf.datasource import read_pbf, register
+
+    register(spark)
+    register(spark)
+    assert read_pbf(spark, f"{fixture_dir}/fixture.osm.pbf").count() == 9720
 
 
 def test_mid_stream_type_switch_equiv(spark, fixture_dir):

@@ -11,6 +11,7 @@ import os
 from collections import Counter
 
 import numpy as np
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -62,6 +63,29 @@ def test_packed_sint_roundtrip(vals):
     buf = wire.encode_packed_sint(vals)
     out = wire.decode_packed_sint(buf)
     assert [int(x) for x in out] == vals
+
+
+@pytest.mark.parametrize(
+    "buf, match",
+    [
+        # all-1-byte tier
+        (b"\x80", "ends inside"),
+        (b"\x01\x80", "ends inside"),
+        # sparse tier (at most 32 multi-byte varints)
+        (b"\x01" * 8 + b"\x80\x01\x80", "ends inside"),
+        (b"\x01" * 8 + b"\xff" * 10 + b"\x01", "longer than 10 bytes"),
+        # general tier
+        (b"\x80\x01" * 40 + b"\x80", "ends inside"),
+        (b"\x80\x01" * 40 + b"\xff" * 10 + b"\x01", "longer than 10 bytes"),
+    ],
+    ids=["1byte-lone", "1byte-cut", "sparse-cut", "sparse-11byte",
+         "general-cut", "general-11byte"],
+)
+def test_packed_uint_rejects_cut_or_overlong_varints(buf, match):
+    """Every tier rejects a field whose last byte continues a varint and
+    a varint of more than 10 bytes, instead of decoding a value."""
+    with pytest.raises(ValueError, match=match):
+        wire.decode_packed_uint(buf)
 
 
 @given(st.lists(st.tuples(st.integers(1, 200), U64), max_size=30))
