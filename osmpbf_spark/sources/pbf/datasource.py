@@ -750,10 +750,8 @@ class OsmPbfReader(DataSourceReader):
         bd = decode.BlockDecoder(
             payload, compat_stale_tags="stale_tags" in self.compat
         )
-        # type projection: skip blocks with no group of our type (the
-        # Spark analog of OsmPbfRecordReader.java:283-290)
-        kinds = set(bd.group_types())
-        if decode.GROUP_CHANGESETS in kinds and self.primitive != "changeset":
+        if (decode.GROUP_CHANGESETS in bd.group_types()
+                and self.primitive != "changeset"):
             # count-and-skip: the format declares changesets NOT USED and
             # the reference leaves them unparsed; warn so the skip is
             # never silent (once per partition reader)
@@ -767,21 +765,9 @@ class OsmPbfReader(DataSourceReader):
                     "'NOT USED' per osmformat.proto:174-189)",
                     stacklevel=2,
                 )
-        want = {
-            "node": {decode.GROUP_NODES, decode.GROUP_DENSE},
-            "way": {decode.GROUP_WAYS},
-            "relation": {decode.GROUP_RELATIONS},
-            "changeset": {decode.GROUP_CHANGESETS},
-        }[self.primitive]
-        if not kinds & want:
-            return None
-        if self.primitive == "node":
-            return bd.decode_nodes()
-        if self.primitive == "way":
-            return bd.decode_ways()
-        if self.primitive == "changeset":
-            return bd.decode_changesets()
-        return bd.decode_relations()
+        # type projection: None when no group holds our type (the Spark
+        # analog of OsmPbfRecordReader.java:283-290)
+        return bd.decode(self.primitive)
 
     def _tag_key_mask(self, cols) -> np.ndarray:
         """Per-row bool: does the row's tag set contain ``self.tag_key``

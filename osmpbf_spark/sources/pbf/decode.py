@@ -21,6 +21,14 @@ This is the engine-side replacement for the reference's scan pipeline
   them columnar — numpy cumsum for deltas, one vectorized pass per field —
   instead of materializing per-record objects (java:225-268 decodes one node
   per call). Output feeds Arrow RecordBatches straight into Spark.
+- **One entity table.** The fields of the Node, Way, Relation and ChangeSet
+  messages are stated once, in ``_ENTITY`` (group kind -> message field ->
+  column and how it decodes); ``BlockDecoder._entities`` is the one loop
+  that reads it, decoding each packed column of a block in one numpy pass
+  (the Spark analog of the reference's one ``loadPrimitiveGroup``,
+  java:270-293). Wire types, parallel-array lengths and string ids are
+  checked, so a malformed block raises ValueError, which the reader
+  reports naming the file and the block's offset.
 - **Correctness fixes over the reference** (SURVEY.md §1.4, treated as spec
   decisions): coordinate offset applied once per absolute value, not re-added
   per delta (java:239-240); no stale-tag carry-over (java:242-262); way/
@@ -48,6 +56,9 @@ from osmpbf_spark.sources.pbf import fs, wire
 BLOBHEADER_TYPE = 1
 BLOBHEADER_INDEXDATA = 2
 BLOBHEADER_DATASIZE = 3
+_BLOBHEADER_WIRE = {BLOBHEADER_TYPE: wire.WT_LEN,
+                    BLOBHEADER_INDEXDATA: wire.WT_LEN,
+                    BLOBHEADER_DATASIZE: wire.WT_VARINT}
 BLOB_RAW = 1
 BLOB_RAW_SIZE = 2
 BLOB_ZLIB = 3
@@ -101,27 +112,6 @@ DENSE_LAT = 8
 DENSE_LON = 9
 DENSE_KEYS_VALS = 10
 
-NODE_ID = 1
-NODE_KEYS = 2
-NODE_VALS = 3
-NODE_INFO = 4
-NODE_LAT = 8
-NODE_LON = 9
-
-WAY_ID = 1
-WAY_KEYS = 2
-WAY_VALS = 3
-WAY_INFO = 4
-WAY_REFS = 8
-
-REL_ID = 1
-REL_KEYS = 2
-REL_VALS = 3
-REL_INFO = 4
-REL_ROLES_SID = 8
-REL_MEMIDS = 9
-REL_TYPES = 10
-
 INFO_VERSION = 1
 INFO_TIMESTAMP = 2
 INFO_CHANGESET = 3
@@ -135,6 +125,9 @@ HEADER_BBOX = 1
 HEADER_REQUIRED_FEATURES = 4
 HEADER_OPTIONAL_FEATURES = 5
 HEADER_WRITINGPROGRAM = 16
+_HEADER_WIRE = dict.fromkeys((HEADER_BBOX, HEADER_REQUIRED_FEATURES,
+                              HEADER_OPTIONAL_FEATURES,
+                              HEADER_WRITINGPROGRAM), wire.WT_LEN)
 
 
 @dataclass(frozen=True)
@@ -201,17 +194,14 @@ def _blob_header(f, path: str, start: int, fsize: int) -> BlockMeta:
     datasize = 0
     stats = None
     try:
-        for field, _wt, v in wire.scan_fields(header):
+        for field, _wt, v in wire.scan_fields(header, _BLOBHEADER_WIRE):
             if field == BLOBHEADER_TYPE:
                 btype = v.decode("utf-8")
             elif field == BLOBHEADER_DATASIZE:
                 datasize = v
             elif field == BLOBHEADER_INDEXDATA:
                 stats = _parse_block_stats(v)
-        if not isinstance(datasize, int):
-            raise TypeError("datasize is not a varint")
-    except (IndexError, ValueError, TypeError, AttributeError,
-            struct.error) as e:
+    except (IndexError, ValueError, struct.error) as e:
         raise CorruptPbfError(path, start,
                               f"unreadable BlobHeader: {e}") from e
     if datasize > MAX_BLOB:
@@ -535,10 +525,9 @@ def _decode_header_bbox(payload: bytes) -> dict:
     (zigzag) nanodegrees."""
     bbox = {"left": None, "right": None, "top": None, "bottom": None}
     names = {1: "left", 2: "right", 3: "top", 4: "bottom"}
-    for field, _wt, v in wire.scan_fields(payload):
-        name = names.get(field)
-        if name is not None:
-            bbox[name] = wire.zigzag_decode(v)
+    wire_types = dict.fromkeys(names, wire.WT_VARINT)
+    for field, _wt, v in wire.scan_fields(payload, wire_types):
+        bbox[names[field]] = wire.zigzag_decode(v)
     return bbox
 
 
@@ -552,7 +541,7 @@ def decode_header_block(payload: bytes) -> dict:
     optional: list[str] = []
     program = None
     bbox = None
-    for field, _wt, v in wire.scan_fields(payload):
+    for field, _wt, v in wire.scan_fields(payload, _HEADER_WIRE):
         if field == HEADER_BBOX:
             bbox = _decode_header_bbox(v)
         elif field == HEADER_REQUIRED_FEATURES:
@@ -573,9 +562,63 @@ def decode_header_block(payload: bytes) -> dict:
 # PrimitiveBlock decode
 # ---------------------------------------------------------------------------
 
+_LEN, _VARINT = wire.WT_LEN, wire.WT_VARINT
+_BLOCK_WIRE = {PB_STRINGTABLE: _LEN, PB_GROUP: _LEN, PB_GRANULARITY: _VARINT,
+               PB_DATE_GRANULARITY: _VARINT, PB_LAT_OFFSET: _VARINT,
+               PB_LON_OFFSET: _VARINT}
+_GROUP_WIRE = dict.fromkeys((GROUP_NODES, GROUP_DENSE, GROUP_WAYS,
+                             GROUP_RELATIONS, GROUP_CHANGESETS), _LEN)
+_NODE_GROUPS = {GROUP_DENSE: _LEN, GROUP_NODES: _LEN}
+_DENSE_WIRE = dict.fromkeys((DENSE_ID, DENSE_INFO, DENSE_LAT, DENSE_LON,
+                             DENSE_KEYS_VALS), _LEN)
+
+# The non-dense entity messages, each field stated once: PrimitiveGroup
+# kind -> {osmformat.proto field number: (column, how it decodes)}. The
+# kinds of decode:
+#   "sint"   zigzag sint64 scalar (Node id / lat / lon)
+#   "int"    two's-complement int64 scalar (Way, Relation, ChangeSet id;
+#            negative ids are legal for objects not yet uploaded)
+#   "uint"   packed uint (keys, vals, roles_sid, types)
+#   "delta"  delta-coded packed sint (Way refs, Relation memids)
+#   "info"   a raw Info message, decoded by _info_columns
+# A scalar or Info keeps its last occurrence (an absent scalar reads 0); a
+# packed field concatenates split occurrences, as protobuf requires of
+# parsers. Fields not listed are skipped.
+_TAGGED = {2: ("keys", "uint"), 3: ("vals", "uint"), 4: ("info", "info")}
+_ENTITY = {
+    GROUP_NODES: {1: ("id", "sint"), **_TAGGED, 8: ("lat", "sint"),
+                  9: ("lon", "sint")},
+    GROUP_WAYS: {1: ("id", "int"), **_TAGGED, 8: ("refs", "delta")},
+    GROUP_RELATIONS: {1: ("id", "int"), **_TAGGED, 8: ("roles", "uint"),
+                      9: ("memids", "delta"), 10: ("types", "uint")},
+    # ChangeSet is id-only and "NOT USED" (osmformat.proto:174-189)
+    GROUP_CHANGESETS: {1: ("id", "int")},
+}
+_PACKED = ("uint", "delta")
+_ENTITY_WIRE = {
+    kind: {f: _VARINT if how in ("sint", "int") else _LEN
+           for f, (_, how) in table.items()}
+    for kind, table in _ENTITY.items()
+}
+# Info and DenseInfo number their fields alike: field -> meta column. Info
+# holds plain varints, DenseInfo one packed array per field.
+_META = {INFO_VERSION: "meta_version", INFO_TIMESTAMP: "meta_timestamp_ms",
+         INFO_CHANGESET: "meta_changeset", INFO_UID: "meta_uid",
+         INFO_USER_SID: "meta_user", INFO_VISIBLE: "meta_visible"}
+_INFO_WIRE = dict.fromkeys(_META, _VARINT)
+_DENSE_INFO_WIRE = dict.fromkeys(_META, _LEN)
+# the group kinds holding each primitive, and the method decoding it
+# (called by name, so a wrapper set on the class is what runs)
+_PRIMITIVE = {
+    "node": ({GROUP_NODES, GROUP_DENSE}, "decode_nodes"),
+    "way": ({GROUP_WAYS}, "decode_ways"),
+    "relation": ({GROUP_RELATIONS}, "decode_relations"),
+    "changeset": ({GROUP_CHANGESETS}, "decode_changesets"),
+}
+
 
 def _decode_string_table(buf: bytes) -> np.ndarray:
-    vals = [v for field, _wt, v in wire.scan_fields(buf) if field == 1]
+    vals = [v for _field, _wt, v in wire.scan_fields(buf, {1: _LEN})]
     return np.array([s.decode("utf-8", "replace") for s in vals], dtype=object)
 
 
@@ -593,8 +636,60 @@ def _empty_tags(n: int) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     )
 
 
+def _packed(bufs: list[bytes], owner: list[int],
+            n: int) -> tuple[np.ndarray, np.ndarray]:
+    """The occurrences ``bufs`` of one packed field over ``n`` entities
+    (``owner[i]`` is the entity of ``bufs[i]``), decoded in one pass:
+    (values per entity, every value as uint64 in entity order)."""
+    lens = np.array([len(b) for b in bufs], dtype=np.int64)
+    ends = np.cumsum(lens)
+    raw = b"".join(bufs)
+    b = np.frombuffer(raw, dtype=np.uint8)
+    # every occurrence ends a varint, else joining them would fuse its cut
+    # varint with the next occurrence's first
+    if (b[ends[lens > 0] - 1] & 0x80).any():
+        raise ValueError("packed varint field ends inside a varint")
+    done = np.concatenate(([0], np.cumsum(b < 0x80)))  # varints before byte
+    per_buf = done[ends] - done[ends - lens]
+    counts = np.bincount(np.array(owner, dtype=np.intp), weights=per_buf,
+                         minlength=n).astype(np.int64)
+    return counts, wire.decode_packed_uint(raw)
+
+
+def _delta(counts: np.ndarray, deltas: np.ndarray) -> np.ndarray:
+    """Each entity's running sum of its ``counts`` deltas, restarting at 0
+    per entity (int64 wraps as the per-entity cumsum does)."""
+    run = np.cumsum(deltas)
+    before = np.concatenate(([0], run))[np.cumsum(counts) - counts]
+    return run - np.repeat(before, counts)
+
+
+def _ragged(e: dict, *cols: str) -> tuple[np.ndarray, ...]:
+    """Offsets (n+1) over the parallel per-entity packed ``cols`` of the
+    entity columns ``e``, then each column's values. The arrays of one
+    entity must have one length; otherwise ValueError names them."""
+    counts = e[cols[0]][0]
+    for col in cols[1:]:
+        if not np.array_equal(e[col][0], counts):
+            raise ValueError(f"an entity's {cols[0]} and {col} differ in "
+                             "length")
+    offsets = np.zeros(len(counts) + 1, dtype=np.int64)
+    np.cumsum(counts, out=offsets[1:])
+    return (offsets, *(e[col][1] for col in cols))
+
+
 class BlockDecoder:
     """Decode one PrimitiveBlock into columnar arrays for one primitive type.
+
+    The fields of the Node, Way, Relation and ChangeSet messages are stated
+    once, in the entity table ``_ENTITY``; ``_entities`` is the one loop
+    reading it, and ``decode_nodes`` / ``decode_ways`` /
+    ``decode_relations`` / ``decode_changesets`` assemble its columns.
+    DenseNodes keep their own vectorised path (``_decode_dense``). Every
+    field is checked against its wire type, parallel arrays against each
+    other and string ids against the string table, so a malformed block
+    raises ValueError here, which the reader reports with the file's path
+    and the block's offset.
 
     Tags come out flattened as (offsets[n+1], keys[], vals[]) — exactly the
     layout of an Arrow MapArray, so the data source builds map columns with
@@ -618,19 +713,18 @@ class BlockDecoder:
         self.lon_offset = 0
         self.strings: np.ndarray = np.empty(0, dtype=object)
         self.groups: list[bytes] = []
-        for field, _wt, v in wire.scan_fields(payload):
+        for field, _wt, v in wire.scan_fields(payload, _BLOCK_WIRE):
             if field == PB_STRINGTABLE:
                 self.strings = _decode_string_table(v)
             elif field == PB_GROUP:
                 self.groups.append(v)
             elif field == PB_GRANULARITY:
-                self.granularity = v
+                # int32 / int64 fields, NOT zigzag (osmformat.proto);
+                # negative values arrive as 64-bit two's-complement varints
+                self.granularity = _varint_to_int64(v)
             elif field == PB_DATE_GRANULARITY:
-                self.date_granularity = v
+                self.date_granularity = _varint_to_int64(v)
             elif field == PB_LAT_OFFSET:
-                # plain int64, NOT zigzag (osmformat.proto declares
-                # lat_offset/lon_offset as int64; negative values arrive
-                # as 64-bit two's-complement varints)
                 self.lat_offset = _varint_to_int64(v)
             elif field == PB_LON_OFFSET:
                 self.lon_offset = _varint_to_int64(v)
@@ -640,37 +734,85 @@ class BlockDecoder:
     def _scale(self, raw: np.ndarray, offset: int) -> np.ndarray:
         return 1e-9 * (offset + self.granularity * raw.astype(np.float64))
 
+    def _lookup(self, sids: np.ndarray) -> np.ndarray:
+        """The string-table entries at ``sids``. An id outside the table
+        raises ValueError instead of wrapping: a uint64 id cast to int64
+        would turn 2^64-1 into -1, the table's last entry."""
+        if len(sids) and (sids.min() < 0 or sids.max() >= len(self.strings)):
+            raise ValueError(f"string id outside the {len(self.strings)}-"
+                             "entry string table")
+        return self.strings[sids]
+
     def group_types(self) -> list[int]:
-        """Which group kinds this block holds (for type-projection skipping,
-        the Spark analog of OsmPbfRecordReader.java:283-290)."""
-        kinds = []
-        for g in self.groups:
-            kind = 0
-            for field, _wt, _v in wire.scan_fields(g):
-                if field in (
-                    GROUP_NODES,
-                    GROUP_DENSE,
-                    GROUP_WAYS,
-                    GROUP_RELATIONS,
-                    GROUP_CHANGESETS,
-                ):
-                    kind = field
-                    break
-            kinds.append(kind)
-        return kinds
+        """Which group kind each group holds, by its first entity (for
+        type-projection skipping, the Spark analog of
+        OsmPbfRecordReader.java:283-290)."""
+        return [next((f for f, _, _ in wire.scan_fields(g, _GROUP_WIRE)), 0)
+                for g in self.groups]
+
+    def decode(self, primitive: str) -> dict[str, np.ndarray] | None:
+        """The block's ``primitive`` entities as columns, or None when no
+        group holds that kind, so a node read of a way block never walks
+        its ways."""
+        kinds, method = _PRIMITIVE[primitive]
+        if not kinds & set(self.group_types()):
+            return None
+        return getattr(self, method)()
+
+    def _entities(self, kind: int, groups: list[bytes] | None = None) -> dict:
+        """Walk every ``kind`` message in ``groups`` (default: the whole
+        block) once, decoding each field as ``_ENTITY[kind]`` states:
+        {column: an int64 array for a scalar, ``(counts, values)`` for a
+        packed column, the raw Info messages (None: absent) for "info"}."""
+        table, wire_types = _ENTITY[kind], _ENTITY_WIRE[kind]
+        absent = {col: None if how == "info" else 0
+                  for col, how in table.values() if how not in _PACKED}
+        single = {col: [] for col in absent}
+        parts = {col: ([], []) for col, how in table.values()
+                 if how in _PACKED}
+        n = 0
+        for g in self.groups if groups is None else groups:
+            for _f, _wt, msg in wire.scan_fields(g, {kind: _LEN}):
+                last = dict(absent)
+                for f, _wt, v in wire.scan_fields(msg, wire_types):
+                    col, how = table[f]
+                    if how in _PACKED:
+                        parts[col][0].append(v)
+                        parts[col][1].append(n)
+                    else:
+                        last[col] = v
+                for col, vals in single.items():
+                    vals.append(last[col])
+                n += 1
+        out = {}
+        for col, how in table.values():
+            if how == "info":
+                out[col] = single[col]
+            elif how in _PACKED:
+                counts, vals = _packed(*parts[col], n)
+                if how == "delta":
+                    vals = _delta(counts, wire.unzigzag(vals))
+                out[col] = (counts, vals)
+            else:
+                u = np.array(single[col], dtype=np.uint64)
+                out[col] = wire.unzigzag(u) if how == "sint" else u.view(
+                    np.int64)
+        return out
+
+    def _tags(self, e: dict) -> dict[str, np.ndarray]:
+        off, keys, vals = _ragged(e, "keys", "vals")
+        return {"tag_offsets": off, "tag_keys": self._lookup(keys),
+                "tag_vals": self._lookup(vals)}
 
     def count_changesets(self) -> int:
         """Count ChangeSet entries. The format declares the message id-only
         and "NOT USED" (osmformat.proto:174-189) and the reference never
         parses it (loadPrimitiveGroup falls through,
         OsmPbfRecordReader.java:291); we count-and-skip with a warning so
-        no group type passes through silently."""
-        n = 0
-        for g in self.groups:
-            for field, _wt, _v in wire.scan_fields(g):
-                if field == GROUP_CHANGESETS:
-                    n += 1
-        return n
+        no group type passes through silently. The entries are counted,
+        not parsed, so a damaged one fails only a changeset read."""
+        return sum(1 for g in self.groups
+                   for _ in wire.scan_fields(g, {GROUP_CHANGESETS: _LEN}))
 
     def decode_changesets(self) -> dict[str, np.ndarray]:
         """All ChangeSet entries in the block, columnar. The message is
@@ -678,34 +820,30 @@ class BlockDecoder:
         174-189, declared "NOT USED"); surfacing it as an id frame closes
         the one group type the reference leaves unparsed (parity-plus —
         loadPrimitiveGroup falls through at OsmPbfRecordReader.java:291)."""
-        ids: list[int] = []
-        for g in self.groups:
-            for field, _wt, v in wire.scan_fields(g):
-                if field != GROUP_CHANGESETS:
-                    continue
-                for f2, _wt2, v2 in wire.scan_fields(v):
-                    if f2 == 1:  # ChangeSet.id, plain varint int64
-                        # two's-complement fold: a negative int64 arrives
-                        # as a 10-byte varint (unsigned 2^64 range)
-                        ids.append(v2 - 2**64 if v2 >= 2**63 else v2)
-        return {"id": np.asarray(ids, dtype=np.int64)}
+        return {"id": self._entities(GROUP_CHANGESETS)["id"]}
 
     # ------------------------------------------------------------------ nodes
     def decode_nodes(self) -> dict[str, np.ndarray]:
-        """All nodes in the block (dense + plain), columnar."""
+        """All nodes in the block (dense + plain), columnar: per group, its
+        DenseNodes in order, then its plain Nodes — which the reference
+        never parses (SURVEY §1.3); we do, for format completeness."""
         parts = []
         for g in self.groups:
-            dense = []
-            plain = []
-            for field, _wt, v in wire.scan_fields(g):
+            plain = False
+            for field, _wt, v in wire.scan_fields(g, _NODE_GROUPS):
                 if field == GROUP_DENSE:
-                    dense.append(v)
+                    parts.append(self._decode_dense(v))
                 elif field == GROUP_NODES:
-                    plain.append(v)
-            for d in dense:
-                parts.append(self._decode_dense(d))
+                    plain = True
             if plain:
-                parts.append(self._decode_plain_nodes(plain))
+                e = self._entities(GROUP_NODES, [g])
+                parts.append({
+                    "id": e["id"],
+                    "lat": self._scale(e["lat"], self.lat_offset),
+                    "lon": self._scale(e["lon"], self.lon_offset),
+                    **self._tags(e),
+                    **self._info_columns(e["info"]),
+                })
         return _concat_columns(parts, self._node_empty())
 
     def _node_empty(self) -> dict[str, np.ndarray]:
@@ -730,7 +868,7 @@ class BlockDecoder:
         lon_p: list = []
         kv_p: list = []
         info_buf = None
-        for field, _wt, v in wire.scan_fields(buf):
+        for field, _wt, v in wire.scan_fields(buf, _DENSE_WIRE):
             if field == DENSE_ID:
                 id_p.append(wire.decode_packed_sint(v))
             elif field == DENSE_LAT:
@@ -738,7 +876,7 @@ class BlockDecoder:
             elif field == DENSE_LON:
                 lon_p.append(wire.decode_packed_sint(v))
             elif field == DENSE_KEYS_VALS:
-                kv_p.append(wire.decode_packed_int(v))
+                kv_p.append(wire.decode_packed_uint(v))
             elif field == DENSE_INFO:
                 info_buf = v
 
@@ -755,6 +893,9 @@ class BlockDecoder:
         ids = np.cumsum(_cat(id_p))
         lats = np.cumsum(_cat(lat_p))
         lons = np.cumsum(_cat(lon_p))
+        if not len(ids) == len(lats) == len(lons):
+            raise ValueError(f"DenseNodes hold {len(ids)} ids, {len(lats)} "
+                             f"lats and {len(lons)} lons")
         keys_vals = _cat(kv_p)
         n = len(ids)
         off, keys, vals = self._dense_tags(keys_vals, n)
@@ -778,7 +919,8 @@ class BlockDecoder:
     ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
         """keys_vals is ((k,v)* 0)* — zero-delimited per-node runs. Vectorized:
         zero positions give per-node run lengths; everything else alternates
-        key/value string-table ids. No stale-tag carry-over (§1.4.2) unless
+        key/value string-table ids. A run with a key but no value raises
+        ValueError. No stale-tag carry-over (§1.4.2) unless
         ``compat_stale_tags`` opted in."""
         if len(kv) == 0:
             return _empty_tags(n)
@@ -788,17 +930,23 @@ class BlockDecoder:
             # producer ended mid-run — no COMPLETE run exists, so every
             # node is untagged (the same policy as trailing truncation)
             return _empty_tags(n)
-        # pairs per node = (run length) / 2
         run_start = np.empty_like(zero_pos)
         run_start[0] = 0
         run_start[1:] = zero_pos[:-1] + 1
-        pairs = (zero_pos - run_start) // 2
+        run_len = zero_pos - run_start
+        if (run_len % 2).any():
+            raise ValueError("DenseNodes keys_vals run holds a key without "
+                             "a value")
+        pairs = run_len // 2
         k = min(len(pairs), n)
         offsets = np.zeros(n + 1, dtype=np.int64)
         np.cumsum(pairs[:k], out=offsets[1 : k + 1])
-        nonzero = kv[kv != 0]
-        keys = self.strings[nonzero[0::2]]
-        vals = self.strings[nonzero[1::2]]
+        # the string ids of the first k runs: a cut-off run after the last
+        # delimiter, or runs past the last node, belong to no node
+        head = kv[: zero_pos[k - 1]] if k else kv[:0]
+        nonzero = head[head != 0]
+        keys = self._lookup(nonzero[0::2])
+        vals = self._lookup(nonzero[1::2])
         if k < n:
             if self.compat_stale_tags and k > 0 and pairs[k - 1] > 0:
                 # bug-parity: every truncated-run node repeats the last
@@ -813,262 +961,81 @@ class BlockDecoder:
                 offsets[k + 1 :] = offsets[k]
         return offsets, keys, vals
 
-    def _decode_plain_nodes(self, bufs: list[bytes]) -> dict[str, np.ndarray]:
-        """Plain (non-dense) Node messages — the reference never parses these
-        (SURVEY §1.3); we do, for format completeness."""
-        ids, lats, lons = [], [], []
-        koffs = [0]
-        keys: list = []
-        vals: list = []
-        metas = []
-        for buf in bufs:
-            nid = lat = lon = 0
-            ksids = vsids = None
-            info = None
-            for field, _wt, v in wire.scan_fields(buf):
-                if field == NODE_ID:
-                    nid = wire.zigzag_decode(v)
-                elif field == NODE_LAT:
-                    lat = wire.zigzag_decode(v)
-                elif field == NODE_LON:
-                    lon = wire.zigzag_decode(v)
-                elif field == NODE_KEYS:
-                    ksids = wire.decode_packed_uint(v)
-                elif field == NODE_VALS:
-                    vsids = wire.decode_packed_uint(v)
-                elif field == NODE_INFO:
-                    info = v
-            ids.append(nid)
-            lats.append(lat)
-            lons.append(lon)
-            if ksids is not None and len(ksids):
-                keys.extend(self.strings[ksids.astype(np.int64)])
-                vals.extend(self.strings[vsids.astype(np.int64)])
-                koffs.append(koffs[-1] + len(ksids))
-            else:
-                koffs.append(koffs[-1])
-            metas.append(self._decode_info(info))
-        return {
-            "id": np.array(ids, dtype=np.int64),
-            "lat": self._scale(np.array(lats, dtype=np.int64), self.lat_offset),
-            "lon": self._scale(np.array(lons, dtype=np.int64), self.lon_offset),
-            "tag_offsets": np.array(koffs, dtype=np.int64),
-            "tag_keys": np.array(keys, dtype=object),
-            "tag_vals": np.array(vals, dtype=object),
-            **_stack_meta(metas),
-        }
-
     # ------------------------------------------------------------------- ways
     def decode_ways(self) -> dict[str, np.ndarray]:
-        ids = []
-        ref_arrays = []
-        koffs = [0]
-        keys: list = []
-        vals: list = []
-        metas = []
-        for g in self.groups:
-            for field, _wt, v in wire.scan_fields(g):
-                if field != GROUP_WAYS:
-                    continue
-                wid = 0
-                k_p: list = []
-                v_p: list = []
-                r_p: list = []
-                info = None
-                for f2, _w2, v2 in wire.scan_fields(v):
-                    if f2 == WAY_ID:
-                        # plain int64 varint: two's-complement fold — raw
-                        # would overflow np.int64 for negative ids (legal
-                        # in OSM tooling for not-yet-uploaded objects)
-                        wid = _varint_to_int64(v2)
-                    elif f2 == WAY_KEYS:
-                        k_p.append(wire.decode_packed_uint(v2))
-                    elif f2 == WAY_VALS:
-                        v_p.append(wire.decode_packed_uint(v2))
-                    elif f2 == WAY_REFS:
-                        r_p.append(wire.decode_packed_sint(v2))
-                    elif f2 == WAY_INFO:
-                        info = v2
-                # packed-field split-occurrence concat (protobuf spec)
-                ksids = np.concatenate(k_p) if k_p else None
-                vsids = np.concatenate(v_p) if v_p else None
-                refs = (
-                    np.cumsum(np.concatenate(r_p))
-                    if r_p
-                    else np.empty(0, dtype=np.int64)
-                )
-                ids.append(wid)
-                ref_arrays.append(refs.astype(np.int64))
-                if ksids is not None and len(ksids):
-                    keys.extend(self.strings[ksids.astype(np.int64)])
-                    vals.extend(self.strings[vsids.astype(np.int64)])
-                    koffs.append(koffs[-1] + len(ksids))
-                else:
-                    koffs.append(koffs[-1])
-                metas.append(self._decode_info(info))
-        ref_offsets = np.zeros(len(ids) + 1, dtype=np.int64)
-        if ref_arrays:
-            np.cumsum([len(r) for r in ref_arrays], out=ref_offsets[1:])
+        e = self._entities(GROUP_WAYS)
+        ref_offsets, refs = _ragged(e, "refs")
         return {
-            "id": np.array(ids, dtype=np.int64),
+            "id": e["id"],
             "ref_offsets": ref_offsets,
-            "ref_values": (
-                np.concatenate(ref_arrays)
-                if ref_arrays
-                else np.empty(0, dtype=np.int64)
-            ),
-            "tag_offsets": np.array(koffs, dtype=np.int64),
-            "tag_keys": np.array(keys, dtype=object),
-            "tag_vals": np.array(vals, dtype=object),
-            **_stack_meta(metas),
+            "ref_values": refs,
+            **self._tags(e),
+            **self._info_columns(e["info"]),
         }
 
     # -------------------------------------------------------------- relations
     def decode_relations(self) -> dict[str, np.ndarray]:
         """Relations — declared-but-unimplemented in the reference
         (README.md:4, OsmPbfRecordReader.java:291); implemented here."""
-        ids = []
-        moffs = [0]
-        roles: list = []
-        mrefs = []
-        mtypes: list = []
-        koffs = [0]
-        keys: list = []
-        vals: list = []
-        metas = []
-        for g in self.groups:
-            for field, _wt, v in wire.scan_fields(g):
-                if field != GROUP_RELATIONS:
-                    continue
-                rid = 0
-                k_p: list = []
-                v_p: list = []
-                role_p: list = []
-                mem_p: list = []
-                type_p: list = []
-                info = None
-                for f2, _w2, v2 in wire.scan_fields(v):
-                    if f2 == REL_ID:
-                        rid = _varint_to_int64(v2)  # see WAY_ID note
-                    elif f2 == REL_KEYS:
-                        k_p.append(wire.decode_packed_uint(v2))
-                    elif f2 == REL_VALS:
-                        v_p.append(wire.decode_packed_uint(v2))
-                    elif f2 == REL_ROLES_SID:
-                        role_p.append(wire.decode_packed_int(v2))
-                    elif f2 == REL_MEMIDS:
-                        mem_p.append(wire.decode_packed_sint(v2))
-                    elif f2 == REL_TYPES:
-                        type_p.append(wire.decode_packed_int(v2))
-                    elif f2 == REL_INFO:
-                        info = v2
-
-                def _cat(parts):
-                    return (
-                        np.concatenate(parts)
-                        if parts
-                        else np.empty(0, dtype=np.int64)
-                    )
-
-                ksids = np.concatenate(k_p) if k_p else None
-                vsids = np.concatenate(v_p) if v_p else None
-                role_sids = _cat(role_p)
-                memids = np.cumsum(_cat(mem_p))
-                types = _cat(type_p)
-                ids.append(rid)
-                roles.extend(self.strings[role_sids])
-                mrefs.append(memids.astype(np.int64))
-                mtypes.extend(MEMBER_TYPES[types])
-                moffs.append(moffs[-1] + len(memids))
-                if ksids is not None and len(ksids):
-                    keys.extend(self.strings[ksids.astype(np.int64)])
-                    vals.extend(self.strings[vsids.astype(np.int64)])
-                    koffs.append(koffs[-1] + len(ksids))
-                else:
-                    koffs.append(koffs[-1])
-                metas.append(self._decode_info(info))
+        e = self._entities(GROUP_RELATIONS)
+        offsets, roles, refs, types = _ragged(e, "roles", "memids", "types")
+        if len(types) and types.max() >= len(MEMBER_TYPES):
+            raise ValueError(f"relation member type {types.max()} is not "
+                             "0 (node), 1 (way) or 2 (relation)")
         return {
-            "id": np.array(ids, dtype=np.int64),
-            "member_offsets": np.array(moffs, dtype=np.int64),
-            "member_roles": np.array(roles, dtype=object),
-            "member_refs": (
-                np.concatenate(mrefs) if mrefs else np.empty(0, dtype=np.int64)
-            ),
-            "member_types": np.array(mtypes, dtype=object),
-            "tag_offsets": np.array(koffs, dtype=np.int64),
-            "tag_keys": np.array(keys, dtype=object),
-            "tag_vals": np.array(vals, dtype=object),
-            **_stack_meta(metas),
+            "id": e["id"],
+            "member_offsets": offsets,
+            "member_roles": self._lookup(roles),
+            "member_refs": refs,
+            "member_types": MEMBER_TYPES[types],
+            **self._tags(e),
+            **self._info_columns(e["info"]),
         }
 
     # ------------------------------------------------------------------- meta
-    def _decode_info(self, buf: bytes | None) -> dict:
-        out = {
-            "version": -1,
-            "timestamp_ms": None,
-            "changeset": None,
-            "uid": None,
-            "user": None,
-            "visible": True,
-        }
-        if buf is None:
-            return out
-        for field, _wt, v in wire.scan_fields(buf):
-            if field == INFO_VERSION:
-                out["version"] = np.int64(v).astype(np.int32)
-            elif field == INFO_TIMESTAMP:
-                # plain int64 varints: fold two's complement before use —
-                # pre-1970 timestamps and uid=-1 (the historical
-                # anonymous-edit convention) are legal and would otherwise
-                # overflow the int64 meta arrays in _stack_meta
-                out["timestamp_ms"] = _varint_to_int64(v) * self.date_granularity
-            elif field == INFO_CHANGESET:
-                out["changeset"] = _varint_to_int64(v)
-            elif field == INFO_UID:
-                out["uid"] = _varint_to_int64(v)
-            elif field == INFO_USER_SID:
-                out["user"] = self.strings[v]
-            elif field == INFO_VISIBLE:
-                out["visible"] = bool(v)
+    def _meta_column(self, field: int, v: np.ndarray) -> np.ndarray:
+        """One Info/DenseInfo field's int64 values as its meta column's."""
+        if field == INFO_TIMESTAMP:
+            return v * self.date_granularity
+        if field == INFO_USER_SID:
+            return self._lookup(v)
+        if field == INFO_VISIBLE:
+            return v != 0
+        return v
+
+    def _info_columns(self, infos: list) -> dict[str, np.ndarray]:
+        """The meta_* columns of one Info message per entity (None: the
+        entity has none). Info fields are plain int32/int64/uint32/bool
+        varints, folded as two's complement (pre-1970 timestamps and the
+        uid=-1 anonymous-edit convention are legal); each keeps its last
+        occurrence."""
+        out = _empty_meta(len(infos))
+        rows = {f: ([], []) for f in _META}
+        for i, buf in enumerate(infos):
+            if buf is not None:
+                last = {f: v for f, _wt, v in wire.scan_fields(buf,
+                                                              _INFO_WIRE)}
+                for f, v in last.items():
+                    rows[f][0].append(i)
+                    rows[f][1].append(v)
+        for f, (idx, vals) in rows.items():
+            if idx:
+                v = np.array(vals, dtype=np.uint64).view(np.int64)
+                out[_META[f]][idx] = self._meta_column(f, v)
         return out
 
     def _decode_dense_info(self, buf: bytes, n: int) -> dict[str, np.ndarray]:
-        version = np.full(n, -1, dtype=np.int32)
-        timestamp = np.full(n, np.iinfo(np.int64).min, dtype=np.int64)
-        changeset = np.full(n, np.iinfo(np.int64).min, dtype=np.int64)
-        uid = np.full(n, np.iinfo(np.int64).min, dtype=np.int64)
-        user = np.full(n, None, dtype=object)
-        visible = np.ones(n, dtype=bool)
-        for field, _wt, v in wire.scan_fields(buf):
-            if field == 1:
-                # slice by DECODED element count, not packed byte count —
-                # multi-byte varints make len(v) > #elements and the
-                # broadcast assignment would crash on truncated arrays
-                ver = wire.decode_packed_int(v)[:n]
-                version[: len(ver)] = ver
-            elif field == 2:
-                ts = np.cumsum(wire.decode_packed_sint(v))[:n]
-                timestamp[: len(ts)] = ts * self.date_granularity
-            elif field == 3:
-                cs = np.cumsum(wire.decode_packed_sint(v))[:n]
-                changeset[: len(cs)] = cs
-            elif field == 4:
-                u = np.cumsum(wire.decode_packed_sint(v))[:n]
-                uid[: len(u)] = u
-            elif field == 5:
-                us = np.cumsum(wire.decode_packed_sint(v))[:n]
-                user[: len(us)] = self.strings[us]
-            elif field == 6:
-                vis = wire.decode_packed_int(v)[:n]
-                visible[: len(vis)] = vis.astype(bool)
-        return {
-            "meta_version": version,
-            "meta_timestamp_ms": timestamp,
-            "meta_changeset": changeset,
-            "meta_uid": uid,
-            "meta_user": user,
-            "meta_visible": visible,
-        }
+        out = _empty_meta(n)
+        for f, _wt, v in wire.scan_fields(buf, _DENSE_INFO_WIRE):
+            # slice by DECODED element count, not packed byte count —
+            # multi-byte varints make len(v) > #elements and the
+            # broadcast assignment would crash on truncated arrays
+            if f in (INFO_VERSION, INFO_VISIBLE):
+                vals = wire.decode_packed_int(v)[:n]
+            else:  # delta-coded sint
+                vals = np.cumsum(wire.decode_packed_sint(v))[:n]
+            out[_META[f]][: len(vals)] = self._meta_column(f, vals)
+        return out
 
 
 def _empty_meta(n: int) -> dict[str, np.ndarray]:
@@ -1080,24 +1047,6 @@ def _empty_meta(n: int) -> dict[str, np.ndarray]:
         "meta_user": np.full(n, None, dtype=object),
         "meta_visible": np.ones(n, dtype=bool),
     }
-
-
-def _stack_meta(metas: list[dict]) -> dict[str, np.ndarray]:
-    n = len(metas)
-    out = _empty_meta(n)
-    sentinel = np.iinfo(np.int64).min
-    for i, m in enumerate(metas):
-        out["meta_version"][i] = m["version"]
-        out["meta_timestamp_ms"][i] = (
-            m["timestamp_ms"] if m["timestamp_ms"] is not None else sentinel
-        )
-        out["meta_changeset"][i] = (
-            m["changeset"] if m["changeset"] is not None else sentinel
-        )
-        out["meta_uid"][i] = m["uid"] if m["uid"] is not None else sentinel
-        out["meta_user"][i] = m["user"]
-        out["meta_visible"][i] = m["visible"]
-    return out
 
 
 def _concat_columns(

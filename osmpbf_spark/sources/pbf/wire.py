@@ -31,6 +31,8 @@ WT_I64 = 1
 WT_LEN = 2
 WT_I32 = 5
 
+_U64 = (1 << 64) - 1
+
 
 # ---------------------------------------------------------------------------
 # scalar varint (message-structure walking; small counts, pure Python)
@@ -38,7 +40,10 @@ WT_I32 = 5
 
 
 def read_varint(buf: bytes, pos: int) -> tuple[int, int]:
-    """Decode one unsigned varint at ``pos``; return (value, new_pos)."""
+    """Decode one unsigned varint at ``pos``; return (value, new_pos).
+
+    As protobuf parsers do, a 10th byte contributes only the bits that fit
+    in 64; an 11th byte raises ValueError."""
     result = 0
     shift = 0
     while True:
@@ -48,6 +53,11 @@ def read_varint(buf: bytes, pos: int) -> tuple[int, int]:
         if not b & 0x80:
             return result, pos
         shift += 7
+        if shift == 63:
+            b = buf[pos]
+            if b & 0x80:
+                raise ValueError("varint longer than 10 bytes")
+            return (result | b << 63) & _U64, pos + 1
 
 
 def write_varint(value: int) -> bytes:
@@ -152,12 +162,16 @@ def decode_packed_uint(buf: bytes) -> np.ndarray:
     return np.add.reduceat(vals, starts)
 
 
-def decode_packed_sint(buf: bytes) -> np.ndarray:
-    """Packed sint (zigzag) field -> int64 array."""
-    u = decode_packed_uint(buf)
+def unzigzag(u: np.ndarray) -> np.ndarray:
+    """Vectorized sint64 (zigzag) decode of uint64 varint values."""
     return ((u >> np.uint64(1)).astype(np.int64)) ^ -(u & np.uint64(1)).astype(
         np.int64
     )
+
+
+def decode_packed_sint(buf: bytes) -> np.ndarray:
+    """Packed sint (zigzag) field -> int64 array."""
+    return unzigzag(decode_packed_uint(buf))
 
 
 def decode_packed_int(buf: bytes) -> np.ndarray:
@@ -221,42 +235,59 @@ def encode_packed_sint(values) -> bytes:
 # ---------------------------------------------------------------------------
 
 
-def scan_fields(buf: bytes, start: int = 0, end: int | None = None) -> Iterator[
-    tuple[int, int, int | bytes]
-]:
+def scan_fields(
+    buf: bytes, wire_types: dict[int, int] | None = None
+) -> Iterator[tuple[int, int, int | bytes]]:
     """Walk a protobuf message, yielding (field_number, wire_type, value).
 
     LEN fields yield the raw bytes slice; varints yield ints; I64/I32 yield
-    raw ints. One linear pass, no allocation beyond the LEN slices.
+    raw ints. One linear pass, no allocation beyond the LEN slices. A LEN
+    value running past the end of the message raises ValueError.
+
+    With ``wire_types`` (field number -> wire type) only the listed fields
+    are yielded (the others are stepped over without a slice), and a
+    listed field of another wire type raises ValueError, so a flipped tag
+    never hands an int to a bytes decoder.
     """
-    pos = start
-    stop = len(buf) if end is None else end
+    pos = 0
+    stop = len(buf)
     while pos < stop:
-        key, pos = read_varint(buf, pos)
+        # one-byte varints (keys of fields 1-15, small values and lengths)
+        # are read inline: most varints of a message are one byte
+        key = buf[pos]
+        if key < 0x80:
+            pos += 1
+        else:
+            key, pos = read_varint(buf, pos)
         field, wt = key >> 3, key & 7
-        if wt == WT_VARINT:
-            v, pos = read_varint(buf, pos)
-            yield field, wt, v
-        elif wt == WT_LEN:
-            ln, pos = read_varint(buf, pos)
-            yield field, wt, buf[pos : pos + ln]
-            pos += ln
+        want = wt if wire_types is None else wire_types.get(field)
+        if want is not None and want != wt:
+            raise ValueError(
+                f"field {field} has wire type {wt}, expected {want}"
+            )
+        if wt == WT_VARINT or wt == WT_LEN:
+            v = buf[pos]
+            if v < 0x80:
+                pos += 1
+            else:
+                v, pos = read_varint(buf, pos)
+            if wt == WT_LEN:
+                ln = v
+                if pos + ln > stop:
+                    raise ValueError(f"field {field}: a {ln}-byte value "
+                                     "runs past the end of its message")
+                v = buf[pos : pos + ln] if want is not None else None
+                pos += ln
         elif wt == WT_I64:
-            yield field, wt, struct.unpack_from("<q", buf, pos)[0]
+            v = struct.unpack_from("<q", buf, pos)[0]
             pos += 8
         elif wt == WT_I32:
-            yield field, wt, struct.unpack_from("<i", buf, pos)[0]
+            v = struct.unpack_from("<i", buf, pos)[0]
             pos += 4
-        else:  # pragma: no cover - corrupt input
+        else:
             raise ValueError(f"unsupported wire type {wt} at offset {pos}")
-
-
-def collect(buf: bytes) -> dict[int, list]:
-    """Scan a message into {field_number: [values...]}."""
-    out: dict[int, list] = {}
-    for field, _wt, v in scan_fields(buf):
-        out.setdefault(field, []).append(v)
-    return out
+        if want is not None:
+            yield field, wt, v
 
 
 # ---------------------------------------------------------------------------

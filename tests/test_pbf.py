@@ -818,6 +818,89 @@ def test_cut_packed_varint_names_file_and_offset(tmp_path):
             list(rdr.read(part))
 
 
+def _block(*groups: bytes, strings=(b"", b"k", b"v", b"r")) -> bytes:
+    """A raw PrimitiveBlock of PrimitiveGroup bodies ``groups``."""
+    table = b"".join(wire.field_len(1, s) for s in strings)
+    return wire.field_len(decode.PB_STRINGTABLE, table) + b"".join(
+        wire.field_len(decode.PB_GROUP, g) for g in groups
+    )
+
+
+def _dense(ids, lats, lons, kv=None, info=None) -> bytes:
+    """A PrimitiveGroup of one DenseNodes message."""
+    body = (wire.field_len(1, wire.encode_packed_sint(ids))
+            + wire.field_len(8, wire.encode_packed_sint(lats))
+            + wire.field_len(9, wire.encode_packed_sint(lons)))
+    if kv is not None:
+        body += wire.field_len(10, wire.encode_packed_uint(kv))
+    if info is not None:
+        body += wire.field_len(5, info)
+    return wire.field_len(decode.GROUP_DENSE, body)
+
+
+def _entity(kind: int, *fields: bytes) -> bytes:
+    """A PrimitiveGroup of one Way/Relation message built from ``fields``."""
+    return wire.field_len(kind, wire.field_varint(1, 9) + b"".join(fields))
+
+
+def _packed(field: int, vals, sint: bool = False) -> bytes:
+    enc = wire.encode_packed_sint if sint else wire.encode_packed_uint
+    return wire.field_len(field, enc(vals))
+
+
+_U64_MAX = 2**64 - 1
+_MALFORMED = {
+    # out-of-range ids: at int64 a key id of 2^64-1 reads as the table's
+    # last entry, a member type of -1 as "relation"
+    "way key id 2^64-1": ("way", _block(_entity(
+        decode.GROUP_WAYS, _packed(2, [_U64_MAX]), _packed(3, [2]))),
+        "string id outside the 4-entry"),
+    "member type -1": ("relation", _block(_entity(
+        decode.GROUP_RELATIONS, _packed(8, [3]), _packed(9, [5], True),
+        _packed(10, [_U64_MAX]))), "member type"),
+    "dense keys_vals id -1": ("node", _block(_dense(
+        [1], [0], [0], kv=[-1, 2, 0])), "string id outside"),
+    "DenseInfo user_sid -1": ("node", _block(_dense(
+        [1], [0], [0], info=_packed(5, [-1], True))), "string id outside"),
+    # parallel arrays of different lengths
+    "dense id/lat/lon": ("node", _block(_dense([1, 1], [0], [0, 0])),
+                         "2 ids, 1 lats and 2 lons"),
+    "dense odd keys_vals run": ("node", _block(_dense(
+        [1], [0], [0], kv=[1, 2, 1, 0])), "key without a value"),
+    "way keys/vals": ("way", _block(_entity(
+        decode.GROUP_WAYS, _packed(2, [1, 1]), _packed(3, [2]))),
+        "keys and vals differ"),
+    "relation roles/memids": ("relation", _block(_entity(
+        decode.GROUP_RELATIONS, _packed(8, [3]), _packed(9, [5, 1], True),
+        _packed(10, [0, 0]))), "roles and memids differ"),
+    # fields of the wrong wire type
+    "PrimitiveBlock group as varint": (
+        "node", wire.field_varint(decode.PB_GROUP, 5), "wire type 0"),
+    "string table as varint": (
+        "node", wire.field_varint(decode.PB_STRINGTABLE, 5), "wire type 0"),
+    "PrimitiveGroup way as varint": (
+        "way", _block(wire.field_varint(decode.GROUP_WAYS, 7)),
+        "wire type 0"),
+    "DenseNodes id as varint": ("node", _block(wire.field_len(
+        decode.GROUP_DENSE, wire.field_varint(1, 5))), "wire type 0"),
+}
+
+
+@pytest.mark.parametrize("case", list(_MALFORMED))
+def test_malformed_block_raises_value_error(case):
+    """A string id outside the table, a member type outside 0..2,
+    parallel arrays of different lengths and a field of the wrong wire
+    type each raise ValueError from the decoder (which the reader names
+    with the file and the block's offset), instead of reading wrong data
+    or failing later inside Arrow."""
+    primitive, payload, match = _MALFORMED[case]
+    decoder = getattr(decode.BlockDecoder, {
+        "node": "decode_nodes", "way": "decode_ways",
+        "relation": "decode_relations"}[primitive])
+    with pytest.raises(ValueError, match=match):
+        decoder(decode.BlockDecoder(payload))
+
+
 def test_fixture_deterministic(tmp_path):
     """Same seed -> byte-identical fixture (regeneration safety)."""
     p = str(tmp_path / "regen.pbf")
@@ -1240,6 +1323,23 @@ def test_header_helper_rejects_headerless_file(fixture_dir, tmp_path):
         open(src, "rb").read()[head.data_offset + head.data_size:]
     )
     with pytest.raises(ValueError, match="no OSMHeader block") as err:
+        osmpbf_header(p)
+    assert p in str(err.value)
+
+
+@pytest.mark.parametrize("payload", [
+    wire.field_varint(decode.HEADER_REQUIRED_FEATURES, 5),
+    wire.field_len(decode.HEADER_BBOX, wire.field_len(1, b"x")),
+], ids=["feature as varint", "bbox edge as bytes"])
+def test_header_fields_checked_against_their_wire_types(payload, tmp_path):
+    """An OSMHeader field of the wrong wire type (a feature as a varint, a
+    bbox edge as bytes) fails osmpbf_header with a CorruptPbfError naming
+    the file, not a bare AttributeError or TypeError."""
+    from osmpbf_spark.sources.pbf.datasource import osmpbf_header
+
+    p = str(tmp_path / "badhead.osm.pbf")
+    open(p, "wb").write(encode._file_block("OSMHeader", payload, False))
+    with pytest.raises(decode.CorruptPbfError, match="wire type") as err:
         osmpbf_header(p)
     assert p in str(err.value)
 
@@ -2126,8 +2226,8 @@ def test_decode_robustness_fixes(tmp_path):
     # --- negative Info varints fold (uid=-1 anonymous convention) ---
     info = write_varint(1 << 3 | 0) + write_varint(1)  # version=1
     info += write_varint(4 << 3 | 0) + write_varint((1 << 64) - 1)  # uid=-1
-    meta = decode.BlockDecoder(block)._decode_info(info)
-    assert meta["uid"] == -1
+    meta = decode.BlockDecoder(block)._info_columns([info])
+    assert meta["meta_uid"][0] == -1
 
 
 def test_fs_layer_contracts():

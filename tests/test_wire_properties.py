@@ -104,6 +104,18 @@ def test_scan_fields_walks_len_messages(fields):
     assert got == fields
 
 
+def test_wire_framing_checked():
+    """A LEN value running past its message and a varint of 11 bytes
+    raise ValueError instead of yielding a short slice or a value over
+    64 bits; a 10th varint byte keeps only the bit that fits."""
+    with pytest.raises(ValueError, match="runs past the end"):
+        list(wire.scan_fields(wire.write_varint(1 << 3 | wire.WT_LEN)
+                              + wire.write_varint(10) + b"abc"))
+    with pytest.raises(ValueError, match="longer than 10 bytes"):
+        wire.read_varint(b"\xff" * 10 + b"\x01", 0)
+    assert wire.read_varint(b"\xff" * 9 + b"\x7f", 0) == (2**64 - 1, 10)
+
+
 # ---------------------------------------------------------------------------
 # block-level round-trip: encoder -> BlockDecoder over arbitrary node sets
 # ---------------------------------------------------------------------------
@@ -219,6 +231,58 @@ def test_flipped_byte_fails_naming_path_or_reads_a_subset(draw):
             return
     for primitive, rows in got.items():
         assert not rows - clean_rows[primitive], primitive
+
+
+@functools.lru_cache(maxsize=1)
+def _fixture_blocks() -> tuple[bytes, list[tuple[int, int, bytes]]]:
+    """The fixture's bytes, and (start, end, inflated payload) of each of
+    its OSMData blocks."""
+    from osmpbf_spark.sources.pbf import decode
+
+    path = os.path.join(fixture.ensure_fixture(), "fixture.osm.pbf")
+    blocks, start = [], 0
+    with open(path, "rb") as f:
+        for meta in decode.index_blocks(path):
+            end = meta.data_offset + meta.data_size
+            if meta.block_type == "OSMData":
+                blocks.append((start, end,
+                               decode.read_block_payload(f, meta)))
+            start = end
+    return open(path, "rb").read(), blocks
+
+
+@given(st.data())
+@settings(max_examples=50, deadline=None)
+def test_flipped_payload_byte_reads_or_names_path(draw):
+    """One flipped byte inside an OSMData block's inflated payload,
+    re-wrapped as a raw blob: every read (node+meta, way, relation,
+    changeset) either succeeds with valid Arrow batches or raises
+    CorruptPbfError naming the file; no other exception escapes."""
+    import tempfile
+
+    from osmpbf_spark.sources.pbf import decode, encode
+    from osmpbf_spark.sources.pbf.datasource import OsmPbfReader
+
+    data, blocks = _fixture_blocks()
+    start, end, payload = draw.draw(st.sampled_from(blocks), label="block")
+    flipped = bytearray(payload)
+    flipped[draw.draw(st.integers(0, len(flipped) - 1), label="pos")] ^= (
+        draw.draw(st.integers(1, 255), label="xor")
+    )
+    blob = encode._file_block("OSMData", bytes(flipped), False)
+    with tempfile.TemporaryDirectory() as d:
+        path = os.path.join(d, "flipped.osm.pbf")
+        with open(path, "wb") as f:
+            f.write(data[:start] + blob + data[end:])
+        for primitive, opts in _SCANS + (("changeset", {}),):
+            rdr = OsmPbfReader({"path": path, "primitive": primitive, **opts},
+                               None)
+            try:
+                for part in rdr.partitions():
+                    for batch in rdr.read(part):
+                        batch.validate(full=True)
+            except decode.CorruptPbfError as e:
+                assert path in str(e)
 
 
 def test_sha_prefix_hash_cross_engine(spark, duck):
