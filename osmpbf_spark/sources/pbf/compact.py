@@ -38,6 +38,7 @@ import os
 
 from osmpbf_spark.sources.pbf import fs
 from osmpbf_spark.sources.pbf.decode import (
+    KIND_BITS,
     _file_record,
     index_blocks,
     index_blocks_cached,
@@ -76,7 +77,7 @@ def _index_file(
             if (
                 not m.stats
                 or "kinds" not in m.stats
-                or m.stats["kinds"] & 1
+                or m.stats["kinds"] & KIND_BITS["node"]
             ):
                 nodes_possible = True
     return split, n_data, rec["header"], nodes_possible
@@ -120,9 +121,10 @@ def _union_bbox(infos: list[tuple]) -> dict | None:
     union cannot be proven to cover the merged data. An input without a
     complete bbox contributes nothing to the union, which is only sound
     if that input provably holds no nodes: our writer omits the bbox
-    exactly when a file is node-free (encode._blocks_bbox) AND stamps
-    per-block kinds stats that prove it, but a FOREIGN bbox-less file may
-    contain nodes anywhere — declaring a bbox that excludes them would
+    exactly when a file is node-free (encode.write_pbf unions the blocks'
+    node bounds) AND stamps per-block kinds stats that prove it, but a
+    FOREIGN bbox-less file may contain nodes anywhere — declaring a bbox
+    that excludes them would
     make a bbox-pruning reader skip real data, strictly worse than
     declaring none (r15 review). So: if any input that MAY contain nodes
     lacks a complete bbox, the merged header declares no bbox at all."""

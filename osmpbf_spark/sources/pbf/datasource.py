@@ -15,8 +15,8 @@ PySpark Python Data Source API (pyspark.sql.datasource, PySpark 4.x):
   materialize as Python objects; Spark receives vectorized batches.
 - ``df.write.format("osmpbf")`` (OsmPbfWriter) is the same in reverse: it
   takes Spark's Arrow batches, cuts them into blocks of ``block_rows`` rows
-  and encodes one part file per task, buffering the file's blocks until
-  ``encode.write_pbf``.
+  and encodes one part file per task, handing ``encode.write_pbf`` one
+  block at a time.
 - Type projection (the ``primitive`` option) mirrors parseType
   (OsmPbfRecordReader.java:31-37, README.md:38-41). The options choose one
   layout per read, like the Pig loader's per-type schemas
@@ -57,7 +57,7 @@ Options (SURVEY.md §7 Milestone 2):
                   records), ``zlib_only`` (§1.4.6 reject raw/lzma blobs)
   tag_key         return only primitives CARRYING this tag key (the
                   osmium/imposm tag-filtered-extract shape). Whole blocks
-                  whose indexdata tag-key fingerprint (STATS_TAG_BITS)
+                  whose indexdata tag-key fingerprint (``tag_key_bits``)
                   proves the key absent are pruned at planning; kept
                   blocks are row-filtered exactly. Legacy files without
                   the fingerprint are never pruned. Not applicable to
@@ -84,7 +84,6 @@ from __future__ import annotations
 
 import os
 import uuid
-import zlib
 from dataclasses import dataclass
 from functools import partial
 
@@ -320,9 +319,8 @@ def _read_columns(options, schema: StructType | None) -> dict:
     """Builders of the read schema's columns, by name and in its order
     (Spark binds the returned Arrow columns by position); None reads the
     whole layout. A declared schema may select and reorder the layout's
-    columns. One the options do not provide, or of another type, raises a
-    ValueError naming it. Types compare without nullability, which DDL
-    cannot state (``containsNull=false``)."""
+    columns. One the options do not provide, or of another type
+    (``_check_type``), raises a ValueError naming it."""
     layout = _layout(options)
     if schema is None:
         return {name: build for name, (_, _, build) in layout.items()}
@@ -335,13 +333,19 @@ def _read_columns(options, schema: StructType | None) -> dict:
                 "with_meta, with_pos) choose its columns"
             )
         typ, _, out[f.name] = layout[f.name]
-        got, want = f.dataType.simpleString(), typ.simpleString()
-        if got != want:
-            raise ValueError(
-                f"osmpbf: column {f.name!r} is declared {got}, "
-                f"but reads as {want}"
-            )
+        _check_type(f, typ, "reads as")
     return out
+
+
+def _check_type(f: StructField, typ, want_as: str) -> None:
+    """A ValueError naming ``f`` unless its type is the layout's ``typ``,
+    compared without nullability, which DDL cannot state."""
+    got, want = f.dataType.simpleString(), typ.simpleString()
+    if got != want:
+        raise ValueError(
+            f"osmpbf: column {f.name!r} is declared {got}, but {want_as} "
+            f"{want}"
+        )
 
 
 class OsmPbfPartition(InputPartition):
@@ -453,9 +457,7 @@ class OsmPbfReader(DataSourceReader):
                 "entities, osmformat.proto:174-189)"
             )
         self._tag_bit = (
-            zlib.crc32(self.tag_key.encode("utf-8")) % 64
-            if self.tag_key
-            else None
+            decode.tag_key_bit(self.tag_key) if self.tag_key else None
         )
         self.tag_value = options.get("tag_value")
         if self.tag_value is not None and not self.tag_value:
@@ -495,14 +497,12 @@ class OsmPbfReader(DataSourceReader):
         self._warned_changesets = False
         self.columns = _read_columns(options, schema)
 
-    _KIND_BIT = {"node": 1, "way": 2, "relation": 4, "changeset": 8}
-
     def _block_prunable(self, stats: dict | None) -> bool:
         """True if stats prove the block holds no matching rows."""
         if stats is None:
             return False
         kinds = stats.get("kinds")
-        if kinds is not None and not kinds & self._KIND_BIT[self.primitive]:
+        if kinds is not None and not kinds & decode.KIND_BITS[self.primitive]:
             return True  # no group of the requested primitive type at all
         if self.tag_key:
             bits = stats.get("tag_key_bits")
@@ -514,7 +514,7 @@ class OsmPbfReader(DataSourceReader):
                     # are never pruned
                     return True
         if self.primitive == "changeset":
-            # encode_block_stats excludes changeset ids from min_id/max_id
+            # the block stats exclude changeset ids from min_id/max_id
             # (they share blocks with other primitives), so id-range
             # pruning would drop blocks whose changesets DO match
             return False
@@ -897,13 +897,15 @@ def _lists(arr: pa.Array, name: str) -> tuple[list[int], pa.Array]:
 
 
 def _tag_dicts(col: pa.MapArray) -> list[dict | None]:
-    """One ``dict`` per row; ``None`` for an empty or null map."""
+    """One ``dict`` per row; ``None`` for an empty or null map. A null tag
+    value, which the format cannot hold, raises ValueError naming
+    ``tags``."""
     off = col.offsets.to_numpy()
     lo, n = off[0], off[-1] - off[0]
     if n == 0:  # untagged rows: the encoder's fast path
         return [None] * len(col)
     keys = col.keys.slice(lo, n).to_pylist()
-    vals = col.items.slice(lo, n).to_pylist()
+    vals = _nonnull(col.items.slice(lo, n), "tags").to_pylist()
     return [
         dict(zip(keys[a:z], vals[a:z])) if z > a and ok else None
         for a, z, ok in zip((off[:-1] - lo).tolist(), (off[1:] - lo).tolist(),
@@ -959,18 +961,21 @@ class OsmPbfWriter(DataSourceArrowWriter):
     removes the written part files. At 100 TB this is embarrassingly
     parallel: no shuffle, one file per task, block boundaries independent
     of partitioning. A task cuts Spark's Arrow batches into blocks of
-    ``block_rows`` primitives, across batch boundaries, builds each block
-    from the column buffers, and holds the file's blocks until
-    ``encode.write_pbf`` (string tables, delta coding) writes it.
+    ``block_rows`` primitives, across batch boundaries, and builds each
+    block from the column buffers as ``encode.write_pbf`` (string tables,
+    delta coding) asks for it, so only the partition's Arrow table and the
+    compressed blocks are held until the part file is written.
 
     Input schema must match the reader's for the chosen ``primitive``:
     node ``(id, lat, lon, tags)``, way ``(id, refs, tags)``, or relation
-    ``(id, members, tags)``. A node frame may additionally carry the
-    reader's ``meta`` struct (with_meta shape); it is re-encoded as
-    DenseInfo, so read -> write -> read preserves provenance. A null id,
-    coordinate, ref, member or meta field but ``user`` raises ValueError
-    naming the column (a with_meta read of a file LACKING DenseInfo
-    yields null meta: drop the column to write without provenance).
+    ``(id, members, tags)``, with the reader's column types (a
+    ``tags_as=string`` frame is refused when the writer is built). A node
+    frame may additionally carry the reader's ``meta`` struct (with_meta
+    shape); it is re-encoded as DenseInfo, so read -> write -> read
+    preserves provenance. A null id, coordinate, ref, member, tag value or
+    meta field but ``user`` raises ValueError naming the column (a
+    with_meta read of a file LACKING DenseInfo yields null meta: drop the
+    column to write without provenance).
     """
 
     def __init__(self, options, schema, overwrite: bool):
@@ -989,13 +994,17 @@ class OsmPbfWriter(DataSourceArrowWriter):
             )
         self.block_rows = max(1, int(options.get("block_rows", 8000)))
         self.overwrite = overwrite
-        fields = set(schema.fieldNames())
-        need = set(_layout({"primitive": self.primitive}))
-        if not need <= fields:
+        fields = {f.name: f for f in schema.fields}
+        layout = _layout({"primitive": self.primitive, "with_meta": "true"})
+        need = set(layout) - {"meta"}
+        if not need <= set(fields):
             raise ValueError(
                 f"osmpbf {self.primitive} write needs columns {sorted(need)}, "
                 f"got {sorted(fields)}"
             )
+        for name, (typ, _, _) in layout.items():
+            if name in fields:
+                _check_type(fields[name], typ, "the writer takes")
 
     def write(self, batches) -> _PbfCommit:
         from osmpbf_spark.sources.pbf import encode
@@ -1005,12 +1014,12 @@ class OsmPbfWriter(DataSourceArrowWriter):
         batches = list(batches)
         rows = pa.Table.from_batches(batches) if batches else None
         n = rows.num_rows if batches else 0
-        blocks = [
+        # a generator: write_pbf encodes each block as it is built
+        encode.write_pbf(out, (
             _block(rows.slice(i, self.block_rows).combine_chunks()
                    .to_batches()[0], self.primitive)
             for i in range(0, n, self.block_rows)
-        ]
-        encode.write_pbf(out, blocks)
+        ))
         return _PbfCommit(path=out, rows=n)
 
     def commit(self, messages) -> None:

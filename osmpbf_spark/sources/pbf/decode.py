@@ -93,6 +93,8 @@ class CorruptPbfError(ValueError):
 
 
 # osmformat.proto field numbers
+STRINGTABLE_S = 1
+
 PB_STRINGTABLE = 1
 PB_GROUP = 2
 PB_GRANULARITY = 17
@@ -118,6 +120,10 @@ INFO_CHANGESET = 3
 INFO_UID = 4
 INFO_USER_SID = 5
 INFO_VISIBLE = 6
+# DenseInfo delta-codes these fields (packed sint); version and visible
+# are plain packed varints
+DENSE_INFO_DELTA = frozenset({INFO_TIMESTAMP, INFO_CHANGESET, INFO_UID,
+                              INFO_USER_SID})
 
 MEMBER_TYPES = np.array(["node", "way", "relation"], dtype=object)
 
@@ -125,6 +131,7 @@ HEADER_BBOX = 1
 HEADER_REQUIRED_FEATURES = 4
 HEADER_OPTIONAL_FEATURES = 5
 HEADER_WRITINGPROGRAM = 16
+BBOX_FIELDS = {1: "left", 2: "right", 3: "top", 4: "bottom"}  # sint64
 _HEADER_WIRE = dict.fromkeys((HEADER_BBOX, HEADER_REQUIRED_FEATURES,
                               HEADER_OPTIONAL_FEATURES,
                               HEADER_WRITINGPROGRAM), wire.WT_LEN)
@@ -135,10 +142,11 @@ class BlockMeta:
     """One FileBlock: where its Blob payload lives and what it is.
 
     ``stats`` is parsed from BlobHeader.indexdata when present (written by
-    our encoder; other producers leave it empty): dict with ``kinds``
-    bitmask (1 nodes / 2 ways / 4 relations) and optional ``min_id`` /
-    ``max_id`` / ``min_lat_nano`` / ... bounds — enough for split planning
-    to prune blocks against pushed-down filters WITHOUT reading any blob.
+    our encoder; other producers leave it empty): dict with a ``kinds``
+    mask (``KIND_BITS``) and optional ``min_id`` / ``max_id`` /
+    ``min_lat_nano`` / ... bounds — enough for split planning to prune
+    blocks against pushed-down filters WITHOUT reading any blob (see
+    ``_STATS_FIELDS``).
     """
 
     block_type: str  # "OSMHeader" | "OSMData"
@@ -147,30 +155,61 @@ class BlockMeta:
     stats: dict | None = None
 
 
+# The block stats this engine writes into BlobHeader.indexdata (its own
+# schema; readers that don't understand indexdata ignore it, per the PBF
+# spec): field -> (name, zigzag), in the order the encoder writes them.
+# ``kinds`` is a KIND_BITS mask; ids cover nodes, ways and relations
+# (changeset ids are their own id space), lat/lon are nanodegrees over
+# the nodes. ``tag_key_bits`` (see tag_key_bit) is ALWAYS written, even 0
+# ("no tags, prune any tag query"), so its absence means "never prune".
 _STATS_FIELDS = {
     1: ("kinds", False),
-    2: ("min_id", True),
-    3: ("max_id", True),
     4: ("min_lat_nano", True),
     5: ("max_lat_nano", True),
     6: ("min_lon_nano", True),
     7: ("max_lon_nano", True),
+    2: ("min_id", True),
+    3: ("max_id", True),
     8: ("tag_key_bits", False),
 }
+_STATS_WIRE = dict.fromkeys(_STATS_FIELDS, wire.WT_VARINT)
+KIND_BITS = {"node": 1, "way": 2, "relation": 4, "changeset": 8}
+# each pair of bounds is written exactly when ``kinds`` has one of its bits
+_STATS_BOUNDS = {("min_lat_nano", "max_lat_nano"): KIND_BITS["node"],
+                 ("min_lon_nano", "max_lon_nano"): KIND_BITS["node"],
+                 ("min_id", "max_id"): ~KIND_BITS["changeset"]}
+
+
+def tag_key_bit(key: str) -> int:
+    """A tag key's bit in ``tag_key_bits``: crc32 of its UTF-8 bytes mod
+    64. Bloom-style: a set bit may be a collision (block kept, rows
+    re-filtered), a clear bit proves the key absent (block pruned)."""
+    return zlib.crc32(key.encode("utf-8")) % 64
 
 
 def _parse_block_stats(buf: bytes) -> dict | None:
+    """The block stats in ``buf``, or None (prune nothing) when ``buf`` is
+    not this engine's stats message or contradicts what its writer always
+    writes (``kinds``, and ``_STATS_BOUNDS`` with min <= max), so a flipped
+    byte clearing a block's only kind bit no longer drops the block. One
+    clearing one of several kind bits (7 -> 5) stays undetectable: that
+    needs a checksum, a format change that would move every later block
+    and with it the ``_pos`` record keys."""
+    out = {}
     try:
-        out = {}
-        for field, _wt, v in wire.scan_fields(buf):
-            spec = _STATS_FIELDS.get(field)
-            if spec is None:
-                continue
-            name, zz = spec
+        for field, _wt, v in wire.scan_fields(buf, _STATS_WIRE):
+            name, zz = _STATS_FIELDS[field]
             out[name] = wire.zigzag_decode(v) if zz else v
-        return out or None
-    except Exception:  # foreign indexdata layout: ignore, never fail a scan
+    except (IndexError, ValueError, struct.error):
+        return None  # foreign indexdata layout: ignore, never fail a scan
+    if "kinds" not in out:
         return None
+    for (lo, hi), bits in _STATS_BOUNDS.items():
+        want = bool(out["kinds"] & bits)
+        if (lo in out) != want or (hi in out) != want or (
+                want and out[lo] > out[hi]):
+            return None
+    return out
 
 
 def _blob_header(f, path: str, start: int, fsize: int) -> BlockMeta:
@@ -523,11 +562,10 @@ def read_block_payload(f, meta: BlockMeta, zlib_only: bool = False) -> bytes:
 def _decode_header_bbox(payload: bytes) -> dict:
     """HeaderBBox (osmformat.proto:57-63): left/right/top/bottom, sint64
     (zigzag) nanodegrees."""
-    bbox = {"left": None, "right": None, "top": None, "bottom": None}
-    names = {1: "left", 2: "right", 3: "top", 4: "bottom"}
-    wire_types = dict.fromkeys(names, wire.WT_VARINT)
+    bbox = dict.fromkeys(BBOX_FIELDS.values())
+    wire_types = dict.fromkeys(BBOX_FIELDS, wire.WT_VARINT)
     for field, _wt, v in wire.scan_fields(payload, wire_types):
-        bbox[names[field]] = wire.zigzag_decode(v)
+        bbox[BBOX_FIELDS[field]] = wire.zigzag_decode(v)
     return bbox
 
 
@@ -618,7 +656,7 @@ _PRIMITIVE = {
 
 
 def _decode_string_table(buf: bytes) -> np.ndarray:
-    vals = [v for _field, _wt, v in wire.scan_fields(buf, {1: _LEN})]
+    vals = [v for _f, _wt, v in wire.scan_fields(buf, {STRINGTABLE_S: _LEN})]
     return np.array([s.decode("utf-8", "replace") for s in vals], dtype=object)
 
 
@@ -1030,10 +1068,10 @@ class BlockDecoder:
             # slice by DECODED element count, not packed byte count —
             # multi-byte varints make len(v) > #elements and the
             # broadcast assignment would crash on truncated arrays
-            if f in (INFO_VERSION, INFO_VISIBLE):
-                vals = wire.decode_packed_int(v)[:n]
-            else:  # delta-coded sint
+            if f in DENSE_INFO_DELTA:
                 vals = np.cumsum(wire.decode_packed_sint(v))[:n]
+            else:
+                vals = wire.decode_packed_int(v)[:n]
             out[_META[f]][: len(vals)] = self._meta_column(f, vals)
         return out
 

@@ -13,6 +13,10 @@ reference in lib/osmpbf-1.3.3.jar):
 
 Each PrimitiveBlock gets its own StringTable (index 0 reserved empty) and
 delta-codes ids/coords/refs exactly as the format requires.
+
+Every message is written from decode.py's tables and names (``_ENTITY``,
+``_META``, ``_STATS_FIELDS``), so each field number is stated once for
+both directions.
 """
 
 from __future__ import annotations
@@ -22,7 +26,7 @@ import zlib
 
 import numpy as np
 
-from osmpbf_spark.sources.pbf import fs, wire
+from osmpbf_spark.sources.pbf import decode, fs, wire
 from osmpbf_spark.sources.pbf.wire import field_len, field_varint
 
 
@@ -42,56 +46,61 @@ class _StringTable:
         return sid
 
     def encode(self) -> bytes:
-        return b"".join(field_len(1, s) for s in self.strings)
+        return b"".join(field_len(decode.STRINGTABLE_S, s)
+                        for s in self.strings)
 
 
-def _encode_dense_info(meta: dict, st: _StringTable, n: int) -> bytes:
-    """DenseInfo: packed parallel arrays, timestamp/changeset/uid/user_sid
-    delta-coded. ``meta`` holds optional lists: version, timestamp_ms,
-    changeset, uid, user, visible — each must be exactly ``n`` long (one
-    entry per node): a silent length mismatch would write truncated or
-    overlong parallel arrays, the malformed shape the decoder has to
-    defend against."""
-    for key in ("version", "timestamp_ms", "changeset", "uid", "user", "visible"):
-        if key in meta and len(meta[key]) != n:
+def _delta(values) -> bytes:
+    """A delta-coded packed sint field's payload."""
+    return wire.encode_packed_sint(
+        np.diff(np.asarray(values, dtype=np.int64), prepend=0))
+
+
+def _encode_info(meta: dict, st: _StringTable, n: int | None = None) -> bytes:
+    """An Info message (``n`` None) or a DenseInfo of ``n`` entities, from
+    ``meta``: optional version, timestamp_ms, changeset, uid, user and
+    visible, each a value or, for DenseInfo, a list of exactly ``n`` (a
+    silent length mismatch would write truncated or overlong parallel
+    arrays, the malformed shape the decoder has to defend against). A
+    None field is left out; a None DenseInfo user is written as ""."""
+    out = b""
+    for field, col in decode._META.items():
+        key = col.removeprefix("meta_")
+        v = meta.get(key)
+        if v is None:
+            continue
+        if n is None:
+            v = st.add(v) if field == decode.INFO_USER_SID else int(v)
+        elif len(v) != n:
             raise ValueError(
-                f"DenseInfo field {key!r} has {len(meta[key])} entries "
+                f"DenseInfo field {key!r} has {len(v)} entries "
                 f"for {n} nodes — parallel arrays must match"
             )
-    out = b""
-    if "version" in meta:
-        out += field_len(1, wire.encode_packed_uint(meta["version"]))
-    if "timestamp_ms" in meta:
-        ts = np.asarray(meta["timestamp_ms"], dtype=np.int64)  # /1000ms gran
-        out += field_len(2, wire.encode_packed_sint(np.diff(ts // 1000, prepend=0)))
-    if "changeset" in meta:
-        cs = np.asarray(meta["changeset"], dtype=np.int64)
-        out += field_len(3, wire.encode_packed_sint(np.diff(cs, prepend=0)))
-    if "uid" in meta:
-        u = np.asarray(meta["uid"], dtype=np.int64)
-        out += field_len(4, wire.encode_packed_sint(np.diff(u, prepend=0)))
-    if "user" in meta:
-        sids = np.array([st.add(s or "") for s in meta["user"]], dtype=np.int64)
-        out += field_len(5, wire.encode_packed_sint(np.diff(sids, prepend=0)))
-    if "visible" in meta:
-        out += field_len(6, wire.encode_packed_uint([int(v) for v in meta["visible"]]))
+        elif field == decode.INFO_USER_SID:
+            v = np.array([st.add(s or "") for s in v], dtype=np.int64)
+        else:
+            v = np.asarray(v, dtype=np.int64)
+        if field == decode.INFO_TIMESTAMP:
+            v = v // 1000  # ms -> s, the default date_granularity
+        if n is None:
+            out += field_varint(field, v)
+        elif field in decode.DENSE_INFO_DELTA:
+            out += field_len(field, _delta(v))
+        else:
+            out += field_len(field, wire.encode_packed_uint(v))
     return out
 
 
-def _encode_dense_nodes(
-    ids, lats_nano, lons_nano, tags, st: _StringTable, granularity: int,
-    meta: dict | None = None,
-) -> bytes:
-    """DenseNodes: delta-coded packed id/lat/lon + zero-delimited keys_vals
-    (+ optional DenseInfo provenance, which the reference decodes but
-    drops — we round-trip it).
+def _encode_dense_nodes(nodes: dict, st: _StringTable, granularity) -> bytes:
+    """One PrimitiveGroup holding one DenseNodes: delta-coded packed
+    id/lat/lon + zero-delimited keys_vals (+ optional DenseInfo provenance,
+    which the reference decodes but drops — we round-trip it).
 
-    ``lats_nano``/``lons_nano`` are integer nanodegrees; raw units stored are
+    ``lat_nano``/``lon_nano`` are integer nanodegrees; raw units stored are
     nanodegrees / granularity.
     """
-    ids = np.asarray(ids, dtype=np.int64)
-    lat_units = np.asarray(lats_nano, dtype=np.int64) // granularity
-    lon_units = np.asarray(lons_nano, dtype=np.int64) // granularity
+    ids = nodes["id"]
+    tags = nodes["tags"]
     if not any(tags):  # all-untagged fast path: one delimiter per node
         kv: list[int] = [0] * len(ids)
     else:
@@ -101,71 +110,76 @@ def _encode_dense_nodes(
                 kv.append(st.add(k))
                 kv.append(st.add(v))
             kv.append(0)
-    body = field_len(1, wire.encode_packed_sint(np.diff(ids, prepend=0)))
-    if meta:
-        body += field_len(5, _encode_dense_info(meta, st, len(ids)))
-    body += (
-        field_len(8, wire.encode_packed_sint(np.diff(lat_units, prepend=0)))
-        + field_len(9, wire.encode_packed_sint(np.diff(lon_units, prepend=0)))
-        + field_len(10, wire.encode_packed_uint(kv))
+    body = field_len(decode.DENSE_ID, _delta(ids))
+    if nodes.get("meta"):
+        body += field_len(decode.DENSE_INFO,
+                          _encode_info(nodes["meta"], st, len(ids)))
+    for field, col in ((decode.DENSE_LAT, "lat_nano"),
+                       (decode.DENSE_LON, "lon_nano")):
+        units = np.asarray(nodes[col], dtype=np.int64) // granularity
+        body += field_len(field, _delta(units))
+    body += field_len(decode.DENSE_KEYS_VALS, wire.encode_packed_uint(kv))
+    return field_len(decode.GROUP_DENSE, body)
+
+
+# the non-dense groups of a block dict: (primitive, group kind); a block
+# holds a list of them under the primitive's plural
+_GROUPS = (("way", decode.GROUP_WAYS),
+           ("relation", decode.GROUP_RELATIONS),
+           ("changeset", decode.GROUP_CHANGESETS))
+
+
+def _encode_entity(kind: int, e, st: _StringTable) -> bytes:
+    """One ``kind`` group entry (a way or relation dict, or a changeset
+    id): the fields of ``decode._ENTITY[kind]`` in table order. "int" is a
+    varint, "uint" packed uint, "delta" packed sint of the deltas, "info"
+    a nested Info message when ``meta`` is given. Every string id is added
+    before the walk, so the string table keeps the order keys, vals,
+    roles, then the Info user."""
+    e = {"id": e} if kind == decode.GROUP_CHANGESETS else e
+    tags = e.get("tags") or {}
+    members = e.get("members") or []  # [(role, ref, type 0|1|2)]
+    cols = {"id": e["id"], "keys": [st.add(k) for k in tags],
+            "vals": [st.add(v) for v in tags.values()],
+            "roles": [st.add(r) for r, _ref, _t in members],
+            "memids": [ref for _r, ref, _t in members],
+            "types": [t for _r, _ref, t in members],
+            "refs": e.get("refs"), "info": e.get("meta")}
+    body = b""
+    for field, (col, how) in decode._ENTITY[kind].items():
+        v = cols[col]
+        if how == "int":
+            body += field_varint(field, v)
+        elif how == "uint":
+            body += field_len(field, wire.encode_packed_uint(v))
+        elif how == "delta":
+            body += field_len(field, _delta(v))
+        elif how == "info" and v:
+            body += field_len(field, _encode_info(v, st))
+    return field_len(kind, body)
+
+
+def _primitive_block(blk: dict, granularity: int) -> bytes:
+    """One write_pbf block dict as a PrimitiveBlock: one homogeneous
+    PrimitiveGroup per entity kind present, in the order dense nodes, ways,
+    relations, changesets."""
+    st = _StringTable()
+    groups = []
+    nodes = blk.get("nodes")
+    if nodes is not None and len(nodes["id"]):
+        groups.append(_encode_dense_nodes(nodes, st, granularity))
+    for prim, kind in _GROUPS:
+        # ChangeSet is id-only and "NOT USED" per the spec
+        # (osmformat.proto:174-189); written here so the decoder's
+        # count-and-skip path has real input to test against
+        if blk.get(prim + "s"):
+            groups.append(b"".join(
+                _encode_entity(kind, e, st) for e in blk[prim + "s"]))
+    return (
+        field_len(decode.PB_STRINGTABLE, st.encode())
+        + b"".join(field_len(decode.PB_GROUP, g) for g in groups)
+        + field_varint(decode.PB_GRANULARITY, granularity)
     )
-    # one PrimitiveGroup holding one DenseNodes (group field dense = 2)
-    return field_len(2, body)
-
-
-def _encode_info(meta: dict, st: _StringTable) -> bytes:
-    """Info message for a single way/relation (non-dense form)."""
-    out = b""
-    if meta.get("version") is not None:
-        out += field_varint(1, meta["version"])
-    if meta.get("timestamp_ms") is not None:
-        out += field_varint(2, meta["timestamp_ms"] // 1000)
-    if meta.get("changeset") is not None:
-        out += field_varint(3, meta["changeset"])
-    if meta.get("uid") is not None:
-        out += field_varint(4, meta["uid"])
-    if meta.get("user") is not None:
-        out += field_varint(5, st.add(meta["user"]))
-    if meta.get("visible") is not None:
-        out += field_varint(6, int(meta["visible"]))
-    return out
-
-
-def _encode_way(wid: int, refs, tags, st: _StringTable, meta=None) -> bytes:
-    keys = [st.add(k) for k in (tags or {})]
-    vals = [st.add(v) for v in (tags or {}).values()]
-    refs = np.asarray(refs, dtype=np.int64)
-    body = (
-        field_varint(1, wid)
-        + field_len(2, wire.encode_packed_uint(keys))
-        + field_len(3, wire.encode_packed_uint(vals))
-    )
-    if meta:
-        body += field_len(4, _encode_info(meta, st))
-    body += field_len(8, wire.encode_packed_sint(np.diff(refs, prepend=0)))
-    return field_len(3, body)  # PrimitiveGroup.ways entry = field 3
-
-
-def _encode_relation(rid: int, members, tags, st: _StringTable, meta=None) -> bytes:
-    """members: list of (role:str, ref:int, type:int 0|1|2)."""
-    keys = [st.add(k) for k in (tags or {})]
-    vals = [st.add(v) for v in (tags or {}).values()]
-    roles = [st.add(r) for r, _ref, _t in members]
-    refs = np.asarray([ref for _r, ref, _t in members], dtype=np.int64)
-    types = [t for _r, _ref, t in members]
-    body = (
-        field_varint(1, rid)
-        + field_len(2, wire.encode_packed_uint(keys))
-        + field_len(3, wire.encode_packed_uint(vals))
-    )
-    if meta:
-        body += field_len(4, _encode_info(meta, st))
-    body += (
-        field_len(8, wire.encode_packed_uint(roles))
-        + field_len(9, wire.encode_packed_sint(np.diff(refs, prepend=0)))
-        + field_len(10, wire.encode_packed_uint(types))
-    )
-    return field_len(4, body)  # PrimitiveGroup.relations entry = field 4
 
 
 def _file_block(
@@ -174,113 +188,84 @@ def _file_block(
     """``compress``: True/"zlib", "lzma", "lz4", "zstd", or False/None
     for raw. lz4 is LZ4 *block* format and zstd a zstd frame, matching
     fileformat.proto fields 6/7 (codecs via pyarrow's bundled C++ libs);
-    raw_size (field 2) is always written for compressed blobs, which the
-    lz4/zstd decode path requires."""
+    raw_size is always written for compressed blobs, which the lz4/zstd
+    decode path requires."""
     if compress == "lzma":
         import lzma
 
-        blob = field_varint(2, len(payload)) + field_len(
-            4, lzma.compress(payload)
-        )
+        field, data = decode.BLOB_LZMA, lzma.compress(payload)
     elif compress in ("lz4", "zstd"):
         import pyarrow as pa
 
-        codec = pa.Codec("lz4_raw" if compress == "lz4" else "zstd")
-        fld = 6 if compress == "lz4" else 7
-        blob = field_varint(2, len(payload)) + field_len(
-            fld, codec.compress(payload, asbytes=True)
-        )
+        lz4 = compress == "lz4"
+        field = decode.BLOB_LZ4 if lz4 else decode.BLOB_ZSTD
+        data = pa.Codec("lz4_raw" if lz4 else "zstd").compress(
+            payload, asbytes=True)
     elif compress:
-        blob = field_varint(2, len(payload)) + field_len(3, zlib.compress(payload))
+        field, data = decode.BLOB_ZLIB, zlib.compress(payload)
+    if compress:
+        blob = (field_varint(decode.BLOB_RAW_SIZE, len(payload))
+                + field_len(field, data))
     else:
-        blob = field_len(1, payload)
-    header = field_len(1, block_type.encode("utf-8"))
+        blob = field_len(decode.BLOB_RAW, payload)
+    header = field_len(decode.BLOBHEADER_TYPE, block_type.encode("utf-8"))
     if indexdata:
-        # BlobHeader.indexdata (field 2) — reserved by the format for
-        # exactly this: per-block metadata readable without decompressing
-        # the blob. We store min/max id + bbox stats (see encode_block_stats)
-        # so split planning can prune blocks against pushed-down filters.
-        header += field_len(2, indexdata)
-    header += field_varint(3, len(blob))
+        # BlobHeader.indexdata — reserved by the format for exactly this:
+        # per-block metadata readable without decompressing the blob. We
+        # store the block stats (decode._STATS_FIELDS) so split planning
+        # can prune blocks against pushed-down filters.
+        header += field_len(decode.BLOBHEADER_INDEXDATA, indexdata)
+    header += field_varint(decode.BLOBHEADER_DATASIZE, len(blob))
     return struct.pack(">i", len(header)) + header + blob
 
 
-# block-stats message layout inside indexdata (our own schema; readers that
-# don't understand indexdata ignore it, per the PBF spec)
-STATS_KINDS = 1  # varint bitmask: 1 nodes, 2 ways, 4 relations
-STATS_MIN_ID = 2  # sint
-STATS_MAX_ID = 3  # sint
-STATS_MIN_LAT = 4  # sint nanodegrees
-STATS_MAX_LAT = 5  # sint nanodegrees
-STATS_MIN_LON = 6  # sint nanodegrees
-STATS_MAX_LON = 7  # sint nanodegrees
-STATS_TAG_BITS = 8  # varint: u64 bitmap of crc32(tag key) % 64 over the
-#                     block's tag KEYS (nodes+ways+relations). ALWAYS
-#                     written (even 0 = "no tags, prune any tag query") so
-#                     absence of the field cleanly means "legacy writer,
-#                     never prune" — a zero-suppressed field would make
-#                     those two states indistinguishable
-
-
-def encode_block_stats(blk: dict) -> bytes:
-    """Compute the per-block stats message for one write_pbf block dict."""
-    kinds = 0
+def _block_stats(blk: dict) -> dict:
+    """The block stats of one write_pbf block dict, by name
+    (``decode._STATS_FIELDS``), in one pass over its entities."""
+    stats = {"kinds": 0}
     ids: list[int] = []
-    out = b""
+    keys: set[str] = set()
     nodes = blk.get("nodes")
     if nodes is not None and len(nodes["id"]):
-        kinds |= 1
-        nid = np.asarray(nodes["id"], dtype=np.int64)
+        stats["kinds"] |= decode.KIND_BITS["node"]
         # np reductions, not builtins: Python min/max ITERATE a numpy
         # array element-by-element (measured 5.7s of a 36s 20M-node
         # write — the stats pass must stay O(n) C-speed)
+        nid = np.asarray(nodes["id"], dtype=np.int64)
         ids += [int(nid.min()), int(nid.max())]
-        lat = np.asarray(nodes["lat_nano"], dtype=np.int64)
-        lon = np.asarray(nodes["lon_nano"], dtype=np.int64)
-        out += field_varint(STATS_MIN_LAT, wire.zigzag_encode(int(lat.min())))
-        out += field_varint(STATS_MAX_LAT, wire.zigzag_encode(int(lat.max())))
-        out += field_varint(STATS_MIN_LON, wire.zigzag_encode(int(lon.min())))
-        out += field_varint(STATS_MAX_LON, wire.zigzag_encode(int(lon.max())))
-    if blk.get("ways"):
-        kinds |= 2
-        ids += [w["id"] for w in blk["ways"]]
-    if blk.get("relations"):
-        kinds |= 4
-        ids += [r["id"] for r in blk["relations"]]
-    if blk.get("changesets"):
-        # changeset ids live in their own id space — flagged in kinds for
-        # planning, excluded from the min/max id bounds
-        kinds |= 8
-    out = field_varint(STATS_KINDS, kinds) + out
-    if ids:
-        out += field_varint(STATS_MIN_ID, wire.zigzag_encode(min(ids)))
-        out += field_varint(STATS_MAX_ID, wire.zigzag_encode(max(ids)))
-    out += field_varint(STATS_TAG_BITS, _tag_key_bits(blk))
-    return out
-
-
-def _tag_key_bits(blk: dict) -> int:
-    """u64 bitmap of crc32(key) % 64 over every tag key in the block —
-    the pruning fingerprint for tag-filtered scans. Bloom-style: a set
-    bit may be a collision (block kept, rows re-filtered), a clear bit
-    PROVES key absence (block pruned). The all-untagged common case
-    short-circuits on any() (C-speed scan, no dict iteration)."""
-    import zlib as _z
-
-    bits = 0
-    nodes = blk.get("nodes")
-    if nodes is not None:
+        for axis in ("lat", "lon"):
+            a = np.asarray(nodes[axis + "_nano"], dtype=np.int64)
+            stats[f"min_{axis}_nano"] = int(a.min())
+            stats[f"max_{axis}_nano"] = int(a.max())
         tags = nodes.get("tags") or []
-        if any(tags):
-            for t in tags:
-                if t:
-                    for k in t:
-                        bits |= 1 << (_z.crc32(k.encode("utf-8")) % 64)
-    for group in ("ways", "relations"):
-        for prim in blk.get(group) or []:
-            for k in prim.get("tags") or {}:
-                bits |= 1 << (_z.crc32(k.encode("utf-8")) % 64)
-    return bits
+        if any(tags):  # the all-untagged common case stops here
+            keys.update(k for t in tags if t for k in t)
+    for prim, _kind in _GROUPS:
+        entities = blk.get(prim + "s")
+        if entities:
+            stats["kinds"] |= decode.KIND_BITS[prim]
+            if prim != "changeset":  # changeset ids: their own id space
+                ids += [e["id"] for e in entities]
+                keys.update(k for e in entities for k in e.get("tags") or {})
+    if ids:
+        stats["min_id"], stats["max_id"] = min(ids), max(ids)
+    stats["tag_key_bits"] = 0
+    for k in keys:
+        stats["tag_key_bits"] |= 1 << decode.tag_key_bit(k)
+    return stats
+
+
+def _stats_message(stats: dict) -> bytes:
+    """The block-stats message (BlobHeader.indexdata) of ``stats``."""
+    return b"".join(
+        field_varint(f, wire.zigzag_encode(stats[name]) if zz else stats[name])
+        for f, (name, zz) in decode._STATS_FIELDS.items() if name in stats
+    )
+
+
+def encode_block_stats(blk: dict) -> bytes:
+    """The block-stats message of one write_pbf block dict."""
+    return _stats_message(_block_stats(blk))
 
 
 def encode_header_block(
@@ -291,122 +276,68 @@ def encode_header_block(
 ) -> bytes:
     """``bbox`` is {left,right,top,bottom} in nanodegrees -> HeaderBBox
     (osmformat.proto:57-63, sint64 zigzag). ``optional`` = the
-    optional_features list (field 5 — sort-order declarations like
+    optional_features list (sort-order declarations like
     Sort.Type_then_ID ride here; the compaction merge preserves them).
-    ``writingprogram=None`` omits field 16 entirely (header fidelity for
+    ``writingprogram=None`` omits the field entirely (header fidelity for
     merges of files that never declared one). The reference never writes
     headers (no OutputFormat); field numbers are from the public proto."""
     payload = b""
     if bbox is not None:
-        bb = b"".join(
-            field_varint(i, wire.zigzag_encode(bbox[k]))
-            for i, k in ((1, "left"), (2, "right"), (3, "top"), (4, "bottom"))
-        )
-        payload += field_len(1, bb)
-    payload += b"".join(field_len(4, r.encode("utf-8")) for r in required)
-    payload += b"".join(field_len(5, o.encode("utf-8")) for o in optional)
+        payload += field_len(decode.HEADER_BBOX, b"".join(
+            field_varint(f, wire.zigzag_encode(bbox[k]))
+            for f, k in decode.BBOX_FIELDS.items()))
+    for field, values in ((decode.HEADER_REQUIRED_FEATURES, required),
+                          (decode.HEADER_OPTIONAL_FEATURES, optional)):
+        payload += b"".join(field_len(field, v.encode("utf-8"))
+                            for v in values)
     if writingprogram is not None:
-        payload += field_len(16, writingprogram.encode("utf-8"))
+        payload += field_len(decode.HEADER_WRITINGPROGRAM,
+                             writingprogram.encode("utf-8"))
     return payload
-
-
-def _blocks_bbox(blocks: list[dict]) -> dict | None:
-    """Tight bounding box (nanodegrees) over every node in ``blocks``."""
-    lats: list[int] = []
-    lons: list[int] = []
-    for blk in blocks:
-        nodes = blk.get("nodes")
-        if nodes is not None and len(nodes["id"]):
-            la = np.asarray(nodes["lat_nano"], dtype=np.int64)
-            lo = np.asarray(nodes["lon_nano"], dtype=np.int64)
-            lats += [int(la.min()), int(la.max())]
-            lons += [int(lo.min()), int(lo.max())]
-    if not lats:
-        return None
-    return {
-        "left": min(lons),
-        "right": max(lons),
-        "top": max(lats),
-        "bottom": min(lats),
-    }
 
 
 def write_pbf(
     path: str,
-    blocks: list[dict],
+    blocks,
     granularity: int = 100,
     compress=True,  # True/"zlib" | "lzma" | "lz4" | "zstd" | False (raw)
     bbox="auto",  # "auto" (tight box over nodes) | dict | None
 ) -> None:
     """Write a PBF file.
 
-    ``blocks`` is a list of dicts, each becoming one OSMData PrimitiveBlock:
+    ``blocks`` is any iterable of dicts, each becoming one OSMData
+    PrimitiveBlock:
       {"nodes":    {"id": [...], "lat_nano": [...], "lon_nano": [...],
                     "tags": [dict|None, ...]},              # optional
        "ways":     [{"id": int, "refs": [...], "tags": dict}, ...],  # optional
-       "relations":[{"id": int, "members": [(role, ref, type)], "tags": dict}]}
+       "relations":[{"id": int, "members": [(role, ref, type)], "tags": dict}],
+       "changesets": [id, ...]}
+    where nodes, ways and relations may carry a ``meta`` (see
+    ``_encode_info``). Each block is encoded and compressed as it arrives;
+    only the compressed bytes are held until the header is written.
 
-    ``bbox="auto"`` writes a HeaderBBox covering this file's nodes (each
-    part file of a distributed write gets its own tight box — no cross-task
-    aggregation needed); pass an explicit dict or None to override.
+    ``bbox="auto"`` writes a HeaderBBox covering this file's nodes, the
+    union of the blocks' node bounds (each part file of a distributed
+    write gets its own tight box — no cross-task aggregation needed); pass
+    an explicit dict or None to override.
     """
-    if bbox == "auto":
-        bbox = _blocks_bbox(blocks)
-    out = [_file_block("OSMHeader", encode_header_block(bbox=bbox), compress)]
+    data = []
+    nodes = []  # the stats of the blocks holding nodes
     for blk in blocks:
-        st = _StringTable()
-        groups = []  # each entry: one homogeneous PrimitiveGroup body
-        nodes = blk.get("nodes")
-        if nodes is not None and len(nodes["id"]):
-            groups.append(
-                _encode_dense_nodes(
-                    nodes["id"],
-                    nodes["lat_nano"],
-                    nodes["lon_nano"],
-                    nodes["tags"],
-                    st,
-                    granularity,
-                    meta=nodes.get("meta"),
-                )
-            )
-        ways = blk.get("ways", [])
-        if ways:
-            groups.append(
-                b"".join(
-                    _encode_way(
-                        w["id"], w["refs"], w.get("tags"), st, w.get("meta")
-                    )
-                    for w in ways
-                )
-            )
-        rels = blk.get("relations", [])
-        if rels:
-            groups.append(
-                b"".join(
-                    _encode_relation(
-                        r["id"], r["members"], r.get("tags"), st, r.get("meta")
-                    )
-                    for r in rels
-                )
-            )
-        # ChangeSet is id-only and "NOT USED" per the spec
-        # (osmformat.proto:174-189); written here so the decoder's
-        # count-and-skip path has real input to test against
-        css = blk.get("changesets", [])
-        if css:
-            groups.append(
-                b"".join(
-                    field_len(5, field_varint(1, int(cid))) for cid in css
-                )
-            )
-        payload = field_len(1, st.encode())
-        # PrimitiveBlock.primitivegroup = field 2, one per homogeneous group
-        payload += b"".join(field_len(2, g) for g in groups)
-        payload += field_varint(17, granularity)
-        out.append(
-            _file_block(
-                "OSMData", payload, compress, indexdata=encode_block_stats(blk)
-            )
-        )
+        stats = _block_stats(blk)
+        data.append(_file_block("OSMData", _primitive_block(blk, granularity),
+                                compress, indexdata=_stats_message(stats)))
+        if "min_lat_nano" in stats:
+            nodes.append(stats)
+    if bbox == "auto":
+        bbox = {
+            "left": min(s["min_lon_nano"] for s in nodes),
+            "right": max(s["max_lon_nano"] for s in nodes),
+            "top": max(s["max_lat_nano"] for s in nodes),
+            "bottom": min(s["min_lat_nano"] for s in nodes),
+        } if nodes else None
     with fs.fs_open(path, "wb") as f:
-        f.write(b"".join(out))
+        f.write(_file_block("OSMHeader", encode_header_block(bbox=bbox),
+                            compress))
+        for b in data:
+            f.write(b)

@@ -1442,6 +1442,66 @@ def test_block_stats_in_index(fixture_dir):
     assert data[0].stats["min_lat_nano"] <= 10.4769503 * 1e9 <= data[0].stats["max_lat_nano"]
 
 
+def test_contradicting_block_stats_do_not_drop_a_block(fixture_dir, tmp_path):
+    """One flipped bit in the first OSMData block's indexdata stats
+    (kinds 1 -> 0, so no kind bit while node bounds are present) must not
+    prune that block: stats that contradict what the writer always
+    writes are ignored, and a node read returns every node."""
+    from osmpbf_spark.sources.pbf.datasource import OsmPbfReader
+
+    src = f"{fixture_dir}/fixture.osm.pbf"
+    idx = decode.index_blocks(src)
+    start = idx[0].data_offset + idx[0].data_size  # first OSMData block
+    data = bytearray(open(src, "rb").read())
+    header = bytes(data[start + 4 : idx[1].data_offset])
+    (_, _, stats), = wire.scan_fields(
+        header, {decode.BLOBHEADER_INDEXDATA: wire.WT_LEN})
+    kinds_at = start + 4 + header.index(stats) + 1  # after the 0x08 key
+    assert data[kinds_at] == 1
+    data[kinds_at] ^= 1
+    bad = tmp_path / "flipped.osm.pbf"
+    bad.write_bytes(bytes(data))
+    r = OsmPbfReader({"path": str(bad), "primitive": "node"}, None)
+    rows = sum(b.num_rows for p in r.partitions() for b in r.read(p))
+    assert rows == 9720  # the damaged stats once pruned 8000 of them
+    assert decode.index_blocks(str(bad))[1].stats is None
+
+
+@pytest.mark.parametrize(
+    "stats, kept",
+    [
+        ({"kinds": 1, "min_lat_nano": 1, "max_lat_nano": 2,
+          "min_lon_nano": 3, "max_lon_nano": 4, "min_id": 5, "max_id": 6,
+          "tag_key_bits": 0}, True),
+        ({"kinds": 2, "min_id": -5, "max_id": 6}, True),  # no tag bits
+        ({"kinds": 8, "tag_key_bits": 0}, True),  # changesets only
+        ({"kinds": 0, "tag_key_bits": 0}, True),  # empty block
+        ({"kinds": 0, "min_lat_nano": 1, "max_lat_nano": 2,
+          "min_lon_nano": 3, "max_lon_nano": 4, "min_id": 5,
+          "max_id": 6}, False),  # node bounds without the node bit
+        ({"kinds": 1, "min_id": 5, "max_id": 6}, False),  # node bit, no bounds
+        ({"kinds": 0, "min_id": 5, "max_id": 6}, False),  # ids, no entity bit
+        ({"kinds": 2}, False),  # a way bit without id bounds
+        ({"kinds": 2, "min_id": 7, "max_id": 6}, False),  # min over max
+        ({"kinds": 2, "min_id": 5}, False),  # half a bound
+        ({"min_id": 5, "max_id": 6}, False),  # no kinds
+    ],
+)
+def test_block_stats_checked_against_writer_invariants(stats, kept):
+    """_parse_block_stats returns stats only when they hold what the
+    writer always writes; otherwise None, so the block is read."""
+    got = decode._parse_block_stats(encode._stats_message(stats))
+    assert got == (stats if kept else None)
+
+
+@pytest.mark.parametrize("buf", [b"\xff", b"\x08", b"\x09" + bytes(8),
+                                 b"\x0a\x01x"])
+def test_foreign_indexdata_is_ignored(buf):
+    """indexdata that is not an all-varint stats message (a cut varint,
+    a fixed64 or a bytes field) reads as no stats, never an error."""
+    assert decode._parse_block_stats(buf) is None
+
+
 def test_pushdown_prunes_blocks(fixture_dir):
     from pyspark.sql.datasource import GreaterThan, LessThan
 
@@ -1853,6 +1913,76 @@ def test_sink_rejects_null_by_column(spark, tmp_path, column):
     with pytest.raises(ValueError, match=f"column '{column}'"):
         w.write(iter(table.to_batches()))
     assert not list((tmp_path / "nulls").glob("part-*"))
+
+
+def test_sink_null_tag_value_names_tags(spark, tmp_path):
+    """A null tag value, which the format cannot hold, raises a ValueError
+    naming ``tags`` before anything is written."""
+    import pyarrow as pa
+    from pyspark.sql.types import StructType
+
+    from osmpbf_spark.sources.pbf.datasource import OsmPbfWriter
+
+    batch = pa.RecordBatch.from_pydict({
+        "id": pa.array([1, 2], pa.int64()),
+        "lat": pa.array([1.0, 2.0]),
+        "lon": pa.array([3.0, 4.0]),
+        "tags": pa.array([[("a", "b")], [("k", None)]],
+                         pa.map_(pa.string(), pa.string())),
+    })
+    w = OsmPbfWriter({"path": str(tmp_path / "t")},
+                     StructType.fromDDL(_SINK_SCHEMA.split(", meta")[0]),
+                     overwrite=False)
+    with pytest.raises(ValueError, match="column 'tags'"):
+        w.write(iter([batch]))
+    assert not list((tmp_path / "t").glob("part-*"))
+
+
+@pytest.mark.parametrize(
+    "ddl, column",
+    [
+        # a tags_as=string read's schema
+        ("id long, lat double, lon double, tags string", "tags"),
+        ("id int, lat double, lon double, tags map<string,string>", "id"),
+        (_SINK_SCHEMA.replace("version:int", "version:long"), "meta"),
+        ("id long, refs array<int>, tags map<string,string>", "refs"),
+    ],
+)
+def test_writer_checks_column_types_when_built(spark, ddl, column):
+    """The writer compares its input's column types with the read layout
+    when it is built, so a frame of another type fails before any task
+    instead of dying inside one."""
+    from pyspark.sql.types import StructType
+
+    from osmpbf_spark.sources.pbf.datasource import OsmPbfWriter
+
+    primitive = "way" if "refs" in ddl else "node"
+    with pytest.raises(ValueError, match=f"osmpbf: column '{column}'"):
+        OsmPbfWriter({"path": "/tmp/x", "primitive": primitive},
+                     StructType.fromDDL(ddl), False)
+
+
+def test_write_pbf_takes_an_iterator(fixture_dir, tmp_path):
+    """write_pbf encodes blocks as an iterator yields them and writes the
+    same bytes as from a list, HeaderBBox included."""
+    rng = np.random.default_rng(3)
+    blocks = [
+        {"nodes": {"id": np.arange(i * 10, i * 10 + 10),
+                   "lat_nano": rng.integers(-9 * 10**10, 9 * 10**10, 10),
+                   "lon_nano": rng.integers(-9 * 10**10, 9 * 10**10, 10),
+                   "tags": [None] * 10}}
+        for i in range(3)
+    ] + [{"ways": [{"id": 1, "refs": [1, 2], "tags": {"a": "b"}}]}]
+    a, b = tmp_path / "list.osm.pbf", tmp_path / "iter.osm.pbf"
+    encode.write_pbf(str(a), blocks)
+    encode.write_pbf(str(b), iter(blocks))
+    assert a.read_bytes() == b.read_bytes()
+    assert decode.header_block_cached(str(b))["bbox"] == {
+        "left": min(int(x["nodes"]["lon_nano"].min()) for x in blocks[:3]),
+        "right": max(int(x["nodes"]["lon_nano"].max()) for x in blocks[:3]),
+        "top": max(int(x["nodes"]["lat_nano"].max()) for x in blocks[:3]),
+        "bottom": min(int(x["nodes"]["lat_nano"].min()) for x in blocks[:3]),
+    }
 
 
 def test_file_scheme_through_spark(spark, fixture_dir):
@@ -2274,9 +2404,10 @@ def test_stream_source_tolerates_empty_bootstrap_dir(spark, tmp_path):
     assert spark.table("pbf_empty_bootstrap").count() == 0
 
 
-def test_writer_rejects_changeset_primitive():
+def test_writer_rejects_changeset_primitive(spark):
     """Changesets are id-only and write-unsupported: the writer must say
-    so up front, not die in a KeyError mid-plan."""
+    so up front, not die in a KeyError mid-plan (``spark``: parsing DDL
+    needs a session)."""
     from pyspark.sql.types import StructType
 
     from osmpbf_spark.sources.pbf.datasource import OsmPbfWriter

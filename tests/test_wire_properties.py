@@ -171,6 +171,90 @@ def test_dense_block_roundtrip_property(nodes):
         assert got == (tags or {})
 
 
+_I64_MIN = np.iinfo(np.int64).min
+_id64 = st.integers(min_value=-(2**63), max_value=2**63 - 1)
+_ref = st.integers(min_value=-(2**62), max_value=2**62)
+_tags = st.dictionaries(_tag_text, _tag_text, max_size=3)
+_role = st.text(alphabet=st.characters(min_codepoint=32, max_codepoint=0x2FA),
+                max_size=6)
+_info = st.none() | st.fixed_dictionaries({}, optional={
+    "version": st.integers(min_value=0, max_value=2**31 - 1),
+    # whole seconds (the default date_granularity), pre-1970 included
+    "timestamp_ms": st.integers(min_value=-(2**40),
+                                max_value=2**40).map(lambda s: s * 1000),
+    "changeset": _id64,
+    "uid": st.just(-1) | st.integers(min_value=0, max_value=2**31 - 1),
+    "user": _role,
+    "visible": st.booleans(),
+})
+_way = st.fixed_dictionaries({"id": _id64, "refs": st.lists(_ref, max_size=6),
+                              "tags": _tags, "meta": _info})
+_member = st.tuples(_role, _ref, st.integers(min_value=0, max_value=2))
+_relation = st.fixed_dictionaries({
+    "id": _id64, "members": st.lists(_member, max_size=4), "tags": _tags,
+    "meta": _info})
+
+
+def _tags_at(out: dict, i: int) -> dict:
+    lo, hi = out["tag_offsets"][i], out["tag_offsets"][i + 1]
+    return dict(zip(out["tag_keys"][lo:hi], out["tag_vals"][lo:hi]))
+
+
+def _meta_at(out: dict, i: int) -> tuple:
+    return tuple(out[c][i].item() if hasattr(out[c][i], "item")
+                 else out[c][i] for c in
+                 ("meta_version", "meta_timestamp_ms", "meta_changeset",
+                  "meta_uid", "meta_user", "meta_visible"))
+
+
+def _meta_expected(info: dict | None) -> tuple:
+    """What the decoder gives for ``info``: an absent field reads as its
+    meta column's default."""
+    info = info or {}
+    return (info.get("version", -1), info.get("timestamp_ms", _I64_MIN),
+            info.get("changeset", _I64_MIN), info.get("uid", _I64_MIN),
+            info.get("user"), info.get("visible", True))
+
+
+@given(st.lists(_way, max_size=5), st.lists(_relation, max_size=4),
+       st.lists(_id64, max_size=5))
+@settings(max_examples=40, deadline=None)
+def test_entity_block_roundtrip_property(ways, relations, changesets):
+    """write_pbf -> BlockDecoder is the identity on arbitrary ways,
+    relations and changesets in one block: negative and extreme ids,
+    empty tags, refs and members, and an optional Info (uid -1, pre-1970
+    timestamps, visible=False, any field left out)."""
+    import tempfile
+
+    from osmpbf_spark.sources.pbf import decode, encode
+
+    blk = {"ways": ways, "relations": relations, "changesets": changesets}
+    with tempfile.NamedTemporaryFile(suffix=".pbf") as f:
+        encode.write_pbf(f.name, [blk])
+        idx = decode.index_blocks(f.name)
+        with open(f.name, "rb") as fh:
+            bd = decode.BlockDecoder(decode.read_block_payload(fh, idx[1]))
+    out = bd.decode_ways()
+    assert out["id"].tolist() == [w["id"] for w in ways]
+    for i, w in enumerate(ways):
+        lo, hi = out["ref_offsets"][i], out["ref_offsets"][i + 1]
+        assert out["ref_values"][lo:hi].tolist() == w["refs"]
+        assert _tags_at(out, i) == w["tags"]
+        assert _meta_at(out, i) == _meta_expected(w["meta"])
+    out = bd.decode_relations()
+    assert out["id"].tolist() == [r["id"] for r in relations]
+    for i, r in enumerate(relations):
+        lo, hi = out["member_offsets"][i], out["member_offsets"][i + 1]
+        assert list(zip(out["member_roles"][lo:hi],
+                        out["member_refs"][lo:hi].tolist(),
+                        out["member_types"][lo:hi])) == [
+            (role, ref, ("node", "way", "relation")[t])
+            for role, ref, t in r["members"]]
+        assert _tags_at(out, i) == r["tags"]
+        assert _meta_at(out, i) == _meta_expected(r["meta"])
+    assert bd.decode_changesets()["id"].tolist() == changesets
+
+
 def _freeze(v):
     """A to_pylist row as a hashable value (maps, lists and structs)."""
     if isinstance(v, dict):
