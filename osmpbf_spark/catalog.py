@@ -133,36 +133,66 @@ _ROW_COUNT_CACHE_MAX = 1024
 _SCHEMA_CACHE: dict[tuple, object] = {}
 
 
-def _file_identity(path: str) -> tuple | None:
-    """(path, size, mtime_ns) identity of a parquet file or, for a
-    directory layout (flat parts or partitioned subdirs), the sorted
-    tuple of per-part identities from a recursive walk (dot/underscore
-    entries skipped — the partition-discovery convention). None when the
-    path cannot be stat'ed or the directory holds no parquet files yet
-    (caller falls back to a plain inferring read, which raises the real
-    error); the path itself leads the tuple so two directories with
-    identical part listings never collide."""
+def parquet_parts(path: str) -> list[tuple[str, int, int]]:
+    """Sorted (file, size, mtime_ns) of the parquet parts at a local
+    ``path``: the file itself, or every ``.parquet`` file of a directory
+    layout (flat parts or partitioned subdirs), walked recursively with
+    dot/underscore entries skipped — Spark's partition-discovery rule,
+    so ``_SUCCESS``, ``.crc`` side files, ``_ivf_meta.json`` and staging
+    dirs never count. The one driver-side listing every footer-metadata
+    reader shares (schema cache, row counts, compaction stats, IVF store
+    identity). Raises OSError when ``path`` is not an existing local
+    path."""
     import os
+    import stat
 
+    st = os.stat(path)
+    if not stat.S_ISDIR(st.st_mode):
+        return [(path, st.st_size, st.st_mtime_ns)]
+    parts = []
+    for dirpath, dirnames, filenames in os.walk(path):
+        dirnames[:] = [d for d in dirnames if not d.startswith((".", "_"))]
+        for f in filenames:
+            if f.endswith(".parquet") and not f.startswith((".", "_")):
+                fp = os.path.join(dirpath, f)
+                st = os.stat(fp)
+                parts.append((fp, st.st_size, st.st_mtime_ns))
+    return sorted(parts)
+
+
+def footer_rows(path: str) -> int:
+    """Exact row count of a local parquet file or directory from FOOTER
+    METADATA ONLY — no Spark job, no data pages read (r15 verdict Next
+    #2: the size-dispatch regime probes used ``df.count()``, a full
+    corpus pass per invocation at 100 TB just to pick a code path;
+    parquet footers carry the exact count for free). Each part's count
+    is cached under its ``parquet_parts`` identity, so repeat calls on an
+    unchanged path open no footer and a rewritten part re-reads."""
+    total = 0
+    for key in parquet_parts(path):
+        n = _ROW_COUNT_CACHE.get(key)
+        if n is None:
+            import pyarrow.parquet as pq
+
+            n = pq.ParquetFile(key[0]).metadata.num_rows
+            while len(_ROW_COUNT_CACHE) >= _ROW_COUNT_CACHE_MAX:
+                _ROW_COUNT_CACHE.pop(next(iter(_ROW_COUNT_CACHE)))
+            _ROW_COUNT_CACHE[key] = n
+        total += n
+    return total
+
+
+def _file_identity(path: str) -> tuple | None:
+    """Schema-cache key: the path followed by its ``parquet_parts``. None
+    when the path cannot be stat'ed or holds no parquet parts yet (caller
+    falls back to a plain inferring read, which raises the real error);
+    the path itself leads the tuple so two directories with identical
+    part listings never collide."""
     try:
-        if os.path.isdir(path):
-            parts = []
-            for dirpath, dirnames, filenames in os.walk(path):
-                dirnames[:] = sorted(
-                    d for d in dirnames if not d.startswith((".", "_"))
-                )
-                for f in sorted(filenames):
-                    if f.endswith(".parquet"):
-                        fp = os.path.join(dirpath, f)
-                        st = os.stat(fp)
-                        parts.append((fp, st.st_size, st.st_mtime_ns))
-            if not parts:
-                return None
-            return (path, *parts)
-        st = os.stat(path)
-        return (path, st.st_size, st.st_mtime_ns)
+        parts = parquet_parts(path)
     except OSError:
         return None
+    return (path, *parts) if parts else None
 
 
 def read_parquet_cached(spark: SparkSession, path: str) -> DataFrame:
@@ -184,39 +214,13 @@ def read_parquet_cached(spark: SparkSession, path: str) -> DataFrame:
 
 
 def table_row_count(sf_dir: str, name: str) -> int:
-    """Exact row count of one driver-provided parquet table from FOOTER
-    METADATA ONLY — no Spark job, no data pages read (r15 verdict Next
-    #2: the size-dispatch regime probes used ``df.count()``, a full
-    corpus pass per invocation at 100 TB just to pick a code path;
-    parquet footers carry the exact count for free, and a (path, size,
-    mtime_ns)-keyed cache makes repeat invocations zero-I/O). Handles
-    both single-file tables (the driver's layout) and directory-of-parts
-    layouts (anything the engine's own writers produce)."""
+    """Exact row count of one driver-provided parquet table from footer
+    metadata (``footer_rows``). Handles both single-file tables (the
+    driver's layout) and directory-of-parts layouts (anything the
+    engine's own writers produce)."""
     import os
 
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    if os.path.isdir(path):
-        files = sorted(
-            os.path.join(path, f)
-            for f in os.listdir(path)
-            if f.endswith(".parquet")
-        )
-    else:
-        files = [path]
-    total = 0
-    for f in files:
-        st = os.stat(f)
-        key = (f, st.st_size, st.st_mtime_ns)
-        n = _ROW_COUNT_CACHE.get(key)
-        if n is None:
-            import pyarrow.parquet as pq
-
-            n = pq.ParquetFile(f).metadata.num_rows
-            while len(_ROW_COUNT_CACHE) >= _ROW_COUNT_CACHE_MAX:
-                _ROW_COUNT_CACHE.pop(next(iter(_ROW_COUNT_CACHE)))
-            _ROW_COUNT_CACHE[key] = n
-        total += n
-    return total
+    return footer_rows(os.path.join(sf_dir, f"{name}.parquet"))
 
 
 def register_views(

@@ -16,7 +16,7 @@ Scale shape:
   path is the ``_metadata`` hidden column — (file_path, file_size) per
   row, one distributed aggregate whose result is #files-sized, working
   identically on HDFS/S3/local. r18 adds a footer fast path
-  (``_file_stats_local``): when the directory is locally stat-able the
+  (``_file_stats_local``): when the input is an existing local path the
   same (files, bytes, rows) totals come from parquet footers with zero
   Spark jobs — the ``table_row_count`` discipline, value-identical by
   construction and pinned in tests. A compaction pass must list the
@@ -44,7 +44,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from osmpbf_spark.catalog import load, query
+from osmpbf_spark.catalog import footer_rows, load, parquet_parts, query
 from osmpbf_spark.operators.relational import epoch_out_dir
 
 # Lake-standard output file target. Module-global so demos/deploys can
@@ -76,42 +76,36 @@ def file_stats(spark: SparkSession, path: str) -> DataFrame:
 
 
 def _file_stats_local(path: str):
-    """(files, bytes, rows) totals for a LOCAL parquet directory from
-    footer metadata only — the ``table_row_count`` discipline (r18,
-    guide §1.2): no Spark job, no data pages. compact_files uses this
-    fast path when the directory is locally stat-able, which deletes
-    both of its per-invocation stats jobs (~0.6 s of the query at
-    sf0.1); the distributed ``file_stats`` frame remains the portable
-    API for remote stores and for per-file listings. Exactness: rows
-    per file is the footer count (exactly what the scan counts), bytes
-    is the file length (exactly ``_metadata.file_size``), and zero-row
-    part files are SKIPPED to replicate the scan path's documented
-    limitation (a rowless file contributes no ``_metadata`` row) — the
-    two paths are value-identical, pinned in test_relational. Returns
-    None when the path isn't a local directory of parquet files."""
+    """(files, bytes, rows) totals for a LOCAL parquet file or directory
+    from footer metadata only — ``catalog.footer_rows`` (r18, guide
+    §1.2): no Spark job, no data pages. compact_files uses this fast
+    path when the input is an existing local path, which deletes both of
+    its per-invocation stats jobs (~0.6 s of the query at sf0.1); the
+    distributed ``file_stats`` frame remains the portable API for remote
+    stores and for per-file listings. Exactness: rows per file is the
+    footer count (exactly what the scan counts), bytes is the file
+    length (exactly ``_metadata.file_size``), and zero-row part files
+    are SKIPPED to replicate the scan path's documented limitation (a
+    rowless file contributes no ``_metadata`` row) — the two paths are
+    value-identical, pinned in test_relational. Returns None when the
+    path is not an existing local path or holds no non-empty parquet
+    part; any error past that check propagates."""
     import os
 
-    try:
-        import pyarrow.parquet as pq
-
-        files = bytes_ = rows = 0
-        for entry in sorted(os.listdir(path)):
-            if entry.startswith((".", "_")) or not entry.endswith(
-                ".parquet"
-            ):
-                continue
-            fp = os.path.join(path, entry)
-            n = pq.ParquetFile(fp).metadata.num_rows
-            if n == 0:
-                continue  # scan-path semantics: no rows -> invisible
-            files += 1
-            bytes_ += os.stat(fp).st_size
-            rows += n
-        if files == 0:
-            return None
-        return {"files": files, "bytes": bytes_, "rows": rows}
-    except Exception:
+    if not os.path.exists(path):
         return None
+    live = [
+        (size, n)
+        for f, size, _ in parquet_parts(path)
+        if (n := footer_rows(f))
+    ]
+    if not live:
+        return None
+    return {
+        "files": len(live),
+        "bytes": sum(size for size, _ in live),
+        "rows": sum(n for _, n in live),
+    }
 
 
 def _compact_local_one_file(in_path: str, out_dir: str) -> bool:
@@ -128,53 +122,57 @@ def _compact_local_one_file(in_path: str, out_dir: str) -> bool:
     100 TB that is the only arm that ever dispatches, exactly like the
     ``_file_stats_local`` footer fast path above it.
 
-    Timestamp/time columns bail out to the Spark arm: the session reads
-    TIMESTAMP(NANOS) as BIGINT (nanosAsLong), so the Spark rewrite
+    Preconditions, each checked before anything is written (False = arm
+    not taken): ``in_path`` is an existing local FLAT directory — a
+    partitioned ``key=value/`` layout keeps the Spark arm, whose
+    partition discovery restores the key column a plain pyarrow dataset
+    read would drop — and has no timestamp/time columns: the session
+    reads TIMESTAMP(NANOS) as BIGINT (nanosAsLong), so the Spark rewrite
     materializes longs where a pyarrow copy would preserve the nanos
     type — the two arms would produce different output schemas. All
-    other types round-trip identically. Returns False (arm not taken,
-    nothing written) on any precondition failure or error."""
+    other types round-trip identically. Any error past the checks
+    propagates."""
     import os
     import shutil
 
-    try:
-        import pyarrow.dataset as ds
-        import pyarrow.parquet as pq
-        import pyarrow.types as pt
+    import pyarrow.dataset as ds
+    import pyarrow.parquet as pq
+    import pyarrow.types as pt
 
-        if not os.path.isdir(in_path):
-            return False
-        dset = ds.dataset(in_path, format="parquet")
-
-        def safe(t) -> bool:
-            if pt.is_timestamp(t) or pt.is_time(t):
-                return False
-            if (
-                pt.is_list(t)
-                or pt.is_large_list(t)
-                or pt.is_fixed_size_list(t)
-            ):
-                return safe(t.value_type)
-            if pt.is_struct(t):
-                return all(safe(f.type) for f in t)
-            if pt.is_map(t):
-                return safe(t.key_type) and safe(t.item_type)
-            return True
-
-        if not all(safe(f.type) for f in dset.schema):
-            return False
-        tbl = dset.to_table()
-        if os.path.isdir(out_dir):
-            shutil.rmtree(out_dir)  # mode("overwrite") semantics
-        os.makedirs(out_dir, exist_ok=True)
-        pq.write_table(
-            tbl,
-            os.path.join(out_dir, "part-00000-compact.snappy.parquet"),
-            compression="snappy",  # the session's parquet default
-        )
-        return True
-    except Exception:
+    if not os.path.isdir(in_path) or any(
+        os.path.dirname(f) != in_path.rstrip(os.sep)
+        for f, _, _ in parquet_parts(in_path)
+    ):
         return False
+    dset = ds.dataset(in_path, format="parquet")
+
+    def safe(t) -> bool:
+        if pt.is_timestamp(t) or pt.is_time(t):
+            return False
+        if (
+            pt.is_list(t)
+            or pt.is_large_list(t)
+            or pt.is_fixed_size_list(t)
+        ):
+            return safe(t.value_type)
+        if pt.is_struct(t):
+            return all(safe(f.type) for f in t)
+        if pt.is_map(t):
+            return safe(t.key_type) and safe(t.item_type)
+        return True
+
+    if not all(safe(f.type) for f in dset.schema):
+        return False
+    tbl = dset.to_table()
+    if os.path.isdir(out_dir):
+        shutil.rmtree(out_dir)  # mode("overwrite") semantics
+    os.makedirs(out_dir, exist_ok=True)
+    pq.write_table(
+        tbl,
+        os.path.join(out_dir, "part-00000-compact.snappy.parquet"),
+        compression="snappy",  # the session's parquet default
+    )
+    return True
 
 
 def compaction_plan(

@@ -35,7 +35,9 @@ from pyspark.sql.types import IntegerType
 
 from osmpbf_spark.catalog import (
     fanout,
+    footer_rows,
     load,
+    parquet_parts,
     query,
     read_parquet_cached,
     table_row_count,
@@ -864,27 +866,27 @@ def _kmeans_seed_local(sf_dir: str):
     trajectory the seed collect was one of five jobs, ~0.1s of pure
     scheduling floor at sf0.1). Bit-identical to the Spark collect: both
     paths widen the stored float32 to float64, an exact conversion.
-    Returns None when the corpus isn't a directly readable parquet path
-    (callers fall back to the Spark collect)."""
+    ``sf_dir`` must be a local path — every caller also stats the corpus
+    (table_row_count, _ivf_store_base), so none supports a remote one —
+    and any error here propagates: no silent fallback. A caller without
+    a local corpus passes ``seed=None`` to the trainers, which then
+    collect the seed through Spark (_kmeans_seed)."""
     import os
 
-    try:
-        import pyarrow.dataset as ds
+    import pyarrow.dataset as ds
 
-        path = os.path.join(sf_dir, "embeddings.parquet")
-        t = ds.dataset(path).to_table(
-            columns=["vec_id", "embedding"],
-            filter=ds.field("vec_id") < KMEANS_K,
+    path = os.path.join(sf_dir, "embeddings.parquet")
+    t = ds.dataset(path).to_table(
+        columns=["vec_id", "embedding"],
+        filter=ds.field("vec_id") < KMEANS_K,
+    )
+    return sorted(
+        (int(i), [float(x) for x in e])
+        for i, e in zip(
+            t.column("vec_id").to_pylist(),
+            t.column("embedding").to_pylist(),
         )
-        return sorted(
-            (int(i), [float(x) for x in e])
-            for i, e in zip(
-                t.column("vec_id").to_pylist(),
-                t.column("embedding").to_pylist(),
-            )
-        )
-    except Exception:
-        return None
+    )
 
 
 # Partition bound under which a Lloyd round's per-partition partial sums
@@ -1021,52 +1023,42 @@ def _kmeans_centroids_batch(
 # by the same pinned constructions (_chain_l2_batch argmin,
 # _np_round_half_up quantization, order-independent integer sums, the
 # same int/float64 divide — pinned in test_similarity). Past the bound
-# (or when the corpus isn't driver-readable parquet) the distributed
-# regimes run unchanged — at 100 TB this branch never fires.
+# the distributed regimes run unchanged — at 100 TB this branch never
+# fires.
 KM_LOCAL_MAX_ROWS = 10_000
 
 
 def _corpus_local_matrix(sf_dir: str):
     """The embeddings corpus as one driver-side float64 matrix (pyarrow
     read, embedding column only — row order is irrelevant: assignment is
-    per-row and the update sums are order-independent). None when the
-    corpus isn't a directly readable parquet path (callers fall back to
-    the distributed trainer)."""
+    per-row and the update sums are order-independent). Local ``sf_dir``
+    only, like _kmeans_seed_local; any error propagates."""
     import os
 
-    try:
-        import pyarrow.dataset as ds
+    import pyarrow.dataset as ds
 
-        path = os.path.join(sf_dir, "embeddings.parquet")
-        t = ds.dataset(path).to_table(columns=["embedding"])
-        return np.asarray(
-            t.column("embedding").to_pylist(), dtype=np.float64
-        )
-    except Exception:
-        return None
+    path = os.path.join(sf_dir, "embeddings.parquet")
+    t = ds.dataset(path).to_table(columns=["embedding"])
+    return np.asarray(
+        t.column("embedding").to_pylist(), dtype=np.float64
+    )
 
 
 def _kmeans_centroids_local(sf_dir: str, seed, iters: int):
     """``iters`` Lloyd rounds computed entirely driver-side over the
     local corpus matrix — the _kmeans_centroids_batch trajectory with
     the per-partition partial sums collapsed to one in-process pass.
-    Returns (cids, C, cent_rows) like the batch trainer, or None when
-    the corpus is too big / not locally readable / no seed (callers
-    fall back). Exactness: same argmin (_chain_l2_batch over the same
-    float64 widening), same HALF_UP quantization, integer sums are
-    order-independent, and the final divide converts the Python-int
+    ``seed`` is _kmeans_seed_local's output for the same local
+    ``sf_dir``. Returns (cids, C, cent_rows) like the batch trainer, or
+    None when the corpus is past KM_LOCAL_MAX_ROWS (callers then run the
+    distributed trainer). Exactness: same argmin (_chain_l2_batch over
+    the same float64 widening), same HALF_UP quantization, integer sums
+    are order-independent, and the final divide converts the Python-int
     grand total exactly the way _sum_partials does."""
     global _CentRow
-    if seed is None:
-        return None
-    try:
-        if table_row_count(sf_dir, "embeddings") > KM_LOCAL_MAX_ROWS:
-            return None
-    except OSError:
+    if table_row_count(sf_dir, "embeddings") > KM_LOCAL_MAX_ROWS:
         return None
     V = _corpus_local_matrix(sf_dir)
-    if V is None:
-        return None
     if _CentRow is None:
         from collections import namedtuple
 
@@ -1277,24 +1269,6 @@ IVF_RETRAIN_SKEW_FACTOR = 2.0  # cell skew grew this much past build -> retrain
 _IVF_META = "_ivf_meta.json"  # leading _ -> invisible to partition discovery
 
 
-def _dir_parquet_rows(path: str) -> int:
-    """Exact row count of a (possibly partitioned) parquet directory from
-    footer metadata only — recursive twin of catalog.table_row_count."""
-    import os
-
-    import pyarrow.parquet as pq
-
-    total = 0
-    for dirpath, dirnames, filenames in os.walk(path):
-        dirnames[:] = [d for d in dirnames if not d.startswith((".", "_"))]
-        for f in filenames:
-            if f.endswith(".parquet"):
-                total += pq.ParquetFile(
-                    os.path.join(dirpath, f)
-                ).metadata.num_rows
-    return total
-
-
 def _cell_sizes(cells_path: str) -> dict[int, int]:
     """Per-cell row counts from the partition layout's footers."""
     import os
@@ -1306,7 +1280,7 @@ def _cell_sizes(cells_path: str) -> dict[int, int]:
                 cid = int(d.split("=", 1)[1])
             except ValueError:
                 continue
-            sizes[cid] = _dir_parquet_rows(os.path.join(cells_path, d))
+            sizes[cid] = footer_rows(os.path.join(cells_path, d))
     return sizes
 
 
@@ -1369,7 +1343,7 @@ def ivf_store_staleness(cells_path: str) -> dict:
     time because a corpus may legitimately cluster unevenly; only the
     drift since training indicates the quantizer no longer fits."""
     meta = _read_store_meta(cells_path)
-    rows_now = _dir_parquet_rows(cells_path)
+    rows_now = footer_rows(cells_path)
     rows_at_build = int(meta.get("rows_at_build", 0)) or rows_now
     skew_now = _skew(_cell_sizes(cells_path))
     skew_at_build = float(meta.get("skew_at_build", skew_now)) or 1.0
@@ -1567,9 +1541,10 @@ def q_sim_search_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # of the seed read, so the (queries x k) ranking computes locally
     # (_local_probes, bit-identical — pinned) and the probe list enters
     # as a LOCAL-relation broadcast: the per-invocation window job the
-    # old crossJoin+row_number probe plan paid is gone. Fallback (seed
-    # unreadable): the original Spark window path.
-    if seed is not None and N_QUERIES <= KMEANS_K:
+    # old crossJoin+row_number probe plan paid is gone. When the queries
+    # outrun the seed prefix (N_QUERIES > KMEANS_K): the original Spark
+    # window path.
+    if N_QUERIES <= KMEANS_K:
         queries = [(i, v) for i, v in seed if i < N_QUERIES]
         probes = spark.createDataFrame(
             _local_probes(queries, cents, IVF_NPROBE), _PROBES_SCHEMA
@@ -1649,52 +1624,34 @@ def _quantizer_fingerprint() -> str:
     return hashlib.sha256(_kmeans_cte_body().encode()).hexdigest()[:12]
 
 
-def _corpus_file_identity(path: str) -> str:
-    """(name, size, mtime_ns) identity for single-file AND
-    directory-of-parts parquet layouts (r16 ADVICE: a directory's own
-    st_size/mtime reflects entry changes only, so an in-place part-file
-    rewrite served a stale store silently — the same per-file key walk
-    table_row_count uses)."""
-    import os
-
-    if os.path.isdir(path):
-        parts = []
-        for f in sorted(os.listdir(path)):
-            if f.startswith((".", "_")):
-                continue
-            st = os.stat(os.path.join(path, f))
-            parts.append(f"{f}|{st.st_size}|{st.st_mtime_ns}")
-        return os.path.realpath(path) + "||" + "||".join(parts)
-    st = os.stat(path)
-    return f"{os.path.realpath(path)}|{st.st_size}|{st.st_mtime_ns}"
-
-
 def _cents_local_from_store(cents_path: str):
     """The persisted centroid table read driver-side via pyarrow —
-    [(cid, ce)] sorted by cid, or None when unreadable (callers fall
-    back to the Spark read). ce is stored as array<double>, so the
-    round trip is exact."""
-    try:
-        import pyarrow.dataset as ds
+    [(cid, ce)] sorted by cid. ce is stored as array<double>, so the
+    round trip is exact. ``cents_path`` is a completed local store's
+    sidecar (q_sim_search_ivf_probe checks ``_SUCCESS`` first); any
+    error propagates."""
+    import pyarrow.dataset as ds
 
-        t = ds.dataset(cents_path).to_table(columns=["cid", "ce"])
-        return sorted(
-            (int(c), [float(x) for x in e])
-            for c, e in zip(
-                t.column("cid").to_pylist(), t.column("ce").to_pylist()
-            )
+    t = ds.dataset(cents_path).to_table(columns=["cid", "ce"])
+    return sorted(
+        (int(c), [float(x) for x in e])
+        for c, e in zip(
+            t.column("cid").to_pylist(), t.column("ce").to_pylist()
         )
-    except Exception:
-        return None
+    )
 
 
 def _ivf_store_base(sf_dir: str) -> str:
     import hashlib
     import os
 
-    p = os.path.join(sf_dir, "embeddings.parquet")
+    # corpus identity: every part file's (path, size, mtime_ns), not the
+    # directory's own stat (r16 ADVICE: a directory's st_size/mtime
+    # reflects entry changes only, so an in-place part-file rewrite
+    # served a stale store silently). Raises OSError for a missing corpus.
+    p = os.path.realpath(os.path.join(sf_dir, "embeddings.parquet"))
     ident = (
-        f"{_corpus_file_identity(p)}"
+        f"{p}|{parquet_parts(p)}"
         f"|k{KMEANS_K}i{KMEANS_ITERS}|r{_quantizer_fingerprint()}"
     )
     return os.path.join(
@@ -1785,7 +1742,7 @@ def q_sim_search_ivf_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     # distinct-collect job: a warm probe is ONE partition-pruned scan.
     seed = _kmeans_seed_local(sf_dir)
     cl = _cents_local_from_store(cents)
-    if seed is not None and cl is not None and N_QUERIES <= KMEANS_K:
+    if N_QUERIES <= KMEANS_K:
         queries = [(i, v) for i, v in seed if i < N_QUERIES]
         return ivf_probe_store(
             spark,

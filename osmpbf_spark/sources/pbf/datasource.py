@@ -439,7 +439,6 @@ class OsmPbfReader(DataSourceReader):
         if not self.path:
             raise ValueError("osmpbf requires a path")
         self.primitive = options.get("primitive", "node")
-        self.tags_as = options.get("tags_as", "map")
         # tag-filtered extract (the osmium/imposm tag-filter shape):
         # return only primitives CARRYING this tag key, and prune whole
         # blocks whose indexdata tag-key fingerprint proves absence.

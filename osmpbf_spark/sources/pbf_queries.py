@@ -40,6 +40,9 @@ _PBF = f"{_DIR}/fixture.osm.pbf"
 # a decoded hot table; the decode pipeline itself stays covered by the
 # first call, the golden/roundtrip/pushdown tests, and bench.py's
 # dedicated pbf_scan throughput block (which always decodes fresh).
+# Kept on numbers: that block's ``pbf_decode_fresh_sec`` reads 1.08 s
+# (BENCH_r18.json) and 1.47 s (BENCH_r18_c8.json), far above the ~0.15 s
+# at which a fresh decode per query would be cheap enough to drop it.
 # q_pbf_pushdown deliberately bypasses this cache — pushed filters are
 # part of its plan shape, and Spark caches post-pushFilters reader state
 # per load (see OsmPbfPushdownReader docstring).

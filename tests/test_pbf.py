@@ -802,6 +802,57 @@ def test_corrupt_blob_error_names_file_and_offset(fixture_dir, tmp_path):
     assert isinstance(err.value.__cause__, (zlib.error, ValueError))
 
 
+def test_truncation_at_every_block_boundary(fixture_dir, tmp_path):
+    """The fixture cut at each block's start, at start +1..+6 and +10
+    (inside the length prefix and BlobHeader), at mid-Blob and at the
+    Blob's last byte. A cut inside a block fails the scan with a
+    CorruptPbfError naming the file; a cut exactly at a block boundary
+    reads exactly the preceding blocks' rows — checked as: the cut file
+    plus a file of the header and the remaining blocks read the whole
+    fixture's rows, for node, way and relation."""
+    from collections import Counter
+
+    from osmpbf_spark.sources.pbf.datasource import OsmPbfReader
+
+    src = f"{fixture_dir}/fixture.osm.pbf"
+    data = open(src, "rb").read()
+    idx = decode.index_blocks(src)
+    starts = [0] + [m.data_offset + m.data_size for m in idx[:-1]]
+    prims = ("node", "way", "relation")
+
+    def rows(body: bytes, name: str, prim: str) -> Counter:
+        p = str(tmp_path / f"{name}.osm.pbf")
+        open(p, "wb").write(body)
+        rdr = OsmPbfReader({"path": p, "primitive": prim}, None)
+        return Counter(
+            repr(r)
+            for part in rdr.partitions()
+            for b in rdr.read(part)
+            for r in b.to_pylist()
+        )
+
+    full = {prim: rows(data, "full", prim) for prim in prims}
+    assert all(full.values())
+    for s, m in zip(starts, idx):
+        end = m.data_offset + m.data_size
+        for prim in prims:
+            head = rows(data[:s], f"at{s}", prim)
+            body = data[: starts[1]] + data[max(s, starts[1]):]
+            rest = rows(body, f"rest{s}", prim)
+            assert head + rest == full[prim], (s, prim)
+        inside = {s + d for d in (1, 2, 3, 4, 5, 6, 10)}
+        inside |= {m.data_offset + m.data_size // 2, end - 1}
+        for cut in sorted(inside):
+            p = str(tmp_path / f"cut{cut}.osm.pbf")
+            open(p, "wb").write(data[:cut])
+            for prim in prims:
+                rdr = OsmPbfReader({"path": p, "primitive": prim}, None)
+                with pytest.raises(decode.CorruptPbfError) as err:
+                    for part in rdr.partitions():
+                        list(rdr.read(part))
+                assert str(err.value).startswith(f"{p}: "), (cut, prim)
+
+
 def test_cut_packed_varint_names_file_and_offset(tmp_path):
     """A DenseNodes id field cut inside a varint fails the scan with a
     CorruptPbfError naming the file and the blob's offset."""

@@ -653,3 +653,60 @@ def test_compact_files_stats_and_content(spark):
             scan["bytes"],
             scan["rows"],
         ), f"footer stats diverged from scan stats for {d}"
+
+
+def test_compact_files_partitioned_input_keeps_partition_column(
+    spark, tmp_path
+):
+    """A nested ``key=value/`` input takes the Spark rewrite arm, whose
+    partition discovery keeps the key column; the driver-local arm's
+    plain pyarrow dataset read would drop it."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from osmpbf_spark.operators.compact import compact_files
+
+    src = tmp_path / "lake"
+    keys = [f"p{i % 4}" for i in range(40)]
+    pq.write_to_dataset(
+        pa.table({"id": list(range(40)), "k": keys}), str(src), ["k"]
+    )
+    out, stats = compact_files(spark, str(src), str(tmp_path / "out"))
+    assert stats["files_before"] == 4 and stats["files_after"] == 1
+    assert stats["rows"] == 40
+    got = sorted((r.id, r.k) for r in spark.read.parquet(out).collect())
+    assert got == [(i, f"p{i % 4}") for i in range(40)]
+
+
+def test_compact_local_arms_propagate_errors(tmp_path, monkeypatch):
+    """Past their preconditions (an existing local path; for the rewrite
+    also a flat directory) the driver-local compaction arms raise: a bug
+    in them must fail the call, not silently take the Spark arm."""
+    import pyarrow as pa
+    import pyarrow.dataset as ds
+    import pyarrow.parquet as pq
+
+    from osmpbf_spark.operators import compact as K
+
+    flat = tmp_path / "flat"
+    flat.mkdir()
+    pq.write_table(pa.table({"x": [1, 2]}), str(flat / "part-0.parquet"))
+    nested = tmp_path / "nested"
+    pq.write_to_dataset(
+        pa.table({"x": [1, 2], "k": ["a", "b"]}), str(nested), ["k"]
+    )
+    missing = str(tmp_path / "missing")
+
+    def boom(*a, **kw):
+        raise TypeError("injected")
+
+    monkeypatch.setattr(pq, "ParquetFile", boom)
+    monkeypatch.setattr(ds, "dataset", boom)
+    with pytest.raises(TypeError, match="injected"):
+        K._file_stats_local(str(flat))
+    with pytest.raises(TypeError, match="injected"):
+        K._compact_local_one_file(str(flat), str(tmp_path / "out"))
+    # failed preconditions decline the arm before any pyarrow call
+    assert K._file_stats_local(missing) is None
+    assert K._compact_local_one_file(missing, str(tmp_path / "o")) is False
+    assert K._compact_local_one_file(str(nested), str(tmp_path / "o")) is False

@@ -225,7 +225,7 @@ def test_ivf_batch_assignment_bit_identical_to_hof(spark):
     assert (C_hof == C_b).all(), "batch trainer diverged from HOF trainer"
 
 
-def test_kmeans_local_trainer_bit_identical(spark):
+def test_kmeans_local_trainer_bit_identical(spark, monkeypatch):
     """r18: the driver-local Lloyd trainer (_kmeans_centroids_local,
     corpora <= KM_LOCAL_MAX_ROWS) must reproduce the distributed batch
     trainer's trajectory to the last bit — same cell ids, same centroid
@@ -259,9 +259,35 @@ def test_kmeans_local_trainer_bit_identical(spark):
             )
             assert as_t(cent_l) == as_t(cent_b)
     # the size gate: a corpus past the bound refuses the local regime
+    monkeypatch.setattr(S, "KM_LOCAL_MAX_ROWS", 0)
     assert (
-        S._kmeans_centroids_local(SF_DIR, None, iters=1) is None
-    ), "local trainer must require a driver-readable seed"
+        S._kmeans_centroids_local(SF_DIR, S._kmeans_seed_local(SF_DIR), 1)
+        is None
+    ), "local trainer must refuse a corpus past KM_LOCAL_MAX_ROWS"
+
+
+@pytest.mark.parametrize(
+    "arm, arg",
+    [
+        ("_kmeans_seed_local", SF_DIR),
+        ("_corpus_local_matrix", SF_DIR),
+        ("_cents_local_from_store", f"{SF_DIR}/embeddings.parquet"),
+    ],
+)
+def test_local_corpus_arms_propagate_errors(monkeypatch, arm, arg):
+    """The driver-side corpus and centroid reads have no Spark fallback:
+    past their precondition (an existing local path) an error propagates
+    instead of turning into None and a slower run."""
+    import pyarrow.dataset as ds
+
+    from osmpbf_spark.operators import similarity as S
+
+    def boom(*a, **kw):
+        raise TypeError("injected")
+
+    monkeypatch.setattr(ds, "dataset", boom)
+    with pytest.raises(TypeError, match="injected"):
+        getattr(S, arm)(arg)
 
 
 def test_local_probes_bit_identical_to_window_path(spark):
