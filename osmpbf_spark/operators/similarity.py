@@ -444,21 +444,16 @@ def q_cluster_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the full 2-round trajectory hash-matches — no "approximately
     converged" escape hatch.
 
-    Plan per iteration (r16 "one job per Lloyd round" restructure —
-    verdict r15 Next #1): assignment is a MAP-ONLY expression — array_min
-    over the k per-centroid (dist, cid) structs (struct ordering = dist
-    asc, cid tie-break, identical to the oracle's ROW_NUMBER) — against
-    the centroids inlined as a LITERAL DATA ARRAY, so there is no
-    broadcast exchange and no broadcast-build job at all; the corpus is
-    never expanded k× and never shuffled. The only exchange per round is
-    the centroid update, whose partial aggregation reduces each task to
-    k·DIM cells map-side (shuffle volume independent of corpus size).
-    Rounds before the last collect their k·DIM stats to the driver
-    (BOUNDED: k·DIM doubles — the MLlib treeAggregate discipline) to
-    seed the next round's literal; the FINAL round is returned lazy, so
-    the caller's one action executes it — one job per Lloyd round,
-    5 jobs / 7 stages total vs the r15 lazy-broadcast form's 8 / 13
-    (measured 2.54s -> 1.41s warm at sf0.1, bit-identical output).
+    Plan: the seed is a driver-side pyarrow read (no job). Rounds
+    1..N-1 train driver-side in numpy when the corpus is at most
+    KM_LOCAL_MAX_ROWS rows (_kmeans_centroids_local, no Spark job), else
+    as one Arrow-batched partial-sum job per round
+    (_kmeans_centroids_batch). The FINAL round is returned lazy, so the
+    caller's one action executes it: a map-only mapInPandas pass
+    (_batch_round_stats) that assigns each vector by the exact
+    _chain_l2_batch argmin and emits at most k·DIM partial sums per
+    partition, then the one (cid, pos) exchange. The corpus is never
+    expanded k× and never shuffled.
 
     Stage-floor history (kept so the alternatives are not retried):
     r06 measured (a) DIM separate per-cid sum() aggregates 3x slower
@@ -467,51 +462,28 @@ def q_cluster_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     expression per cell) catastrophically slower — 2.6s of Catalyst
     analysis per round on the ~50 KB tree, and the projected chain
     re-evaluates per generated row under posexplode (16.7s total). The
-    r16 form threads the needle: literals as DATA (an ~600-node
-    array-of-structs constant the analyzer walks once), arithmetic as
-    the small shared HOF lambda.
-
-    Past IVF_BATCH_MIN_ROWS corpus rows the interpreted HOF argmin
-    (n·k lambda chains) dominates and the query dispatches to the
-    Arrow-batched trainer — bit-identical trajectory by the pinned
-    _chain_l2_batch construction; the regime probe reads parquet footer
-    metadata only (r15 verdict Next #2). Measured solo at 100x: see
-    SURVEY (17).
+    r16 literal-centroid HOF argmin (an array_min over k interpreted L2
+    lambda chains per row) lost to the Arrow-batched round from ~1k rows
+    up (2k rows: 1.47s vs 0.94s; 20k: 5.7s vs 1.25s) and ran only on the
+    500-row fixtures, which no timed workload reads, so it is deleted
+    (on those fixtures it also lost to the driver-local path: 1.40s vs
+    0.64s per query, median of 4 min-of-5 pairs on a 4-core host);
+    _kmeans_centroids keeps that plan as the bit-identity reference.
     """
     emb = load(spark, sf_dir, "embeddings")
-    seed = _kmeans_seed_local(sf_dir)
-    if table_row_count(sf_dir, "embeddings") >= IVF_BATCH_MIN_ROWS:
-        # r17 job-chain shave (r16 verdict Next #1): the seed is a
-        # driver-side pyarrow read (no job), rounds 1..N-1 are one
-        # single-stage partial-collect job each, and the FINAL round is
-        # returned LAZY so the caller's one action executes it — the
-        # 2-round trajectory is now 2 jobs total (was 5: seed collect,
-        # 2x round with AQE stage splits, local-result materialize).
-        # r18: the first N-1 rounds' fixed point is driver-known data —
-        # at <=KM_LOCAL_MAX_ROWS it computes locally (one job saved);
-        # the FINAL round stays the distributed lazy partial-sum plan
-        # the caller's action executes (the query's output path).
-        loc = _kmeans_centroids_local(
-            sf_dir, seed, iters=KMEANS_ITERS - 1
+    seed, _ = _kmeans_seed_local(sf_dir)
+    cids, C, _ = _kmeans_train(spark, emb, seed, sf_dir, KMEANS_ITERS - 1)
+    return (
+        _batch_round_stats(emb, cids, C)
+        .groupBy("cid", "pos")
+        .agg(
+            (
+                F.sum("s") / (F.sum("n") * F.lit(float(_Q30)))
+            ).alias("centroid"),
+            F.sum("n").alias("n_members"),
         )
-        if loc is not None:
-            cids, C, _ = loc
-        else:
-            cids, C, _ = _kmeans_centroids_batch(
-                spark, emb, seed=seed, iters=KMEANS_ITERS - 1
-            )
-        return (
-            _batch_round_stats(emb, cids, C)
-            .groupBy("cid", "pos")
-            .agg(
-                (
-                    F.sum("s") / (F.sum("n") * F.lit(float(_Q30)))
-                ).alias("centroid"),
-                F.sum("n").alias("n_members"),
-            )
-            .select("cid", "pos", "centroid", "n_members")
-        )
-    return _kmeans_rounds(spark, emb, seed=seed)[1]
+        .select("cid", "pos", "centroid", "n_members")
+    )
 
 
 # flat left-to-right squared-L2 chain between two array columns — the
@@ -554,9 +526,9 @@ def _kmeans_centroids(emb: DataFrame) -> tuple[DataFrame, DataFrame]:
     """KMEANS_ITERS Lloyd rounds over ``emb`` as ONE fully lazy plan;
     returns (carr, cent_e): the single-row broadcastable centroid list
     ({cl: [(cid, ce)]}) and the final exploded (cid, pos, centroid,
-    n_members) frame. r16: no longer the registered queries' execution
-    path (they train via _kmeans_rounds — one job per Lloyd round,
-    bounded k·DIM collects, literal-centroid assignment) but KEPT as the
+    n_members) frame. Not the registered queries' execution path (they
+    train via _kmeans_centroids_local or _kmeans_centroids_batch and
+    assign via _batch_assign_udf / _batch_round_stats) but KEPT as the
     zero-driver-state reference implementation the bit-identity tests
     pin both trainers against."""
     carr = (
@@ -595,61 +567,16 @@ def _kmeans_centroids(emb: DataFrame) -> tuple[DataFrame, DataFrame]:
     return carr, cent_e
 
 
-def _cl_literal(cents: list[tuple[int, list[float]]]) -> str:
-    """The centroid list as a LITERAL array-of-structs expression — the
-    exact shape the broadcast `cl` row carried, but as a ~600-node data
-    constant the analyzer walks once (no broadcast exchange, no
-    broadcast-build job; repr() round-trips every f64 exactly)."""
-    return (
-        "array("
-        + ", ".join(
-            "struct({}L AS cid, array({}) AS ce)".format(
-                cid, ", ".join(f"{x!r}D" for x in ce)
-            )
-            for cid, ce in cents
-        )
-        + ")"
-    )
-
-
-def _km_best_literal(cents) -> str:
-    """_KM_BEST with the centroid list inlined as a data literal."""
-    return _KM_BEST.replace("transform(cl,", f"transform({_cl_literal(cents)},")
-
-
 def _kmeans_seed(emb: DataFrame) -> list[tuple[int, list[float]]]:
     """The deterministic seed: the k lowest vec_ids' embeddings, widened
-    to exact doubles (floats are exactly representable)."""
+    to exact doubles (floats are exactly representable) — collected
+    through Spark, for callers with no local corpus to read
+    (_kmeans_seed_local; the store retrain path)."""
     return sorted(
         (int(r.vec_id), [float(x) for x in r.embedding])
         for r in emb.filter(F.col("vec_id") < KMEANS_K)
         .select("vec_id", "embedding")
         .collect()
-    )
-
-
-def _km_update_df(emb: DataFrame, cents) -> DataFrame:
-    """One Lloyd round as a lazy plan: literal-centroid argmin (map-only
-    codegen scan, lambda interpreted only inside the k-struct transform)
-    then the quantized (cid, pos) update aggregation — exactly the
-    arithmetic the oracle's a{it}/ex{it}/ce{it} CTEs spell."""
-    assigned = emb.select(
-        F.expr(_km_best_literal(cents)).alias("best"), "embedding"
-    ).select(F.col("best.cid").alias("cid"), "embedding")
-    ex = assigned.select(
-        "cid", F.posexplode("embedding").alias("pos0", "val")
-    ).select(
-        "cid",
-        (F.col("pos0") + 1).cast("int").alias("pos"),
-        F.round(F.col("val").cast("double") * _Q30)
-        .cast("bigint")
-        .alias("valq"),
-    )
-    return ex.groupBy("cid", "pos").agg(
-        (F.sum("valq") / (F.count("*") * F.lit(float(_Q30)))).alias(
-            "centroid"
-        ),
-        F.count("*").alias("n_members"),
     )
 
 
@@ -660,32 +587,12 @@ def _cents_from_rows(rows) -> list[tuple[int, list[float]]]:
     return [(c, [by[c][p] for p in range(1, DIM + 1)]) for c in sorted(by)]
 
 
-def _kmeans_rounds(
-    spark, emb: DataFrame, seed=None
-) -> tuple[list[tuple[int, list[float]]], DataFrame]:
-    """KMEANS_ITERS Lloyd rounds, one job per round (r16): the seed and
-    every round but the last collect their BOUNDED k·DIM stats to drive
-    the next round's literal; the final round's update frame is returned
-    LAZY so the caller's action is the last job. Returns
-    (cents_before_final_round, final_round_df). Bit-identical to
-    _kmeans_centroids (pinned in test_similarity): same seed, same
-    argmin structs, same quantized sums, same division. ``seed`` lets a
-    caller that can read the corpus parquet driver-side skip the seed's
-    Spark job (_kmeans_seed_local)."""
-    cents = seed if seed is not None else _kmeans_seed(emb)
-    for _ in range(KMEANS_ITERS - 1):
-        cents = _cents_from_rows(_km_update_df(emb, cents).collect())
-    return cents, _km_update_df(emb, cents).select(
-        "cid", "pos", "centroid", "n_members"
+def _cents_matrix(cents):
+    """A [(cid, ce)] centroid list as (ascending cids, float64 matrix)."""
+    cents = sorted(cents)
+    return [c for c, _ in cents], np.array(
+        [ce for _, ce in cents], dtype=np.float64
     )
-
-
-def _kmeans_cents_final(spark, emb: DataFrame, seed=None) -> list:
-    """The full trajectory's final centroids as a plain list — the IVF
-    coarse quantizer's input when the corpus is small enough for the
-    literal/HOF regime."""
-    cents, final_df = _kmeans_rounds(spark, emb, seed=seed)
-    return _cents_from_rows(final_df.collect())
 
 
 # ---------------------------------------------------------------------------
@@ -694,16 +601,6 @@ def _kmeans_cents_final(spark, emb: DataFrame, seed=None) -> list:
 # ---------------------------------------------------------------------------
 
 IVF_NPROBE = 3
-
-# per-query (dist, cid) structs against the broadcast centroid list — the
-# _KM_BEST expression over the QUERY vector, kept as the full list so the
-# probe ranking can take nprobe cells instead of argmin-1
-_IVF_QCELLS = (
-    "transform(cl, c -> struct("
-    + _l2_chain("qe", "c.ce")
-    + " AS dist, c.cid AS cid))"
-)
-
 
 def _ivf_oracle() -> str:
     cf = f"c{KMEANS_ITERS}"
@@ -750,7 +647,7 @@ def _chain_l2_batch(V: np.ndarray, C: np.ndarray) -> np.ndarray:
 
 def _batch_assign_udf(cids, C):
     """Arrow-batched cell assignment against driver-known centroids —
-    the large-k production path (an interpreted HOF argmin pays k
+    every IVF path's assignment (an interpreted HOF argmin pays k
     lambda-evaluated L2 chains PER ROW; this pays one vectorized
     j-loop per Arrow batch). ``cids`` must be ascending so numpy's
     first-occurrence argmin reproduces array_min's lowest-cid
@@ -842,9 +739,9 @@ def _dot_batch_udf():
     accumulation pass per batch, in EXACTLY the _DOT fold's IEEE order —
     acc starts at 0.0 and adds q_j·e_j left to right — so every cosine
     is bit-identical to the HOF fold and the oracle's unrolled SUM
-    (pinned in test_similarity). The batch-regime scorer: at candidate
-    volumes past IVF_BATCH_MIN_ROWS the interpreted fold pays ~64
-    lambda dispatches per row; this pays one Arrow transfer."""
+    (pinned in test_similarity). q_sim_search_ivf's scorer: the
+    interpreted fold pays ~64 lambda dispatches per candidate row; this
+    pays one Arrow transfer."""
     from pyspark.sql.types import DoubleType
 
     @pandas_udf(DoubleType())
@@ -860,11 +757,14 @@ def _dot_batch_udf():
 
 
 def _kmeans_seed_local(sf_dir: str):
-    """Driver-side seed read — the k lowest vec_ids' embeddings straight
-    from the local parquet via pyarrow, DELETING the seed's whole Spark
-    job (r16 verdict Next #1's 'fuse the seed job' lever: on a 2-round
-    trajectory the seed collect was one of five jobs, ~0.1s of pure
-    scheduling floor at sf0.1). Bit-identical to the Spark collect: both
+    """Driver-side read of the corpus prefix vec_id < max(KMEANS_K,
+    N_QUERIES) straight from the local parquet via pyarrow, split into
+    (seed, queries): the k lowest vec_ids' embeddings and the IVF query
+    batch [(qid, qe)], both from this ONE read, so _local_probes serves
+    every N_QUERIES. It DELETES the seed's whole Spark job (r16 verdict
+    Next #1's 'fuse the seed job' lever: on a 2-round trajectory the
+    seed collect was one of five jobs, ~0.1s of pure scheduling floor at
+    sf0.1). Bit-identical to the Spark collect: both
     paths widen the stored float32 to float64, an exact conversion.
     ``sf_dir`` must be a local path — every caller also stats the corpus
     (table_row_count, _ivf_store_base), so none supports a remote one —
@@ -878,14 +778,18 @@ def _kmeans_seed_local(sf_dir: str):
     path = os.path.join(sf_dir, "embeddings.parquet")
     t = ds.dataset(path).to_table(
         columns=["vec_id", "embedding"],
-        filter=ds.field("vec_id") < KMEANS_K,
+        filter=ds.field("vec_id") < max(KMEANS_K, N_QUERIES),
     )
-    return sorted(
+    head = sorted(
         (int(i), [float(x) for x in e])
         for i, e in zip(
             t.column("vec_id").to_pylist(),
             t.column("embedding").to_pylist(),
         )
+    )
+    return (
+        [r for r in head if r[0] < KMEANS_K],
+        [r for r in head if r[0] < N_QUERIES],
     )
 
 
@@ -957,25 +861,17 @@ def _kmeans_centroids_batch(
     Generate barrier, and exploded DIM rows per vector into the update
     exchange — the partial-sum shape deletes the persist, the explode,
     and the corpus-sized shuffle in one move, 100x round: see SURVEY).
-    Bit-identical to the lazy HOF trainer: assignment by
-    _chain_l2_batch's pinned construction, quantization by
+    Bit-identical to the lazy HOF reference (_kmeans_centroids):
+    assignment by _chain_l2_batch's pinned construction, quantization by
     _np_round_half_up's pinned HALF_UP, integer sums order-independent,
     and the final divide is the same long/(long·double) IEEE op both
-    engines run. This form is for corpora past IVF_BATCH_MIN_ROWS and
-    for quantizer builds at large k, where interpreted lambdas dominate
-    (ivf_demo: k=64). Returns (cids, C, cent_rows) — ascending cell
-    ids, their centroid matrix, and the final round's exploded
-    (cid, pos, centroid, n_members) rows (q_cluster_kmeans's dispatched
-    regime emits exactly these)."""
-    if seed is None:
-        seed = sorted(
-            (r.vec_id, [float(x) for x in r.embedding])
-            for r in emb.filter(F.col("vec_id") < KMEANS_K)
-            .select("vec_id", "embedding")
-            .collect()
-        )
-    cids = [int(c) for c, _ in seed]
-    C = np.array([v for _, v in seed], dtype=np.float64)
+    engines run. This is the distributed trainer: for corpora past
+    KM_LOCAL_MAX_ROWS, and for callers with no local corpus to read
+    (``seed=None`` collects the seed through Spark, _kmeans_seed).
+    Returns (cids, C, cent_rows) — ascending cell ids, their centroid
+    matrix, and the final round's exploded (cid, pos, centroid,
+    n_members) rows."""
+    cids, C = _cents_matrix(_kmeans_seed(emb) if seed is None else seed)
     # r17: per-round reduction regime. At bounded partition counts the
     # per-partition partials (<= parts * k * DIM rows) are collected and
     # summed driver-side — one SINGLE-STAGE job per Lloyd round, no
@@ -1001,14 +897,7 @@ def _kmeans_centroids_batch(
             )
             .collect()
         )
-        by_cid: dict[int, dict[int, float]] = {}
-        for r in cent:
-            by_cid.setdefault(int(r.cid), {})[int(r.pos)] = float(r.centroid)
-        cids = sorted(by_cid)
-        C = np.array(
-            [[by_cid[c][p] for p in range(1, DIM + 1)] for c in cids],
-            dtype=np.float64,
-        )
+        cids, C = _cents_matrix(_cents_from_rows(cent))
     return cids, C, cent
 
 
@@ -1048,7 +937,7 @@ def _kmeans_centroids_local(sf_dir: str, seed, iters: int):
     """``iters`` Lloyd rounds computed entirely driver-side over the
     local corpus matrix — the _kmeans_centroids_batch trajectory with
     the per-partition partial sums collapsed to one in-process pass.
-    ``seed`` is _kmeans_seed_local's output for the same local
+    ``seed`` is _kmeans_seed_local's seed for the same local
     ``sf_dir``. Returns (cids, C, cent_rows) like the batch trainer, or
     None when the corpus is past KM_LOCAL_MAX_ROWS (callers then run the
     distributed trainer). Exactness: same argmin (_chain_l2_batch over
@@ -1063,8 +952,7 @@ def _kmeans_centroids_local(sf_dir: str, seed, iters: int):
         from collections import namedtuple
 
         _CentRow = namedtuple("_CentRow", "cid pos centroid n_members")
-    cids = [int(c) for c, _ in seed]
-    C = np.array([v for _, v in seed], dtype=np.float64)
+    cids, C = _cents_matrix(seed)
     cent = None
     for _ in range(iters):
         a = _chain_l2_batch(V, C).argmin(axis=1)
@@ -1094,111 +982,65 @@ def _kmeans_centroids_local(sf_dir: str, seed, iters: int):
     return cids, C, cent
 
 
-# corpus-row threshold above which IVF training/assignment switches to
-# the Arrow-batched path. r16 re-measured the crossover after the
-# partial-sum trainer landed: the old 50k threshold was calibrated
-# against the r15 batch path (per-round corpus persist + 64x posexplode
-# + corpus-sized shuffle), which the mapInPandas partial sums deleted —
-# the batch regime now wins from ~1k rows up (2k rows: kmeans 1.47s
-# HOF vs 0.94s batch; 20k: 5.7s vs 1.25s — the interpreted n*k lambda
-# chains are the whole story). Below ~1k the Python-worker round-trips
-# cost more than interpreting a few hundred chains, and keeping the
-# JVM literal/HOF regime live at driver-fixture scale (500 rows) means
-# the driver's oracle hash pins BOTH regimes every round. Bit-identical
-# either way (test_ivf_batch_assignment_bit_identical_to_hof), so the
-# oracle cannot tell the regimes apart — the DECON_BROADCAST_MAX
-# dispatch pattern.
-IVF_BATCH_MIN_ROWS = 1000
+def _kmeans_train(spark, emb: DataFrame, seed, sf_dir, iters: int):
+    """``iters`` Lloyd rounds from ``seed``, on one of the two paths:
+    driver-local (_kmeans_centroids_local) for a local corpus ``sf_dir``
+    of at most KM_LOCAL_MAX_ROWS rows, else distributed over ``emb``
+    (_kmeans_centroids_batch; ``sf_dir=None`` means no local corpus).
+    Returns (cids, C, cent_rows)."""
+    loc = None
+    if sf_dir is not None:
+        loc = _kmeans_centroids_local(sf_dir, seed, iters)
+    return loc or _kmeans_centroids_batch(spark, emb, seed=seed, iters=iters)
 
 
-def _carr_local(spark, cents) -> DataFrame:
-    """The one-row {cl: [(cid, ce)]} centroid frame as a LOCAL relation
-    (LocalTableScan — r16: the trained centroids are driver-known in
-    both regimes, so there is nothing to checkpoint or re-run; consumers
-    broadcast 1 row of local data)."""
-    return spark.createDataFrame(
-        [([(int(c), [float(x) for x in ce]) for c, ce in cents],)],
-        "cl array<struct<cid: bigint, ce: array<double>>>",
+def _ivf_train_assign(spark, emb: DataFrame, seed=None, sf_dir=None):
+    """Train the IVF coarse quantizer (the full KMEANS_ITERS trajectory,
+    _kmeans_train) and assign the corpus to it. Shared by
+    q_sim_search_ivf, q_sim_search_ivf_probe, build_ivf_cell_store and
+    the store retrain. ``seed`` (from _kmeans_seed_local) deletes the
+    seed collect job when the caller can read the corpus parquet
+    driver-side; it must come from the SAME corpus ``emb`` scans, and
+    ``sf_dir`` lets a corpus of at most KM_LOCAL_MAX_ROWS rows train
+    driver-local. Returns (assigned, cents): the lazy (vec_id,
+    embedding, cid) assignment (a map-only Arrow pass,
+    _batch_assign_udf) and the centroids as a driver-side [(cid, ce)]
+    list, so callers rank probe cells locally (_local_probes)."""
+    cids, C, _ = _kmeans_train(spark, emb, seed, sf_dir, KMEANS_ITERS)
+    assign = _batch_assign_udf(cids, C)
+    # coalesce: a nullable Python-UDF join key makes the optimizer
+    # extract the UDF twice (one ArrowEvalPython feeding the isnotnull
+    # Filter, a second for the projection), running the whole
+    # assignment pass 2x per action (seen in the 100x plan, r16; the
+    # non-null wrapper collapses it to one node)
+    assigned = emb.select(
+        "vec_id",
+        "embedding",
+        F.coalesce(assign("embedding"), F.lit(-1)).alias("cid"),
     )
-
-
-def _ivf_train_assign(
-    spark, emb: DataFrame, batch: bool, seed=None, sf_dir: str | None = None
-):
-    """(carr, assigned) under either regime: the broadcastable centroid
-    list and the (vec_id, embedding, cid) corpus assignment. Shared by
-    q_sim_search_ivf, q_sim_search_ivf_probe, and build_ivf_cell_store.
-    r16: both regimes train via bounded per-round collects (one job per
-    Lloyd round), so carr is a local relation in both and the small
-    regime's assignment is a literal-centroid map-only scan — no
-    trajectory re-runs, no checkpoint, no broadcast-build job. ``seed``
-    (from _kmeans_seed_local) deletes the seed collect job when the
-    caller can read the corpus parquet driver-side; it must come from
-    the SAME corpus ``emb`` scans. ``sf_dir`` (r18) additionally lets
-    corpora at/below KM_LOCAL_MAX_ROWS train DRIVER-LOCAL — zero Spark
-    jobs for the Lloyd fixed point, bit-identical centroids — while
-    assignment stays distributed. Returns (carr, assigned, cents) —
-    BOTH regimes materialize the k·DIM centroid doubles driver-side, so
-    callers can rank probe cells locally (_local_probes) instead of
-    paying a window job per invocation."""
-    if batch:
-        loc = (
-            _kmeans_centroids_local(sf_dir, seed, iters=KMEANS_ITERS)
-            if sf_dir is not None
-            else None
-        )
-        if loc is not None:
-            cids, C, _ = loc
-        else:
-            cids, C, _ = _kmeans_centroids_batch(spark, emb, seed=seed)
-        cents = [(int(c), [float(x) for x in C[i]]) for i, c in enumerate(cids)]
-        assign = _batch_assign_udf(cids, C)
-        # coalesce: same non-nullability trick as the literal branch
-        # below, and MORE — a nullable Python-UDF join key makes the
-        # optimizer extract the UDF twice (one ArrowEvalPython feeding
-        # the isnotnull Filter, a second for the projection), running
-        # the whole assignment pass 2x per action (seen in the 100x
-        # plan, r16; the non-null wrapper collapses it to one node)
-        assigned = emb.select(
-            "vec_id",
-            "embedding",
-            F.coalesce(assign("embedding"), F.lit(-1)).alias("cid"),
-        )
-    else:
-        cents = _kmeans_cents_final(spark, emb, seed=seed)
-        # coalesce makes the argmin NON-NULLABLE (the literal list is
-        # never empty, but Catalyst can't see that), so the downstream
-        # equi-join on cid generates no isnotnull(expr) filter — which
-        # would re-evaluate the whole k-chain HOF per row inside a
-        # Filter node (the test_no_hof_inside_filter class bug)
-        assigned = emb.select(
-            "vec_id",
-            "embedding",
-            F.expr(
-                f"coalesce({_km_best_literal(cents)}.cid, -1L)"
-            ).alias("cid"),
-        )
-    return _carr_local(spark, cents), assigned, cents
+    cents = [(int(c), [float(x) for x in C[i]]) for i, c in enumerate(cids)]
+    return assigned, cents
 
 
 _PROBES_SCHEMA = "qid bigint, qe array<float>, cid bigint"
 
 
 def _local_probes(queries, cents, nprobe: int = IVF_NPROBE):
-    """Per-query nprobe cell ranking computed DRIVER-SIDE (r18): the
-    (queries x k) distance matrix via _chain_l2_batch (the same IEEE
-    left-to-right chain _IVF_QCELLS spells), ranked by (dist asc, cid
-    asc) exactly like the Spark path's row_number window — bit-identical
-    probe lists, pinned in test_similarity. ``queries`` is a bounded
-    driver-side list [(qid, qe_f64_list)], ``cents`` the trainer's
-    [(cid, ce)] output. This is how IVF systems actually pick cells —
-    the query-to-centroid comparison is client-side over k vectors; a
-    Spark window job per query batch was pure floor. Returns probe rows
-    [(qid, qe, cid)] for a local-relation broadcast frame
+    """Per-query nprobe cell ranking computed DRIVER-SIDE (r18), the
+    only probe ranking: the (queries x k) distance matrix via
+    _chain_l2_batch (the same IEEE left-to-right chain as the oracle's
+    unrolled L2), ranked by (dist asc, cid asc) exactly like the
+    oracle's ROW_NUMBER — pinned in test_similarity against the numpy
+    reference. ``queries`` is a bounded driver-side list
+    [(qid, qe_f64_list)], ``cents`` the trainer's [(cid, ce)] output.
+    This is how IVF systems actually pick cells — the query-to-centroid
+    comparison is client-side over k vectors; the deleted Spark
+    crossJoin+window ranking paid a job per query batch. Returns probe
+    rows [(qid, qe, cid)] for a local-relation broadcast frame
     (_PROBES_SCHEMA; qe re-enters as array<float>, an exact f32<->f64
     round trip of the corpus values)."""
-    cid_arr = np.array([c for c, _ in cents], dtype=np.int64)
-    C = np.array([ce for _, ce in cents], dtype=np.float64)
+    cids, C = _cents_matrix(cents)
+    cid_arr = np.array(cids, dtype=np.int64)
     Q = np.array([qe for _, qe in queries], dtype=np.float64)
     D = _chain_l2_batch(Q, C)
     rows = []
@@ -1209,46 +1051,40 @@ def _local_probes(queries, cents, nprobe: int = IVF_NPROBE):
     return rows
 
 
-def build_ivf_cell_store(
-    spark, sf_dir: str, store_path: str, batch_assign: bool = True
-):
+def build_ivf_cell_store(spark, sf_dir: str, store_path: str):
     """Persisted IVF layout: write the corpus PARTITIONED BY learned cell
     id (directory per cell — the layout q_sim_search_ivf's 100 TB story
     relies on: a probe reads only its cells' files via partition
     pruning, pinned in test_similarity). Training is the registered
-    query's exact trajectory; assignment defaults to the Arrow-batched
-    numpy path (bit-identical to the JVM HOF argmin by construction —
-    pinned in test_similarity — and ~an order of magnitude faster at
-    large k, where interpreted lambda chains dominate; measured in
-    scripts/ivf_demo.py). ``batch_assign=False`` keeps the registered
-    query's map-only JVM expression. Returns the centroid-list frame
-    for probe-time reuse — retraining at probe time would recompute the
-    quantizer per query batch, so the k·DIM-cell frame is materialized
-    once (localCheckpoint: tiny, one row)."""
+    query's exact trajectory; assignment is the Arrow-batched numpy
+    path (bit-identical to the JVM HOF argmin by construction — pinned
+    in test_similarity — and ~an order of magnitude faster at large k,
+    where interpreted lambda chains dominate; measured in
+    scripts/ivf_demo.py). Returns the driver-side [(cid, ce)] centroid
+    list for probe-time reuse — retraining at probe time would
+    recompute the quantizer per query batch."""
     emb = load(spark, sf_dir, "embeddings")
-    carr, assigned, _ = _ivf_train_assign(
-        spark, emb, batch=batch_assign,
-        seed=_kmeans_seed_local(sf_dir), sf_dir=sf_dir,
+    assigned, cents = _ivf_train_assign(
+        spark, emb, seed=_kmeans_seed_local(sf_dir)[0], sf_dir=sf_dir
     )
     assigned.write.partitionBy("cid").mode("overwrite").parquet(store_path)
     _write_store_meta(
         store_path, rows_at_build=table_row_count(sf_dir, "embeddings")
     )
-    return carr
+    return cents
 
 
-def ivf_store_upsert(spark, store_path: str, carr, new_df: DataFrame):
+def ivf_store_upsert(spark, store_path: str, cents, new_df: DataFrame):
     """Incremental IVF maintenance — the vector twin of the bucketed
     dedup-history index (dedup.build_history_index): new vectors are
-    assigned with the EXISTING quantizer (no retrain — cell ids stay
-    stable, exactly how production IVF indexes absorb a day's
+    assigned with the EXISTING quantizer ``cents`` (no retrain — cell
+    ids stay stable, exactly how production IVF indexes absorb a day's
     embeddings) and APPENDED into their cells' partitions; unprobed
     cells' existing files are never rewritten or even listed. Assignment
     is the Arrow-batched exact path, so an upserted vector lands in the
     same cell a full rebuild with this quantizer would put it in
     (pinned in test_similarity). Returns the number of vectors added."""
-    cl = sorted((c.cid, list(c.ce)) for c in carr.collect()[0].cl)
-    assign = _batch_assign_udf([c[0] for c in cl], [c[1] for c in cl])
+    assign = _batch_assign_udf(*_cents_matrix(cents))
     batch = new_df.select(
         "vec_id", "embedding", assign("embedding").alias("cid")
     )
@@ -1369,10 +1205,9 @@ def ivf_store_retrain_if_stale(spark, cells_path: str):
     the registered trainer over the store's CURRENT contents (original +
     upserts), rewrite the cell layout atomically (build-aside + swap, the
     q_sim_search_ivf_probe publish discipline), and reset the meta
-    baseline. Returns (carr, retrained, staleness). When not stale the
-    existing layout is untouched and carr is rebuilt from the stored
-    assignment's implied centroids NOT recomputed — callers keep their
-    own carr; None is returned for it.
+    baseline. Returns (cents, retrained, staleness): the new [(cid, ce)]
+    centroid list, or None when not stale — the existing layout is then
+    untouched and callers keep their own centroids.
 
     This is the explicit lifecycle answer to append-only drift
     (r16 verdict Next #8): upserting past 2x the original corpus
@@ -1386,9 +1221,7 @@ def ivf_store_retrain_if_stale(spark, cells_path: str):
         return None, False, st
     cur = spark.read.parquet(cells_path).select("vec_id", "embedding")
     rows = st["rows_now"]
-    carr, assigned, _ = _ivf_train_assign(
-        spark, cur, batch=rows >= IVF_BATCH_MIN_ROWS
-    )
+    assigned, cents = _ivf_train_assign(spark, cur)
     tmp = f"{cells_path}.retrain.{os.getpid()}"
     shutil.rmtree(tmp, ignore_errors=True)
     assigned.write.partitionBy("cid").mode("overwrite").parquet(tmp)
@@ -1397,7 +1230,7 @@ def ivf_store_retrain_if_stale(spark, cells_path: str):
     os.rename(cells_path, old)
     os.rename(tmp, cells_path)
     shutil.rmtree(old, ignore_errors=True)
-    return carr, True, st
+    return cents, True, st
 
 
 def ivf_store_gc(
@@ -1444,46 +1277,24 @@ def ivf_store_gc(
 def ivf_probe_store(
     spark,
     store_path: str,
-    carr,
-    q,
+    cents,
+    queries,
     nprobe: int = IVF_NPROBE,
     top_k: int = LSH_TOP_K,
-    local_probes=None,
 ):
     """Top-k search against a cell-partitioned IVF store: rank cells per
-    query against the broadcast centroid list, collect the probed cell
-    ids (bounded: <= queries x nprobe), and scan ONLY those cells — the
-    literal isin predicate becomes a planning-time PartitionFilter, so
-    unprobed cells' files are never opened. Scoring/ranking are the
-    registered query's exact expressions.
-
-    ``local_probes`` (r18): a caller whose centroids AND query vectors
-    are driver-known (q_sim_search_ivf_probe — an 8-row parquet sidecar
-    and a bounded query prefix) passes the _local_probes rows directly;
-    the probe ranking then costs zero Spark jobs (the old path paid a
-    crossJoin+window job plus a distinct-collect job per invocation) and
-    the cell list for partition pruning falls out of the same rows."""
-    corpus = read_parquet_cached(spark, store_path)
-    if local_probes is not None:
-        probes = spark.createDataFrame(local_probes, _PROBES_SCHEMA)
-        cells = sorted({int(r[2]) for r in local_probes})
-    else:
-        qc = q.crossJoin(F.broadcast(carr)).select(
-            "qid", "qe", F.explode(F.expr(_IVF_QCELLS)).alias("dc")
-        )
-        wq = Window.partitionBy("qid").orderBy(
-            F.asc("dc.dist"), F.asc("dc.cid")
-        )
-        probes = (
-            qc.withColumn("crk", F.row_number().over(wq))
-            .filter(F.col("crk") <= nprobe)
-            .select("qid", "qe", F.col("dc.cid").alias("cid"))
-        )
-        cells = [
-            int(r.cid) for r in probes.select("cid").distinct().collect()
-        ]
+    query driver-side (_local_probes over the [(cid, ce)] centroid list
+    ``cents`` and the bounded [(qid, qe)] query list ``queries``) and
+    scan ONLY the probed cells — the literal isin predicate becomes a
+    planning-time PartitionFilter, so unprobed cells' files are never
+    opened. The probe ranking costs no Spark job. Scoring/ranking are
+    the registered query's exact expressions."""
+    local = _local_probes(queries, cents, nprobe)
+    probes = spark.createDataFrame(local, _PROBES_SCHEMA)
+    cells = sorted({cid for _, _, cid in local})
     cand = (
-        corpus.filter(F.col("cid").isin(cells))
+        read_parquet_cached(spark, store_path)
+        .filter(F.col("cid").isin(cells))
         .join(F.broadcast(probes), "cid")
         .filter(F.col("qid") != F.col("vec_id"))
     )
@@ -1501,12 +1312,11 @@ def q_sim_search_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF search over LEARNED cells: the coarse quantizer is the
     q_cluster_kmeans trajectory itself (k=KMEANS_K Lloyd-trained
     centroids — r15, replacing the `label` column that stood in for
-    cells through r14; r16: trained one-job-per-round in both regimes,
-    see _ivf_train_assign), each corpus vector is assigned
-    to its nearest centroid (map-only argmin against the broadcast
-    centroid list, exact squared-L2 chains), each query probes its
-    nprobe=IVF_NPROBE nearest cells, and only those cells' vectors are
-    scored with the exact cosine.
+    cells through r14; trained by _kmeans_train, see _ivf_train_assign),
+    each corpus vector is assigned to its nearest centroid (map-only
+    Arrow-batched argmin, exact squared-L2 chains), each query probes
+    its nprobe=IVF_NPROBE nearest cells, and only those cells' vectors
+    are scored with the exact cosine.
 
     Exact oracle despite approximate method: the centroid build is the
     fixed-point kmeans recipe (shared CTE body — bit-identical cells),
@@ -1516,7 +1326,7 @@ def q_sim_search_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan shape at 100 TB: centroid training shuffles k·DIM cells per
     iteration (corpus-size-independent); corpus assignment is MAP-ONLY
-    against the broadcast centroid list; the probe list (queries ×
+    against the driver-known centroids; the probe list (queries ×
     nprobe) broadcasts into the candidate join so the corpus never
     shuffles. The persisted form writes the corpus PARTITIONED BY cell
     id (tests/test_similarity pins partition-pruned probing on that
@@ -1525,55 +1335,25 @@ def q_sim_search_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     pinned in test_similarity and measured on the EMBS ladder in
     SURVEY."""
     emb = load(spark, sf_dir, "embeddings")
-    # size-dispatched regime (IVF_BATCH_MIN_ROWS): past fixture scale the
-    # interpreted HOF argmin dominates, so training/assignment switch to
-    # the Arrow-batched path — bit-identical by pinned construction, so
-    # the oracle cannot tell the regimes apart (42.8s -> see SURVEY at
-    # 100x; sf0.1 keeps the lazy single-plan JVM form). The regime probe
-    # reads parquet footers only — no corpus pass (r15 verdict Next #2).
-    batch = table_row_count(sf_dir, "embeddings") >= IVF_BATCH_MIN_ROWS
-    seed = _kmeans_seed_local(sf_dir)
-    carr, assigned, cents = _ivf_train_assign(
-        spark, emb, batch=batch, seed=seed, sf_dir=sf_dir
-    )
+    seed, queries = _kmeans_seed_local(sf_dir)
+    assigned, cents = _ivf_train_assign(spark, emb, seed=seed, sf_dir=sf_dir)
     # Probe-cell ranking (r18): the trained centroids are driver-known
-    # doubles in BOTH regimes and the query vectors are a bounded prefix
-    # of the seed read, so the (queries x k) ranking computes locally
-    # (_local_probes, bit-identical — pinned) and the probe list enters
-    # as a LOCAL-relation broadcast: the per-invocation window job the
-    # old crossJoin+row_number probe plan paid is gone. When the queries
-    # outrun the seed prefix (N_QUERIES > KMEANS_K): the original Spark
-    # window path.
-    if N_QUERIES <= KMEANS_K:
-        queries = [(i, v) for i, v in seed if i < N_QUERIES]
-        probes = spark.createDataFrame(
-            _local_probes(queries, cents, IVF_NPROBE), _PROBES_SCHEMA
-        )
-    else:
-        q = emb.filter(F.col("vec_id") < N_QUERIES).select(
-            F.col("vec_id").alias("qid"), F.col("embedding").alias("qe")
-        )
-        qc = q.crossJoin(F.broadcast(carr)).select(
-            "qid", "qe", F.explode(F.expr(_IVF_QCELLS)).alias("dc")
-        )
-        wq = Window.partitionBy("qid").orderBy(
-            F.asc("dc.dist"), F.asc("dc.cid")
-        )
-        probes = (
-            qc.withColumn("crk", F.row_number().over(wq))
-            .filter(F.col("crk") <= IVF_NPROBE)
-            .select("qid", "qe", F.col("dc.cid").alias("cid"))
-        )
+    # doubles and the query vectors come from the seed's own read, so
+    # the (queries x k) ranking computes locally (_local_probes) and the
+    # probe list enters as a LOCAL-relation broadcast.
+    probes = spark.createDataFrame(
+        _local_probes(queries, cents, IVF_NPROBE), _PROBES_SCHEMA
+    )
     # broadcast the tiny probe list; the assigned corpus streams unshuffled
     cand = assigned.join(F.broadcast(probes), "cid").filter(
         F.col("qid") != F.col("vec_id")
     )
-    # scoring follows the same regime: the interpreted HOF fold is fine
-    # at fixture scale, but at candidate volumes past the dispatch the
-    # Arrow-batched per-dimension accumulation (bit-identical order,
-    # pinned) scores ~2x faster (100x: 3.5s -> measured in SURVEY)
-    score = _dot_batch_udf()("qe", "embedding") if batch else F.expr(_DOT)
-    scored = cand.select("qid", "vec_id", score.alias("cos"))
+    # the Arrow-batched per-dimension accumulation (bit-identical order,
+    # pinned) scores ~2x faster than the interpreted HOF fold at
+    # candidate volume (100x: 3.5s -> measured in SURVEY)
+    scored = cand.select(
+        "qid", "vec_id", _dot_batch_udf()("qe", "embedding").alias("cos")
+    )
     w = Window.partitionBy("qid").orderBy(F.desc("cos"), F.asc("vec_id"))
     return (
         scored.withColumn("rk", F.row_number().over(w).cast("bigint"))
@@ -1672,11 +1452,11 @@ def q_sim_search_ivf_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     First invocation for a given (corpus identity, quantizer params)
     builds the store — the registered trajectory's exact centroids
-    (size-dispatched trainer) and the cell-partitioned corpus layout —
+    (_kmeans_train) and the cell-partitioned corpus layout —
     atomically (build into a temp dir, rename into place; a losing
     concurrent builder discards its copy). Every later invocation reads
-    the 8-row centroid table, ranks cells per query against the
-    broadcast list, and scans ONLY the probed cells via planning-time
+    the 8-row centroid table, ranks cells per query driver-side, and
+    scans ONLY the probed cells via planning-time
     PartitionFilter (pinned in test_similarity). Same output and same
     DuckDB oracle as q_sim_search_ivf: the stored centroids are the
     exact doubles the trainer produced (parquet roundtrip is lossless),
@@ -1691,25 +1471,21 @@ def q_sim_search_ivf_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     base = _ivf_store_base(sf_dir)
     cells = os.path.join(base, "cells")
-    cents = os.path.join(base, "centroids.parquet")
+    cents_path = os.path.join(base, "centroids.parquet")
+    seed, queries = _kmeans_seed_local(sf_dir)
     if not os.path.exists(os.path.join(base, "_SUCCESS")):
         emb = load(spark, sf_dir, "embeddings")
-        carr, assigned, _ = _ivf_train_assign(
-            spark,
-            emb,
-            batch=table_row_count(sf_dir, "embeddings")
-            >= IVF_BATCH_MIN_ROWS,
-            seed=_kmeans_seed_local(sf_dir),
-            sf_dir=sf_dir,
+        assigned, cl = _ivf_train_assign(
+            spark, emb, seed=seed, sf_dir=sf_dir
         )
         tmp = f"{base}.build.{os.getpid()}"
         shutil.rmtree(tmp, ignore_errors=True)
         assigned.write.partitionBy("cid").mode("overwrite").parquet(
             os.path.join(tmp, "cells")
         )
-        carr.select(F.explode("cl").alias("c")).select(
-            F.col("c.cid").alias("cid"), F.col("c.ce").alias("ce")
-        ).write.mode("overwrite").parquet(
+        spark.createDataFrame(
+            cl, "cid bigint, ce array<double>"
+        ).coalesce(1).write.mode("overwrite").parquet(
             os.path.join(tmp, "centroids.parquet")
         )
         _write_store_meta(
@@ -1736,30 +1512,12 @@ def q_sim_search_ivf_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "temp dir, and has free space."
                 ) from exc
     # r18: the stored quantizer is an 8-row parquet sidecar and the
-    # query batch is a bounded corpus prefix — when both read driver-side
-    # (pyarrow; ce doubles round-trip exactly), the probe ranking runs
-    # locally and ivf_probe_store skips its crossJoin+window job AND the
-    # distinct-collect job: a warm probe is ONE partition-pruned scan.
-    seed = _kmeans_seed_local(sf_dir)
-    cl = _cents_local_from_store(cents)
-    if N_QUERIES <= KMEANS_K:
-        queries = [(i, v) for i, v in seed if i < N_QUERIES]
-        return ivf_probe_store(
-            spark,
-            cells,
-            None,
-            None,
-            local_probes=_local_probes(queries, cl, IVF_NPROBE),
-        )
-    carr = (
-        read_parquet_cached(spark, cents)
-        .agg(F.collect_list(F.struct("cid", "ce")).alias("cl"))
+    # query batch is a bounded corpus prefix — both read driver-side
+    # (pyarrow; ce doubles round-trip exactly), so the probe ranking runs
+    # locally: a warm probe is ONE partition-pruned scan.
+    return ivf_probe_store(
+        spark, cells, _cents_local_from_store(cents_path), queries
     )
-    emb = load(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qe")
-    )
-    return ivf_probe_store(spark, cells, carr, q)
 
 
 # ---------------------------------------------------------------------------

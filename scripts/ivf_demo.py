@@ -139,7 +139,7 @@ def run_adversarial_ladder(
     S.KMEANS_K = cells
     try:
         store = f"/tmp/ivf_store_adv_k{cells}_{os.path.basename(out_dir)}"
-        carr = S.build_ivf_cell_store(spark, out_dir, store)
+        cents = S.build_ivf_cell_store(spark, out_dir, store)
 
         con = duckdb.connect()
         rows = con.sql(
@@ -162,13 +162,12 @@ def run_adversarial_ladder(
                 int(ids[j]) for j in np.lexsort((ids, -sims))[:TOP_K]
             )
 
-        q = spark.read.parquet(f"{out_dir}/queries.parquet")
         recalls = {}
         for nprobe in nprobes:
             if nprobe > cells:
                 break
             got = S.ivf_probe_store(
-                spark, store, carr, q, nprobe=nprobe, top_k=TOP_K
+                spark, store, cents, qrows, nprobe=nprobe, top_k=TOP_K
             ).collect()
             by_q: dict[int, set] = {}
             for r in got:
@@ -251,7 +250,7 @@ def _run(spark, sf_dir: str, cells: int) -> int:
 
         store = f"/tmp/ivf_store_k{cells}_{os.path.basename(sf_dir)}"
         t0 = time.perf_counter()
-        carr = S.build_ivf_cell_store(spark, sf_dir, store)
+        cents = S.build_ivf_cell_store(spark, sf_dir, store)
         t_build = time.perf_counter() - t0
         n_cells_occupied = len(
             [d for d in os.listdir(store) if d.startswith("cid=")]
@@ -292,6 +291,8 @@ def _run(spark, sf_dir: str, cells: int) -> int:
         q = emb.filter(F.col("vec_id") < S.N_QUERIES).select(
             F.col("vec_id").alias("qid"), F.col("embedding").alias("qe")
         )
+        # the bounded held-out query batch, driver-side for the probes
+        queries_l = [(int(r.qid), list(r.qe)) for r in q.collect()]
 
         def mat_rows(df):
             return df.collect()
@@ -319,9 +320,8 @@ def _run(spark, sf_dir: str, cells: int) -> int:
         # order), so cells_hit reports the ACTUAL distinct probed cells —
         # len(queries)*nprobe is only an upper bound when queries share
         # cells (r15 review)
-        cl = sorted((c.cid, list(c.ce)) for c in carr.collect()[0].cl)
-        cent_ids = np.array([c for c, _ in cl])
-        C = np.array([v for _, v in cl], dtype=np.float64)
+        cent_ids = np.array([c for c, _ in cents])
+        C = np.array([v for _, v in cents], dtype=np.float64)
 
         def probed_cells(nprobe: int) -> int:
             hit = set()
@@ -340,7 +340,7 @@ def _run(spark, sf_dir: str, cells: int) -> int:
             if nprobe > cells:
                 break
             res = S.ivf_probe_store(
-                spark, store, carr, q, nprobe=nprobe, top_k=TOP_K
+                spark, store, cents, queries_l, nprobe=nprobe, top_k=TOP_K
             )
             got = mat_rows(res)  # warmup + result
             ts = []
@@ -348,7 +348,8 @@ def _run(spark, sf_dir: str, cells: int) -> int:
                 t0 = time.perf_counter()
                 got = mat_rows(
                     S.ivf_probe_store(
-                        spark, store, carr, q, nprobe=nprobe, top_k=TOP_K
+                        spark, store, cents, queries_l,
+                        nprobe=nprobe, top_k=TOP_K,
                     )
                 )
                 ts.append(time.perf_counter() - t0)

@@ -376,17 +376,16 @@ def test_kmeans_assignment_is_map_only(spark):
     """k-means assignment must stay a map-only argmin over the centroid
     list: no per-vector argmin window (which would shuffle the whole
     corpus k-times-expanded), no join of any kind, and exactly ONE
-    exchange — the k·DIM-cell update aggregation. r16: the returned
-    plan is the FINAL Lloyd round over literal centroids (earlier
-    rounds ran as their own bounded-collect jobs), so the former
-    one-BroadcastNestedLoopJoin-per-iteration shape tightened to
-    zero joins."""
+    exchange — the k·DIM-cell update aggregation. The returned plan is
+    the FINAL Lloyd round (earlier rounds trained before it, driver-side
+    or as their own bounded-collect jobs), so it has zero joins."""
     p = plan_of(spark, "q_cluster_kmeans")
     assert "Window" not in p
     assert "Join" not in p and "CartesianProduct" not in p
     assert p.count("Exchange hashpartitioning") == 1
-    # the literal-centroid argmin is present as the map-side expression
-    assert "array_min(transform(" in p
+    # assignment is _batch_round_stats' one map-side Arrow pass, which
+    # emits per-partition partial sums below the exchange
+    assert p.count("MapInPandas") == 1 and "MapInPandas stats(" in p
 
 
 def test_bucketed_join_eliminates_exchange(spark, tmp_path):

@@ -105,6 +105,45 @@ def test_sim_ivf_matches_brute_within_probes(spark, duck, brute):
         assert got == want, f"query {qid}: {got} != {want}"
 
 
+def test_sim_ivf_more_queries_than_cells(spark, brute, monkeypatch, tmp_path):
+    """N_QUERIES past KMEANS_K: the query prefix is longer than the
+    k-row seed, so the probe ranking must still cover every query. Both
+    IVF queries must return the numpy IVF reference's rows for every
+    qid < 12, cosines included (the reference dot is the same
+    left-to-right f64 chain as _DOT). The DuckDB oracle fixes N_QUERIES
+    when it is registered, so the reference here is numpy's."""
+    from osmpbf_spark.catalog import REGISTRY
+    from osmpbf_spark.operators import similarity as S
+
+    monkeypatch.setenv("OSMPBF_IVF_STORE_ROOT", str(tmp_path / "root"))
+    monkeypatch.setattr(S, "N_QUERIES", 12)
+    assert S.N_QUERIES > S.KMEANS_K
+    ids, V = brute
+    assert (ids == np.arange(len(ids))).all()
+    C, A = _ivf_cells_numpy(V)
+    want = []
+    for qid in range(S.N_QUERIES):
+        probe = np.lexsort((np.arange(S.KMEANS_K), _chain_l2(C, V[qid])))
+        mask = np.isin(A, probe[: S.IVF_NPROBE])
+        mask[qid] = False
+        cos = np.zeros(len(V))
+        for j in range(V.shape[1]):
+            cos = cos + V[:, j] * V[qid, j]
+        idx = np.where(mask)[0]
+        top = idx[np.lexsort((idx, -cos[idx]))][: S.LSH_TOP_K]
+        want += [(qid, int(v), float(cos[v]), rk + 1) for rk, v in enumerate(top)]
+
+    def rows(name):
+        return sorted(
+            (int(r.qid), int(r.vec_id), float(r.cos), int(r.rk))
+            for r in REGISTRY[name].fn(spark, SF_DIR).collect()
+        )
+
+    inline = rows("q_sim_search_ivf")
+    assert inline == rows("q_sim_search_ivf_probe")
+    assert inline == sorted(want)
+
+
 def test_sim_ivf_recall_floor(spark, duck, brute):
     """Recall@3 of the learned-cell IVF vs GLOBAL brute force, pinned at
     the measured floor on this corpus (the within-probe test above proves
@@ -143,13 +182,13 @@ def test_ivf_cell_store_partition_pruned_probing(spark, duck, tmp_path):
     )
 
     store = str(tmp_path / "ivf_store")
-    carr = build_ivf_cell_store(spark, SF_DIR, store)
+    cents = build_ivf_cell_store(spark, SF_DIR, store)
     q = (
         load(spark, SF_DIR, "embeddings")
         .filter(F.col("vec_id") < N_QUERIES)
         .select(F.col("vec_id").alias("qid"), F.col("embedding").alias("qe"))
     )
-    res = ivf_probe_store(spark, store, carr, q)
+    res = ivf_probe_store(spark, store, cents, [tuple(r) for r in q.collect()])
     # (a) probe predicate is a planning-time partition filter
     corpus = spark.read.parquet(store)
     probed_cells = sorted(
@@ -238,7 +277,7 @@ def test_kmeans_local_trainer_bit_identical(spark, monkeypatch):
 
     for sf_dir in (SF_DIR, SF_DIR_MID):
         emb = load(spark, sf_dir, "embeddings")
-        seed = S._kmeans_seed_local(sf_dir)
+        seed, _ = S._kmeans_seed_local(sf_dir)
         assert seed is not None
         for iters in (S.KMEANS_ITERS - 1, S.KMEANS_ITERS):
             loc = S._kmeans_centroids_local(sf_dir, seed, iters=iters)
@@ -261,7 +300,7 @@ def test_kmeans_local_trainer_bit_identical(spark, monkeypatch):
     # the size gate: a corpus past the bound refuses the local regime
     monkeypatch.setattr(S, "KM_LOCAL_MAX_ROWS", 0)
     assert (
-        S._kmeans_centroids_local(SF_DIR, S._kmeans_seed_local(SF_DIR), 1)
+        S._kmeans_centroids_local(SF_DIR, S._kmeans_seed_local(SF_DIR)[0], 1)
         is None
     ), "local trainer must refuse a corpus past KM_LOCAL_MAX_ROWS"
 
@@ -291,68 +330,41 @@ def test_local_corpus_arms_propagate_errors(monkeypatch, arm, arg):
 
 
 def test_local_probes_bit_identical_to_window_path(spark):
-    """r18: the driver-side probe-cell ranking (_local_probes) must pick
-    exactly the cells the Spark crossJoin+row_number path picks — same
-    (qid, cid) pairs in rank order, same qe payload after the
-    array<float> round trip — at both test scales and in both training
-    regimes."""
-    import numpy as np
-    from pyspark.sql import Window as W
-    from pyspark.sql import functions as F
+    """r18: the driver-side probe-cell ranking (_local_probes) is the only
+    probe ranking (the Spark crossJoin+row_number window it was once
+    pinned against is deleted). It must pick exactly the cells the numpy
+    IVF reference picks — same (qid, cid) pairs, ranked by (dist, cid) —
+    with the query vectors of the one prefix read, at both test scales."""
+    import pyarrow.parquet as pq
 
-    from osmpbf_spark.catalog import load, table_row_count
+    from osmpbf_spark.catalog import load
     from osmpbf_spark.operators import similarity as S
 
     for sf_dir in (SF_DIR, SF_DIR_MID):
-        emb = load(spark, sf_dir, "embeddings")
-        seed = S._kmeans_seed_local(sf_dir)
-        batch = (
-            table_row_count(sf_dir, "embeddings") >= S.IVF_BATCH_MIN_ROWS
+        t = pq.read_table(f"{sf_dir}/embeddings.parquet").sort_by("vec_id")
+        assert t.column("vec_id").to_pylist() == list(range(t.num_rows))
+        V = np.array(t.column("embedding").to_pylist(), dtype=np.float64)
+        seed, queries = S._kmeans_seed_local(sf_dir)
+        assert seed == [(i, list(V[i])) for i in range(S.KMEANS_K)]
+        assert queries == [(i, list(V[i])) for i in range(S.N_QUERIES)]
+        _, cents = S._ivf_train_assign(
+            spark, load(spark, sf_dir, "embeddings"), seed=seed, sf_dir=sf_dir
         )
-        carr, _, cents = S._ivf_train_assign(
-            spark, emb, batch=batch, seed=seed, sf_dir=sf_dir
-        )
-        queries = [(i, v) for i, v in seed if i < S.N_QUERIES]
+        C, _ = _ivf_cells_numpy(V)
+        want = []
+        for qid in range(S.N_QUERIES):
+            d = _chain_l2(C, V[qid])
+            order = np.lexsort((np.arange(S.KMEANS_K), d))[: S.IVF_NPROBE]
+            want += [(qid, int(c)) for c in order]
         loc = S._local_probes(queries, cents, S.IVF_NPROBE)
-        # the Spark window path over the same centroids
-        q = emb.filter(F.col("vec_id") < S.N_QUERIES).select(
-            F.col("vec_id").alias("qid"), F.col("embedding").alias("qe")
+        assert [(q_, c) for q_, _, c in loc] == want, (
+            f"probe cells diverged at {sf_dir}"
         )
-        qc = q.crossJoin(F.broadcast(carr)).select(
-            "qid", "qe", F.explode(F.expr(S._IVF_QCELLS)).alias("dc")
-        )
-        wq = W.partitionBy("qid").orderBy(F.asc("dc.dist"), F.asc("dc.cid"))
-        spk = (
-            qc.withColumn("crk", F.row_number().over(wq))
-            .filter(F.col("crk") <= S.IVF_NPROBE)
-            .select("qid", "qe", F.col("dc.cid").alias("cid"))
-            .collect()
-        )
-        assert sorted((q_, c) for q_, _, c in loc) == sorted(
-            (int(r.qid), int(r.cid)) for r in spk
-        ), f"probe cells diverged at {sf_dir}"
-        # qe payload: exact f32 round trip of the corpus values
-        by_qid = {int(r.qid): np.array(r.qe, dtype=np.float32) for r in spk}
+        # qe payload: the corpus values, exact through the f32 column
         for q_, qe, _ in loc:
             assert (
-                np.array(qe, dtype=np.float32) == by_qid[q_]
+                np.array(qe, dtype=np.float32) == V[q_].astype(np.float32)
             ).all()
-
-
-def test_ivf_batch_dispatch_value_parity(spark, monkeypatch):
-    """The size dispatch (IVF_BATCH_MIN_ROWS) must be invisible in the
-    result: forcing the batched regime on the fixture corpus returns
-    exactly the lazy-HOF regime's rows (the DECON_BROADCAST_MAX
-    dispatch-test pattern)."""
-    from osmpbf_spark.catalog import REGISTRY
-    from osmpbf_spark.operators import similarity as S
-
-    fn = REGISTRY["q_sim_search_ivf"].fn
-    key = ["qid", "rk"]
-    hof = fn(spark, SF_DIR).toPandas().sort_values(key).reset_index(drop=True)
-    monkeypatch.setattr(S, "IVF_BATCH_MIN_ROWS", 0)
-    bat = fn(spark, SF_DIR).toPandas().sort_values(key).reset_index(drop=True)
-    assert bat.equals(hof), "dispatch regimes returned different rows"
 
 
 def test_sim_lsh_recall_and_exactness(spark, duck, brute):
@@ -592,21 +604,6 @@ def test_chain_l2_batch_property():
     check()
 
 
-def test_kmeans_batch_dispatch_value_parity(spark, monkeypatch):
-    """q_cluster_kmeans' size dispatch must be invisible in the result:
-    forcing the batched regime on the fixture corpus returns exactly the
-    lazy-HOF regime's rows (same pattern as the IVF dispatch pin)."""
-    from osmpbf_spark.catalog import REGISTRY
-    from osmpbf_spark.operators import similarity as S
-
-    fn = REGISTRY["q_cluster_kmeans"].fn
-    key = ["cid", "pos"]
-    hof = fn(spark, SF_DIR).toPandas().sort_values(key).reset_index(drop=True)
-    monkeypatch.setattr(S, "IVF_BATCH_MIN_ROWS", 0)
-    bat = fn(spark, SF_DIR).toPandas().sort_values(key).reset_index(drop=True)
-    assert bat.equals(hof), "kmeans dispatch regimes returned different rows"
-
-
 def test_ivf_store_upsert_incremental_maintenance(spark, tmp_path):
     """Incremental IVF upsert (r15): building a store from 80% of the
     corpus and upserting the other 20% with the EXISTING quantizer must
@@ -634,20 +631,19 @@ def test_ivf_store_upsert_incremental_maintenance(spark, tmp_path):
     orig_load = S.load
     S.load = lambda sp, sf, name: base  # train/assign over the base slice
     try:
-        carr = build_ivf_cell_store(spark, SF_DIR, store)
+        cents = build_ivf_cell_store(spark, SF_DIR, store)
     finally:
         S.load = orig_load
     import glob
 
     files_before = set(glob.glob(f"{store}/cid=*/*.parquet"))
-    n = ivf_store_upsert(spark, store, carr, delta)
+    n = ivf_store_upsert(spark, store, cents, delta)
     assert n == delta.count()
     # (b) append-only: every pre-upsert file still present and unmodified
     files_after = set(glob.glob(f"{store}/cid=*/*.parquet"))
     assert files_before < files_after
     # (a) same cells as a batch assignment with the same quantizer
-    cl = sorted((c.cid, list(c.ce)) for c in carr.collect()[0].cl)
-    assign = S._batch_assign_udf([c[0] for c in cl], [c[1] for c in cl])
+    assign = S._batch_assign_udf(*S._cents_matrix(cents))
     want = {
         (r.vec_id, r.cid)
         for r in delta.select(
@@ -667,16 +663,17 @@ def test_ivf_store_upsert_incremental_maintenance(spark, tmp_path):
     q = emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qe")
     )
-    res = ivf_probe_store(spark, store, carr, q)
+    res = ivf_probe_store(spark, store, cents, [tuple(r) for r in q.collect()])
     assert res.count() > 0
 
 
 def test_size_dispatch_probe_reads_no_data(spark, monkeypatch):
-    """r15 verdict Next #2 pin: the IVF_BATCH_MIN_ROWS regime probe must
-    be planning-time metadata only — parquet footer row counts, never a
-    Spark job over the corpus. Poisoning DataFrame.count() proves the
-    dispatch path never counts; a second table_row_count call must hit
-    the (path, size, mtime_ns) cache without re-opening the footer."""
+    """r15 verdict Next #2 pin: the KM_LOCAL_MAX_ROWS regime probe (local
+    vs distributed k-means training) must be planning-time metadata only
+    — parquet footer row counts, never a Spark job over the corpus.
+    Poisoning DataFrame.count() proves neither side of the dispatch ever
+    counts; a second table_row_count call must hit the
+    (path, size, mtime_ns) cache without re-opening the footer."""
     import pyarrow.parquet as pq
     from pyspark.sql import DataFrame
 
@@ -707,11 +704,13 @@ def test_size_dispatch_probe_reads_no_data(spark, monkeypatch):
         )
 
     monkeypatch.setattr(DataFrame, "count", no_count)
-    df_km = S.q_cluster_kmeans(spark, SF_DIR)
-    df_ivf = S.q_sim_search_ivf(spark, SF_DIR)
+    dfs = []
+    for bound in (S.KM_LOCAL_MAX_ROWS, 0):  # local, then distributed
+        monkeypatch.setattr(S, "KM_LOCAL_MAX_ROWS", bound)
+        dfs += [S.q_cluster_kmeans(spark, SF_DIR), S.q_sim_search_ivf(spark, SF_DIR)]
     monkeypatch.undo()
     # the plans still execute correctly after un-poisoning
-    assert df_km.count() > 0 and df_ivf.count() > 0
+    assert all(df.count() > 0 for df in dfs)
 
 
 def test_ivf_probe_query_matches_train_inline_and_skips_retrain(
@@ -754,12 +753,13 @@ def test_ivf_probe_query_matches_train_inline_and_skips_retrain(
     assert again.count() == len(pdf)
 
 
-def test_kmeans_one_job_per_round_bit_identical_to_reference(spark):
-    """r16 stage-floor restructure pin: the one-job-per-round trainer
-    (_kmeans_rounds — literal-centroid assignment, bounded k·DIM
-    per-round collects) reproduces the zero-driver-state reference plan
-    (_kmeans_centroids) bit-for-bit: same cells, same exact centroid
-    doubles, same member counts."""
+def test_kmeans_paths_bit_identical_to_reference(spark, monkeypatch):
+    """Both training paths (driver-local at the fixture's size, and
+    distributed with KM_LOCAL_MAX_ROWS forced to 0) reproduce the
+    zero-driver-state reference plan (_kmeans_centroids) bit-for-bit:
+    q_cluster_kmeans returns the same cells, exact centroid doubles and
+    member counts, and _ivf_train_assign's quantizer is the same final
+    centroid list."""
     import osmpbf_spark.operators.similarity as S
     from osmpbf_spark.catalog import load
 
@@ -768,19 +768,23 @@ def test_kmeans_one_job_per_round_bit_identical_to_reference(spark):
         (int(r.cid), int(r.pos)): (r.centroid, int(r.n_members))
         for r in S._kmeans_centroids(emb)[1].collect()
     }
-    got = {
-        (int(r.cid), int(r.pos)): (r.centroid, int(r.n_members))
-        for r in S._kmeans_rounds(spark, emb)[1].collect()
-    }
-    assert ref == got  # exact equality: floats must be bit-identical
-
-    # and the final-centroid list consumed by the IVF quantizer matches
-    cents = dict(S._kmeans_cents_final(spark, emb))
     by = {}
     for (c, p), (ce, _n) in ref.items():
         by.setdefault(c, {})[p] = ce
-    for c, vec in cents.items():
-        assert vec == [by[c][p] for p in range(1, S.DIM + 1)]
+    ref_cents = [
+        (c, [by[c][p] for p in range(1, S.DIM + 1)]) for c in sorted(by)
+    ]
+    for bound in (S.KM_LOCAL_MAX_ROWS, 0):
+        monkeypatch.setattr(S, "KM_LOCAL_MAX_ROWS", bound)
+        got = {
+            (int(r.cid), int(r.pos)): (r.centroid, int(r.n_members))
+            for r in S.q_cluster_kmeans(spark, SF_DIR).collect()
+        }
+        assert got == ref, f"KM_LOCAL_MAX_ROWS={bound}"  # exact floats
+        _, cents = S._ivf_train_assign(
+            spark, emb, seed=S._kmeans_seed_local(SF_DIR)[0], sf_dir=SF_DIR
+        )
+        assert cents == ref_cents, f"KM_LOCAL_MAX_ROWS={bound}"
 
 
 def test_np_round_half_up_matches_spark_round(spark):
@@ -850,9 +854,12 @@ def test_ivf_adversarial_recall_floor(spark):
     nprobe=1) while the approximation stays GOOD (>= 0.9 at nprobe=4).
     Deterministic by corpus seed. The 200k demo arm
     (scripts/ivf_demo.py --adversarial) pins the same floor at scale."""
+    import os
     import sys
 
-    sys.path.insert(0, "/root/repo/scripts")
+    sys.path.insert(
+        0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "scripts")
+    )
     import ivf_demo
 
     out = ivf_demo.build_adversarial_corpus(
@@ -954,12 +961,12 @@ def test_ivf_store_drift_triggers_retrain(spark, tmp_path):
 
     emb = load(spark, SF_DIR, "embeddings")
     store = str(tmp_path / "cells")
-    carr = S.build_ivf_cell_store(spark, SF_DIR, store)
+    cents = S.build_ivf_cell_store(spark, SF_DIR, store)
 
     st0 = S.ivf_store_staleness(store)
     assert st0["has_meta"] and not st0["stale"] and st0["growth"] == 1.0
-    none_carr, retrained, _ = S.ivf_store_retrain_if_stale(spark, store)
-    assert not retrained and none_carr is None
+    none_cents, retrained, _ = S.ivf_store_retrain_if_stale(spark, store)
+    assert not retrained and none_cents is None
 
     n0 = emb.count()
     for shift in (1, 2):  # upsert 2x the original corpus
@@ -967,14 +974,14 @@ def test_ivf_store_drift_triggers_retrain(spark, tmp_path):
             (F.col("vec_id") + shift * 1_000_000).alias("vec_id"),
             "embedding",
         )
-        S.ivf_store_upsert(spark, store, carr, delta)
+        S.ivf_store_upsert(spark, store, cents, delta)
 
     st1 = S.ivf_store_staleness(store)
     assert st1["rows_now"] == 3 * n0
     assert st1["growth"] >= S.IVF_RETRAIN_GROWTH and st1["stale"]
 
-    carr2, retrained, st = S.ivf_store_retrain_if_stale(spark, store)
-    assert retrained and st["stale"] and carr2 is not None
+    cents2, retrained, st = S.ivf_store_retrain_if_stale(spark, store)
+    assert retrained and st["stale"] and cents2 is not None
     # baseline reset: the retrained store is fresh again
     st2 = S.ivf_store_staleness(store)
     assert st2["rows_at_build"] == 3 * n0 and not st2["stale"]
@@ -982,7 +989,8 @@ def test_ivf_store_drift_triggers_retrain(spark, tmp_path):
     q = emb.filter(F.col("vec_id") < S.N_QUERIES).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qe")
     )
-    assert S.ivf_probe_store(spark, store, carr2, q).count() > 0
+    queries = [tuple(r) for r in q.collect()]
+    assert S.ivf_probe_store(spark, store, cents2, queries).count() > 0
 
 
 def test_ivf_store_gc_removes_orphans_and_temps(tmp_path, monkeypatch):
