@@ -40,29 +40,16 @@ class QueryDef:
 
 REGISTRY: dict[str, QueryDef] = {}
 
-# Oracle FIXTURES: full QueryDefs kept for CI parity (tests/parity.py
-# resolves names here too) but excluded from all_queries()/all_oracles(),
-# i.e. from the driver's correctness window and from bench.py. The one
-# resident is q_dedup_semantic's fixed-k form — a deliberately quadratic
-# pure-SQL-oracle shape whose only remaining job is anchoring
-# q_dedup_semantic_scalek's fixture-equivalence test (r09 verdict Next
-# #7: it measured 48.7x wall at 10x data and sat in slowest10 every
-# round; the production semantics live in scalek/q_dedup_embed).
-FIXTURES: dict[str, QueryDef] = {}
-
 
 def query(
     name: str,
     oracle: str | None = None,
     tags: tuple[str, ...] = (),
-    fixture: bool = False,
 ):
-    """Decorator registering a query under ``name`` with its DuckDB twin.
-    ``fixture=True`` routes to FIXTURES: CI-tested, never driver-facing."""
+    """Decorator registering a query under ``name`` with its DuckDB twin."""
 
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
-        target = FIXTURES if fixture else REGISTRY
-        target[name] = QueryDef(name, fn, oracle, tags, fn.__doc__ or "")
+        REGISTRY[name] = QueryDef(name, fn, oracle, tags, fn.__doc__ or "")
         return fn
 
     return deco

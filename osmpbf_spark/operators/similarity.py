@@ -11,8 +11,9 @@ Two paths, mirroring what a 100 TB vector corpus needs:
   and the result hash-matches with no rounding.
 - **q_sim_search_lsh** — the scale path: random-hyperplane LSH. Each vector
   gets a signature-bit bucket (JVM-side literal-plane folds, bit-exact with
-  the DuckDB oracle; a batch-matmul pandas UDF is kept as the high-dim
-  variant); queries probe their own bucket plus all hamming<=2 neighbors
+  the DuckDB oracle; a numpy matmul's blocked summation could flip the
+  sign of a near-zero plane dot, so buckets are never computed in numpy);
+  queries probe their own bucket plus all hamming<=2 neighbors
   (multiprobe); candidates are verified with the exact cosine and top-k'd.
   Candidate count ~ (probes/2^bits) * N instead of N per query; at 100 TB
   the bucket column is a partition/cluster key so a probe touches only its
@@ -31,7 +32,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import IntegerType
 
 from osmpbf_spark.catalog import (
     fanout,
@@ -125,22 +125,6 @@ _LSH_FLIPS = (
         for j in range(i + 1, LSH_BITS)
     ]
 )
-
-
-@pandas_udf(IntegerType())
-def lsh_bucket(emb: pd.Series) -> pd.Series:
-    """Random-hyperplane signature: bit i = sign(v . h_i). One matmul per
-    Arrow batch — the batch path for high-dim/many-bit signatures, where a
-    single BLAS matmul beats per-bit codegen folds. Not used by
-    q_sim_search_lsh itself (the query computes buckets JVM-side with the
-    same left-to-right chain as its DuckDB oracle, so the hash gate is
-    exact; numpy's blocked matmul summation could flip a sign on a
-    near-zero plane dot); tests pin this UDF's buckets == the expression's
-    on the test corpus."""
-    m = np.stack(emb.to_numpy())  # (batch, DIM)
-    bits = (m @ _HYPERPLANES.T) > 0  # (batch, LSH_BITS)
-    vals = (bits << np.arange(LSH_BITS)).sum(axis=1)
-    return pd.Series(vals.astype(np.int32))
 
 
 def _lsh_plane_dot_spark_sql(i: int) -> str:
@@ -1529,6 +1513,19 @@ SEM_THRESH = "0.4"  # within-cell cosine prune floor (text, parsed per engine)
 
 
 def _semantic_oracle() -> str:
+    """Fixed-k SemDeDup in DuckDB SQL: the cells are the SEM_K lowest-
+    vec_id seeds, every vector takes its L2-argmin seed (cid tie-break),
+    and a vector is removed when a lower-id vector of its cell has cosine
+    >= SEM_THRESH, the lowest such witness being its keeper.
+
+    Not a registered query. With k fixed, cell population grows with the
+    corpus and the within-cell pair term is quadratic: a Spark plan of
+    this form measured 48.7x wall at 10x data (scripts/scale_synth.py),
+    so Spark runs only q_dedup_semantic_scalek. Wherever that query's
+    k = max(SEM_K, n // SEM_CELL_TARGET) equals SEM_K (every test and
+    bench scale: 500-2 000 embeddings), its rows must equal this
+    oracle's exactly, cosines included — the reference the tests and
+    scripts/sweep_oracles.py compare it against."""
     pair_dot = _oracle_dot("x.embedding", "y.embedding")
     return f"""
     WITH c0 AS (SELECT vec_id AS cid, embedding AS ce
@@ -1552,88 +1549,6 @@ def _semantic_oracle() -> str:
     """
 
 
-@query(
-    "q_dedup_semantic",
-    oracle=_semantic_oracle(),
-    tags=("dedup", "sim"),
-    fixture=True,  # r10: deregistered from the driver/bench surface —
-    # the fixed-k form is quadratic by construction (48.7x wall at 10x
-    # data) and exists only as the pure-SQL-oracle anchor for
-    # q_dedup_semantic_scalek's fixture-equivalence test; CI parity via
-    # tests/test_similarity.py stays full-strength
-)
-def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup-style semantic deduplication (Abbas et al. 2023): assign
-    every embedding to a coarse cluster cell, then prune within-cell
-    near-duplicates — a vector is REMOVED when a lower-id vector in the
-    same cell has cosine ≥ SEM_THRESH; the emitted keeper is the lowest
-    qualifying witness. Pair search never leaves a cell, which is the
-    whole point of the method: clustering bounds the quadratic term to
-    (cell size)², never corpus².
-
-    Cells here are the SEM_K lowest-vec_id seed vectors (the
-    q_cluster_kmeans seeding) and assignment is the kmeans MAP-ONLY
-    shape: one broadcast row holds the whole seed list and argmin is
-    array_min over per-seed (dist, cid) structs — exact squared-L2
-    chains, tie-break on cid, identical to the oracle's ROW_NUMBER. The
-    assignment frame is localCheckpoint'ed because the self-join reads
-    it twice (the q_dedup_embed precedent — without the cut the k·DIM
-    distance folds run once per join side).
-
-    Exactness: assignment distances and the verification dot are the
-    same left-to-right f64 chains as the oracle, the prune filter is on
-    the UNROUNDED cosine (the repo's boundary convention), and the
-    keeper choice is a deterministic ROW_NUMBER — full value oracle for
-    an ANN-family method.
-
-    Scale — measured and stated honestly: with FIXED k, cell population
-    grows with the corpus and the within-cell join is quadratic — the
-    10x synthetic run measures 48.7x wall (scripts/scale_synth.py),
-    exactly the (10x)²/10 arithmetic predicts. That is inherent to flat
-    cluster-then-prune, not to this plan: production SemDeDup holds
-    cell SIZE constant by growing k with the corpus (~100k cells from
-    q_cluster_kmeans/IVF centroids), which keeps the pair term linear
-    but moves the n·k assignment cost onto an ANN index (FAISS-class)
-    rather than a flat argmin — a GPU/index concern outside a SQL
-    oracle's reach. This query therefore carries the SemDeDup SEMANTICS
-    under a full value oracle at fixture k; the scale-k production shape
-    is q_dedup_semantic_scalek (k grown with n, two-level IVF-style
-    assignment, per-cell numpy gram prune — 10x ratio 4.9 measured), and
-    the repo's scale-linear embedding near-dup path is q_dedup_embed
-    (hash buckets, no assignment step, 10x ratio ~2). The within-cell
-    self-join itself already has the scale shape: equi-join on the cell
-    key, work (cell size)² per task.
-    """
-    emb = load(spark, sf_dir, "embeddings")
-    seeds = (
-        emb.filter(F.col("vec_id") < SEM_K)
-        .select(
-            F.col("vec_id").alias("cid"),
-            F.expr("transform(embedding, x -> double(x))").alias("ce"),
-        )
-        .agg(F.collect_list(F.struct("cid", "ce")).alias("cl"))
-    )
-    return _semantic_prune(_semantic_assign(emb, seeds))
-
-
-def _semantic_assign(emb: DataFrame, seeds: DataFrame) -> DataFrame:
-    """Map-only cell assignment against the single-row broadcast seed
-    list, localCheckpoint'ed because the prune self-join reads it twice
-    (the q_dedup_embed precedent)."""
-    best = (
-        "array_min(transform(cl, c -> struct("
-        "aggregate(zip_with(embedding, c.ce, "
-        "(x, y) -> (double(x) - double(y)) * (double(x) - double(y))), "
-        "0D, (acc, v) -> acc + v) AS dist, c.cid AS cid)))"
-    )
-    return (
-        emb.crossJoin(F.broadcast(seeds))
-        .select("vec_id", "embedding", F.expr(best).alias("b"))
-        .select("vec_id", "embedding", F.col("b.cid").alias("cell"))
-        .localCheckpoint(eager=True)
-    )
-
-
 # removed-candidate rows per gram block; peak task memory is
 # _PRUNE_BLOCK x cellpop doubles (see _semantic_prune_pandas docstring)
 _PRUNE_BLOCK = 2048
@@ -1643,18 +1558,18 @@ def _semantic_prune_pandas(assigned: DataFrame) -> DataFrame:
     """Within-cell near-dup prune as ONE shuffle + per-cell numpy gram —
     the scale path for q_dedup_semantic_scalek.
 
-    The SQL self-join prune carries BOTH embeddings through every
-    candidate pair row (cell-pop² wide rows; its per-pair HOF dot
-    measured ~3.6us — 10s over the 10x corpus, and an unrolled 64-term
-    GetArrayItem chain was 5x WORSE, both recorded so they are not
-    retried). Here each cell's members cross the wire ONCE (groupBy cell,
+    A Spark SQL self-join prune on the cell key carries BOTH embeddings
+    through every candidate pair row (cell-pop² wide rows; its per-pair
+    HOF dot measured ~3.6us — 10s over the 10x corpus, and an unrolled
+    64-term GetArrayItem chain was 5x WORSE, both recorded so they are
+    not retried). Here each cell's members cross the wire ONCE (groupBy cell,
     Arrow-batched), and the pair dots are a numpy gram computed
     COLUMN-WISE — acc += outer(E[:,i], E[:,i]) for i in 0..DIM-1 — so
     every pair's cosine is the same left-to-right f64 chain as the
     oracle's unrolled + list (np.dot would pairwise-sum and drift in the
     last ulp). The per-removed lowest-keeper witness is resolved inside
-    the cell (a vector lives in exactly one cell), so the SQL window
-    disappears entirely.
+    the cell (a vector lives in exactly one cell), so no window over the
+    removed ids is needed.
 
     Memory per task (r11, re-derived for the SEM_K_MAX codebook cap):
     the gram is computed in ROW BLOCKS of _PRUNE_BLOCK removed-candidates
@@ -1714,43 +1629,6 @@ def _semantic_prune_pandas(assigned: DataFrame) -> DataFrame:
         .applyInPandas(
             prune_cell,
             "cell bigint, removed_id bigint, keeper_id bigint, cos double",
-        )
-    )
-
-
-def _semantic_prune(assigned: DataFrame) -> DataFrame:
-    """Within-cell near-dup prune over an assignment frame: equi-join on
-    the cell key, exact cosine verify, lowest-id witness per removed."""
-    x = assigned.select(
-        "cell",
-        F.col("vec_id").alias("keeper"),
-        F.col("embedding").alias("ea"),
-    )
-    y = assigned.select(
-        "cell",
-        F.col("vec_id").alias("removed"),
-        F.col("embedding").alias("eb"),
-    )
-    dot = F.aggregate(
-        F.zip_with("ea", "eb", lambda a, b: a.cast("double") * b.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    pairs = (
-        x.join(y, "cell")
-        .filter(F.col("keeper") < F.col("removed"))
-        .select("cell", "keeper", "removed", dot.alias("cos"))
-        .filter(F.col("cos") >= F.expr(f"CAST('{SEM_THRESH}' AS DOUBLE)"))
-    )
-    w = Window.partitionBy("removed").orderBy("keeper")
-    return (
-        pairs.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") == 1)
-        .select(
-            "cell",
-            F.col("removed").alias("removed_id"),
-            F.col("keeper").alias("keeper_id"),
-            "cos",
         )
     )
 
@@ -1817,32 +1695,38 @@ def _semantic_scalek_oracle() -> str:
     tags=("dedup", "sim"),
 )
 def q_dedup_semantic_scalek(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup with k GROWN with the corpus and a TWO-LEVEL (IVF-style)
-    assignment — the production answer to q_dedup_semantic's documented
-    fixed-k quadratic. Fine-cell count k = max(SEM_K, n / SEM_CELL_TARGET)
-    is computed INSIDE the plan (one scalar aggregate broadcast into the
-    seed filter; the oracle computes the same k via a scalar subquery),
-    so cell population stays ~constant as the corpus grows and the
-    within-cell pair term stays LINEAR in n.
+    """SemDeDup-style semantic deduplication (Abbas et al. 2023): assign
+    every embedding to a cluster cell, then prune within-cell
+    near-duplicates — a vector is REMOVED when a lower-id vector in the
+    same cell has cosine >= SEM_THRESH; the emitted keeper is the lowest
+    qualifying witness. Pair search never leaves a cell.
+
+    k is GROWN with the corpus and assignment is TWO-LEVEL (IVF-style):
+    with a fixed k the within-cell pair term is quadratic (48.7x wall at
+    10x data, see _semantic_oracle). Fine-cell count k = max(SEM_K,
+    n / SEM_CELL_TARGET) is computed INSIDE the plan (one scalar
+    aggregate broadcast into the seed filter; the oracle computes the
+    same k via a scalar subquery), so cell population stays ~constant as
+    the corpus grows and the within-cell pair term stays LINEAR in n.
 
     Assignment is hierarchical exactly like an IVF coarse quantizer:
     every vector first argmins over the SEM_K coarse seeds (fixed cost),
     then argmins only over the fine seeds ROUTED to that coarse cell —
     n·(SEM_K + k/SEM_K) distance evaluations instead of the flat n·k
     scan that made the flat scale-k variant measure 10.8x at 10x data
-    (the flat variant is the recorded negative result this replaces;
-    fixed-k measured 48.7x). Coarse seeds are a subset of fine seeds
-    (k >= SEM_K), so a coarse cell is empty of fine seeds only when
+    (the flat variant is the recorded negative result this replaces).
+    Coarse seeds are a subset of fine seeds (k >= SEM_K), so a coarse
+    cell is empty of fine seeds only when
     duplicate seed vectors tie-break a seed away from itself; vectors
     routed to such a cell carry a NULL fine cell and drop out of the
     pair join in BOTH engines (null never equi-joins; the oracle's inner
     join drops them identically).
 
-    Same exactness discipline as q_dedup_semantic: L2 assignment chains
-    with cid tie-break at both levels, unrounded cosine filter,
-    deterministic lowest-id witness — full value oracle for an IVF-style
-    method. scripts/scale_synth.py carries this query in its default
-    10x measurement set.
+    Exactness: L2 assignment chains with cid tie-break at both levels,
+    the prune filter on the UNROUNDED cosine (the repo's boundary
+    convention), deterministic lowest-id witness — full value oracle for
+    an IVF-style method. scripts/scale_synth.py carries this query in its
+    default 10x measurement set.
 
     r10 rewrite — assignment moved from Catalyst HOF lambdas into the
     prune stage's exact-chain numpy style: the first 100x scale smoke

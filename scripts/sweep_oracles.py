@@ -1,13 +1,13 @@
 """Full-registry oracle sweep — the driver's correctness gate, locally.
 
-Runs EVERY registered query (not just the 50-query driver window) PLUS the
-CI-only FIXTURES tier against their DuckDB twins at sf0.01 and compares
-with tests/parity.assert_frames_match (strict value equality — a superset
-of the driver's order-insensitive value-hash). When both SemDeDup forms run
-(any full sweep), the scale-k == fixed-k fixture-equivalence invariant is
-asserted in the same pass. Exit code 0 means every oracle-carrying query is
-exactly equal, every rows-only query executed, and every cross-query
-invariant held; non-zero prints the failures.
+Runs EVERY registered query (not just the 50-query driver window) against
+its DuckDB twin at sf0.01 and compares with tests/parity.assert_frames_match
+(strict value equality — a superset of the driver's order-insensitive
+value-hash). When q_dedup_semantic_scalek runs at a scale where its k is
+SEM_K, its rows are also compared with the fixed-k SemDeDup SQL oracle
+(similarity._semantic_oracle) in the same pass. Exit code 0 means every
+oracle-carrying query is exactly equal, every rows-only query executed, and
+every cross-query invariant held; non-zero prints the failures.
 
 Usage:
     python scripts/sweep_oracles.py              # full registry at sf0.01
@@ -36,7 +36,17 @@ sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(
 
 import duckdb  # noqa: E402
 
-from osmpbf_spark.catalog import TABLES, all_oracles, all_queries  # noqa: E402
+from osmpbf_spark.catalog import (  # noqa: E402
+    TABLES,
+    all_oracles,
+    all_queries,
+    table_row_count,
+)
+from osmpbf_spark.operators.similarity import (  # noqa: E402
+    SEM_CELL_TARGET,
+    SEM_K,
+    _semantic_oracle,
+)
 from osmpbf_spark.session import get_spark  # noqa: E402
 from parity import assert_frames_match  # noqa: E402
 
@@ -68,15 +78,6 @@ def main() -> int:
         )
 
     qs, oracles = all_queries(), all_oracles()
-    # the CI-only FIXTURES tier (e.g. fixed-k q_dedup_semantic) keeps its
-    # oracle parity gate here too — excluded from driver/bench surfaces,
-    # not from validation
-    from osmpbf_spark.catalog import FIXTURES
-
-    for n, q in FIXTURES.items():
-        qs.setdefault(n, q.fn)
-        if q.oracle is not None:
-            oracles.setdefault(n, q.oracle)
     unknown = only - set(qs)
     if unknown:
         # fail loudly: a typo'd name silently running nothing would make
@@ -85,18 +86,13 @@ def main() -> int:
         return 2
     names = [n for n in qs if not only or n in only]
     failures: list[str] = []
-    # cross-query invariants asserted in the same pass (r10 verdict Next
-    # #7): at fixture scale k = SEM_K, so scale-k SemDeDup must equal the
-    # fixed-k FIXTURES query exactly, cosines included — the anchor that
-    # keeps the fixtures tier from silently rotting between test runs
-    _EQUIV_PAIR = ("q_dedup_semantic_scalek", "q_dedup_semantic")
-    kept: dict[str, object] = {}
+    scalek = None  # q_dedup_semantic_scalek's frame, for the anchor below
     t0 = time.time()
     for i, name in enumerate(names, 1):
         try:
             pdf = qs[name](spark, sf_dir).toPandas()
-            if name in _EQUIV_PAIR:
-                kept[name] = pdf
+            if name == "q_dedup_semantic_scalek":
+                scalek = pdf
             if name in oracles:
                 duck_pdf = con.execute(oracles[name]).df()
                 assert_frames_match(pdf, duck_pdf, name)
@@ -109,19 +105,25 @@ def main() -> int:
             traceback.print_exc()
         print(f"[{i}/{len(names)}] {name}: {status}", flush=True)
 
-    if all(n in kept for n in _EQUIV_PAIR):
-        try:
-            cols = ["cell", "removed_id", "keeper_id", "cos"]
-            a = kept[_EQUIV_PAIR[0]][cols].sort_values(cols)
-            b = kept[_EQUIV_PAIR[1]][cols].sort_values(cols)
-            assert a.reset_index(drop=True).equals(b.reset_index(drop=True)), (
-                "scale-k fixture decisions diverge from fixed-k"
-            )
-            print("equiv[scalek==fixedk]: green", flush=True)
-        except Exception as exc:  # noqa: BLE001
-            failures.append("equiv[scalek==fixedk]")
-            print(f"equiv[scalek==fixedk]: FAIL: {exc}", flush=True)
-            traceback.print_exc()
+    # cross-query invariant asserted in the same pass: where
+    # k = max(SEM_K, n // SEM_CELL_TARGET) is SEM_K, every seed routes to
+    # itself, so scale-k SemDeDup must equal the fixed-k SQL oracle
+    # exactly, cosines included
+    if scalek is not None:
+        if table_row_count(sf_dir, "embeddings") // SEM_CELL_TARGET > SEM_K:
+            print("equiv[scalek==fixedk]: skipped (k > SEM_K)", flush=True)
+        else:
+            try:
+                assert_frames_match(
+                    scalek,
+                    con.execute(_semantic_oracle()).df(),
+                    "equiv[scalek==fixedk]",
+                )
+                print("equiv[scalek==fixedk]: green", flush=True)
+            except Exception as exc:  # noqa: BLE001
+                failures.append("equiv[scalek==fixedk]")
+                print(f"equiv[scalek==fixedk]: FAIL: {exc}", flush=True)
+                traceback.print_exc()
 
     # invariants are counted in their own denominator — folding them into
     # the query tally misreported '149/150 green' with zero red QUERIES

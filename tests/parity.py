@@ -65,11 +65,9 @@ def assert_frames_match(spark_pdf: pd.DataFrame, duck_pdf: pd.DataFrame, name: s
 
 
 def check_query(spark, duck, sf_dir: str, name: str):
-    from osmpbf_spark.catalog import FIXTURES, REGISTRY
+    from osmpbf_spark.catalog import REGISTRY
 
-    # FIXTURES holds CI-only QueryDefs (never driver-facing) — same
-    # parity contract, just not in the registry the driver consumes
-    q = REGISTRY.get(name) or FIXTURES[name]
+    q = REGISTRY[name]
     spark_pdf = q.fn(spark, sf_dir).toPandas()
     if q.oracle is None:
         assert len(spark_pdf) >= 0  # rows-only check

@@ -21,14 +21,15 @@ BANNED = ("HUGEINT", "INT128")
 
 
 def _oracle_items():
-    from osmpbf_spark.catalog import FIXTURES
+    from osmpbf_spark.operators.similarity import _semantic_oracle
     from osmpbf_spark.sources.pbf.fixture import ensure_fixture
 
     ensure_fixture()  # pbf oracles read the fixture parquet images
-    items = dict(all_oracles())  # also populates FIXTURES via import
-    items.update(
-        {n: q.oracle for n, q in FIXTURES.items() if q.oracle is not None}
-    )
+    items = dict(all_oracles())
+    # the fixed-k SemDeDup SQL is no registered query's oracle, but the
+    # tests compare q_dedup_semantic_scalek's rows against it, so it is
+    # bound under the same type lints
+    items["q_dedup_semantic_fixedk_ref"] = _semantic_oracle()
     return sorted(items.items())
 
 

@@ -9,14 +9,14 @@ from __future__ import annotations
 
 import pytest
 
-from osmpbf_spark.catalog import FIXTURES, REGISTRY, all_queries
+from osmpbf_spark.catalog import REGISTRY, all_queries
 from tests.conftest import SF_DIR
 
 all_queries()
 
 
 def plan_of(spark, name: str) -> str:
-    df = (REGISTRY.get(name) or FIXTURES[name]).fn(spark, SF_DIR)
+    df = REGISTRY[name].fn(spark, SF_DIR)
     return df._jdf.queryExecution().executedPlan().toString()
 
 
@@ -465,18 +465,6 @@ def test_pagerank_rank_joins_are_broadcast(spark):
     p = plan_of(spark, "q_pagerank")
     assert p.count("BroadcastHashJoin") >= 2 * PR_ITERS
     assert "SortMergeJoin" not in p
-
-
-def test_dedup_semantic_pairs_join_on_cell(spark):
-    """The within-cell pair search must be an equi-join keyed on the cell
-    id reading the CHECKPOINTED assignment (the k·DIM distance folds run
-    once, during checkpoint materialization — the assignment BNLJ lives
-    in that subplan, not here), and the cosine floor must sit in the
-    join condition so non-qualifying pairs die before the exchange."""
-    p = plan_of(spark, "q_dedup_semantic")
-    assert "CartesianProduct" not in p
-    assert "BroadcastHashJoin" in p or "SortMergeJoin" in p
-    assert "Scan ExistingRDD" in p  # both join sides read the checkpoint
 
 
 def test_session_funnel_single_exchange(spark):

@@ -264,6 +264,32 @@ def test_ivf_batch_assignment_bit_identical_to_hof(spark):
     assert (C_hof == C_b).all(), "batch trainer diverged from HOF trainer"
 
 
+def test_kmeans_partial_exchange_arm_bit_identical(spark, monkeypatch):
+    """The batch trainer's two per-round reductions agree to the last
+    bit: with KM_PARTIAL_COLLECT_MAX_PARTS = 0 every corpus takes the
+    exchange arm (groupBy + F.sum), which must give the collect arm's
+    (_sum_partials) cell ids, centroid matrix and final-round rows."""
+    from pyspark.sql import Row
+
+    from osmpbf_spark.catalog import load
+    from osmpbf_spark.operators import similarity as S
+
+    emb = load(spark, SF_DIR, "embeddings")
+    as_t = lambda rows: sorted(
+        (int(r.cid), int(r.pos), float(r.centroid), int(r.n_members))
+        for r in rows
+    )
+    cids_c, C_c, cent_c = S._kmeans_centroids_batch(spark, emb)
+    monkeypatch.setattr(S, "KM_PARTIAL_COLLECT_MAX_PARTS", 0)
+    cids_x, C_x, cent_x = S._kmeans_centroids_batch(spark, emb)
+    # the exchange arm returns collected Rows, the collect arm its own
+    # namedtuples: proves each side ran
+    assert isinstance(cent_x[0], Row) and not isinstance(cent_c[0], Row)
+    assert list(cids_x) == list(cids_c)
+    assert np.array_equal(C_x, C_c), "exchange arm diverged from collect"
+    assert as_t(cent_x) == as_t(cent_c)
+
+
 def test_kmeans_local_trainer_bit_identical(spark, monkeypatch):
     """r18: the driver-local Lloyd trainer (_kmeans_centroids_local,
     corpora <= KM_LOCAL_MAX_ROWS) must reproduce the distributed batch
@@ -388,25 +414,6 @@ def test_sim_lsh_recall_and_exactness(spark, duck, brute):
     assert hits >= 3, f"LSH recall@1 too low: {hits}/{N_QUERIES}"
 
 
-def test_lsh_bucket_udf_matches_expression(spark):
-    """The batch-matmul bucket UDF (the high-dim scale path) must agree
-    with the JVM expression the query + oracle use — guards the claim that
-    numpy's blocked summation doesn't flip any sign bit on this corpus."""
-    from osmpbf_spark.catalog import load
-    from osmpbf_spark.operators.similarity import _lsh_bucket_expr, lsh_bucket
-
-    emb = load(spark, SF_DIR, "embeddings")
-    diff = (
-        emb.select(
-            lsh_bucket("embedding").alias("u"),
-            _lsh_bucket_expr().cast("int").alias("e"),
-        )
-        .filter("u <> e")
-        .count()
-    )
-    assert diff == 0
-
-
 def test_vec_quantize_parity(spark, duck):
     """Exploded int8 quantization hash-matches element-by-element; values
     stay in [-127, 127] and each vector's max-|x| element hits ±127."""
@@ -449,15 +456,21 @@ def test_cluster_kmeans_parity_and_semantics(spark, duck, brute):
 
 
 def test_dedup_semantic_parity_and_semantics(spark, duck, brute):
-    """q_dedup_semantic: exact oracle parity plus an independent numpy
-    replication of the SemDeDup decision — seed-cell assignment by L2
-    argmin (cid tie-break) and within-cell lowest-id witness above the
-    cosine floor."""
-    from osmpbf_spark.operators.similarity import SEM_K, SEM_THRESH
+    """q_dedup_semantic_scalek: exact oracle parity plus an independent
+    numpy replication of the SemDeDup decision — seed-cell assignment by
+    L2 argmin (cid tie-break) and within-cell lowest-id witness above the
+    cosine floor. The flat SEM_K-seed replication is valid here because
+    k = max(SEM_K, n // SEM_CELL_TARGET) = SEM_K on this corpus."""
+    from osmpbf_spark.operators.similarity import (
+        SEM_CELL_TARGET,
+        SEM_K,
+        SEM_THRESH,
+    )
 
-    pdf, _ = check_query(spark, duck, SF_DIR, "q_dedup_semantic")
+    pdf, _ = check_query(spark, duck, SF_DIR, "q_dedup_semantic_scalek")
     assert len(pdf) > 0
     ids, V = brute
+    assert len(ids) // SEM_CELL_TARGET <= SEM_K
     order = np.argsort(ids)
     ids, V = ids[order], V[order]
     seeds = V[ids < SEM_K]
@@ -484,15 +497,16 @@ def test_dedup_semantic_scalek_parity_and_fixture_equivalence(spark, duck):
     """q_dedup_semantic_scalek: exact oracle parity (two-level assignment
     + pandas gram prune vs the two-level SQL oracle), and at fixture
     scale — where k = max(SEM_K, n/250) = SEM_K, so every seed routes to
-    itself and the hierarchy collapses — its decisions must equal the
-    flat fixed-k query's exactly, cosines included (the pandas gram's
+    itself and the hierarchy collapses — its rows must equal the flat
+    fixed-k SQL oracle's exactly, cosines included (the pandas gram's
     column-ordered accumulation is the same f64 chain as the SQL fold)."""
+    from osmpbf_spark.operators.similarity import _semantic_oracle
+    from tests.parity import assert_frames_match
+
     pdf, _ = check_query(spark, duck, SF_DIR, "q_dedup_semantic_scalek")
-    flat, _ = check_query(spark, duck, SF_DIR, "q_dedup_semantic")
-    key = ["cell", "removed_id", "keeper_id", "cos"]
-    a = pdf[key].sort_values(key).reset_index(drop=True)
-    b = flat[key].sort_values(key).reset_index(drop=True)
-    assert a.equals(b), "scale-k fixture decisions diverge from fixed-k"
+    assert_frames_match(
+        pdf, duck.sql(_semantic_oracle()).df(), "scalek==fixedk"
+    )
 
 
 def test_scalek_empty_coarse_guard(spark, tmp_path):
