@@ -20,4 +20,10 @@ Everything is declarative DataFrame/SQL so Catalyst handles pushdown, pruning,
 join planning and AQE; Python only appears in Arrow-batched vectorized form.
 """
 
+from osmpbf_spark import _zipimport_cache
+
 __version__ = "0.1.0"
+
+# Every process that runs engine code imports this package: the driver,
+# the planner workers and the executor workers.
+_zipimport_cache.install()

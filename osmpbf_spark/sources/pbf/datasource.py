@@ -143,10 +143,18 @@ def _resolve_paths(path: str) -> list[str]:
 
 
 def _bool_opt(options, key: str, default: bool = False) -> bool:
+    """A boolean option: true|false, 1|0 or yes|no in any case; ``""`` (a
+    templated option left empty) is false. Anything else raises, so a typo
+    such as ``with_meta=ture`` cannot silently read as false."""
     v = options.get(key)
     if v is None:
         return default
-    return str(v).lower() in ("true", "1", "yes")
+    s = str(v).lower()
+    if s in ("true", "1", "yes"):
+        return True
+    if s in ("false", "0", "no", ""):
+        return False
+    raise ValueError(f"{key} must be true|false, got {v!r}")
 
 
 def _pos_mode(options) -> str | None:
@@ -1114,7 +1122,15 @@ class OsmPbfStreamReader(DataSourceStreamReader):
     holds no bytecode, so that import takes 1.08-1.50 s against
     0.39-0.42 s from site-packages: ~1.1 s of a ~5 s lake_stream pass
     before its first job, against ~0.5 s in this engine's traced spans.
-    A faster stream decode cannot win that back.
+    A faster stream decode cannot win that back. Each Python worker call
+    also starts with ``importlib.invalidate_caches()``, which on CPython
+    3.10-3.11 re-read pyspark.zip's directory once per zipimporter (16
+    reads and 213-255 ms per call inside an executor task, measured with
+    ``scripts/pyworker_call_cost.py``); ``osmpbf_spark._zipimport_cache``
+    cuts that to one read per changed archive in every process that
+    imported the engine (0 reads, ~0.1 ms). This runner's
+    single call comes before its fresh interpreter imports the engine, so
+    it still pays that once per run.
     """
 
     def __init__(self, options, schema: StructType):

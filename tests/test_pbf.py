@@ -1074,6 +1074,38 @@ def test_declared_schema_rejects_what_the_layout_lacks(spark, ddl, opts,
         ds.streamReader(StructType.fromDDL(ddl))
 
 
+@pytest.mark.parametrize(
+    "value, want",
+    [("true", True), ("YES", True), ("1", True), ("False", False),
+     ("no", False), ("0", False), ("", False), (None, False)],
+)
+def test_bool_option_spellings(value, want):
+    """Boolean options accept true/false, 1/0 and yes/no in any case; an
+    empty (templated) value reads as false, an absent one as the default."""
+    from osmpbf_spark.sources.pbf.datasource import _bool_opt
+
+    opts = {} if value is None else {"with_meta": value}
+    assert _bool_opt(opts, "with_meta") is want
+
+
+@pytest.mark.parametrize(
+    "key, value", [("with_meta", "ture"), ("filter_pushdown", "on")]
+)
+def test_mistyped_bool_option_raises(key, value):
+    """A boolean option with any other value raises a ValueError naming the
+    option and the value, instead of silently reading as false (which drops
+    ``meta`` or turns block pruning off)."""
+    import re
+
+    from osmpbf_spark.sources.pbf.datasource import OsmPbfDataSource
+
+    ds = OsmPbfDataSource({"path": "unused.pbf", key: value})
+    with pytest.raises(ValueError,
+                       match=re.escape(f"{key} must be true|false, got "
+                                       f"'{value}'")):
+        ds.reader(ds.schema())
+
+
 def test_declared_schema_error_precedes_tasks(spark, fixture_dir):
     """Through Spark, the same error names the column when the reader is
     initialized at planning, before any task runs."""
