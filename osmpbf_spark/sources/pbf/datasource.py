@@ -23,6 +23,11 @@ PySpark Python Data Source API (pyspark.sql.datasource, PySpark 4.x):
   (OSMPbfPigLoader.java:47-73), stated once in ``_LAYOUT``; a declared read
   schema (``.schema(...)``) may select and reorder its columns by name.
   Unlike the reference, ``relation`` is implemented (java:291 falls through).
+- A read decodes only the fields its columns need (``OsmPbfReader.
+  decode_tags`` / ``decode_meta``): tags, or a ``tag_key`` filter, need the
+  keys/vals fields, ``meta`` needs Info/DenseInfo. A read without them
+  steps over those fields unread and unvalidated, where the reference
+  decodes every DenseInfo and drops it (SURVEY §1.3).
 
 Options (SURVEY.md §7 Milestone 2):
   path            file, directory, or glob of .pbf files
@@ -222,14 +227,15 @@ def _tag_map(cols, n: int, block_end: int) -> pa.Array:
 
 
 def _tag_string(cols, n: int, block_end: int) -> pa.Array:
-    # the reference's lossy legacy "k:v;" concatenation, for parity
-    offs = cols["tag_offsets"]
-    pairs = np.array(
-        [f"{k}:{v};" for k, v in zip(cols["tag_keys"], cols["tag_vals"])],
-        dtype=object,
+    # the reference's lossy legacy "k:v;" concatenation, for parity: one
+    # "k:v;" per tag, joined per row ("" for an untagged row)
+    pairs = pc.binary_join_element_wise(
+        pa.array(cols["tag_keys"], type=pa.string()), ":",
+        pa.array(cols["tag_vals"], type=pa.string()), ";", "",
     )
-    strings = ["".join(pairs[offs[i] : offs[i + 1]]) for i in range(n)]
-    return pa.array(strings, type=pa.string())
+    return pc.binary_join(
+        pa.ListArray.from_arrays(
+            pa.array(cols["tag_offsets"], type=pa.int32()), pairs), "")
 
 
 _META = StructType(
@@ -431,11 +437,11 @@ def _pig_x2(batches):
     idx = 0
     last_batch = None
     for b in batches:
-        take = [i for i in range(b.num_rows) if (idx + i) % 2 == 1]
+        take = np.arange(1 - idx % 2, b.num_rows, 2)
         idx += b.num_rows
         last_batch = b
-        if take:
-            yield b.take(pa.array(take, type=pa.int64()))
+        if len(take):
+            yield b.take(take)
     if idx % 2 == 1 and last_batch is not None:
         yield last_batch.slice(last_batch.num_rows - 1, 1)
 
@@ -503,6 +509,9 @@ class OsmPbfReader(DataSourceReader):
         self.bounds: dict[str, list[float]] = {}
         self._warned_changesets = False
         self.columns = _read_columns(options, schema)
+        # the decoder leaves out the fields of what the read never uses
+        self.decode_tags = "tags" in self.columns or bool(self.tag_key)
+        self.decode_meta = "meta" in self.columns
 
     def _block_prunable(self, stats: dict | None) -> bool:
         """True if stats prove the block holds no matching rows."""
@@ -637,15 +646,17 @@ class OsmPbfReader(DataSourceReader):
         4 x 19.5 MB instead of 33.6 + 33.6 + 10.9 MB on the 8M-node
         dense_scan file) did not win. On a 4-core host, 10 s runs in
         alternating order, rows_per_s had a median of 3.00M against 3.39M,
-        3 of 6 pairs won, and peak RSS rose 8%. A pass there is ~9 CPU-s
-        for 2.1-2.8 s of wall (JVM 3.4-4.6 s, Python workers 4.0-4.8 s):
-        the time is in Spark's row conversion, not in how the blocks are
-        split. Re-measured later (same host, 10 pairs in alternating
-        order): four 20.5 MB partitions gave a median of 2.78 s a pass
-        against 2.82 s for the default three, within noise. A dense_scan
-        pass uses 9.0-10.3 CPU-s in 2.7-3.3 s of wall on 4 cores, 4.5 of
-        them in the JVM and 5.1 in Python workers: the pass is CPU-bound,
-        and a different split does not change the CPU it needs."""
+        3 of 6 pairs won, and peak RSS rose 8%. Re-measured later (same
+        host, 10 pairs in alternating order): four 20.5 MB partitions gave
+        a median of 2.78 s a pass against 2.82 s for the default three,
+        within noise. A dense_scan pass uses 9.0-10.3 CPU-s in 2.7-3.3 s
+        of wall on 4 cores, 4.5 of them in the JVM and 5.1 in Python
+        workers: the pass is CPU-bound, and a different split does not
+        change the CPU it needs. Cutting the Python workers' CPU does:
+        decoding only the fields a read returns, and multi-byte varints a
+        word at a time, took the dense_scan pass from 2.32 to 1.93 s
+        (median of 10 pairs; see ``BlockDecoder`` and
+        ``wire.decode_packed_uint``)."""
         files = []  # (path, kept block ranges, their payload bytes)
         for path, index in zip(paths, self._index_files(paths)):
             kept = [
@@ -717,9 +728,9 @@ class OsmPbfReader(DataSourceReader):
         Negative result, recorded so it is not retried (dense_scan, 4-core
         host, one Spark session, 5 passes each): merging 8 blocks into
         ~64k-row batches before yielding left the pass unchanged (median
-        3.06 vs 3.12 s). Spark's per-row conversion, not the batch count,
-        sets the pace; see ``_to_batch`` for how little a free decode would
-        buy."""
+        3.06 vs 3.12 s). The batch count does not set the pace; the CPU
+        spent per row, in the decode and in Spark's ingest of each batch,
+        does (see ``_to_batch``)."""
         with fs.fs_open(path, "rb") as f:
             for offset, size in ranges:
                 # a damaged blob names its file and byte offset, not just
@@ -755,7 +766,8 @@ class OsmPbfReader(DataSourceReader):
             zlib_only="zlib_only" in self.compat,
         )
         bd = decode.BlockDecoder(
-            payload, compat_stale_tags="stale_tags" in self.compat
+            payload, compat_stale_tags="stale_tags" in self.compat,
+            tags=self.decode_tags, meta=self.decode_meta,
         )
         if (decode.GROUP_CHANGESETS in bd.group_types()
                 and self.primitive != "changeset"):
@@ -799,12 +811,17 @@ class OsmPbfReader(DataSourceReader):
         schema (see _read_columns); ``block_end`` is the file position just
         past the block's blob.
 
-        Bound on what a faster decode can buy, measured (dense_scan, 4-core
-        host, one Spark session, 5 passes each): a decode-free source
-        yielding prebuilt batches of this shape takes 2.5 s a pass with the
-        empty ``tags`` map and 1.9 s without it, against 3.1 s for this
-        reader.
-        A free decode would cut a dense_scan pass by about 20% at most."""
+        What the decode costs, measured (dense_scan, 4-core host, one Spark
+        session, 5 passes each): a decode-free source yielding prebuilt
+        batches of this shape took 2.5 s a pass with the empty ``tags`` map
+        and 1.9 s without it, against 3.1 s for this reader at the time, so
+        Spark's ingest of the batches is most of a pass. The decode is the
+        rest and was worth cutting: decoding only the fields a read returns
+        and the word-gather varint tier raised dense_scan rows_per_s from
+        3.46M to 4.14M (median of 10 alternating pairs, 9 of 10 won) and
+        cut the traced ``decode.node.s`` from 1.51 to 1.04 s.
+        ``scripts/decode_cost.py`` prints the per-row cost of each
+        layer."""
         return pa.RecordBatch.from_arrays(
             [build(cols, n, block_end) for build in self.columns.values()],
             names=list(self.columns),

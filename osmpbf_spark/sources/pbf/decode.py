@@ -29,6 +29,12 @@ This is the engine-side replacement for the reference's scan pipeline
   java:270-293). Wire types, parallel-array lengths and string ids are
   checked, so a malformed block raises ValueError, which the reader
   reports naming the file and the block's offset.
+- **Only the fields a read returns.** A decoder told that the read returns
+  no tags or no meta leaves the keys/vals and Info/DenseInfo fields out of
+  its walk, as Impala's scanners materialise only the slots a query
+  references; the reference decodes every DenseInfo and drops it (SURVEY
+  §1.3). Those fields are stepped over, not decoded or validated, while
+  the message framing around them still is.
 - **Correctness fixes over the reference** (SURVEY.md §1.4, treated as spec
   decisions): coordinate offset applied once per absolute value, not re-added
   per delta (java:239-240); no stale-tag carry-over (java:242-262); way/
@@ -38,6 +44,7 @@ This is the engine-side replacement for the reference's scan pipeline
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import json
 import lzma
@@ -633,11 +640,23 @@ _ENTITY = {
     GROUP_CHANGESETS: {1: ("id", "int")},
 }
 _PACKED = ("uint", "delta")
-_ENTITY_WIRE = {
-    kind: {f: _VARINT if how in ("sint", "int") else _LEN
-           for f, (_, how) in table.items()}
-    for kind, table in _ENTITY.items()
-}
+# the output that needs each optional field, entity columns and DenseNodes
+# fields alike: a decoder without that output leaves the field out of its
+# walk. Every other field belongs to "id", the output every read has.
+_NEEDS = {"keys": "tags", "vals": "tags", "info": "meta"}
+_DENSE_NEEDS = {DENSE_KEYS_VALS: "tags", DENSE_INFO: "meta"}
+
+
+@functools.cache
+def _entity_fields(kind: int, outputs: frozenset) -> tuple[dict, dict]:
+    """``_ENTITY[kind]`` without the fields of outputs not in ``outputs``,
+    and the wire type of each field left."""
+    table = {f: (col, how) for f, (col, how) in _ENTITY[kind].items()
+             if _NEEDS.get(col, "id") in outputs}
+    return table, {f: _VARINT if how in ("sint", "int") else _LEN
+                   for f, (_, how) in table.items()}
+
+
 # Info and DenseInfo number their fields alike: field -> meta column. Info
 # holds plain varints, DenseInfo one packed array per field.
 _META = {INFO_VERSION: "meta_version", INFO_TIMESTAMP: "meta_timestamp_ms",
@@ -666,12 +685,12 @@ def _varint_to_int64(v: int) -> int:
     return v - (1 << 64) if v >= (1 << 63) else v
 
 
-def _empty_tags(n: int) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    return (
-        np.zeros(n + 1, dtype=np.int64),
-        np.empty(0, dtype=object),
-        np.empty(0, dtype=object),
-    )
+def _empty_tags(n: int) -> dict[str, np.ndarray]:
+    return {
+        "tag_offsets": np.zeros(n + 1, dtype=np.int64),
+        "tag_keys": np.empty(0, dtype=object),
+        "tag_vals": np.empty(0, dtype=object),
+    }
 
 
 def _packed(bufs: list[bytes], owner: list[int],
@@ -731,9 +750,14 @@ class BlockDecoder:
 
     Tags come out flattened as (offsets[n+1], keys[], vals[]) — exactly the
     layout of an Arrow MapArray, so the data source builds map columns with
-    zero per-row work. ``with_meta`` adds Info/DenseInfo provenance columns
+    zero per-row work. The meta_* columns hold the Info/DenseInfo provenance
     (version, timestamp_ms, changeset, uid, user, visible) that the reference
     decodes but drops (SURVEY §1.3).
+
+    ``tags`` / ``meta`` False leave the tag / meta columns out of the
+    output and their fields out of the walk: those bytes are stepped over
+    unread, so a damaged DenseInfo fails only a read that returns meta.
+    The default decodes everything.
 
     ``compat_stale_tags`` replicates reference bug §1.4.2 for byte-exact
     migration testing: when the dense keys_vals stream ends before the node
@@ -743,8 +767,14 @@ class BlockDecoder:
     is the spec-correct behavior: trailing nodes are untagged.
     """
 
-    def __init__(self, payload: bytes, compat_stale_tags: bool = False):
+    def __init__(self, payload: bytes, compat_stale_tags: bool = False,
+                 tags: bool = True, meta: bool = True):
         self.compat_stale_tags = compat_stale_tags
+        self.outputs = frozenset(
+            {"id"} | ({"tags"} if tags else set())
+            | ({"meta"} if meta else set()))
+        self._dense_wire = {f: wt for f, wt in _DENSE_WIRE.items()
+                            if _DENSE_NEEDS.get(f, "id") in self.outputs}
         self.granularity = 100
         self.date_granularity = 1000
         self.lat_offset = 0
@@ -802,7 +832,7 @@ class BlockDecoder:
         block) once, decoding each field as ``_ENTITY[kind]`` states:
         {column: an int64 array for a scalar, ``(counts, values)`` for a
         packed column, the raw Info messages (None: absent) for "info"}."""
-        table, wire_types = _ENTITY[kind], _ENTITY_WIRE[kind]
+        table, wire_types = _entity_fields(kind, self.outputs)
         absent = {col: None if how == "info" else 0
                   for col, how in table.values() if how not in _PACKED}
         single = {col: [] for col in absent}
@@ -837,10 +867,17 @@ class BlockDecoder:
                     np.int64)
         return out
 
-    def _tags(self, e: dict) -> dict[str, np.ndarray]:
-        off, keys, vals = _ragged(e, "keys", "vals")
-        return {"tag_offsets": off, "tag_keys": self._lookup(keys),
-                "tag_vals": self._lookup(vals)}
+    def _optional(self, e: dict) -> dict[str, np.ndarray]:
+        """The tag and meta columns of the entity columns ``e``, each when
+        the decoder outputs it."""
+        out = {}
+        if "tags" in self.outputs:
+            off, keys, vals = _ragged(e, "keys", "vals")
+            out.update(tag_offsets=off, tag_keys=self._lookup(keys),
+                       tag_vals=self._lookup(vals))
+        if "meta" in self.outputs:
+            out.update(self._info_columns(e["info"]))
+        return out
 
     def count_changesets(self) -> int:
         """Count ChangeSet entries. The format declares the message id-only
@@ -879,22 +916,21 @@ class BlockDecoder:
                     "id": e["id"],
                     "lat": self._scale(e["lat"], self.lat_offset),
                     "lon": self._scale(e["lon"], self.lon_offset),
-                    **self._tags(e),
-                    **self._info_columns(e["info"]),
+                    **self._optional(e),
                 })
         return _concat_columns(parts, self._node_empty())
 
     def _node_empty(self) -> dict[str, np.ndarray]:
-        off, k, v = _empty_tags(0)
-        return {
+        out = {
             "id": np.empty(0, dtype=np.int64),
             "lat": np.empty(0, dtype=np.float64),
             "lon": np.empty(0, dtype=np.float64),
-            "tag_offsets": off,
-            "tag_keys": k,
-            "tag_vals": v,
-            **_empty_meta(0),
         }
+        if "tags" in self.outputs:
+            out.update(_empty_tags(0))
+        if "meta" in self.outputs:
+            out.update(_empty_meta(0))
+        return out
 
     def _decode_dense(self, buf: bytes) -> dict[str, np.ndarray]:
         # protobuf REQUIRES parsers to concatenate a packed repeated field
@@ -906,7 +942,7 @@ class BlockDecoder:
         lon_p: list = []
         kv_p: list = []
         info_buf = None
-        for field, _wt, v in wire.scan_fields(buf, _DENSE_WIRE):
+        for field, _wt, v in wire.scan_fields(buf, self._dense_wire):
             if field == DENSE_ID:
                 id_p.append(wire.decode_packed_sint(v))
             elif field == DENSE_LAT:
@@ -934,33 +970,27 @@ class BlockDecoder:
         if not len(ids) == len(lats) == len(lons):
             raise ValueError(f"DenseNodes hold {len(ids)} ids, {len(lats)} "
                              f"lats and {len(lons)} lons")
-        keys_vals = _cat(kv_p)
         n = len(ids)
-        off, keys, vals = self._dense_tags(keys_vals, n)
-        meta = (
-            self._decode_dense_info(info_buf, n)
-            if info_buf is not None
-            else _empty_meta(n)
-        )
-        return {
-            "id": ids.astype(np.int64),
+        out = {
+            "id": ids,
             "lat": self._scale(lats, self.lat_offset),
             "lon": self._scale(lons, self.lon_offset),
-            "tag_offsets": off,
-            "tag_keys": keys,
-            "tag_vals": vals,
-            **meta,
         }
+        if "tags" in self.outputs:
+            out.update(self._dense_tags(_cat(kv_p), n))
+        if "meta" in self.outputs:
+            out.update(_empty_meta(n) if info_buf is None
+                       else self._decode_dense_info(info_buf, n))
+        return out
 
-    def _dense_tags(
-        self, kv: np.ndarray, n: int
-    ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    def _dense_tags(self, kv: np.ndarray, n: int) -> dict[str, np.ndarray]:
         """keys_vals is ((k,v)* 0)* — zero-delimited per-node runs. Vectorized:
         zero positions give per-node run lengths; everything else alternates
         key/value string-table ids. A run with a key but no value raises
         ValueError. No stale-tag carry-over (§1.4.2) unless
         ``compat_stale_tags`` opted in."""
-        if len(kv) == 0:
+        if len(kv) == 0 or (len(kv) == n and not kv.any()):
+            # no stream, or one empty run per node (an untagged block)
             return _empty_tags(n)
         zero_pos = np.flatnonzero(kv == 0)
         if len(zero_pos) == 0:
@@ -997,7 +1027,7 @@ class BlockDecoder:
                 vals = np.concatenate([vals, np.tile(run_v, n - k)])
             else:  # spec: trailing nodes with no run are untagged
                 offsets[k + 1 :] = offsets[k]
-        return offsets, keys, vals
+        return {"tag_offsets": offsets, "tag_keys": keys, "tag_vals": vals}
 
     # ------------------------------------------------------------------- ways
     def decode_ways(self) -> dict[str, np.ndarray]:
@@ -1007,8 +1037,7 @@ class BlockDecoder:
             "id": e["id"],
             "ref_offsets": ref_offsets,
             "ref_values": refs,
-            **self._tags(e),
-            **self._info_columns(e["info"]),
+            **self._optional(e),
         }
 
     # -------------------------------------------------------------- relations
@@ -1026,8 +1055,7 @@ class BlockDecoder:
             "member_roles": self._lookup(roles),
             "member_refs": refs,
             "member_types": MEMBER_TYPES[types],
-            **self._tags(e),
-            **self._info_columns(e["info"]),
+            **self._optional(e),
         }
 
     # ------------------------------------------------------------------- meta
@@ -1063,16 +1091,24 @@ class BlockDecoder:
         return out
 
     def _decode_dense_info(self, buf: bytes, n: int) -> dict[str, np.ndarray]:
-        out = _empty_meta(n)
+        """The meta_* columns of a DenseInfo over ``n`` nodes. A field that
+        is present holds one value per node (split occurrences concatenate,
+        as for DenseNodes) or raises ValueError naming it; an absent field
+        keeps its column's ``_empty_meta`` default."""
+        parts: dict[int, list[np.ndarray]] = {}
         for f, _wt, v in wire.scan_fields(buf, _DENSE_INFO_WIRE):
-            # slice by DECODED element count, not packed byte count —
-            # multi-byte varints make len(v) > #elements and the
-            # broadcast assignment would crash on truncated arrays
+            decoder = (wire.decode_packed_sint if f in DENSE_INFO_DELTA
+                       else wire.decode_packed_int)
+            parts.setdefault(f, []).append(decoder(v))
+        out = _empty_meta(n)
+        for f, arrays in parts.items():
+            vals = np.concatenate(arrays)
+            if len(vals) != n:
+                raise ValueError(f"DenseInfo {_META[f]} holds {len(vals)} "
+                                 f"values for {n} nodes")
             if f in DENSE_INFO_DELTA:
-                vals = np.cumsum(wire.decode_packed_sint(v))[:n]
-            else:
-                vals = wire.decode_packed_int(v)[:n]
-            out[_META[f]][: len(vals)] = self._meta_column(f, vals)
+                vals = np.cumsum(vals)
+            out[_META[f]][:] = self._meta_column(f, vals)
         return out
 
 

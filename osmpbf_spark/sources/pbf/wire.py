@@ -92,62 +92,79 @@ def zigzag_encode(v: int) -> int:
 # ---------------------------------------------------------------------------
 
 
+# word-gather tier tables: the 7-bit payload of the first min(k, 8) bytes
+# of a k-byte varint's little-endian word, and the three rounds that fold
+# eight 7-bit groups into one 56-bit value (shift, mask of the moved
+# groups, mask of the groups that stay)
+_PAYLOAD = np.array([(1 << 8 * min(k, 8)) - 1 & 0x7F7F7F7F7F7F7F7F
+                     for k in range(11)], dtype=np.uint64)
+_FOLD = tuple((np.uint64(s), np.uint64(moved), np.uint64(stay))
+              for s, moved, stay in ((1, 0x3F803F803F803F80,
+                                      0x007F007F007F007F),
+                                     (2, 0x0FFFC0000FFFC000,
+                                      0x00003FFF00003FFF),
+                                     (4, 0x00FFFFFFF0000000,
+                                      0x000000000FFFFFFF)))
+
+
 def decode_packed_uint(buf: bytes) -> np.ndarray:
     """Decode a packed repeated varint field into uint64, one numpy pass.
 
-    Every byte contributes ``(byte & 0x7f) << 7*k`` to its varint, where k is
-    the byte's offset within the varint; varint boundaries are bytes without
-    the continuation bit. Two tiers:
+    A varint ends at the first byte without the continuation bit, and
+    byte k of it carries bits 7k..7k+6 of the value. Three tiers:
 
     - ALL-1-BYTE fast path: when no byte has the continuation bit, every
       byte IS its varint — one astype, no index math. This is the common
       shape for dense-node id deltas (consecutive ids), keys_vals string
       ids in small-vocabulary blocks, and way-ref deltas in well-sorted
-      extracts — measured 14x the general path.
+      extracts.
     - SPARSE-MULTIBYTE path: when at most 32 varints are multi-byte
       (e.g. one absolute leading id followed by thousands of small
       deltas), take the 1-byte decode wholesale and patch the handful of
-      wide varints scalar-wise — measured 2x the general path on that
-      shape.
-    - General path: per-varint byte offsets come from repeating each
-      varint's start index over its byte count (flatnonzero + diff +
-      repeat — measured 1.4x the earlier maximum.accumulate running-max
-      formulation, which itself was 2.1x searchsorted + bitwise_or.at);
-      the per-varint combine is ``np.add.reduceat`` — addition equals OR
-      because each byte's payload occupies disjoint bits. (A
-      uniform-width reshape + float64 matmul variant measured SLOWER —
-      the uint8->float64 conversion eats the BLAS win; negative result
-      recorded so it isn't retried.)
+      wide varints scalar-wise; on that shape it beats the word tier
+      (a dense_scan block's id field: 103 vs 252 us).
+    - WORD-GATHER path: load each varint's first 8 bytes as one
+      little-endian uint64 (an unaligned gather from a zero-padded copy
+      of the field), keep the 7-bit payload of the varint's own bytes,
+      and fold the eight 7-bit groups into one 56-bit value in three
+      shift/mask rounds (pairs, then quads, then halves). A 9th byte adds
+      bits 56-62 and a 10th byte bit 63, as ``read_varint`` keeps them.
+      That is a constant ~20 operations per varint instead of several per
+      byte: on the 8000-varint lat and lon fields of dense_scan's blocks it
+      takes 348-364 us a field where the earlier general tier (repeat,
+      shift and ``np.add.reduceat`` over every byte) took 609-630 us
+      (medians of 5 passes over 100 blocks, 4-core host). Negative
+      results, not to be retried: a uniform-width reshape with a float64
+      matmul was slower than that per-byte tier (the uint8 -> float64
+      conversion ate the BLAS win), and so were its earlier offset
+      formulations (``maximum.accumulate``, ``searchsorted`` +
+      ``bitwise_or.at``).
 
     A field whose last byte continues a varint, or holding a varint
     longer than 10 bytes, raises ValueError in every tier.
 
-    A cheaper dense decode does not pay off end to end either (negative
-    result, not to be retried without a new reason): a per-varint gather
-    kernel (1.4x on lat/lon), no meta fill for reads without meta and an
-    all-zero keys_vals fast path, on top of wave-sized partitions, gave
-    dense_scan rows_per_s medians of 2.89M against 2.82M on a 4-core host
-    (10 s runs, alternating order), 3 of 6 pairs won, peak RSS +10%. A
-    source yielding prebuilt batches with no decode at all still takes
-    1.9-2.0 s a pass, against 2.1-2.8 s for the real one; dropping its
-    empty ``tags`` map saves ~0.45 s of wall and 1.2-1.8 JVM CPU-s, so
-    Spark's ingest of the batches, not this decode, bounds the scan.
+    History: an earlier attempt at a cheaper dense decode (a per-varint
+    gather kernel, no meta fill and an all-zero keys_vals fast path) won
+    only 3 of 6 dense_scan pairs. It was bundled with wave-sized
+    partitions, which lost on their own (``_plan_files`` in
+    datasource.py), and it predates the pyspark.zip directory cache
+    (``osmpbf_spark/_zipimport_cache.py``), which took ~0.6 s of fixed cost
+    off every pass. Measured alone, after that change, the word tier and
+    the column filter of ``BlockDecoder`` raise dense_scan throughput
+    (CHANGES.md).
     """
     if not buf:
         return np.empty(0, dtype=np.uint64)
     b = np.frombuffer(buf, dtype=np.uint8)
     if b[-1] & 0x80:
         raise ValueError("packed varint field ends inside a varint")
-    is_start = np.empty(len(b), dtype=bool)
-    is_start[0] = True
-    # a byte starts a varint iff the previous byte had no continuation bit
-    np.not_equal(b[:-1] & 0x80, 0x80, out=is_start[1:])
-    starts = np.flatnonzero(is_start)
-    if len(starts) == len(b):  # every varint is one byte
+    if b.max() < 0x80:  # every varint is one byte
         return b.astype(np.uint64)
-    counts = np.diff(starts, append=np.int64(len(b)))
+    ends = np.flatnonzero(b < 0x80)  # the last byte of each varint
+    counts = np.diff(ends, prepend=-1)
     if counts.max() > 10:
         raise ValueError("packed varint longer than 10 bytes")
+    starts = ends - (counts - 1)
     multi = np.flatnonzero(counts > 1)
     if len(multi) <= 32:
         out = b[starts].astype(np.uint64)
@@ -155,18 +172,32 @@ def decode_packed_uint(buf: bytes) -> np.ndarray:
             v, _ = read_varint(buf, int(starts[i]))
             out[i] = np.uint64(v & (1 << 64) - 1)
         return out
-    idx = np.arange(len(b), dtype=np.int64)
-    shift = ((idx - np.repeat(starts, counts)).astype(np.uint64)
-             * np.uint64(7))
-    vals = (b & np.uint8(0x7F)).astype(np.uint64) << shift
-    return np.add.reduceat(vals, starts)
+    pad = np.zeros(len(b) + 8, dtype=np.uint8)
+    pad[: len(b)] = b
+    words = np.ndarray(len(b), dtype="<u8", buffer=pad, strides=(1,))
+    out = words.take(starts)
+    out &= _PAYLOAD[counts]
+    for shift, moved, stay in _FOLD:
+        hi = out >> shift
+        hi &= moved
+        out &= stay
+        out |= hi
+    long = np.flatnonzero(counts > 8)
+    if len(long):  # bytes 9 and 10: the rare varints of 57-64 bits
+        at = starts[long]
+        out[long] |= (
+            (pad[at + 8] & np.uint8(0x7F)).astype(np.uint64) << np.uint64(56)
+            | (pad[at + 9] & (counts[long] == 10)).astype(np.uint64)
+            << np.uint64(63)
+        )
+    return out
 
 
 def unzigzag(u: np.ndarray) -> np.ndarray:
     """Vectorized sint64 (zigzag) decode of uint64 varint values."""
-    return ((u >> np.uint64(1)).astype(np.int64)) ^ -(u & np.uint64(1)).astype(
-        np.int64
-    )
+    out = (u >> np.uint64(1)).view(np.int64)
+    out ^= (u << np.uint64(63)).view(np.int64) >> np.int64(63)
+    return out
 
 
 def decode_packed_sint(buf: bytes) -> np.ndarray:
@@ -176,7 +207,7 @@ def decode_packed_sint(buf: bytes) -> np.ndarray:
 
 def decode_packed_int(buf: bytes) -> np.ndarray:
     """Packed int32/int64/enum (two's-complement varint) -> int64 array."""
-    return decode_packed_uint(buf).astype(np.int64)
+    return decode_packed_uint(buf).view(np.int64)
 
 
 def encode_packed_uint(values) -> bytes:

@@ -913,6 +913,13 @@ _MALFORMED = {
         [1], [0], [0], kv=[-1, 2, 0])), "string id outside"),
     "DenseInfo user_sid -1": ("node", _block(_dense(
         [1], [0], [0], info=_packed(5, [-1], True))), "string id outside"),
+    # a DenseInfo array shorter or longer than the node count
+    "DenseInfo version short": ("node", _block(_dense(
+        [1, 1, 1], [0, 0, 0], [0, 0, 0], info=_packed(1, [7]))),
+        "meta_version holds 1 values for 3 nodes"),
+    "DenseInfo version long": ("node", _block(_dense(
+        [1, 1, 1], [0, 0, 0], [0, 0, 0], info=_packed(1, [7] * 5))),
+        "meta_version holds 5 values for 3 nodes"),
     # parallel arrays of different lengths
     "dense id/lat/lon": ("node", _block(_dense([1, 1], [0], [0, 0])),
                          "2 ids, 1 lats and 2 lons"),
@@ -950,6 +957,99 @@ def test_malformed_block_raises_value_error(case):
         "relation": "decode_relations"}[primitive])
     with pytest.raises(ValueError, match=match):
         decoder(decode.BlockDecoder(payload))
+
+
+def test_unread_fields_are_not_validated(tmp_path):
+    """The decoder validates only the fields a read returns: a DenseInfo
+    user_sid outside the string table fails a with_meta read with a
+    CorruptPbfError naming the file and the block's offset, and a read
+    without meta steps over it and returns the node. A DenseInfo that
+    runs past its DenseNodes fails both, since message framing is always
+    checked."""
+    p = str(tmp_path / "bad_user.osm.pbf")
+    meta = _one_blob_file(p, wire.field_len(1, _MALFORMED[
+        "DenseInfo user_sid -1"][1]))
+    with pytest.raises(decode.CorruptPbfError,
+                       match=f"{p}: blob at byte {meta.data_offset}: "
+                             "string id outside"):
+        _reader_rows({"path": p, "with_meta": "true"})
+    assert _reader_rows({"path": p}) == [
+        {"id": 1, "lat": 0.0, "lon": 0.0, "tags": []}]
+
+    # the DenseInfo's length prefix claims 9 bytes past the message's end
+    dense = (wire.field_len(1, wire.encode_packed_sint([1]))
+             + wire.field_len(8, wire.encode_packed_sint([0]))
+             + wire.field_len(9, wire.encode_packed_sint([0]))
+             + wire.write_varint(decode.DENSE_INFO << 3 | wire.WT_LEN)
+             + wire.write_varint(9) + b"\x08")
+    p = str(tmp_path / "bad_frame.osm.pbf")
+    _one_blob_file(p, wire.field_len(1, _block(
+        wire.field_len(decode.GROUP_DENSE, dense))))
+    for opts in ({}, {"with_meta": "true"}):
+        with pytest.raises(decode.CorruptPbfError, match="runs past"):
+            _reader_rows({"path": p, **opts})
+
+
+def _reader_rows(opts: dict, names=None) -> list:
+    """Every row of an in-process osmpbf read with ``opts``, sorted; with
+    ``names`` the read declares those columns of its layout as its
+    schema."""
+    from pyspark.sql.types import StructType
+
+    from osmpbf_spark.sources.pbf.datasource import OsmPbfDataSource
+
+    ds = OsmPbfDataSource(opts)
+    full = ds.schema()
+    rdr = ds.reader(full if names is None
+                    else StructType([full[n] for n in names]))
+    rows = [r for part in rdr.partitions() for b in rdr.read(part)
+            for r in b.to_pylist()]
+    return sorted(rows, key=repr)
+
+
+@pytest.mark.parametrize("primitive", ["node", "way", "relation"])
+def test_narrow_read_equals_select_of_full(fixture_dir, tmp_path, primitive):
+    """Reads declaring {id}, {id, tags} and {id, meta}, whose decoder
+    skips the fields of the columns they leave out, each equal a select
+    of the full with_meta read: on the fixture (DenseInfo on every node,
+    tags on some) and on a file whose entities of each kind carry Info."""
+    info = str(tmp_path / "info.osm.pbf")
+    encode.write_pbf(info, [{
+        "nodes": {"id": [5, 6], "lat_nano": [0, 100], "lon_nano": [0, 100],
+                  "tags": [{"a": "b"}, None],
+                  "meta": {"version": [1, 2], "user": ["w", None]}},
+        "ways": [{"id": 1, "refs": [1, 2], "tags": {"highway": "x"},
+                  "meta": {"version": 3, "timestamp_ms": 1000,
+                           "changeset": 5, "uid": -1, "user": "u",
+                           "visible": False}},
+                 {"id": 2, "refs": [3], "tags": None}],
+        "relations": [{"id": 9, "members": [("r", 1, 1)],
+                       "tags": {"type": "route"},
+                       "meta": {"version": 2, "user": "v"}}],
+    }])
+    for path in (f"{fixture_dir}/fixture.osm.pbf", info):
+        opts = {"path": path, "primitive": primitive, "with_meta": "true"}
+        full = _reader_rows(opts)
+        assert full and any(r["tags"] for r in full)
+        for names in (("id",), ("id", "tags"), ("id", "meta")):
+            want = sorted(({n: r[n] for n in names} for r in full), key=repr)
+            assert _reader_rows(opts, names) == want, (path, names)
+
+
+def test_tag_key_without_declared_tags_filters_exactly(fixture_dir):
+    """A tag_key read whose declared schema has no ``tags`` column still
+    decodes tags to filter on them: it returns exactly the ids of the
+    full read's rows carrying the key (and value)."""
+    path = f"{fixture_dir}/fixture.osm.pbf"
+    full = _reader_rows({"path": path})
+    for value in (None, "bus_stop"):
+        opts = {"path": path, "tag_key": "highway"}
+        if value:
+            opts["tag_value"] = value
+        want = sorted(({"id": r["id"]} for r in full
+                       if any(k == "highway" and value in (None, v)
+                              for k, v in r["tags"])), key=repr)
+        assert want and _reader_rows(opts, ("id",)) == want
 
 
 def test_fixture_deterministic(tmp_path):

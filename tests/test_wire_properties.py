@@ -74,18 +74,51 @@ def test_packed_sint_roundtrip(vals):
         # sparse tier (at most 32 multi-byte varints)
         (b"\x01" * 8 + b"\x80\x01\x80", "ends inside"),
         (b"\x01" * 8 + b"\xff" * 10 + b"\x01", "longer than 10 bytes"),
-        # general tier
+        # word-gather tier (more than 32 multi-byte varints)
         (b"\x80\x01" * 40 + b"\x80", "ends inside"),
         (b"\x80\x01" * 40 + b"\xff" * 10 + b"\x01", "longer than 10 bytes"),
+        # a 9-byte varint cut after 8 bytes, a 10-byte one after 9
+        (b"\x80\x01" * 40 + b"\xff" * 8, "ends inside"),
+        (b"\x80\x01" * 40 + b"\xff" * 9, "ends inside"),
     ],
     ids=["1byte-lone", "1byte-cut", "sparse-cut", "sparse-11byte",
-         "general-cut", "general-11byte"],
+         "general-cut", "general-11byte", "word-cut-9byte",
+         "word-cut-10byte"],
 )
 def test_packed_uint_rejects_cut_or_overlong_varints(buf, match):
     """Every tier rejects a field whose last byte continues a varint and
     a varint of more than 10 bytes, instead of decoding a value."""
     with pytest.raises(ValueError, match=match):
         wire.decode_packed_uint(buf)
+
+
+def _varint_bytes(groups: list[int]) -> bytes:
+    """A varint of the 7-bit ``groups``, low group first."""
+    return bytes(g | 0x80 for g in groups[:-1]) + bytes(groups[-1:])
+
+
+_groups = st.integers(0, 127)
+
+
+@given(st.data())
+@settings(max_examples=60, deadline=None)
+def test_packed_uint_word_tier_matches_scalar(data):
+    """More than 32 multi-byte varints of 2-10 bytes (so the word-gather
+    tier runs), mixed with one-byte ones, decode exactly as a scalar
+    ``read_varint`` loop, a 10th byte's bits past 64 included."""
+    wide = data.draw(st.lists(st.lists(_groups, min_size=2, max_size=10),
+                              min_size=33, max_size=80))
+    narrow = data.draw(st.lists(st.lists(_groups, min_size=1, max_size=1),
+                                max_size=40))
+    # a 10th byte with bits past bit 63 set: only its lowest bit counts
+    wide.append([127] * 9 + [data.draw(st.integers(2, 127))])
+    buf = b"".join(map(_varint_bytes,
+                       data.draw(st.permutations(wide + narrow))))
+    want, pos = [], 0
+    while pos < len(buf):
+        v, pos = wire.read_varint(buf, pos)
+        want.append(v)
+    assert [int(x) for x in wire.decode_packed_uint(buf)] == want
 
 
 @given(st.lists(st.tuples(st.integers(1, 200), U64), max_size=30))
