@@ -23,11 +23,10 @@ PySpark Python Data Source API (pyspark.sql.datasource, PySpark 4.x):
   (OSMPbfPigLoader.java:47-73), stated once in ``_LAYOUT``; a declared read
   schema (``.schema(...)``) may select and reorder its columns by name.
   Unlike the reference, ``relation`` is implemented (java:291 falls through).
-- A read decodes only the fields its columns need (``OsmPbfReader.
-  decode_tags`` / ``decode_meta``): tags, or a ``tag_key`` filter, need the
-  keys/vals fields, ``meta`` needs Info/DenseInfo. A read without them
-  steps over those fields unread and unvalidated, where the reference
-  decodes every DenseInfo and drops it (SURVEY §1.3).
+- A read decodes Info/DenseInfo only when its columns hold ``meta``
+  (``OsmPbfReader.decode_meta``). A read without it steps over those
+  fields unread and unvalidated, where the reference decodes every
+  DenseInfo and drops it (SURVEY §1.3).
 
 Options (SURVEY.md §7 Milestone 2):
   path            file, directory, or glob of .pbf files
@@ -509,8 +508,7 @@ class OsmPbfReader(DataSourceReader):
         self.bounds: dict[str, list[float]] = {}
         self._warned_changesets = False
         self.columns = _read_columns(options, schema)
-        # the decoder leaves out the fields of what the read never uses
-        self.decode_tags = "tags" in self.columns or bool(self.tag_key)
+        # the decoder leaves out the Info fields a read never returns
         self.decode_meta = "meta" in self.columns
 
     def _block_prunable(self, stats: dict | None) -> bool:
@@ -653,9 +651,9 @@ class OsmPbfReader(DataSourceReader):
         of wall on 4 cores, 4.5 of them in the JVM and 5.1 in Python
         workers: the pass is CPU-bound, and a different split does not
         change the CPU it needs. Cutting the Python workers' CPU does:
-        decoding only the fields a read returns, and multi-byte varints a
-        word at a time, took the dense_scan pass from 2.32 to 1.93 s
-        (median of 10 pairs; see ``BlockDecoder`` and
+        skipping the meta a read does not return, and decoding multi-byte
+        varints a word at a time, took the dense_scan pass from 2.32 to
+        1.93 s (median of 10 pairs; see ``BlockDecoder`` and
         ``wire.decode_packed_uint``)."""
         files = []  # (path, kept block ranges, their payload bytes)
         for path, index in zip(paths, self._index_files(paths)):
@@ -767,7 +765,7 @@ class OsmPbfReader(DataSourceReader):
         )
         bd = decode.BlockDecoder(
             payload, compat_stale_tags="stale_tags" in self.compat,
-            tags=self.decode_tags, meta=self.decode_meta,
+            meta=self.decode_meta,
         )
         if (decode.GROUP_CHANGESETS in bd.group_types()
                 and self.primitive != "changeset"):
@@ -816,9 +814,9 @@ class OsmPbfReader(DataSourceReader):
         batches of this shape took 2.5 s a pass with the empty ``tags`` map
         and 1.9 s without it, against 3.1 s for this reader at the time, so
         Spark's ingest of the batches is most of a pass. The decode is the
-        rest and was worth cutting: decoding only the fields a read returns
-        and the word-gather varint tier raised dense_scan rows_per_s from
-        3.46M to 4.14M (median of 10 alternating pairs, 9 of 10 won) and
+        rest and was worth cutting: skipping the meta a read does not
+        return and the word-gather varint tier raised dense_scan rows_per_s
+        from 3.46M to 4.14M (median of 10 alternating pairs, 9 of 10 won) and
         cut the traced ``decode.node.s`` from 1.51 to 1.04 s.
         ``scripts/decode_cost.py`` prints the per-row cost of each
         layer."""

@@ -29,12 +29,12 @@ This is the engine-side replacement for the reference's scan pipeline
   java:270-293). Wire types, parallel-array lengths and string ids are
   checked, so a malformed block raises ValueError, which the reader
   reports naming the file and the block's offset.
-- **Only the fields a read returns.** A decoder told that the read returns
-  no tags or no meta leaves the keys/vals and Info/DenseInfo fields out of
-  its walk, as Impala's scanners materialise only the slots a query
-  references; the reference decodes every DenseInfo and drops it (SURVEY
-  §1.3). Those fields are stepped over, not decoded or validated, while
-  the message framing around them still is.
+- **No meta a read does not return.** A decoder told that the read returns
+  no meta leaves the Info/DenseInfo fields out of its walk, as Impala's
+  scanners materialise only the slots a query references; the reference
+  decodes every DenseInfo and drops it (SURVEY §1.3). Those fields are
+  stepped over, not decoded or validated, while the message framing
+  around them still is.
 - **Correctness fixes over the reference** (SURVEY.md §1.4, treated as spec
   decisions): coordinate offset applied once per absolute value, not re-added
   per delta (java:239-240); no stale-tag carry-over (java:242-262); way/
@@ -614,8 +614,9 @@ _BLOCK_WIRE = {PB_STRINGTABLE: _LEN, PB_GROUP: _LEN, PB_GRANULARITY: _VARINT,
 _GROUP_WIRE = dict.fromkeys((GROUP_NODES, GROUP_DENSE, GROUP_WAYS,
                              GROUP_RELATIONS, GROUP_CHANGESETS), _LEN)
 _NODE_GROUPS = {GROUP_DENSE: _LEN, GROUP_NODES: _LEN}
-_DENSE_WIRE = dict.fromkeys((DENSE_ID, DENSE_INFO, DENSE_LAT, DENSE_LON,
-                             DENSE_KEYS_VALS), _LEN)
+_DENSE_DATA_WIRE = dict.fromkeys((DENSE_ID, DENSE_LAT, DENSE_LON,
+                                  DENSE_KEYS_VALS), _LEN)
+_DENSE_WIRE = {**_DENSE_DATA_WIRE, DENSE_INFO: _LEN}  # with DenseInfo
 
 # The non-dense entity messages, each field stated once: PrimitiveGroup
 # kind -> {osmformat.proto field number: (column, how it decodes)}. The
@@ -640,19 +641,14 @@ _ENTITY = {
     GROUP_CHANGESETS: {1: ("id", "int")},
 }
 _PACKED = ("uint", "delta")
-# the output that needs each optional field, entity columns and DenseNodes
-# fields alike: a decoder without that output leaves the field out of its
-# walk. Every other field belongs to "id", the output every read has.
-_NEEDS = {"keys": "tags", "vals": "tags", "info": "meta"}
-_DENSE_NEEDS = {DENSE_KEYS_VALS: "tags", DENSE_INFO: "meta"}
 
 
 @functools.cache
-def _entity_fields(kind: int, outputs: frozenset) -> tuple[dict, dict]:
-    """``_ENTITY[kind]`` without the fields of outputs not in ``outputs``,
-    and the wire type of each field left."""
+def _entity_fields(kind: int, meta: bool) -> tuple[dict, dict]:
+    """``_ENTITY[kind]``, without its Info field unless ``meta``, and the
+    wire type of each field left."""
     table = {f: (col, how) for f, (col, how) in _ENTITY[kind].items()
-             if _NEEDS.get(col, "id") in outputs}
+             if meta or how != "info"}
     return table, {f: _VARINT if how in ("sint", "int") else _LEN
                    for f, (_, how) in table.items()}
 
@@ -754,8 +750,8 @@ class BlockDecoder:
     (version, timestamp_ms, changeset, uid, user, visible) that the reference
     decodes but drops (SURVEY §1.3).
 
-    ``tags`` / ``meta`` False leave the tag / meta columns out of the
-    output and their fields out of the walk: those bytes are stepped over
+    ``meta`` False leaves the meta_* columns out of the output and the
+    Info/DenseInfo fields out of the walk: those bytes are stepped over
     unread, so a damaged DenseInfo fails only a read that returns meta.
     The default decodes everything.
 
@@ -768,13 +764,10 @@ class BlockDecoder:
     """
 
     def __init__(self, payload: bytes, compat_stale_tags: bool = False,
-                 tags: bool = True, meta: bool = True):
+                 meta: bool = True):
         self.compat_stale_tags = compat_stale_tags
-        self.outputs = frozenset(
-            {"id"} | ({"tags"} if tags else set())
-            | ({"meta"} if meta else set()))
-        self._dense_wire = {f: wt for f, wt in _DENSE_WIRE.items()
-                            if _DENSE_NEEDS.get(f, "id") in self.outputs}
+        self.meta = meta
+        self._dense_wire = _DENSE_WIRE if meta else _DENSE_DATA_WIRE
         self.granularity = 100
         self.date_granularity = 1000
         self.lat_offset = 0
@@ -832,7 +825,7 @@ class BlockDecoder:
         block) once, decoding each field as ``_ENTITY[kind]`` states:
         {column: an int64 array for a scalar, ``(counts, values)`` for a
         packed column, the raw Info messages (None: absent) for "info"}."""
-        table, wire_types = _entity_fields(kind, self.outputs)
+        table, wire_types = _entity_fields(kind, self.meta)
         absent = {col: None if how == "info" else 0
                   for col, how in table.values() if how not in _PACKED}
         single = {col: [] for col in absent}
@@ -867,15 +860,13 @@ class BlockDecoder:
                     np.int64)
         return out
 
-    def _optional(self, e: dict) -> dict[str, np.ndarray]:
-        """The tag and meta columns of the entity columns ``e``, each when
-        the decoder outputs it."""
-        out = {}
-        if "tags" in self.outputs:
-            off, keys, vals = _ragged(e, "keys", "vals")
-            out.update(tag_offsets=off, tag_keys=self._lookup(keys),
-                       tag_vals=self._lookup(vals))
-        if "meta" in self.outputs:
+    def _tags_and_meta(self, e: dict) -> dict[str, np.ndarray]:
+        """The tag columns of the entity columns ``e``, and their meta
+        columns when the decoder outputs meta."""
+        off, keys, vals = _ragged(e, "keys", "vals")
+        out = {"tag_offsets": off, "tag_keys": self._lookup(keys),
+               "tag_vals": self._lookup(vals)}
+        if self.meta:
             out.update(self._info_columns(e["info"]))
         return out
 
@@ -916,7 +907,7 @@ class BlockDecoder:
                     "id": e["id"],
                     "lat": self._scale(e["lat"], self.lat_offset),
                     "lon": self._scale(e["lon"], self.lon_offset),
-                    **self._optional(e),
+                    **self._tags_and_meta(e),
                 })
         return _concat_columns(parts, self._node_empty())
 
@@ -925,10 +916,9 @@ class BlockDecoder:
             "id": np.empty(0, dtype=np.int64),
             "lat": np.empty(0, dtype=np.float64),
             "lon": np.empty(0, dtype=np.float64),
+            **_empty_tags(0),
         }
-        if "tags" in self.outputs:
-            out.update(_empty_tags(0))
-        if "meta" in self.outputs:
+        if self.meta:
             out.update(_empty_meta(0))
         return out
 
@@ -975,10 +965,9 @@ class BlockDecoder:
             "id": ids,
             "lat": self._scale(lats, self.lat_offset),
             "lon": self._scale(lons, self.lon_offset),
+            **self._dense_tags(_cat(kv_p), n),
         }
-        if "tags" in self.outputs:
-            out.update(self._dense_tags(_cat(kv_p), n))
-        if "meta" in self.outputs:
+        if self.meta:
             out.update(_empty_meta(n) if info_buf is None
                        else self._decode_dense_info(info_buf, n))
         return out
@@ -1037,7 +1026,7 @@ class BlockDecoder:
             "id": e["id"],
             "ref_offsets": ref_offsets,
             "ref_values": refs,
-            **self._optional(e),
+            **self._tags_and_meta(e),
         }
 
     # -------------------------------------------------------------- relations
@@ -1055,7 +1044,7 @@ class BlockDecoder:
             "member_roles": self._lookup(roles),
             "member_refs": refs,
             "member_types": MEMBER_TYPES[types],
-            **self._optional(e),
+            **self._tags_and_meta(e),
         }
 
     # ------------------------------------------------------------------- meta

@@ -105,6 +105,34 @@ _FOLD = tuple((np.uint64(s), np.uint64(moved), np.uint64(stay))
                                       0x00003FFF00003FFF),
                                      (4, 0x00FFFFFFF0000000,
                                       0x000000000FFFFFFF)))
+SPARSE_MAX = 32  # the sparse tier's most multi-byte varints in one field
+
+
+def _varint_layout(
+    b: np.ndarray,
+) -> tuple[str, np.ndarray | None, np.ndarray | None]:
+    """The tier ``decode_packed_uint`` takes for the non-empty packed
+    field ``b`` ("1byte", "sparse" or "word"), with the start offset and
+    byte count of each varint (None in the 1byte tier). A field whose last
+    byte continues a varint, or holding a varint over 10 bytes, raises
+    ValueError."""
+    if b[-1] & 0x80:
+        raise ValueError("packed varint field ends inside a varint")
+    if b.max() < 0x80:  # every varint is one byte
+        return "1byte", None, None
+    ends = np.flatnonzero(b < 0x80)  # the last byte of each varint
+    counts = np.diff(ends, prepend=-1)
+    if counts.max() > 10:
+        raise ValueError("packed varint longer than 10 bytes")
+    tier = "sparse" if np.count_nonzero(counts > 1) <= SPARSE_MAX else "word"
+    return tier, ends - (counts - 1), counts
+
+
+def packed_tier(buf: bytes) -> str:
+    """The tier ``decode_packed_uint`` takes for ``buf``."""
+    if not buf:
+        return "1byte"
+    return _varint_layout(np.frombuffer(buf, dtype=np.uint8))[0]
 
 
 def decode_packed_uint(buf: bytes) -> np.ndarray:
@@ -118,10 +146,10 @@ def decode_packed_uint(buf: bytes) -> np.ndarray:
       shape for dense-node id deltas (consecutive ids), keys_vals string
       ids in small-vocabulary blocks, and way-ref deltas in well-sorted
       extracts.
-    - SPARSE-MULTIBYTE path: when at most 32 varints are multi-byte
-      (e.g. one absolute leading id followed by thousands of small
-      deltas), take the 1-byte decode wholesale and patch the handful of
-      wide varints scalar-wise; on that shape it beats the word tier
+    - SPARSE-MULTIBYTE path: when at most ``SPARSE_MAX`` (32) varints
+      are multi-byte (e.g. one absolute leading id followed by thousands
+      of small deltas), take the 1-byte decode wholesale and patch the
+      handful of wide varints scalar-wise; on that shape it beats the word tier
       (a dense_scan block's id field: 103 vs 252 us).
     - WORD-GATHER path: load each varint's first 8 bytes as one
       little-endian uint64 (an unaligned gather from a zero-padded copy
@@ -150,25 +178,18 @@ def decode_packed_uint(buf: bytes) -> np.ndarray:
     datasource.py), and it predates the pyspark.zip directory cache
     (``osmpbf_spark/_zipimport_cache.py``), which took ~0.6 s of fixed cost
     off every pass. Measured alone, after that change, the word tier and
-    the column filter of ``BlockDecoder`` raise dense_scan throughput
+    the meta skip of ``BlockDecoder`` raise dense_scan throughput
     (CHANGES.md).
     """
     if not buf:
         return np.empty(0, dtype=np.uint64)
     b = np.frombuffer(buf, dtype=np.uint8)
-    if b[-1] & 0x80:
-        raise ValueError("packed varint field ends inside a varint")
-    if b.max() < 0x80:  # every varint is one byte
+    tier, starts, counts = _varint_layout(b)
+    if tier == "1byte":
         return b.astype(np.uint64)
-    ends = np.flatnonzero(b < 0x80)  # the last byte of each varint
-    counts = np.diff(ends, prepend=-1)
-    if counts.max() > 10:
-        raise ValueError("packed varint longer than 10 bytes")
-    starts = ends - (counts - 1)
-    multi = np.flatnonzero(counts > 1)
-    if len(multi) <= 32:
+    if tier == "sparse":
         out = b[starts].astype(np.uint64)
-        for i in multi:
+        for i in np.flatnonzero(counts > 1):
             v, _ = read_varint(buf, int(starts[i]))
             out[i] = np.uint64(v & (1 << 64) - 1)
         return out

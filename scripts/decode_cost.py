@@ -2,7 +2,7 @@
 
 For one file and one column set this reads every OSMData block the way an
 ``osmpbf`` read task does (``OsmPbfReader`` with the columns declared as
-its read schema, so the decoder skips what those columns do not need) and
+its read schema, so the decoder skips meta unless they hold it) and
 prints nanoseconds per row for:
 
 - ``read+inflate``: ``decode.read_block_payload`` (file read and blob
@@ -10,7 +10,7 @@ prints nanoseconds per row for:
 - ``decode``: ``BlockDecoder`` construction plus ``decode(primitive)``;
   under it, each packed field the decoder walks, decoded again on its own
   by ``wire.decode_packed_uint``, with the varint tier that field took in
-  each block (1byte, sparse or word; see ``decode_packed_uint``);
+  each block (``wire.packed_tier``: 1byte, sparse or word);
 - ``arrow``: ``OsmPbfReader._to_batch``, the Arrow batch in the read
   schema.
 
@@ -39,7 +39,6 @@ from collections import Counter, defaultdict
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import numpy as np  # noqa: E402
 from pyspark.sql.types import StructType  # noqa: E402
 
 from osmpbf_spark.sources.pbf import decode, wire  # noqa: E402
@@ -48,18 +47,8 @@ from osmpbf_spark.sources.pbf.datasource import (  # noqa: E402
     OsmPbfReader,
 )
 
-SPARSE_MAX = 32  # decode_packed_uint's sparse tier: at most 32 wide varints
 _DENSE_NAMES = {decode.DENSE_ID: "id", decode.DENSE_LAT: "lat",
                 decode.DENSE_LON: "lon", decode.DENSE_KEYS_VALS: "keys_vals"}
-
-
-def _tier(buf: bytes) -> str:
-    cont = np.frombuffer(buf, dtype=np.uint8) >= 0x80
-    # a multi-byte varint starts at a continuing byte after a last byte
-    wide = int(cont[:1].sum()) + np.count_nonzero(cont[1:] & ~cont[:-1])
-    if not wide:
-        return "1byte"
-    return "sparse" if wide <= SPARSE_MAX else "word"
 
 
 def _packed_fields(bd: decode.BlockDecoder, primitive: str):
@@ -80,7 +69,7 @@ def _packed_fields(bd: decode.BlockDecoder, primitive: str):
                             v, decode._DENSE_INFO_WIRE):
                         yield "info." + decode._META[i], p
         for kind in kinds[primitive]:
-            table, wire_types = decode._entity_fields(kind, bd.outputs)
+            table, wire_types = decode._entity_fields(kind, bd.meta)
             joined = defaultdict(list)
             for _f, _wt, msg in wire.scan_fields(g, {kind: wire.WT_LEN}):
                 for f, _wt, v in wire.scan_fields(msg, wire_types):
@@ -102,8 +91,7 @@ def _pass(rdr: OsmPbfReader, path: str, blocks: list) -> tuple[dict, int]:
             t0 = time.perf_counter_ns()
             payload = decode.read_block_payload(f, meta)
             t1 = time.perf_counter_ns()
-            bd = decode.BlockDecoder(payload, tags=rdr.decode_tags,
-                                     meta=rdr.decode_meta)
+            bd = decode.BlockDecoder(payload, meta=rdr.decode_meta)
             cols = bd.decode(rdr.primitive)
             t2 = time.perf_counter_ns()
             ns["read+inflate"] += t1 - t0
@@ -119,7 +107,7 @@ def _pass(rdr: OsmPbfReader, path: str, blocks: list) -> tuple[dict, int]:
                 t4 = time.perf_counter_ns()
                 wire.decode_packed_uint(buf)
                 ns["decode." + name] += time.perf_counter_ns() - t4
-                tiers[name][_tier(buf)] += 1
+                tiers[name][wire.packed_tier(buf)] += 1
     return {"ns": ns, "tiers": tiers}, rows
 
 

@@ -960,12 +960,11 @@ def test_malformed_block_raises_value_error(case):
 
 
 def test_unread_fields_are_not_validated(tmp_path):
-    """The decoder validates only the fields a read returns: a DenseInfo
-    user_sid outside the string table fails a with_meta read with a
-    CorruptPbfError naming the file and the block's offset, and a read
-    without meta steps over it and returns the node. A DenseInfo that
-    runs past its DenseNodes fails both, since message framing is always
-    checked."""
+    """The decoder validates Info/DenseInfo only for a read that returns meta:
+    a DenseInfo user_sid outside the string table fails a with_meta read with a
+    CorruptPbfError naming the file and the block's offset, and a read without
+    meta steps over it and returns the node. A DenseInfo that runs past its
+    DenseNodes fails both, since message framing is always checked."""
     p = str(tmp_path / "bad_user.osm.pbf")
     meta = _one_blob_file(p, wire.field_len(1, _MALFORMED[
         "DenseInfo user_sid -1"][1]))
@@ -1009,10 +1008,10 @@ def _reader_rows(opts: dict, names=None) -> list:
 
 @pytest.mark.parametrize("primitive", ["node", "way", "relation"])
 def test_narrow_read_equals_select_of_full(fixture_dir, tmp_path, primitive):
-    """Reads declaring {id}, {id, tags} and {id, meta}, whose decoder
-    skips the fields of the columns they leave out, each equal a select
-    of the full with_meta read: on the fixture (DenseInfo on every node,
-    tags on some) and on a file whose entities of each kind carry Info."""
+    """Reads declaring {id}, {id, tags} and {id, meta} (the first two decode no
+    meta) each equal a select of the full with_meta read: on the fixture
+    (DenseInfo on every node, tags on some) and on a file whose entities of
+    each kind carry Info."""
     info = str(tmp_path / "info.osm.pbf")
     encode.write_pbf(info, [{
         "nodes": {"id": [5, 6], "lat_nano": [0, 100], "lon_nano": [0, 100],
@@ -2488,11 +2487,11 @@ def test_pbf_stream_sink_roundtrip(spark, tmp_path):
 
 
 def test_decode_robustness_fixes(tmp_path):
-    """Regression pins for the r05 wire-robustness review: negative plain
-    int64 varints fold (way/relation ids, Info fields), packed repeated
-    fields split across occurrences concatenate per the protobuf spec,
-    and a keys_vals stream with no run delimiter yields untagged nodes
-    instead of an IndexError."""
+    """Regression pins for the r05 wire-robustness review: negative plain int64
+    varints fold (way/relation ids, Info fields), packed repeated fields split
+    across occurrences concatenate per the protobuf spec (in DenseNodes and in
+    DenseInfo), and a keys_vals stream with no run delimiter yields untagged
+    nodes instead of an IndexError."""
     import numpy as np
 
     from osmpbf_spark.sources.pbf import decode, encode, wire
@@ -2520,6 +2519,25 @@ def test_decode_robustness_fixes(tmp_path):
     block = field_len(1, st) + field_len(2, field_len(2, dense))
     cols = decode.BlockDecoder(block).decode_nodes()
     assert list(cols["id"]) == [10, 15, 18]  # cumsum over the CONCAT
+
+    # --- DenseInfo version and delta-coded timestamp, each split across
+    # two occurrences, concatenate the same way ---
+    version, timestamp = decode.INFO_VERSION, decode.INFO_TIMESTAMP
+    dense_info = (
+        field_len(version, wire.encode_packed_uint(np.array([1, 2])))
+        + field_len(timestamp, wire.encode_packed_sint(np.array([100])))
+        + field_len(version, wire.encode_packed_uint(np.array([3])))
+        + field_len(timestamp, wire.encode_packed_sint(np.array([5, 7])))
+    )
+    block_info = field_len(1, st) + field_len(
+        2, field_len(2, dense + field_len(decode.DENSE_INFO, dense_info))
+    )
+    meta = decode.BlockDecoder(block_info).decode_nodes()
+    assert list(meta["meta_version"]) == [1, 2, 3]
+    # cumsum over the concat, times the default date_granularity (1000 ms)
+    assert list(meta["meta_timestamp_ms"]) == [100_000, 105_000, 112_000]
+    # an absent field keeps its null marker
+    assert list(meta["meta_changeset"]) == [np.iinfo(np.int64).min] * 3
 
     # --- keys_vals with no zero delimiter -> untagged, no crash ---
     kv = wire.encode_packed_uint(np.array([1, 2]))  # ends mid-run

@@ -92,6 +92,22 @@ def test_packed_uint_rejects_cut_or_overlong_varints(buf, match):
         wire.decode_packed_uint(buf)
 
 
+@pytest.mark.parametrize(
+    "buf, tier",
+    [
+        (b"", "1byte"),
+        (b"\x01\x7f" * 40, "1byte"),
+        (b"\x80\x01" * 32 + b"\x01" * 8, "sparse"),
+        (b"\x80\x01" * 33 + b"\x01" * 8, "word"),
+    ],
+)
+def test_packed_tier_names_the_tier_that_decodes(buf, tier):
+    """``packed_tier`` reports the tier ``decode_packed_uint`` takes:
+    sparse up to ``SPARSE_MAX`` multi-byte varints, word past it."""
+    assert wire.SPARSE_MAX == 32
+    assert wire.packed_tier(buf) == tier
+
+
 def _varint_bytes(groups: list[int]) -> bytes:
     """A varint of the 7-bit ``groups``, low group first."""
     return bytes(g | 0x80 for g in groups[:-1]) + bytes(groups[-1:])
