@@ -549,9 +549,9 @@ class OsmPbfReader(DataSourceReader):
     # ------------------------------------------------------------- planning
     def _index_files(self, paths: list[str]) -> list[list]:
         """Block indexes for ``paths``, in order — the driver-side header
-        walks, parallelized. Each walk is pure I/O (one ~20-byte read +
-        one seek per block; Python releases the GIL for both), so a
-        thread pool turns the lake-wide planning cost from
+        walks. A walk is one ~20-byte read + one seek per block; on a
+        remote scheme both wait on the network with the GIL released, so
+        a thread pool turns the lake-wide planning cost from
         sum(per-file walks) into max(per-file walk) x ceil(files/16).
 
         100 TB planning cost model: ~16 MB blocks -> ~2k blocks per
@@ -565,43 +565,20 @@ class OsmPbfReader(DataSourceReader):
         manifest, Delta log) provides, as a plain directory of JSON
         sidecars.
 
-        The pool is GATED on the walk being wait-dominated: any remote
-        scheme (every read is a network round-trip with the GIL
-        released), or local files big enough that cold-cache seeks
-        dominate (>= 64 MB average — 4+ blocks). Small page-cached
-        local files are the opposite regime — the walk is pure GIL-bound
-        header parsing, where 16 threads measured 14x SLOWER than the
-        serial loop (130ms vs 9ms for 200 fixture files) — so the
-        fixture/test shape stays serial by construction. Measured on
-        the wait-dominated side (2ms injected per read over the same
-        200-file layout, under-selling real object-store range-GET
-        latency): serial 3.9s -> 16 threads 0.28s, 14.2x — the gate
-        picks the winning side of a 14x swing in either direction."""
+        The pool runs for remote schemes only. A local walk is GIL-bound
+        header parsing: on 200 page-cached fixture files 16 threads
+        measured 14x SLOWER than the serial loop (130ms vs 9ms). Measured
+        on the remote side (2ms injected per read over the same 200-file
+        layout, under-selling real object-store range-GET latency):
+        serial 3.9s -> 16 threads 0.28s, 14.2x."""
         cache_dir = self.index_cache_dir
-        if not paths:  # stream no-data micro-batch: nothing new to plan
-            return []
-        if len(paths) == 1:
-            return [decode.index_blocks_cached(paths[0], cache_dir)]
-        threaded = fs.scheme_of(paths[0]) not in (None, "file")
-        if not threaded:
-            stats = [fs.fs_stat(p) for p in paths]
-            total = sum(s[0] for s in stats if s is not None)
-            threaded = total >= 64 * (1 << 20) * len(paths)
-        if not threaded:
-            return [
-                decode.index_blocks_cached(p, cache_dir) for p in paths
-            ]
+        if len(paths) < 2 or fs.scheme_of(paths[0]) in (None, "file"):
+            return [decode.index_blocks_cached(p, cache_dir) for p in paths]
         from concurrent.futures import ThreadPoolExecutor
 
-        with ThreadPoolExecutor(
-            max_workers=min(16, len(paths))
-        ) as ex:
-            return list(
-                ex.map(
-                    lambda p: decode.index_blocks_cached(p, cache_dir),
-                    paths,
-                )
-            )
+        with ThreadPoolExecutor(max_workers=min(16, len(paths))) as ex:
+            return list(ex.map(
+                lambda p: decode.index_blocks_cached(p, cache_dir), paths))
 
     def _plan_files(self, paths: list[str]) -> list[OsmPbfPartition]:
         """Block-aligned split planning for an explicit file list; shared
@@ -767,7 +744,7 @@ class OsmPbfReader(DataSourceReader):
             payload, compat_stale_tags="stale_tags" in self.compat,
             meta=self.decode_meta,
         )
-        if (decode.GROUP_CHANGESETS in bd.group_types()
+        if (decode.GROUP_CHANGESETS in bd.group_kinds
                 and self.primitive != "changeset"):
             # count-and-skip: the format declares changesets NOT USED and
             # the reference leaves them unparsed; warn so the skip is

@@ -56,6 +56,7 @@ import zlib
 from dataclasses import asdict, dataclass
 
 import numpy as np
+import pyarrow as pa
 
 from osmpbf_spark.sources.pbf import fs, wire
 
@@ -73,11 +74,61 @@ BLOB_LZMA = 4
 BLOB_OBSOLETE_BZIP2 = 5  # deprecated in fileformat.proto; rejected explicitly
 BLOB_LZ4 = 6  # LZ4 block format (no frame header -> raw_size is REQUIRED)
 BLOB_ZSTD = 7  # zstd frame
-# Blob fields the decoder reads; raw_size is a varint, the rest are bytes
-_BLOB_FIELDS = (BLOB_RAW, BLOB_RAW_SIZE, BLOB_ZLIB, BLOB_LZMA, BLOB_LZ4,
-                BLOB_ZSTD)
 MAX_BLOB_HEADER = 64 * 1024  # fileformat.proto: BlobHeader < 64 KiB
 MAX_BLOB = 32 * 1024 * 1024  # fileformat.proto: Blob, and its payload, < 32 MiB
+
+
+def _inflate(decompressor):
+    """A zlib/lzma blob decode: a streaming inflate that never returns
+    more than raw_size (or the spec's limit) bytes, whatever the stream
+    would expand to, and must end exactly at the end of its input."""
+
+    def decode(data: bytes, raw_size: int | None) -> bytes:
+        # at least 1 because a max_length of 0 means no limit at all
+        cap = max(raw_size, 1) if raw_size is not None else MAX_BLOB
+        d = decompressor()
+        out = d.decompress(data, cap)
+        if not d.eof or d.unused_data:
+            raise ValueError(
+                "compressed stream "
+                + ("has input left over" if d.eof else
+                   f"does not end within {cap} inflated bytes")
+            )
+        return out
+
+    return decode
+
+
+def _arrow(codec: str):
+    """(compress, decode) of pyarrow's bundled C++ ``codec``. Its decode
+    sizes the output up front, so a blob without raw_size fails loudly
+    rather than guessing a buffer size; the spec requires raw_size on
+    every compressed blob and osmium always writes it."""
+
+    def decode(data: bytes, raw_size: int | None) -> bytes:
+        if raw_size is None:
+            raise ValueError(f"{codec} blob without raw_size — the spec "
+                             "requires raw_size on compressed blobs")
+        return pa.Codec(codec).decompress(
+            data, decompressed_size=raw_size, asbytes=True)
+
+    return lambda p: pa.Codec(codec).compress(p, asbytes=True), decode
+
+
+# The Blob's data fields (fileformat.proto ``oneof data``): field ->
+# (codec name, compress(payload), decode(data, raw_size)). The reader
+# (read_block_payload) and the writer (encode._file_block) both take a
+# blob's codec from here. lz4 is the LZ4 *block* format, zstd a frame.
+BLOB_CODECS = {
+    BLOB_RAW: ("raw", bytes, lambda data, _raw_size: data),
+    BLOB_ZLIB: ("zlib", zlib.compress, _inflate(zlib.decompressobj)),
+    BLOB_LZMA: ("lzma", lzma.compress, _inflate(lzma.LZMADecompressor)),
+    BLOB_LZ4: ("lz4", *_arrow("lz4_raw")),
+    BLOB_ZSTD: ("zstd", *_arrow("zstd")),
+}
+# the wire type of every Blob field the reader accepts
+_BLOB_WIRE = {BLOB_RAW_SIZE: wire.WT_VARINT,
+              **dict.fromkeys(BLOB_CODECS, wire.WT_LEN)}
 # what a damaged blob raises while it is read, inflated or decoded; each
 # caller that knows the file re-raises these as a CorruptPbfError naming
 # the path and the blob's byte offset
@@ -105,6 +156,7 @@ STRINGTABLE_S = 1
 PB_STRINGTABLE = 1
 PB_GROUP = 2
 PB_GRANULARITY = 17
+GRANULARITY = 100  # nanodegrees per coordinate unit: the proto's default
 PB_DATE_GRANULARITY = 18
 PB_LAT_OFFSET = 19
 PB_LON_OFFSET = 20
@@ -466,47 +518,30 @@ def resync_scan(path: str, from_offset: int = 0) -> list[BlockMeta]:
 def read_block_payload(f, meta: BlockMeta, zlib_only: bool = False) -> bytes:
     """Read + decompress one Blob into its raw payload bytes.
 
-    Replaces OsmPbfRecordReader.java:153-185; we additionally accept raw
-    (uncompressed), lzma, lz4 and zstd blobs, all of which the reference
-    rejects (OsmPbfRecordReader.java:180-181 accepts only zlib) — newer
-    osmium tooling can emit lz4/zstd planet extracts (fileformat.proto
-    fields 6/7), so out-paritying the reference here matters on real
-    files. ``zlib_only`` restores the reference's rejection for
-    bug-parity runs.
+    Replaces OsmPbfRecordReader.java:153-185, which accepts only zlib
+    (java:180-181). A Blob holds ``raw_size`` and one data field, each
+    decoded by its entry of ``BLOB_CODECS``:
 
-    lz4 blobs are LZ4 *block* format (per the spec) and zstd decompression
-    here also sizes its output buffer up front, so both REQUIRE the blob's
-    ``raw_size`` field — the spec mandates it on every compressed blob and
-    osmium always writes it; a blob missing it fails loudly rather than
-    guessing a buffer size. Codecs come from pyarrow (bundled C++
-    lz4/zstd), keeping the container dependency-free.
+    ====  ======  ==============================================
+    1     raw     the payload itself
+    3     zlib    inflate bounded by raw_size (or ``MAX_BLOB``)
+    4     lzma    inflate bounded by raw_size (or ``MAX_BLOB``)
+    6     lz4     LZ4 block format; needs raw_size
+    7     zstd    zstd frame; needs raw_size
+    ====  ======  ==============================================
+
+    Newer osmium tooling can emit lz4/zstd planet extracts, so accepting
+    them matters on real files. Every field is checked against its wire
+    type; a raw_size over ``MAX_BLOB``, a payload other than raw_size
+    bytes, a second data field, the deprecated bzip2 field (5) and any
+    other field raise ValueError. ``zlib_only`` restores the reference's
+    rejection of every codec but zlib, for bug-parity runs.
     """
     f.seek(meta.data_offset)
     blob = f.read(meta.data_size)
-    raw = None
-    raw_size = None
-    zlib_data = None
-    lzma_data = None
-    lz4_data = None
-    zstd_data = None
-    for field, wt, v in wire.scan_fields(blob):
-        if field in _BLOB_FIELDS and (wt == wire.WT_VARINT) != (
-            field == BLOB_RAW_SIZE
-        ):
-            raise ValueError(f"blob field {field} has wire type {wt}")
-        if field == BLOB_RAW:
-            raw = v
-        elif field == BLOB_RAW_SIZE:
-            raw_size = v
-        elif field == BLOB_ZLIB:
-            zlib_data = v
-        elif field == BLOB_LZMA:
-            lzma_data = v
-        elif field == BLOB_LZ4:
-            lz4_data = v
-        elif field == BLOB_ZSTD:
-            zstd_data = v
-        elif field == BLOB_OBSOLETE_BZIP2:
+    raw_size = field = data = None
+    for fld, wt, v in wire.scan_fields(blob):
+        if fld == BLOB_OBSOLETE_BZIP2:
             # fileformat.proto field 5 is deprecated ("Don't reuse this
             # tag number") — name it in the error so a user holding an
             # ancient bzip2 planet file learns WHY it is rejected rather
@@ -515,52 +550,33 @@ def read_block_payload(f, meta: BlockMeta, zlib_only: bool = False) -> bytes:
                 "blob uses OBSOLETE_bzip2_data (fileformat.proto field 5, "
                 "deprecated); re-encode the file with zlib/zstd/lz4"
             )
-        else:
+        if fld not in _BLOB_WIRE:
             raise ValueError(
-                f"unsupported blob compression (field {field}); "
-                "raw, zlib, lzma, lz4 and zstd are implemented"
+                f"unsupported blob compression (field {fld}); "
+                + ", ".join(c[0] for c in BLOB_CODECS.values())
+                + " are implemented"
             )
-    if zlib_only and zlib_data is None:
+        if wt != _BLOB_WIRE[fld]:
+            raise ValueError(f"blob field {fld} has wire type {wt}")
+        if fld == BLOB_RAW_SIZE:
+            raw_size = v
+        elif field is not None:
+            raise ValueError(
+                f"blob holds two data fields, {BLOB_CODECS[field][0]} "
+                f"(field {field}) and {BLOB_CODECS[fld][0]} (field {fld})"
+            )
+        else:
+            field, data = fld, v
+    if zlib_only and field != BLOB_ZLIB:
         # compat §1.4.6: the reference accepts only zlib blobs
         # (OsmPbfRecordReader.java:164-182 DataFormatException)
         raise ValueError("unsupported compression algorithm in OSM file block")
     if raw_size is not None and raw_size > MAX_BLOB:
         raise ValueError(f"raw_size {raw_size} over the {MAX_BLOB}-byte "
                          "limit")
-    if raw is not None:
-        out = raw
-    elif zlib_data is not None or lzma_data is not None:
-        # bounded inflate: never more than raw_size (or the spec's limit)
-        # bytes, whatever the stream would expand to; at least 1 because a
-        # max_length of 0 means no limit at all
-        cap = max(raw_size, 1) if raw_size is not None else MAX_BLOB
-        if zlib_data is not None:
-            d = zlib.decompressobj()
-            out = d.decompress(zlib_data, cap)
-        else:
-            d = lzma.LZMADecompressor()
-            out = d.decompress(lzma_data, max_length=cap)
-        if not d.eof or d.unused_data:
-            raise ValueError(
-                "compressed stream "
-                + ("has input left over" if d.eof else
-                   f"does not end within {cap} inflated bytes")
-            )
-    elif lz4_data is not None or zstd_data is not None:
-        import pyarrow as pa
-
-        name = "lz4_raw" if lz4_data is not None else "zstd"
-        data = lz4_data if lz4_data is not None else zstd_data
-        if raw_size is None:
-            raise ValueError(
-                f"{name} blob without raw_size — the spec requires "
-                "raw_size on compressed blobs; cannot size the output"
-            )
-        out = pa.Codec(name).decompress(
-            data, decompressed_size=raw_size, asbytes=True
-        )
-    else:
+    if field is None:
         raise ValueError("empty blob")
+    out = BLOB_CODECS[field][2](data, raw_size)
     if raw_size is not None and len(out) != raw_size:
         raise ValueError(f"blob raw_size {raw_size} != inflated {len(out)}")
     return out
@@ -768,7 +784,7 @@ class BlockDecoder:
         self.compat_stale_tags = compat_stale_tags
         self.meta = meta
         self._dense_wire = _DENSE_WIRE if meta else _DENSE_DATA_WIRE
-        self.granularity = 100
+        self.granularity = GRANULARITY
         self.date_granularity = 1000
         self.lat_offset = 0
         self.lon_offset = 0
@@ -789,6 +805,12 @@ class BlockDecoder:
                 self.lat_offset = _varint_to_int64(v)
             elif field == PB_LON_OFFSET:
                 self.lon_offset = _varint_to_int64(v)
+        # which group kind each group holds, by its first entity (for
+        # type-projection skipping, the Spark analog of
+        # OsmPbfRecordReader.java:283-290)
+        self.group_kinds = [
+            next((f for f, _, _ in wire.scan_fields(g, _GROUP_WIRE)), 0)
+            for g in self.groups]
 
     # -- coordinate scaling (offset applied once per absolute value; fixes
     # the reference's per-delta re-add, OsmPbfRecordReader.java:239-240) ----
@@ -804,19 +826,12 @@ class BlockDecoder:
                              "entry string table")
         return self.strings[sids]
 
-    def group_types(self) -> list[int]:
-        """Which group kind each group holds, by its first entity (for
-        type-projection skipping, the Spark analog of
-        OsmPbfRecordReader.java:283-290)."""
-        return [next((f for f, _, _ in wire.scan_fields(g, _GROUP_WIRE)), 0)
-                for g in self.groups]
-
     def decode(self, primitive: str) -> dict[str, np.ndarray] | None:
         """The block's ``primitive`` entities as columns, or None when no
         group holds that kind, so a node read of a way block never walks
         its ways."""
         kinds, method = _PRIMITIVE[primitive]
-        if not kinds & set(self.group_types()):
+        if kinds.isdisjoint(self.group_kinds):
             return None
         return getattr(self, method)()
 

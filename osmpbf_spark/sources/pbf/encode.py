@@ -8,21 +8,24 @@ fixture (FIXTURES.md) and (b) round-trip tests of the decode pipeline.
 Wire layout produced (public OSM PBF spec, the schemas vendored by the
 reference in lib/osmpbf-1.3.3.jar):
 
-    [4-byte BE len][BlobHeader type="OSMHeader"][Blob(zlib(HeaderBlock))]
-    [4-byte BE len][BlobHeader type="OSMData"] [Blob(zlib(PrimitiveBlock))] ...
+    [4-byte BE len][BlobHeader type="OSMHeader"][Blob(HeaderBlock)]
+    [4-byte BE len][BlobHeader type="OSMData"] [Blob(PrimitiveBlock)] ...
 
-Each PrimitiveBlock gets its own StringTable (index 0 reserved empty) and
-delta-codes ids/coords/refs exactly as the format requires.
+Each Blob holds its payload in the data field of the codec ``write_pbf``
+is given (zlib by default; raw, lzma, lz4 and zstd too) plus raw_size
+when compressed. Each PrimitiveBlock gets its own StringTable (index 0
+reserved empty), delta-codes ids/coords/refs exactly as the format
+requires and stores coordinates at the default granularity (100
+nanodegrees); the OSMHeader's HeaderBBox covers the file's nodes.
 
 Every message is written from decode.py's tables and names (``_ENTITY``,
-``_META``, ``_STATS_FIELDS``), so each field number is stated once for
-both directions.
+``_META``, ``_STATS_FIELDS``, ``BLOB_CODECS``), so each field number and
+codec is stated once for both directions.
 """
 
 from __future__ import annotations
 
 import struct
-import zlib
 
 import numpy as np
 
@@ -91,13 +94,13 @@ def _encode_info(meta: dict, st: _StringTable, n: int | None = None) -> bytes:
     return out
 
 
-def _encode_dense_nodes(nodes: dict, st: _StringTable, granularity) -> bytes:
+def _encode_dense_nodes(nodes: dict, st: _StringTable) -> bytes:
     """One PrimitiveGroup holding one DenseNodes: delta-coded packed
     id/lat/lon + zero-delimited keys_vals (+ optional DenseInfo provenance,
     which the reference decodes but drops — we round-trip it).
 
     ``lat_nano``/``lon_nano`` are integer nanodegrees; raw units stored are
-    nanodegrees / granularity.
+    nanodegrees / ``decode.GRANULARITY``.
     """
     ids = nodes["id"]
     tags = nodes["tags"]
@@ -116,7 +119,7 @@ def _encode_dense_nodes(nodes: dict, st: _StringTable, granularity) -> bytes:
                           _encode_info(nodes["meta"], st, len(ids)))
     for field, col in ((decode.DENSE_LAT, "lat_nano"),
                        (decode.DENSE_LON, "lon_nano")):
-        units = np.asarray(nodes[col], dtype=np.int64) // granularity
+        units = np.asarray(nodes[col], dtype=np.int64) // decode.GRANULARITY
         body += field_len(field, _delta(units))
     body += field_len(decode.DENSE_KEYS_VALS, wire.encode_packed_uint(kv))
     return field_len(decode.GROUP_DENSE, body)
@@ -159,7 +162,7 @@ def _encode_entity(kind: int, e, st: _StringTable) -> bytes:
     return field_len(kind, body)
 
 
-def _primitive_block(blk: dict, granularity: int) -> bytes:
+def _primitive_block(blk: dict) -> bytes:
     """One write_pbf block dict as a PrimitiveBlock: one homogeneous
     PrimitiveGroup per entity kind present, in the order dense nodes, ways,
     relations, changesets."""
@@ -167,7 +170,7 @@ def _primitive_block(blk: dict, granularity: int) -> bytes:
     groups = []
     nodes = blk.get("nodes")
     if nodes is not None and len(nodes["id"]):
-        groups.append(_encode_dense_nodes(nodes, st, granularity))
+        groups.append(_encode_dense_nodes(nodes, st))
     for prim, kind in _GROUPS:
         # ChangeSet is id-only and "NOT USED" per the spec
         # (osmformat.proto:174-189); written here so the decoder's
@@ -178,36 +181,27 @@ def _primitive_block(blk: dict, granularity: int) -> bytes:
     return (
         field_len(decode.PB_STRINGTABLE, st.encode())
         + b"".join(field_len(decode.PB_GROUP, g) for g in groups)
-        + field_varint(decode.PB_GRANULARITY, granularity)
+        + field_varint(decode.PB_GRANULARITY, decode.GRANULARITY)
     )
+
+
+# codec name -> (Blob data field, compressor)
+_BLOB_WRITERS = {name: (field, pack)
+                 for field, (name, pack, _unpack) in decode.BLOB_CODECS.items()}
 
 
 def _file_block(
     block_type: str, payload: bytes, compress, indexdata: bytes = b""
 ) -> bytes:
     """``compress``: True/"zlib", "lzma", "lz4", "zstd", or False/None
-    for raw. lz4 is LZ4 *block* format and zstd a zstd frame, matching
-    fileformat.proto fields 6/7 (codecs via pyarrow's bundled C++ libs);
-    raw_size is always written for compressed blobs, which the lz4/zstd
-    decode path requires."""
-    if compress == "lzma":
-        import lzma
-
-        field, data = decode.BLOB_LZMA, lzma.compress(payload)
-    elif compress in ("lz4", "zstd"):
-        import pyarrow as pa
-
-        lz4 = compress == "lz4"
-        field = decode.BLOB_LZ4 if lz4 else decode.BLOB_ZSTD
-        data = pa.Codec("lz4_raw" if lz4 else "zstd").compress(
-            payload, asbytes=True)
-    elif compress:
-        field, data = decode.BLOB_ZLIB, zlib.compress(payload)
-    if compress:
-        blob = (field_varint(decode.BLOB_RAW_SIZE, len(payload))
-                + field_len(field, data))
-    else:
-        blob = field_len(decode.BLOB_RAW, payload)
+    for raw, the Blob field and compressor of ``decode.BLOB_CODECS``.
+    raw_size is written for every compressed blob, which the lz4/zstd
+    decode requires."""
+    name = "zlib" if compress is True else compress or "raw"
+    field, pack = _BLOB_WRITERS[name]
+    blob = field_len(field, pack(payload))
+    if field != decode.BLOB_RAW:
+        blob = field_varint(decode.BLOB_RAW_SIZE, len(payload)) + blob
     header = field_len(decode.BLOBHEADER_TYPE, block_type.encode("utf-8"))
     if indexdata:
         # BlobHeader.indexdata — reserved by the format for exactly this:
@@ -299,9 +293,7 @@ def encode_header_block(
 def write_pbf(
     path: str,
     blocks,
-    granularity: int = 100,
     compress=True,  # True/"zlib" | "lzma" | "lz4" | "zstd" | False (raw)
-    bbox="auto",  # "auto" (tight box over nodes) | dict | None
 ) -> None:
     """Write a PBF file.
 
@@ -316,26 +308,25 @@ def write_pbf(
     ``_encode_info``). Each block is encoded and compressed as it arrives;
     only the compressed bytes are held until the header is written.
 
-    ``bbox="auto"`` writes a HeaderBBox covering this file's nodes, the
-    union of the blocks' node bounds (each part file of a distributed
-    write gets its own tight box — no cross-task aggregation needed); pass
-    an explicit dict or None to override.
+    The header's HeaderBBox covers this file's nodes, the union of the
+    blocks' node bounds (each part file of a distributed write gets its
+    own tight box — no cross-task aggregation needed); a file without
+    nodes gets no bbox. Coordinates are stored at ``decode.GRANULARITY``.
     """
     data = []
     nodes = []  # the stats of the blocks holding nodes
     for blk in blocks:
         stats = _block_stats(blk)
-        data.append(_file_block("OSMData", _primitive_block(blk, granularity),
-                                compress, indexdata=_stats_message(stats)))
+        data.append(_file_block("OSMData", _primitive_block(blk), compress,
+                                indexdata=_stats_message(stats)))
         if "min_lat_nano" in stats:
             nodes.append(stats)
-    if bbox == "auto":
-        bbox = {
-            "left": min(s["min_lon_nano"] for s in nodes),
-            "right": max(s["max_lon_nano"] for s in nodes),
-            "top": max(s["max_lat_nano"] for s in nodes),
-            "bottom": min(s["min_lat_nano"] for s in nodes),
-        } if nodes else None
+    bbox = {
+        "left": min(s["min_lon_nano"] for s in nodes),
+        "right": max(s["max_lon_nano"] for s in nodes),
+        "top": max(s["max_lat_nano"] for s in nodes),
+        "bottom": min(s["min_lat_nano"] for s in nodes),
+    } if nodes else None
     with fs.fs_open(path, "wb") as f:
         f.write(_file_block("OSMHeader", encode_header_block(bbox=bbox),
                             compress))

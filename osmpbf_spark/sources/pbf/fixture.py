@@ -37,7 +37,7 @@ N_NODES_B1 = 1720
 N_WAYS = 1348
 N_RELATIONS = 5
 N_CHANGESETS = 200
-GRANULARITY = 100
+GRANULARITY = decode.GRANULARITY
 
 NODE_TAG_KEYS = ["name", "highway", "amenity", "power", "place"]
 NODE_TAG_VALS = ["stop", "tower", "village", "bench", "bus_stop", "cafe"]
@@ -148,7 +148,6 @@ def generate_pbf(path: str, seed: int = 42) -> None:
             {"nodes": nodes1, "ways": ways, "relations": rels},
             {"changesets": changesets.tolist()},
         ],
-        granularity=GRANULARITY,
     )
 
 

@@ -695,6 +695,32 @@ def test_blob_fields_checked_against_their_wire_types(tmp_path):
             decode.read_block_payload(f, meta)
 
 
+def test_blob_with_two_data_fields_rejected(tmp_path):
+    """A Blob holds one data field (fileformat.proto ``oneof data``): a
+    second one, in either order, fails the read with a CorruptPbfError
+    naming the path, the offset and both fields."""
+    import zlib
+
+    from osmpbf_spark.sources.pbf.datasource import OsmPbfReader
+
+    payload = _block(_dense([1], [0], [0]))
+    raw = wire.field_len(decode.BLOB_RAW, payload)
+    z = wire.field_len(decode.BLOB_ZLIB, zlib.compress(payload))
+    size = wire.field_varint(decode.BLOB_RAW_SIZE, len(payload))
+    for i, (blob, msg) in enumerate((
+        (size + raw + z, "raw \\(field 1\\) and zlib \\(field 3\\)"),
+        (size + z + raw, "zlib \\(field 3\\) and raw \\(field 1\\)"),
+    )):
+        p = str(tmp_path / f"two{i}.osm.pbf")
+        meta = _one_blob_file(p, blob)
+        rdr = OsmPbfReader({"path": p}, None)
+        with pytest.raises(decode.CorruptPbfError,
+                           match=f"{p}: blob at byte {meta.data_offset}: "
+                                 f"blob holds two data fields, {msg}"):
+            for part in rdr.partitions():
+                list(rdr.read(part))
+
+
 def test_index_enforces_fileformat_limits(fixture_dir, tmp_path):
     """index_blocks rejects a BlobHeader length outside 1..64 KiB, an
     unparseable BlobHeader, a Blob over 32 MiB, a file cut inside a block,
@@ -1527,8 +1553,8 @@ def test_header_fields_checked_against_their_wire_types(payload, tmp_path):
 
 
 def test_header_bbox_roundtrip(tmp_path):
-    """write_pbf(bbox='auto') stamps a tight HeaderBBox over the file's
-    nodes; bbox=None omits the field (decodes as None)."""
+    """write_pbf stamps a tight HeaderBBox over the file's nodes; a file
+    without nodes gets none (decodes as None)."""
     from osmpbf_spark.sources.pbf import encode
     from osmpbf_spark.sources.pbf.datasource import osmpbf_header
 
@@ -1550,10 +1576,7 @@ def test_header_bbox_roundtrip(tmp_path):
         "top": 10_500_000_000,
         "bottom": -5_000_000_100,
     }
-    p2 = str(tmp_path / "nobox.osm.pbf")
-    encode.write_pbf(p2, blocks, bbox=None)
-    assert osmpbf_header(p2)["bbox"] is None
-    # ways-only file: auto bbox has no nodes to cover -> omitted
+    # ways-only file: no nodes to cover -> omitted
     p3 = str(tmp_path / "ways.osm.pbf")
     encode.write_pbf(
         p3, [{"ways": [{"id": 7, "refs": [1, 2], "tags": {}}]}]
@@ -2346,7 +2369,7 @@ def test_changeset_decode_golden(tmp_path):
     with open(path, "rb") as f:
         bd = decode.BlockDecoder(decode.read_block_payload(f, idx[2]))
     # one homogeneous PrimitiveGroup holding all ChangeSet entries
-    assert bd.group_types() == [decode.GROUP_CHANGESETS]
+    assert bd.group_kinds == [decode.GROUP_CHANGESETS]
     assert bd.decode_changesets()["id"].tolist() == cs_ids
     assert len(bd.decode_nodes()["id"]) == 0
     assert len(bd.decode_ways()["id"]) == 0
