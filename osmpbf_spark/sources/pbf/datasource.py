@@ -14,7 +14,7 @@ PySpark Python Data Source API (pyspark.sql.datasource, PySpark 4.x):
   decode.py) and yields one Arrow RecordBatch per block, so rows never
   materialize as Python objects; Spark receives vectorized batches.
 - ``df.write.format("osmpbf")`` (OsmPbfWriter) is the same in reverse: it
-  takes Spark's Arrow batches, cuts them into blocks of ``block_rows`` rows
+  takes Spark's Arrow batches, cuts them into blocks of ``BLOCK_ROWS`` rows
   and encodes one part file per task, handing ``encode.write_pbf`` one
   block at a time.
 - Type projection (the ``primitive`` option) mirrors parseType
@@ -77,7 +77,8 @@ Options (SURVEY.md §7 Milestone 2):
                   stats our encoder stores in BlobHeader.indexdata (the
                   field the PBF spec reserves for block metadata). OPT-IN:
                   see OsmPbfReader.pushFilters for why the default is off.
-  index_cache_dir directory for the planning sidecars: one
+  index_cache_dir local directory (plain path or ``file://`` URL; any
+                  other scheme raises) for the planning sidecars: one
                   ``pbfidx_*.json`` doc per file holding its block index
                   (and, once read, its header), keyed by the file's
                   (size, mtime_ns), so a re-plan from a new driver walks
@@ -127,14 +128,15 @@ from osmpbf_spark.sources.pbf import decode, fs
 # smallest run of packed small files worth a task of its own (the default
 # of Spark's spark.sql.files.openCostInBytes, its floor on a split)
 MIN_RUN_BYTES = 4 * 1024 * 1024
+# primitives per block the sink writes, as the OSM wiki's PBF page advises
+BLOCK_ROWS = 8000
 _TS_SENTINEL = np.iinfo(np.int64).min
 
 
 def _resolve_paths(path: str) -> list[str]:
-    """Expand a file/dir/glob path spec into concrete file paths, on any
-    supported filesystem (local, file://, memory://, fsspec remotes) — the
-    Spark-side stand-in for FileInputFormat's Hadoop path handling
-    (OsmPbfInputFormat.java:13-19)."""
+    """Expand a file/dir/glob path spec into file paths through fs.py —
+    FileInputFormat's path handling (OsmPbfInputFormat.java:13-19), and the
+    one lister for the batch reader, the stream reader and compaction."""
     if fs.fs_isdir(path):
         out = sorted(set(fs.fs_glob(fs.fs_join(path, "*.pbf"))))
     elif any(c in path for c in "*?["):
@@ -960,7 +962,7 @@ class OsmPbfWriter(DataSourceArrowWriter):
     removes the written part files. At 100 TB this is embarrassingly
     parallel: no shuffle, one file per task, block boundaries independent
     of partitioning. A task cuts Spark's Arrow batches into blocks of
-    ``block_rows`` primitives, across batch boundaries, and builds each
+    ``BLOCK_ROWS`` primitives, across batch boundaries, and builds each
     block from the column buffers as ``encode.write_pbf`` (string tables,
     delta coding) asks for it, so only the partition's Arrow table and the
     compressed blocks are held until the part file is written.
@@ -991,7 +993,6 @@ class OsmPbfWriter(DataSourceArrowWriter):
                 f"(got {self.primitive!r}; changesets are id-only and "
                 "write-unsupported)"
             )
-        self.block_rows = max(1, int(options.get("block_rows", 8000)))
         self.overwrite = overwrite
         fields = {f.name: f for f in schema.fields}
         layout = _layout({"primitive": self.primitive, "with_meta": "true"})
@@ -1015,9 +1016,9 @@ class OsmPbfWriter(DataSourceArrowWriter):
         n = rows.num_rows if batches else 0
         # a generator: write_pbf encodes each block as it is built
         encode.write_pbf(out, (
-            _block(rows.slice(i, self.block_rows).combine_chunks()
+            _block(rows.slice(i, BLOCK_ROWS).combine_chunks()
                    .to_batches()[0], self.primitive)
-            for i in range(0, n, self.block_rows)
+            for i in range(0, n, BLOCK_ROWS)
         ))
         return _PbfCommit(path=out, rows=n)
 

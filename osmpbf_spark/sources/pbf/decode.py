@@ -364,9 +364,14 @@ def _file_record(path: str, cache_dir: str | None, header: bool) -> dict:
     ``header=True`` also decodes the OSMHeader, once, into the same
     record and sidecar doc (a record or doc without it is upgraded in
     place); a file with no OSMHeader block raises a ValueError naming
-    the path. A file whose backend reports no stable identity
-    (memory://, stat failure) is walked every call — the cache can skip
-    work, never change results."""
+    the path. A file whose backend reports no stable identity (no
+    mtime, stat failure) is walked every call — the cache can skip
+    work, never change results. The sidecar directory is local (its
+    atomic replace is a local rename): another scheme than file:// raises
+    before anything is written."""
+    if cache_dir and fs.scheme_of(cache_dir) not in (None, "file"):
+        raise ValueError(f"index_cache_dir must be local, got {cache_dir!r}")
+    cache_dir = cache_dir and fs.strip_file_scheme(cache_dir)
     ident = fs.fs_stat(path)
     key = (path, ident[0], ident[1]) if ident is not None else None
     rec = None

@@ -5,25 +5,21 @@ The reference reads any Hadoop FileSystem for free — OsmPbfRecordReader.java:
 OsmPbfInputFormat.java:13-19 inherits FileInputFormat path handling — so
 ``s3://`` / ``hdfs://`` paths just work there. Python DataSource readers run
 in plain Python workers with no JVM access, so this module provides the
-equivalent indirection on the Python side:
+equivalent indirection on the Python side. Every ``fs_*`` operation has two
+arms:
 
-- no scheme, or ``file://``  -> local filesystem (the fast path; zero new
-  dependencies, identical behavior to before)
-- ``memory://``              -> a process-local in-memory store, used by the
-  tests to prove every byte of source/sink I/O goes through this layer
-  (fsspec's own ``memory://`` filesystem is process-local too)
-- anything else (``s3://``, ``hdfs://``, ``gs://``, ...) -> delegated to
-  fsspec when installed; a clear error naming the missing dependency when
-  not. fsspec is the de-facto Python equivalent of Hadoop's FileSystem SPI
-  (s3fs, gcsfs, adlfs, pyarrow-hdfs all register through it), and the PBF
-  read path only needs open/seek/read — all part of fsspec's file contract.
+- no scheme, or ``file://`` -> the local filesystem (the fast path)
+- any other scheme -> one call on the filesystem object ``_fs(scheme)``
+  returns: ``fsspec.filesystem(scheme)`` for ``s3://``, ``hdfs://``, ...
+  (an error naming the missing dependency without fsspec, the Python
+  equivalent of Hadoop's FileSystem SPI), and for ``memory://`` the
+  process-local ``_MemoryFS``, which answers the same fsspec calls, so
+  the memory:// tests run the code a remote URL runs.
 
-Scale note: every call here is either driver-side planning (glob/list/stat,
-one round per query) or a per-partition ``open`` on an executor. Nothing in
-the hot decode loop touches this module — blocks are read with plain
-``f.seek``/``f.read`` on whatever file object ``fs_open`` returned, so the
-remote path costs one extra HTTP-range handshake per partition, not per
-block.
+Scale note: every call here is driver-side planning (glob/list/stat) or a
+per-partition ``open`` on an executor; blocks are read with plain
+``f.seek``/``f.read`` on the file object ``fs_open`` returned, so a remote
+path costs one extra range handshake per partition, not per block.
 """
 
 from __future__ import annotations
@@ -49,52 +45,81 @@ def strip_file_scheme(path: str) -> str:
     return path[len("file://"):] if scheme_of(path) == "file" else path
 
 
-# --------------------------------------------------------------------------
-# memory:// — a process-local byte store. Lives at module scope so the
-# writer-side tests and reader-side tests in one process share it; Spark
-# executors are separate processes, so end-to-end cluster tests use file://
-# (documented in tests/test_pbf.py).
-# --------------------------------------------------------------------------
+class _MemoryFS:
+    """The fsspec calls this module makes, over a dict of path -> bytes,
+    with fsspec's conventions: ``glob`` returns paths without the
+    protocol, ``info`` has a size but no mtime (so nothing is cached).
+    Per process: end-to-end cluster tests use file:// instead."""
 
-_MEMORY_STORE: dict[str, bytes] = {}
+    class _WriteFile(io.BytesIO):
+        def __init__(self, store: dict, key: str):
+            super().__init__()
+            self._store, self._key = store, key
+
+        def close(self) -> None:
+            # a second close() is a no-op, per the io.IOBase contract
+            if not self.closed:
+                self._store[self._key] = self.getvalue()
+            super().close()
+
+    def __init__(self):
+        self.store: dict[str, bytes] = {}  # key: path without protocol
+
+    @staticmethod
+    def _key(path: str) -> str:
+        return posixpath.normpath("/" + path.split("://", 1)[-1]).lstrip("/")
+
+    def open(self, path: str, mode: str = "rb"):
+        key = self._key(path)
+        if "r" in mode:
+            if key not in self.store:
+                raise FileNotFoundError(path)
+            f = io.BytesIO(self.store[key])
+        else:
+            f = self._WriteFile(self.store, key)
+        return f if "b" in mode else io.TextIOWrapper(f, encoding="utf-8")
+
+    def info(self, path: str) -> dict:
+        key = self._key(path)
+        if key not in self.store:
+            raise FileNotFoundError(path)
+        return {"name": key, "size": len(self.store[key]), "type": "file"}
+
+    def isdir(self, path: str) -> bool:
+        prefix = self._key(path).rstrip("/") + "/"
+        return any(k.startswith(prefix) for k in self.store)
+
+    def exists(self, path: str) -> bool:
+        return self._key(path) in self.store or self.isdir(path)
+
+    def glob(self, pattern: str) -> list[str]:
+        # glob semantics, not fnmatch: '*' stops at '/' as in a local glob
+        pat = self._key(pattern)
+        return sorted(
+            k for k in self.store
+            if k.count("/") == pat.count("/") and fnmatch.fnmatchcase(k, pat)
+        )
+
+    def makedirs(self, path: str, exist_ok: bool = False) -> None:
+        pass  # like an object store: directories exist through their files
+
+    def rm(self, path: str) -> None:
+        if self.store.pop(self._key(path), None) is None:
+            raise FileNotFoundError(path)
 
 
-class _MemoryWriteFile(io.BytesIO):
-    def __init__(self, path: str, text: bool):
-        super().__init__()
-        self._path = path
-        self._text = text
-
-    def write(self, data):  # type: ignore[override]
-        if self._text and isinstance(data, str):
-            data = data.encode("utf-8")
-        return super().write(data)
-
-    def close(self) -> None:
-        # idempotent per the io.IOBase contract: a second close() (e.g. a
-        # defensive finally after a with-block) must be a no-op, not a
-        # ValueError from getvalue() on a closed buffer
-        if not self.closed:
-            _MEMORY_STORE[self._path] = self.getvalue()
-        super().close()
-
-
-def _memory_norm(path: str) -> str:
-    rest = path[len("memory://"):]
-    return "memory://" + posixpath.normpath("/" + rest).lstrip("/")
+_MEMORY_FS = _MemoryFS()
 
 
 def memory_clear() -> None:
     """Test hook: drop every memory:// file."""
-    _MEMORY_STORE.clear()
+    _MEMORY_FS.store.clear()
 
 
-# --------------------------------------------------------------------------
-# dispatch
-# --------------------------------------------------------------------------
-
-
-def _fsspec_fs(scheme: str):
+def _fs(scheme: str):
+    """The filesystem object serving a non-local ``scheme``."""
+    if scheme == "memory":
+        return _MEMORY_FS
     try:
         import fsspec
     except ImportError as e:  # pragma: no cover - fsspec not in test env
@@ -107,32 +132,20 @@ def _fsspec_fs(scheme: str):
 
 
 def fs_open(path: str, mode: str = "rb"):
-    """Open ``path`` for reading or writing. Returned objects support the
-    io contract the decoder needs: read/seek/tell for "rb", write for w*."""
+    """Open ``path``: read/seek/tell for "rb", write for w*."""
     scheme = scheme_of(path)
     if scheme is None or scheme == "file":
         return open(strip_file_scheme(path), mode)
-    if scheme == "memory":
-        path = _memory_norm(path)
-        if "r" in mode:
-            try:
-                data = _MEMORY_STORE[path]
-            except KeyError:
-                raise FileNotFoundError(path) from None
-            return io.BytesIO(data)
-        return _MemoryWriteFile(path, text="b" not in mode)
-    f = _fsspec_fs(scheme).open(path, mode)  # pragma: no cover
-    return f
+    return _fs(scheme).open(path, mode)
 
 
 def fs_stat(path: str) -> tuple[int, int] | None:
     """(size, mtime_ns) identity for sidecar-index invalidation, or None
     when the backend can't provide a stable one (callers must then skip
     caching and walk the file — correctness never depends on a stat).
-    Local files use os.stat; fsspec backends use info() size + whatever
-    mtime the store reports (object stores report last-modified; a
-    missing mtime degrades to size-only identity, still invalidated by
-    any size change)."""
+    Other backends use info()'s size and mtime (or LastModified); one
+    with no mtime gives no identity, or a same-size rewrite would plan
+    from the old file's block index."""
     scheme = scheme_of(path)
     if scheme is None or scheme == "file":
         try:
@@ -140,20 +153,13 @@ def fs_stat(path: str) -> tuple[int, int] | None:
         except OSError:
             return None
         return (st.st_size, st.st_mtime_ns)
-    if scheme == "memory":
-        # process-local test store: no mtime; rewrites of same-size
-        # content would alias, so report no identity (no caching)
-        return None
-    try:  # pragma: no cover - exercised only with fsspec remotes
-        info = _fsspec_fs(scheme).info(path)
-        size = int(info.get("size") or 0)
-        mt = info.get("mtime") or info.get("LastModified") or 0
-        try:
-            mt_ns = int(float(mt) * 1e9)
-        except (TypeError, ValueError):
-            mt_ns = int(getattr(mt, "timestamp", lambda: 0)() * 1e9)
-        return (size, mt_ns)
-    except Exception:  # pragma: no cover
+    try:
+        info = _fs(scheme).info(path)
+        size = info.get("size")
+        mt = info.get("mtime") or info.get("LastModified")  # None raises
+        ts = mt.timestamp() if hasattr(mt, "timestamp") else float(mt)
+        return (int(size), int(ts * 1e9))
+    except Exception:
         return None
 
 
@@ -161,72 +167,64 @@ def fs_isdir(path: str) -> bool:
     scheme = scheme_of(path)
     if scheme is None or scheme == "file":
         return os.path.isdir(strip_file_scheme(path))
-    if scheme == "memory":
-        prefix = _memory_norm(path).rstrip("/") + "/"
-        return any(k.startswith(prefix) for k in _MEMORY_STORE)
-    return _fsspec_fs(scheme).isdir(path)  # pragma: no cover
+    return _fs(scheme).isdir(path)
 
 
 def fs_exists(path: str) -> bool:
     scheme = scheme_of(path)
     if scheme is None or scheme == "file":
         return os.path.exists(strip_file_scheme(path))
-    if scheme == "memory":
-        p = _memory_norm(path)
-        return p in _MEMORY_STORE or fs_isdir(p)
-    return _fsspec_fs(scheme).exists(path)  # pragma: no cover
+    return _fs(scheme).exists(path)
 
 
 def fs_glob(pattern: str) -> list[str]:
-    """Expand a glob pattern; results keep the scheme prefix so they can be
-    fed straight back to ``fs_open``."""
+    """Expand a glob pattern; results keep the pattern's scheme prefix so
+    they can be fed straight back to ``fs_open``."""
     scheme = scheme_of(pattern)
-    if scheme is None:
-        return sorted(globmod.glob(pattern))
-    if scheme == "file":
+    if scheme is None or scheme == "file":
+        prefix = "file://" if scheme else ""
         return sorted(
-            "file://" + p for p in globmod.glob(strip_file_scheme(pattern))
+            prefix + p for p in globmod.glob(strip_file_scheme(pattern))
         )
-    if scheme == "memory":
-        # glob semantics, not fnmatch: '*' must stop at '/' (fnmatch would
-        # match nested subdirectory entries that the local-glob branch
-        # excludes, silently diverging memory:// tests from file://
-        # production behavior). Matching segment counts restores that.
-        pat = _memory_norm(pattern)
-        return sorted(
-            k
-            for k in _MEMORY_STORE
-            if k.count("/") == pat.count("/") and fnmatch.fnmatchcase(k, pat)
-        )
-    fs = _fsspec_fs(scheme)  # pragma: no cover
-    return sorted(f"{scheme}://{p}" for p in fs.glob(pattern))
+    return sorted(f"{scheme}://{p}" for p in _fs(scheme).glob(pattern))
 
 
 def fs_join(path: str, *parts: str) -> str:
-    if scheme_of(path) is None:
+    scheme = scheme_of(path)
+    if scheme is None:
         return os.path.join(path, *parts)
-    # never strip the scheme's own '//': joining onto a bare root like
-    # 'memory://' must yield 'memory://x', not 'memory:/x' (which no
-    # longer parses as a scheme and would fall through to local disk)
+    if scheme == "file":
+        return "file://" + os.path.join(strip_file_scheme(path), *parts)
+    # keep the scheme's own '//': joining onto a bare root like 's3://'
+    # must yield 's3://x', not 's3:/x' (which no longer parses as a
+    # scheme and would fall through to local disk)
     base = path.rstrip("/")
     if base.endswith(":"):
-        base = base + "//"
-    return "/".join([base, *parts]).replace(":///", "://")
+        base += "/"
+    return "/".join([base, *parts])
+
+
+def canonical(path: str) -> str:
+    """One spelling per file: a local path with symlinks resolved and
+    ``file://`` dropped, any other the normalized URL."""
+    scheme = scheme_of(path)
+    if scheme is None or scheme == "file":
+        return os.path.realpath(strip_file_scheme(path))
+    rest = posixpath.normpath("/" + path.split("://", 1)[1]).lstrip("/")
+    return f"{scheme}://{rest}"
 
 
 def fs_makedirs(path: str) -> None:
     scheme = scheme_of(path)
     if scheme is None or scheme == "file":
         os.makedirs(strip_file_scheme(path), exist_ok=True)
-    elif scheme != "memory":  # memory/object stores have no directories
-        _fsspec_fs(scheme).makedirs(path, exist_ok=True)  # pragma: no cover
+    else:
+        _fs(scheme).makedirs(path, exist_ok=True)
 
 
 def fs_remove(path: str) -> None:
     scheme = scheme_of(path)
     if scheme is None or scheme == "file":
         os.remove(strip_file_scheme(path))
-    elif scheme == "memory":
-        _MEMORY_STORE.pop(_memory_norm(path), None)
-    else:  # pragma: no cover
-        _fsspec_fs(scheme).rm(path)
+    else:
+        _fs(scheme).rm(path)

@@ -2021,26 +2021,26 @@ def _sink_table(n: int):
     return table, ids, lat, lon, tags, meta
 
 
-def test_sink_cuts_blocks_across_arrow_batches(spark, tmp_path):
-    """A partition arriving as several Arrow batches, with a block_rows
-    cut inside a batch (2.5 x block_rows rows in batches of 0.75 x
-    block_rows), writes blocks of exactly block_rows and the same bytes a
+def test_sink_cuts_blocks_across_arrow_batches(spark, tmp_path,
+                                               monkeypatch):
+    """A partition arriving as several Arrow batches, with a BLOCK_ROWS
+    cut inside a batch (2.5 x BLOCK_ROWS rows in batches of 0.75 x
+    BLOCK_ROWS), writes blocks of exactly BLOCK_ROWS and the same bytes a
     per-row reference build of the encoder input gives; _SUCCESS counts
     every row and they all read back."""
     from pyspark.sql.types import StructType
 
-    from osmpbf_spark.sources.pbf import fs
+    from osmpbf_spark.sources.pbf import datasource, fs
     from osmpbf_spark.sources.pbf.datasource import OsmPbfReader, OsmPbfWriter
 
     block_rows = 400
+    monkeypatch.setattr(datasource, "BLOCK_ROWS", block_rows)
     table, ids, lat, lon, tags, meta = _sink_table(block_rows * 5 // 2)
     batches = table.to_batches(max_chunksize=block_rows * 3 // 4)
     assert len(batches) == 4
     out = str(tmp_path / "cuts")
     w = OsmPbfWriter(
-        {"path": out, "block_rows": str(block_rows)},
-        StructType.fromDDL(_SINK_SCHEMA),
-        overwrite=False,
+        {"path": out}, StructType.fromDDL(_SINK_SCHEMA), overwrite=False
     )
     msg = w.write(iter(batches))
     w.commit([msg])
@@ -2582,6 +2582,62 @@ def test_decode_robustness_fixes(tmp_path):
     info += write_varint(4 << 3 | 0) + write_varint((1 << 64) - 1)  # uid=-1
     meta = decode.BlockDecoder(block)._info_columns([info])
     assert meta["meta_uid"][0] == -1
+
+
+def test_fs_stat_without_mtime_gives_no_identity(tmp_path, monkeypatch):
+    """A backend whose info() reports a size but no mtime gives no
+    (size, mtime_ns) identity, so a same-size rewrite cannot plan from the
+    old file's cached block index; a backend with an mtime does, and
+    memory:// (size only, like fsspec's memory filesystem) does not."""
+    import sys
+    import types
+
+    from osmpbf_spark.sources.pbf import fs
+
+    infos = {"nomtime://b/k.pbf": {"size": 5, "type": "file"},
+             "withmtime://b/k.pbf": {"size": 5, "type": "file",
+                                     "mtime": 1.5}}
+
+    class Backend:
+        def info(self, path):
+            return infos[path]
+
+    fake = types.ModuleType("fsspec")
+    fake.filesystem = lambda scheme: Backend()
+    monkeypatch.setitem(sys.modules, "fsspec", fake)
+    assert fs.fs_stat("nomtime://b/k.pbf") is None
+    assert fs.fs_stat("withmtime://b/k.pbf") == (5, 1_500_000_000)
+
+    fs.memory_clear()
+    with fs.fs_open("memory://b/k.pbf", "wb") as f:
+        f.write(b"12345")
+    try:
+        assert fs.fs_stat("memory://b/k.pbf") is None
+        assert fs.fs_stat("memory://b/missing.pbf") is None
+    finally:
+        fs.memory_clear()
+
+
+def test_index_cache_dir_scheme(tmp_path, monkeypatch, fixture_dir):
+    """The planning sidecar is local: a file:// index_cache_dir writes its
+    sidecar into that directory, and any other scheme raises a ValueError
+    naming index_cache_dir before anything is written (no relative
+    ./s3:/ or ./file:/ directory under the working directory)."""
+    import shutil
+
+    monkeypatch.chdir(tmp_path)
+    p = str(tmp_path / "in.osm.pbf")
+    shutil.copy(f"{fixture_dir}/fixture.osm.pbf", p)
+    decode._INDEX_CACHE.clear()
+    with pytest.raises(ValueError, match="index_cache_dir"):
+        decode.index_blocks_cached(p, "s3://bucket/cache")
+    assert not (tmp_path / "s3:").exists()
+
+    cache = tmp_path / "cache"
+    blocks = decode.index_blocks_cached(p, f"file://{cache}")
+    assert blocks == decode.index_blocks(p)
+    assert len(list(cache.glob("pbfidx_*.json"))) == 1
+    assert not (tmp_path / "file:").exists()
 
 
 def test_fs_layer_contracts():
@@ -3351,6 +3407,81 @@ def test_pbf_compact_refuses_in_place(tmp_path, spark):
         compact_pbf_files(spark, str(lake), str(out))
     # no byte of the input was touched by any refused attempt
     assert (lake / "part-00000.osm.pbf").read_bytes() == before
+
+
+def _compact_lake(lake) -> list[int]:
+    """Three small node files under ``lake``; returns their ids."""
+    lake.mkdir()
+    ids = []
+    for i in range(3):
+        blk_ids = [10 * i + 1, 10 * i + 2]
+        encode.write_pbf(str(lake / f"part-{i:05d}.osm.pbf"), [{"nodes": {
+            "id": blk_ids,
+            "lat_nano": [j * 10**8 for j in blk_ids],
+            "lon_nano": [j * 10**8 for j in blk_ids],
+            "tags": [{"k": str(j)} for j in blk_ids],
+        }}])
+        ids += blk_ids
+    return ids
+
+
+def test_pbf_compact_file_scheme_lake(tmp_path, spark):
+    """A file:// lake, which the reader accepts, compacts too: inputs
+    are listed by the reader's own lister, out_dir is made and every
+    byte read and written through fs.py, and the merged lake reads back
+    to the same rows. The in-place refusal sees through the scheme."""
+    from osmpbf_spark.sources.pbf.compact import compact_pbf_files
+    from osmpbf_spark.sources.pbf.datasource import read_pbf
+
+    lake = tmp_path / "lake"
+    ids = _compact_lake(lake)
+    out = tmp_path / "merged"
+    stats = compact_pbf_files(spark, f"file://{lake}", f"file://{out}")
+    assert [s["n_inputs"] for s in stats] == [3]
+    assert stats[0]["file"] == f"file://{out}/part-00000.osm.pbf"
+    assert sorted(p.name for p in out.iterdir()) == ["part-00000.osm.pbf"]
+    back = read_pbf(spark, f"file://{out}", "node").collect()
+    want = read_pbf(spark, str(lake), "node").collect()
+    assert sorted(r.id for r in back) == ids
+    assert sorted(back) == sorted(want)
+
+    with pytest.raises(ValueError, match="in-place"):
+        compact_pbf_files(spark, f"file://{lake}", str(lake))
+
+
+def test_pbf_compact_merge_group_memory(monkeypatch):
+    """merge_group reads and writes through fs.py, so it runs in process
+    on memory:// inputs and output: the merged file reads back to every
+    input row, and a merged file that indexes fewer OSMData blocks than
+    its inputs hold is refused."""
+    from osmpbf_spark.sources.pbf import compact, fs
+    from osmpbf_spark.sources.pbf.datasource import OsmPbfReader
+
+    fs.memory_clear()
+    try:
+        paths, ids = [], []
+        for i in range(2):
+            p = f"memory://lake/part-{i:05d}.osm.pbf"
+            blk_ids = [2 * i + 1, 2 * i + 2]
+            encode.write_pbf(p, [{"nodes": {
+                "id": blk_ids, "lat_nano": [10**9, 2 * 10**9],
+                "lon_nano": [10**9, 2 * 10**9], "tags": [None, None],
+            }}])
+            paths.append(p)
+            ids += blk_ids
+        stats = compact.merge_group(paths, "memory://out/m.osm.pbf")
+        assert stats["n_inputs"] == 2 and stats["n_blocks"] == 2
+        rdr = OsmPbfReader({"path": "memory://out/m.osm.pbf"}, None)
+        back = [i for part in rdr.partitions() for b in rdr.read(part)
+                for i in b.column("id").to_pylist()]
+        assert sorted(back) == ids
+
+        real = compact.index_blocks
+        monkeypatch.setattr(compact, "index_blocks", lambda p: real(p)[:-1])
+        with pytest.raises(RuntimeError, match="block-count mismatch"):
+            compact.merge_group(paths, "memory://out/short.osm.pbf")
+    finally:
+        fs.memory_clear()
 
 
 def test_pbf_compact_header_union_and_feature_guard(tmp_path, spark):

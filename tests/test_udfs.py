@@ -126,3 +126,68 @@ def test_no_unlisted_broad_except():
     assert not unlisted, f"broad except outside the allowlist: {unlisted}"
     stale = set(_BROAD_EXCEPT_ALLOWED) - {(f, fn) for f, fn, _ in found}
     assert not stale, f"allowlist entries with no broad except: {stale}"
+
+
+# Every direct filesystem call left under sources/pbf/ outside fs.py, as
+# (file, innermost function) -> why it may bypass fs.py's scheme dispatch.
+_PBF_DIRECT_IO_ALLOWED = {
+    ("fixture.py", "write_parquet_images"):
+        "golden-fixture generation reads the fixture it just wrote in the "
+        "local fixtures/ directory",
+    ("fixture.py", "ensure_fixture"):
+        "golden-fixture generation: the local fixtures/ directory and its "
+        ".version stamp",
+    ("decode.py", "_file_record"):
+        "the planning sidecar is local by contract (index_cache_dir takes "
+        "a plain path or file:// URL only); its atomic write needs a local "
+        "rename",
+}
+
+_DIRECT_IO_CALLS = {
+    "open", "os.listdir", "os.makedirs", "os.replace", "os.remove",
+    "os.unlink", "tempfile.mkstemp",
+}
+
+
+def test_pbf_io_goes_through_fs():
+    """A builtin ``open`` or ``os``/``tempfile`` file call in a PBF module
+    reads or writes local disk whatever scheme the path carries (a
+    ``file://`` or ``s3://`` path becomes a relative local one). Each one
+    under sources/pbf/ outside fs.py must be in _PBF_DIRECT_IO_ALLOWED
+    with its reason, and each allowlist entry must still match a call."""
+    import ast
+    import pathlib
+
+    root = (pathlib.Path(__file__).parent.parent / "osmpbf_spark" / "sources"
+            / "pbf")
+
+    def name(func) -> str | None:
+        if isinstance(func, ast.Name):
+            return func.id
+        if isinstance(func, ast.Attribute) and isinstance(func.value,
+                                                          ast.Name):
+            return f"{func.value.id}.{func.attr}"
+        return None
+
+    found = set()
+
+    def walk(node, fn, rel):
+        for child in ast.iter_child_nodes(node):
+            inner = fn
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                inner = child.name
+            if (isinstance(child, ast.Call)
+                    and name(child.func) in _DIRECT_IO_CALLS):
+                found.add((rel, fn, name(child.func), child.lineno))
+            walk(child, inner, rel)
+
+    for p in sorted(root.glob("*.py")):
+        if p.name != "fs.py":
+            walk(ast.parse(p.read_text()), "<module>", p.name)
+    assert found, "the scan found no direct I/O call at all"
+    unlisted = sorted(
+        c for c in found if (c[0], c[1]) not in _PBF_DIRECT_IO_ALLOWED
+    )
+    assert not unlisted, f"direct I/O outside fs.py: {unlisted}"
+    stale = set(_PBF_DIRECT_IO_ALLOWED) - {(f, fn) for f, fn, _, _ in found}
+    assert not stale, f"allowlist entries with no direct I/O call: {stale}"
